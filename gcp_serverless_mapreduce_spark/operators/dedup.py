@@ -41,7 +41,7 @@ def tokens_col(text_col: str = "text"):
     return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
 
 
-# Java/RE2 '\s' is the ASCII whitespace class [ \t\n\x0b\f\r] — NOT
+# Java's '\s' is the ASCII whitespace class [ \t\n\x0b\f\r] — NOT
 # Python str.split()'s Unicode whitespace set (U+00A0, U+2028, ...).
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
@@ -50,7 +50,9 @@ def py_tokens(text: str | None) -> list[str]:
     """EXACT Python twin of :func:`tokens_col` =
     ``split(trim(lower(text)), '\\s+')`` — the tokenization the oracle
     SQL declares (DuckDB ``string_split_regex(trim(lower(text)),
-    '\\s+')``; RE2 and Java agree on the ASCII ``\\s`` class).
+    '\\s+')``).  This twin follows Java's ``\\s``.  RE2 (DuckDB) leaves
+    vertical tab U+000B out of ``\\s``, so text containing it is outside
+    the Spark/DuckDB parity contract.
 
     Semantics reproduced exactly, not just on ASCII (r15 verdict task 4
     / ADVICE): lowercase first; trim strips SPACES only (Spark/DuckDB

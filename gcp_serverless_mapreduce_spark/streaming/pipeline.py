@@ -18,33 +18,32 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+import time
 import uuid
+import weakref
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
-from ..tables import load_table
+from ..session import apply_runtime_confs
+from ..tables import load_table, normalize_timestamps
+
+# Shuffle partitions of a stateful streaming query = its state-store
+# count; see TUNING.md "Streaming harness operating points".
+STATE_PARTITIONS = 4
+# How long a terminated query's last listener events may lag behind it.
+_EVENT_LAG_S = 30.0
 
 
 def _checkpoint_dir(name: str) -> str | None:
-    """Per-run checkpoint directory for the bounded-replay harness.
-
-    Structured Streaming commits offsets/WAL/state-store deltas through
-    rename-based atomic files every micro-batch; on the default
-    ``java.io.tmpdir`` (a disk-backed /tmp here) that file traffic is a
-    measurable fixed cost per batch (A/B at sf0.1, inner stream-stream
-    join, warm min-of-3: 2.42 s on /tmp vs 2.26 s on tmpfs; the state
-    commit is the dominant term).  ``SPARK_GRAFT_STREAM_CKPT`` overrides
-    the root (empty string = use Spark's default temp checkpoint); the
-    local default is tmpfs when available.  A production deployment
-    points this at durable shared storage — checkpoint durability is a
-    deployment property, not a plan property; the bounded replay
-    deletes its checkpoint after the run either way.
-
-    Every call returns a FRESH directory (uuid suffix): attempt 2 of a
-    bench pair must re-process the fixture, never resume attempt 1's
-    committed offsets."""
+    """A fresh per-run checkpoint directory under ``SPARK_GRAFT_STREAM_CKPT``
+    (default ``/dev/shm``), or None to use Spark's own temp checkpoint
+    when that root is empty or not writable.  Every call returns a new
+    directory, so a rerun re-processes its input instead of resuming a
+    prior run's committed offsets."""
     root = os.environ.get("SPARK_GRAFT_STREAM_CKPT", "/dev/shm")
     if root and os.path.isdir(root) and os.access(root, os.W_OK):
         return os.path.join(root, f"sgm-ckpt-{name}-{uuid.uuid4().hex}")
@@ -52,100 +51,34 @@ def _checkpoint_dir(name: str) -> str | None:
 
 
 @contextmanager
-def stream_state_partitions(spark: SparkSession, n: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` for a stateful streaming
-    query start.
-
-    Every stateful streaming partition carries a state store (+ its
-    checkpoint files), so the shuffle-partition count is a *state-store*
-    count here — 32 stores for a bounded fixture stream is pure overhead
-    (measured 6.1 s -> 2.3 s on the stream-stream join at sf0.1 going
-    32 -> 8; r15 verdict task 5's A/B then took 8 -> 4: the
-    stream-stream joins gain another 0.3-0.5 s warm min-of-3 each —
-    inner 1.81 -> 1.32 s, left 2.45 -> 2.11 s — with aggregations
-    neutral, and a RocksDB-provider leg measured consistently SLOWER
-    at this state size, e.g. inner join 1.86/2.00 s vs HDFS 1.81/1.32,
-    retiring the 'heavier at this size' assumption with numbers; full
-    table in TUNING.md).  A production deployment sizes this to
-    keyspace x executor count instead — env
-    ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` parameterizes the local
-    default; the conf is captured at stream START, so scoping it to
-    the ``.start()`` call leaves the batch suite's 32 untouched."""
-    if n is None:
-        n = int(os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(key, prev)
 
 
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events fixture.  Schema comes from the
-    batch reader (a stream source cannot infer), including the
-    nanos→timestamp normalization load_table applies."""
-    static = load_table(spark, sf_dir, "events")
-    # The fixture is a single file; the file stream source wants a
-    # directory, so stream the directory with a glob filter.
+def stream_state_partitions(spark: SparkSession):
+    """Scope ``spark.sql.shuffle.partitions`` to :data:`STATE_PARTITIONS`
+    around a stateful streaming query's ``.start()``; the query captures
+    the conf at start, so the batch suite's setting is left untouched."""
+    return _scoped_conf(spark, "spark.sql.shuffle.partitions",
+                        str(STATE_PARTITIONS))
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one fixture table, with the schema and
+    timestamp normalization of :func:`load_table`.  The fixture is a single
+    file and the file source reads directories, so the stream lists
+    ``sf_dir`` with a glob filter on that file."""
+    apply_runtime_confs(spark)
     raw = (spark.readStream
-           .schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-           .option("pathGlobFilter", "events.parquet")
+           .schema(spark.read.parquet(f"{sf_dir}/{name}.parquet").schema)
+           .option("pathGlobFilter", f"{name}.parquet")
            .parquet(sf_dir))
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    for col, dtype in raw.dtypes:
-        # Same normalization as load_table: watermarks refuse TIMESTAMP_NTZ
-        # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); the cast is exact under the
-        # pinned UTC session TZ.
-        if dtype == "timestamp_ntz":
-            raw = raw.withColumn(col, F.col(col).cast("timestamp"))
-    return raw.select(*static.columns)
-
-
-def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the embeddings fixture — the arriving
-    vector batch of an ANN index at steady state (the streaming face of
-    the incremental-ingest contract; see similarity_q's
-    ``stream_ivf_cell_routing``).  Schema from the batch reader, same
-    single-file glob discipline as :func:`stream_events`."""
-    static = load_table(spark, sf_dir, "embeddings")
-    raw = (spark.readStream
-           .schema(spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema)
-           .option("pathGlobFilter", "embeddings.parquet")
-           .parquet(sf_dir))
-    return raw.select(*static.columns)
-
-
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents fixture — the arriving
-    crawl batch of a steady-state ingest pipeline (the streaming face of
-    the incremental-dedup contract; see dedup_q's
-    ``stream_dedup_new_docs``).  Schema from the batch reader, same
-    single-file glob discipline as :func:`stream_events`."""
-    static = load_table(spark, sf_dir, "documents")
-    raw = (spark.readStream
-           .schema(spark.read.parquet(f"{sf_dir}/documents.parquet").schema)
-           .option("pathGlobFilter", "documents.parquet")
-           .parquet(sf_dir))
-    return raw.select(*static.columns)
-
-
-def stream_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the orders fixture — the CDC feed of new
-    orders arriving after a stored snapshot (the streaming face of the
-    snapshot-diff contract; see relational_q's
-    ``stream_snapshot_diff_customers``).  Schema from the batch reader,
-    same single-file glob discipline as :func:`stream_events`."""
-    static = load_table(spark, sf_dir, "orders")
-    raw = (spark.readStream
-           .schema(spark.read.parquet(f"{sf_dir}/orders.parquet").schema)
-           .option("pathGlobFilter", "orders.parquet")
-           .parquet(sf_dir))
-    for col, dtype in raw.dtypes:
-        if dtype == "timestamp_ntz":
-            raw = raw.withColumn(col, F.col(col).cast("timestamp"))
-    return raw.select(*static.columns)
+    return normalize_timestamps(raw, name)
 
 
 def stream_events_redelivered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,32 +91,22 @@ def stream_events_redelivered(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources list the same single fixture file, so one availableNow
     micro-batch carries both copies and a watermark-bounded dedup state
     provably sees every duplicate pair."""
-    return stream_events(spark, sf_dir).unionAll(
-        stream_events(spark, sf_dir))
+    return stream_table(spark, sf_dir, "events").unionAll(
+        stream_table(spark, sf_dir, "events"))
 
 
 def stream_events_rate(spark: SparkSession, sf_dir: str,
                        rows_per_batch: int = 2500) -> DataFrame:
     """Rate-source replay of the events fixture — the push/queue transport
-    analog (the reference's Pub/Sub push is "rows arrive in batches over
-    time", pubsub-style; ``rate-micro-batch`` provides exactly that tick
-    stream, and a stream-static join stamps each tick with a fixture row).
-
-    Delivery is in event-time order (ticks map to ts-sorted rows), so
-    watermarked aggregations see the same effective input as a file-source
-    stream; ticks past the fixture size join to nothing and the stream
-    just idles.  The global sort behind ``row_number`` is a replay-adapter
-    cost, not a production-path one — a real deployment's Kafka/Pub/Sub
-    source delivers rows directly.
+    analog: ``rate-micro-batch`` ticks arrive ``rows_per_batch`` per
+    micro-batch and tick k stream-static-joins to the k-th fixture row in
+    (ts, event_id) order.  Ticks past the fixture join to nothing, so the
+    stream just idles.  The row index is materialized once
+    (``localCheckpoint``) because a stream-static join re-executes its
+    static side every micro-batch.
     """
-    from pyspark.sql import Window
-
     static = load_table(spark, sf_dir, "events")
-    # localCheckpoint: a stream-static join re-executes the static side
-    # EVERY micro-batch, and this side carries a global sort — materialize
-    # the indexed frame once instead of re-sorting per batch (measured
-    # 4.3 -> 3.0 s warm on the rate-replay windowed agg at sf0.1)
-    with timed_batch_side():  # replay-adapter sort: batch-side compute
+    with timed_batch_side():
         indexed = static.withColumn(
             "_idx",
             F.row_number().over(Window.orderBy("ts", "event_id")) - 1
@@ -217,17 +140,20 @@ def windowed_event_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def click_purchase_join(events: DataFrame) -> DataFrame:
-    """Stream-stream inner join: each click matched to the same user's
-    purchases within the following hour.
+def click_purchase_join(events: DataFrame, how: str = "inner") -> DataFrame:
+    """Stream-stream join of each click to the same user's purchases
+    within the following hour; ``how`` is a Spark join type ("inner",
+    "left", "full").
 
     Both sides carry a 1-hour watermark and the join condition bounds
-    purchase_ts to [click_ts, click_ts + 1h] — the time-interval condition
-    is what lets Spark evict join state (a click older than watermark - 1h
-    can never match again), so state stays bounded no matter how long the
-    streams run.  Inner-join matches emit immediately (no watermark wait).
-    Works unchanged on a static frame, where the same condition is just a
-    range-join predicate.
+    purchase_ts to [click_ts, click_ts + 1h], which lets Spark evict join
+    state, so state stays bounded however long the streams run.  Matches
+    emit immediately.  An outer side's unmatched row emits its null row
+    when the global watermark (default policy: min of both sides' max
+    event time, minus 1 h) evicts it: a click once the watermark passes
+    click_ts + 1h, a purchase once it passes purchase_ts.  The DuckDB
+    oracles reproduce exactly that set.  Works unchanged on a static
+    frame, where the condition is a range-join predicate.
     """
     clicks = (
         events.filter(F.col("event_type") == "click")
@@ -246,9 +172,11 @@ def click_purchase_join(events: DataFrame) -> DataFrame:
             purchases,
             (F.col("c_user") == F.col("p_user"))
             & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")))
+            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+            how)
         .select(
-            F.col("c_user").alias("user_id"), "click_id", "purchase_id",
+            F.coalesce("c_user", "p_user").alias("user_id"),
+            "click_id", "purchase_id",
             F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
             F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"))
     )
@@ -264,101 +192,16 @@ def distinct_user_event_pairs(events: DataFrame) -> DataFrame:
     return events.select("user_id", "event_type").dropDuplicates()
 
 
-def click_purchase_left_join(events: DataFrame) -> DataFrame:
-    """LEFT-OUTER stream-stream join: every click, matched or not.
-
-    Matches emit immediately (like the inner join); an UNMATCHED click
-    emits its null row only when the global watermark proves no purchase
-    can still arrive for it — i.e. watermark > click_ts + 1h, where the
-    multiple-watermark policy (default "min") sets watermark =
-    min(max click_ts, max purchase_ts) - 1h.  This eviction-driven null
-    emission is the semantic that makes outer stream joins safe at scale:
-    state for a click is dropped at the same moment its null row emits,
-    so neither grows unboundedly.  The DuckDB oracle reproduces exactly
-    this set: all matches plus unmatched clicks older than the terminal
-    watermark (rule pinned by probe at sf0.001: 204 of 205 batch-unmatched
-    clicks emit; the one younger than watermark - 1h stays in state).
-    """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 hour"))
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour"))
-    return (
-        clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            "leftOuter")
-        .select(
-            F.col("c_user").alias("user_id"), "click_id", "purchase_id",
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"))
-    )
-
-
-def click_purchase_full_join(events: DataFrame) -> DataFrame:
-    """FULL-OUTER stream-stream join — both sides' state evicts into null
-    rows: an unmatched click emits once the watermark passes click_ts + 1h
-    (no purchase can still arrive for its window), an unmatched purchase
-    once the watermark passes purchase_ts (no older click can still turn
-    up).  Both rules pinned by probe at sf0.001 (204 unmatched clicks,
-    195 of 197 unmatched purchases emit against the terminal watermark
-    min(max click_ts, max purchase_ts) - 1h).
-    """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 hour"))
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour"))
-    return (
-        clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-            "fullOuter")
-        .select(
-            F.coalesce("c_user", "p_user").alias("user_id"),
-            "click_id", "purchase_id",
-            F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-            F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"))
-    )
-
-
-# Append-only log of per-execution micro-batch progress, one entry per
-# run_available_now / run_rate_replay call: how much of the wall time
-# was actual batch execution (triggerExecution / addBatch sums from
-# StreamingQueryProgress) vs harness overhead (query start/stop,
-# availableNow termination latency, the rate-replay poll).  bench.py
-# snapshots the list length around each timed query and attaches the
-# delta to BENCH_DETAIL.json, so streaming rows stop polluting
-# round-over-round wall-clock comparisons (round-10 verdict item 7:
-# the 1.3-1.6x streaming "movers" were trigger-wait, not compute).
+# One entry per runner call, appended in call order: the run's progress
+# record (see _Progress.record) plus ``sink`` and ``batch_side_ms``.
+# bench.py and the benchmark's tracer read the entries added around each
+# query.
 RUN_STATS: list[dict] = []
 
-# Driver-timed BATCH-side compute of hybrid stream+batch queries (static
-# probe-index builds, rate-replay row indexing, centroid training) — real
-# work the streaming trigger stats don't see, so without this it vanished
-# from bench.py's compute-adjusted total and showed up as unexplained
-# "overhead" (ADVICE r12; round-13 verdict task 5).  Call sites wrap the
-# build in :func:`timed_batch_side`; ``_record_progress`` folds the
-# pending total into the query's stats entry as ``batch_side_ms``.
+# Driver-timed batch-side compute of hybrid stream+batch queries (static
+# probe-index builds, replay row indexing, centroid training), which the
+# trigger stats do not see; the next recorded run takes it as
+# ``batch_side_ms``.
 _PENDING_BATCH_SIDE_MS: list[float] = []
 
 
@@ -368,7 +211,6 @@ def timed_batch_side():
     is attributed to the NEXT recorded streaming run.  The body must
     materialize the work (localCheckpoint / a driver-side fit), else
     this times only plan construction."""
-    import time
     t0 = time.perf_counter()
     try:
         yield
@@ -376,21 +218,142 @@ def timed_batch_side():
         _PENDING_BATCH_SIDE_MS.append((time.perf_counter() - t0) * 1000)
 
 
-def _record_progress(name: str, q) -> None:
-    prog = q.recentProgress
+# Per-batch progress fields a run record sums.
+_SUMMED = ("input_rows", "trigger_exec_ms", "add_batch_ms", "state_commit_ms")
 
-    def ms(field: str) -> int:
-        return int(sum((p.durationMs or {}).get(field, 0) for p in prog))
 
-    RUN_STATS.append({
-        "sink": name,
-        "batches": len(prog),
-        "input_rows": int(sum(p.numInputRows for p in prog)),
-        "trigger_exec_ms": ms("triggerExecution"),
-        "add_batch_ms": ms("addBatch"),
-        "batch_side_ms": int(sum(_PENDING_BATCH_SIDE_MS)),
-    })
-    _PENDING_BATCH_SIDE_MS.clear()
+class _Progress(StreamingQueryListener):
+    """Per-run progress record of the runner queries in one session.
+
+    Counts every micro-batch once (first progress event per batchId), so
+    the record does not depend on how many progress entries Spark retains
+    per query.  Only runs whose query name was passed to
+    :meth:`expect` before ``.start()`` are tracked; ``onQueryStarted``
+    runs synchronously inside ``.start()``, every later event arrives
+    asynchronously and in order, ending with ``onQueryTerminated``."""
+
+    def __init__(self):
+        self._cv = threading.Condition()
+        self._expected: set[str] = set()
+        self._runs: dict[str, dict] = {}
+
+    def expect(self, name: str) -> None:
+        with self._cv:
+            self._expected.add(name)
+
+    def onQueryStarted(self, event):
+        with self._cv:
+            if event.name in self._expected:
+                self._expected.discard(event.name)
+                self._runs[str(event.runId)] = {"batches": {},
+                                                "terminated": False}
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        with self._cv:
+            run = self._runs.get(str(p.runId))
+            if run is None or p.batchId in run["batches"]:
+                return
+            ms = p.durationMs or {}
+            run["batches"][p.batchId] = (  # in _SUMMED order
+                p.numInputRows, ms.get("triggerExecution", 0),
+                ms.get("addBatch", 0),
+                sum(o.commitTimeMs for o in p.stateOperators or []))
+            self._cv.notify_all()
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self._cv:
+            run = self._runs.get(str(event.runId))
+            if run is not None:
+                run["terminated"] = True
+                self._cv.notify_all()
+
+    def record(self, run_id: str) -> dict:
+        with self._cv:
+            run = self._runs[run_id]
+            sums = {k: int(sum(b[i] for b in run["batches"].values()))
+                    for i, k in enumerate(_SUMMED)}
+            return {"batches": len(run["batches"]), **sums,
+                    "terminated": run["terminated"]}
+
+    def wait(self, run_id: str, done, timeout_s: float) -> dict:
+        """The run's record once ``done(record)`` holds or the run has
+        terminated, or when ``timeout_s`` has passed."""
+        with self._cv:
+            self._cv.wait_for(lambda: self._runs[run_id]["terminated"]
+                              or done(self.record(run_id)), timeout_s)
+            return self.record(run_id)
+
+    def forget(self, run_id: str) -> None:
+        with self._cv:
+            self._runs.pop(run_id, None)
+
+
+_PROGRESS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _progress(spark: SparkSession) -> _Progress:
+    """The session's progress listener, registered on first use."""
+    listener = _PROGRESS.get(spark)
+    if listener is None:
+        listener = _PROGRESS[spark] = _Progress()
+        spark.streams.addListener(listener)
+    return listener
+
+
+def _run(writer, spark: SparkSession, name: str, done,
+         timeout_s: float | None = None, no_data_batch: bool = True,
+         snapshot: bool = True) -> DataFrame | None:
+    """Start ``writer`` as query ``name`` on a fresh checkpoint, wait for
+    ``done(record)``, append the run's record to :data:`RUN_STATS`, stop
+    the query and delete its checkpoint.  With ``snapshot`` the memory
+    sink ``name`` is returned as a static DataFrame.
+
+    ``timeout_s=None`` waits for the query to end by itself; otherwise
+    the run fails with ``TimeoutError`` when ``done`` does not hold within
+    ``timeout_s``.  ``no_data_batch=False`` turns off the no-data
+    micro-batch that only advances the watermark; keep it on when the
+    result depends on the terminal watermark (outer joins, append-mode
+    windows)."""
+    ckpt = _checkpoint_dir(name)
+    if ckpt is not None:
+        writer = writer.option("checkpointLocation", ckpt)
+    progress = _progress(spark)
+    progress.expect(name)
+    with stream_state_partitions(spark), _scoped_conf(
+            spark, "spark.sql.streaming.noDataMicroBatches.enabled",
+            str(no_data_batch).lower()):
+        q = writer.start()
+    run_id = q.runId
+    try:
+        if timeout_s is None:
+            q.awaitTermination()
+            timeout_s = _EVENT_LAG_S
+        rec = progress.wait(run_id, done, timeout_s)
+        if rec["terminated"]:
+            q.awaitTermination()  # re-raises the query's failure, if any
+        if not done(rec):
+            raise TimeoutError(
+                f"streaming query {name!r} not done within {timeout_s}s: "
+                f"{rec}")
+        del rec["terminated"]
+        out = spark.table(name).localCheckpoint() if snapshot else None
+        RUN_STATS.append({"sink": name, **rec,
+                          "batch_side_ms": int(sum(_PENDING_BATCH_SIDE_MS))})
+    finally:
+        _PENDING_BATCH_SIDE_MS.clear()
+        q.stop()
+        progress.forget(run_id)
+        if ckpt is not None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return out
+
+
+def _terminated(rec: dict) -> bool:
+    return rec["terminated"]
 
 
 def run_available_now(result: DataFrame, name: str,
@@ -400,132 +363,49 @@ def run_available_now(result: DataFrame, name: str,
     memory sink; return the materialized result as a static DataFrame.
     ``mode="complete"`` for aggregates; ``mode="append"`` for
     stream-stream joins and dedup (which don't support complete).
-
-    ``no_data_batch=False`` scopes
-    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` to this
-    query (the conf is captured by the cloned session at ``.start()``,
-    same mechanism as :func:`stream_state_partitions`).  The no-data
-    finalization micro-batch exists to advance the watermark so that
-    EVICTION-DRIVEN OUTPUT can emit (outer-join null rows, append-mode
-    window closes); for queries whose every result row emits on
-    arrival — stateless routing, inner joins, first-sight dedup,
-    complete-mode aggregates — it runs a full extra micro-batch
-    (plan + state commit) that emits nothing: measured 0.8-1.0 s of
-    the inner join's 2.4 s wall at sf0.1.  Callers whose collected
-    result depends on the terminal watermark (left/full outer joins,
-    append windowed aggs) MUST keep the default."""
-    spark = result.sparkSession
-    ckpt = _checkpoint_dir(name)
-    prev_ndb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
-        with stream_state_partitions(spark):
-            spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-                           str(no_data_batch).lower())
-            writer = (result.writeStream
-                      .format("memory")
-                      .queryName(name)
-                      .outputMode(mode)
-                      .trigger(availableNow=True))
-            if ckpt is not None:
-                writer = writer.option("checkpointLocation", ckpt)
-            q = writer.start()
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-                       prev_ndb)
-    try:
-        q.awaitTermination()
-        out = spark.table(name).localCheckpoint()  # detach from sink table
-        _record_progress(name, q)
-    finally:
-        # A failure between timed_batch_side and _record_progress would
-        # otherwise leave a stale pending batch-side wall that the NEXT
-        # streaming query's stats would absorb (ADVICE r13).  On the
-        # success path _record_progress already drained the list.
-        _PENDING_BATCH_SIDE_MS.clear()
-        q.stop()
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    ``no_data_batch`` as in :func:`_run`."""
+    writer = (result.writeStream.format("memory").queryName(name)
+              .outputMode(mode).trigger(availableNow=True))
+    return _run(writer, result.sparkSession, name, _terminated,
+                no_data_batch=no_data_batch)
 
 
 def run_available_now_mapped(source: DataFrame, transform, name: str,
                              no_data_batch: bool = True) -> DataFrame:
     """availableNow via ``foreachBatch``: apply ``transform`` — a pure
-    ROW-LOCAL DataFrame→DataFrame function — to every micro-batch after
-    a GUARDED round-robin spread (tables.spread_small_scan), and return
-    the union of the materialized batch outputs.
+    ROW-LOCAL DataFrame→DataFrame function — to every micro-batch after a
+    guarded round-robin spread (tables.spread_small_scan), and return the
+    union of the materialized batch outputs.
 
-    Why this exists (r15): a stateless map-only streaming stage plans
-    NO exchange, so its parallelism is exactly the source's — and a
-    micro-batch arriving as one small file executes the entire per-row
-    compute as ONE task (measured: stream_contamination_spans' 5 s wall
-    was a single-task 2.5-3 s bloom-probe stage on a 32-core box).
-    Inside ``foreachBatch`` each batch is a regular DataFrame, so the
-    SAME guard the batch operators use applies: spread only when the
-    scan yields fewer partitions than ``defaultParallelism``.  At scale
-    a trigger's files >> cores and the spread is a plan-time no-op —
-    nothing here changes the stateless/no-state scale story, and the
-    sink-side contract (one output row per transformed input row) is
-    unchanged from the memory-sink path.
+    A stateless streaming stage plans no exchange, so a micro-batch read
+    from one small file runs all its per-row compute as one task; inside
+    ``foreachBatch`` the batch is a regular DataFrame and gets the same
+    spread guard as the batch operators (a no-op when the scan already
+    has ``defaultParallelism`` partitions).
 
-    ``transform`` MUST be row-local (no aggregation across batches —
-    output mode semantics are the caller's responsibility, matching
-    ``mode="append"`` of :func:`run_available_now`).
-
-    BOUNDED-BATCH-COUNT ASSUMPTION (ADVICE r15): each micro-batch's
-    transformed output is localCheckpoint-ed into a driver-held list
-    and unioned at the end — O(batches) non-replicated block-manager
-    storage and plan depth, and localCheckpoint blocks are lost on
-    executor failure.  Correct for availableNow over a fixture
-    directory (a handful of batches); a many-file/long-lived source
-    must NOT use this runner as-is — cap batches via
-    ``maxFilesPerTrigger`` or write each batch to a real sink and read
-    that back instead of chaining unions."""
+    Each batch's output is localCheckpoint-ed into a driver-held list and
+    unioned at the end: O(batches) non-replicated block-manager storage
+    and plan depth.  Fine for availableNow over a fixture directory; a
+    many-file or long-lived source must cap batches
+    (``maxFilesPerTrigger``) or write each batch to a real sink."""
     from ..tables import spread_small_scan
 
     spark = source.sparkSession
-    ckpt = _checkpoint_dir(name)
     out_frames: list[DataFrame] = []
 
     def _fb(batch_df: DataFrame, _bid: int) -> None:
-        # localCheckpoint materializes the transformed batch INSIDE the
-        # micro-batch (so triggerExecution keeps timing the compute) and
-        # detaches it from the source, which is gone after q.stop().
-        # No pre-check scan: every action on the batch frame re-reads
-        # the trigger's files, so the one materialization is the one
-        # pass (an empty no-data batch just yields an empty frame).
+        # Materialize inside the micro-batch, so triggerExecution times
+        # the compute and the output outlives the source after stop.
         out_frames.append(
             transform(spread_small_scan(batch_df)).localCheckpoint())
 
-    prev_ndb = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
-        with stream_state_partitions(spark):
-            spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-                           str(no_data_batch).lower())
-            writer = (source.writeStream
-                      .queryName(name)
-                      .foreachBatch(_fb)
-                      .trigger(availableNow=True))
-            if ckpt is not None:
-                writer = writer.option("checkpointLocation", ckpt)
-            q = writer.start()
-    finally:
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-                       prev_ndb)
-    try:
-        q.awaitTermination()
-        _record_progress(name, q)
-    finally:
-        _PENDING_BATCH_SIDE_MS.clear()
-        q.stop()
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    writer = (source.writeStream.queryName(name).foreachBatch(_fb)
+              .trigger(availableNow=True))
+    _run(writer, spark, name, _terminated, no_data_batch=no_data_batch,
+         snapshot=False)
     if not out_frames:
         # empty source: derive the output schema from an empty batch
-        empty = spark.createDataFrame([], source.schema)
-        return transform(empty)
+        return transform(spark.createDataFrame([], source.schema))
     out = out_frames[0]
     for f in out_frames[1:]:
         out = out.unionByName(f)
@@ -533,72 +413,21 @@ def run_available_now_mapped(source: DataFrame, transform, name: str,
 
 
 def run_rate_replay(result: DataFrame, name: str, n_expected: int,
-                    count_col: str = "n_events",
                     timeout_s: float = 180.0) -> DataFrame:
-    """Execute a rate-source streaming aggregate until it has absorbed
-    ``n_expected`` input rows, then snapshot the memory sink.
+    """Run a replay-source streaming aggregate (complete mode, memory
+    sink) until its recorded input rows reach ``n_expected``, then return
+    a snapshot of the sink.
 
-    A rate source never ends (ticks keep coming; past the fixture they
-    join to nothing), so availableNow can't bound it — completion is
-    instead observed from the query's OWN progress log:
-    ``sum(numInputRows over recentProgress) >= n_expected``, a
-    driver-side read of retained StreamingQueryProgress objects that
-    runs NO Spark job.  Both replay transports deliver the fixture in
-    source order (rate tick k stream-static-joins to fixture row k;
-    the PyDS reader's offsets are row positions), so input counts are
-    sequential from 0 and the batch that brings the total to
-    ``n_expected`` is the one that absorbed the last fixture row; its
-    memory-sink commit precedes its progress entry, so the sink is
-    complete when the probe fires — the same moment the previous
-    sink-aggregation poll (``sum(count_col) == n_expected``) observed.
-
-    r16 (verdict task 1): the old probe ran a ~70 ms Spark
-    job over the sink every 50 ms — decomposing the pyds row showed
-    25-47 poll jobs RACING the micro-batches for cores, 1.8-6.2 s of
-    a 3-6 s wall, and all of its core-count anti-scaling and attempt
-    spread.  ``count_col`` is kept for API stability (the sink column
-    a manual probe would read; unused by the progress probe).
-
-    This is purely a replay-adapter harness; a real Kafka/Pub/Sub
-    deployment runs the same transform with a normal long-lived
-    trigger and no completion probe."""
-    import time
-
-    spark = result.sparkSession
-    ckpt = _checkpoint_dir(name)
-    with stream_state_partitions(spark):
-        writer = (result.writeStream
-                  .format("memory")
-                  .queryName(name)
-                  .outputMode("complete"))
-        if ckpt is not None:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.start()
-    try:
-        done = 0
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            done = int(sum(p.numInputRows for p in q.recentProgress))
-            if done >= n_expected:
-                break
-            # 20 ms poll: the probe parses the driver-side progress
-            # JSON only (no job), so fine-grained polling is free and
-            # minimizes completion-detection latency.
-            time.sleep(0.02)
-        else:
-            raise TimeoutError(
-                f"rate replay {name!r} absorbed {done}/{n_expected} rows "
-                f"within {timeout_s}s")
-        out = spark.table(name).localCheckpoint()
-        _record_progress(name, q)
-    finally:
-        # Same stale-pending guard as run_available_now: the TimeoutError
-        # path stops the query without recording, so drain here too.
-        _PENDING_BATCH_SIDE_MS.clear()
-        q.stop()
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    A replay source never ends, so availableNow cannot bound it.  Both
+    replay transports deliver the fixture in source order from row 0, so
+    the batch that brings the input count to ``n_expected`` is the one
+    that absorbed the last fixture row, and its sink commit precedes its
+    progress event.  Raises ``TimeoutError`` after ``timeout_s``."""
+    writer = (result.writeStream.format("memory").queryName(name)
+              .outputMode("complete"))
+    return _run(writer, result.sparkSession, name,
+                lambda rec: rec["input_rows"] >= n_expected,
+                timeout_s=timeout_s)
 
 
 def write_events_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:

@@ -1002,7 +1002,7 @@ def stream_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             dedup.minhash_signatures(old, NUM_PERM), BANDS, ROWS_PER_BAND,
             max_bucket=MAX_BUCKET).localCheckpoint()
 
-    new_stream = (pipeline.stream_documents(spark, sf_dir)
+    new_stream = (pipeline.stream_table(spark, sf_dir, "documents")
                   .filter(F.col("doc_id") % INC_MOD == 0))
     routed = dedup.incremental_dedup_route(
         new_stream, old_h, ob, NUM_PERM, BANDS, ROWS_PER_BAND)

@@ -374,7 +374,7 @@ def stream_file_compaction_plan(spark: SparkSession,
     oracle as file_compaction_plan (identical output by construction)."""
     from ..streaming import pipeline
 
-    listing = (pipeline.stream_documents(spark, sf_dir)
+    listing = (pipeline.stream_table(spark, sf_dir, "documents")
                .select("source", "doc_id", "n_chars")
                .filter(F.col("n_chars") < COMPACT_TARGET))
     rows = pipeline.run_available_now(

@@ -1204,7 +1204,7 @@ def stream_snapshot_diff_customers(spark: SparkSession,
                   .agg(F.count("*").alias("n_before"),
                        spend.alias("spend_before"))
                   .localCheckpoint())
-    after_stream = (pipeline.stream_orders(spark, sf_dir)
+    after_stream = (pipeline.stream_table(spark, sf_dir, "orders")
                     .filter(F.year("o_orderdate") >= SNAPSHOT_YEAR)
                     .groupBy(F.col("o_custkey").alias("custkey_b"))
                     .agg(F.count("*").alias("n_after"),

@@ -488,7 +488,7 @@ def stream_ivf_cell_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb, CENTROIDS, rounds=LLOYD_ROUNDS,
             train_filter=sample & old_pred)
 
-    new_batch = (pipeline.stream_embeddings(spark, sf_dir)
+    new_batch = (pipeline.stream_table(spark, sf_dir, "embeddings")
                  .filter((F.col("vec_id") % _INC_MOD == 0)
                          & F.exists("embedding", lambda x: x != 0)))
     arr = F.col("embedding").cast("array<double>")

@@ -314,7 +314,7 @@ def stream_contamination_spans(spark: SparkSession,
     # no-ops.  The fold is row-local, so batch-parallelism cannot
     # change any row.
     rows = pipeline.run_available_now_mapped(
-        pipeline.stream_documents(spark, sf_dir)
+        pipeline.stream_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % EVAL_MOD != 0),
         lambda b: b.select("doc_id",
                            curation.inline_bloom_spans(bitmap, NGRAM_N)

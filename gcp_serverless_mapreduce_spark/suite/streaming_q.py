@@ -29,7 +29,8 @@ FROM events GROUP BY 1, 2
 def stream_windowed_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window × event_type counts + exact sums, executed
     through readStream/writeStream (availableNow)."""
-    stats = pipeline.windowed_event_stats(pipeline.stream_events(spark, sf_dir))
+    stats = pipeline.windowed_event_stats(
+        pipeline.stream_table(spark, sf_dir, "events"))
     return pipeline.run_available_now(stats, "windowed_event_stats_sink",
                                       no_data_batch=False)
 
@@ -45,8 +46,8 @@ def stream_windowed_event_stats_rate(spark: SparkSession, sf_dir: str) -> DataFr
     """The SAME windowed-agg transform as ``stream_windowed_event_stats``,
     fed by the rate-micro-batch replay source instead of the file source —
     the push/queue transport analog (SURVEY C2), held to the same DuckDB
-    oracle.  Completion is observed from the sink (sum of counts == fixture
-    rows); the transform itself is source-agnostic."""
+    oracle.  The replay completes when its recorded input rows reach the
+    fixture's row count; the transform itself is source-agnostic."""
     # Footer metadata, not a count() scan — the replay-completion
     # target is an unfiltered row count (round-11 verdict watch-item).
     n_expected = table_row_count(sf_dir, "events")
@@ -69,7 +70,7 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (clicks x same-user purchases within 1 h), executed through
     readStream/writeStream and held to the same DuckDB oracle as the
     batch range join."""
-    ev = pipeline.stream_events(spark, sf_dir)
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     return pipeline.run_available_now(
         pipeline.click_purchase_join(ev), "click_purchase_join_sink",
         mode="append", no_data_batch=False)
@@ -82,7 +83,7 @@ def stream_distinct_user_event_pairs(spark: SparkSession, sf_dir: str) -> DataFr
     """Streaming dedup: dropDuplicates over a stream (per-key state, each
     key emitted on first sight) — the streaming form of the reference's
     set-based dedup (SURVEY P4/A5)."""
-    ev = pipeline.stream_events(spark, sf_dir)
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     return pipeline.run_available_now(
         pipeline.distinct_user_event_pairs(ev),
         "distinct_user_event_pairs_sink", mode="append",
@@ -132,7 +133,7 @@ def stream_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     splits into multiple micro-batches."""
     from ..streaming import stateful
 
-    ev = pipeline.stream_events(spark, sf_dir)
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     updates = pipeline.run_available_now(
         stateful.running_user_totals(ev), "user_totals_stateful_sink",
         mode="update", no_data_batch=False)
@@ -235,7 +236,7 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle's lag-compare uses strict > with no truncation;
     session_end = last event + gap on both sides.
     """
-    ev = pipeline.stream_events(spark, sf_dir)
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     agg = (ev.withWatermark("ts", "1 hour")
            .groupBy(F.session_window("ts", f"{SESSION_GAP_MIN} minutes")
                     .alias("w"), "user_id")
@@ -361,7 +362,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free up to the sink.  Aggregation happens batch-side on the
     sink output, keeping the streaming stage append-only (same harness
     pattern as ``stream_dedup_replayed_events``)."""
-    ev = pipeline.stream_events(spark, sf_dir)
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     dim = F.broadcast(
         load_table(spark, sf_dir, "customer")
         .select(F.col("c_custkey"), F.col("c_mktsegment")))
@@ -403,10 +404,10 @@ def stream_click_purchase_left_join(spark: SparkSession,
     outer-join semantic).  The oracle reproduces the terminal-watermark
     rule exactly: matches plus unmatched clicks with click_ts + 1h <
     min(max click_ts, max purchase_ts) - 1h.  See
-    streaming/pipeline.py:click_purchase_left_join."""
-    ev = pipeline.stream_events(spark, sf_dir)
+    streaming/pipeline.py:click_purchase_join."""
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     return pipeline.run_available_now(
-        pipeline.click_purchase_left_join(ev),
+        pipeline.click_purchase_join(ev, how="left"),
         "click_purchase_left_join_sink", mode="append")
 
 
@@ -441,10 +442,10 @@ def stream_click_purchase_full_join(spark: SparkSession,
     its own state-eviction moment (clicks at click_ts + 1h, purchases at
     purchase_ts, against the min-policy terminal watermark) — the
     bounded-state outer-join pair completing the inner and left variants.
-    See streaming/pipeline.py:click_purchase_full_join."""
-    ev = pipeline.stream_events(spark, sf_dir)
+    See streaming/pipeline.py:click_purchase_join."""
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     return pipeline.run_available_now(
-        pipeline.click_purchase_full_join(ev),
+        pipeline.click_purchase_join(ev, how="full"),
         "click_purchase_full_join_sink", mode="append")
 
 
@@ -474,7 +475,7 @@ def stream_hourly_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental streaming operator.  Deterministic tie-break
     (count desc, event_type) keeps the oracle exact."""
     stats = pipeline.windowed_event_stats(
-        pipeline.stream_events(spark, sf_dir))
+        pipeline.stream_table(spark, sf_dir, "events"))
     done = pipeline.run_available_now(stats, "hourly_topk_sink",
                                       no_data_batch=False)
     w = Window.partitionBy("window_start").orderBy(
@@ -548,7 +549,7 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same SQL as hll_distinct_users, so the hash gate proves the
     incremental build converges to the one-shot answer.
     See operators/sketches.py:hll_project."""
-    ev = pipeline.stream_events(spark, sf_dir)
+    ev = pipeline.stream_table(spark, sf_dir, "events")
     proj = sketches.hll_project(
         ev.select("event_type", F.col("user_id").cast("string").alias("u")),
         "event_type", "u")

@@ -78,42 +78,19 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
 _SCAN_WIDTH_CACHE: dict[tuple[int, int], int] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table; normalizes timestamp encodings.
+def normalize_timestamps(df: DataFrame, name: str) -> DataFrame:
+    """Normalize a fixture table's timestamp encodings to TIMESTAMP.
 
     The fixtures' timestamp encoding has varied across regenerations:
     parquet TIMESTAMP(NANOS) (read as int64 nanos under
     ``spark.sql.legacy.parquet.nanosAsLong``) and naive ``timestamp[us]``
     (read as TIMESTAMP_NTZ by Spark 4).  Downstream operators —
     watermarks, ``unix_micros``, interval arithmetic — require the
-    session-TZ TIMESTAMP type, so every flavor is normalized here, in one
-    place.  The NTZ→TIMESTAMP cast is value-preserving because the
-    session TZ is pinned to UTC (session.RUNTIME_CONFS) and the fixture
-    epochs are naive/UTC.
-
-    The resolved DataFrame is MEMOIZED per (application, path, file
-    mtime) — the no-catalog analogue of a metastore (r16 verdict task
-    2): Spark resolves ``spark.table("t")`` once per session, while a
-    bare-path ``spark.read.parquet`` re-lists the directory, re-reads
-    footer schema and re-runs the dtype-normalization py4j chatter on
-    EVERY call (measured ~70 ms; the suite makes hundreds of load_table
-    calls per bench pass).  The memo holds a PLAN (scan + timestamp-
-    normalization projections), never data — every action on it still
-    scans parquet, so no result is ever cached; a regenerated fixture
-    file invalidates its entry via the mtime key, and entries never
-    leak across Spark applications.
+    session-TZ TIMESTAMP type.  The NTZ→TIMESTAMP cast is value-preserving
+    because the session TZ is pinned to UTC (session.RUNTIME_CONFS) and
+    the fixture epochs are naive/UTC.  Works on batch and streaming
+    frames; raises ``TypeError`` on any encoding left unnormalized.
     """
-    apply_runtime_confs(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = None
-    key = (spark.sparkContext.applicationId, path, mtime)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Integer division: `/` would go through double and lose precision
         # (ns epochs ~1.7e18 exceed double's 53-bit mantissa).
@@ -127,8 +104,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Fail loudly in ONE place if a fixture regeneration introduces yet
         # another encoding, instead of ten analysis errors downstream.
         raise TypeError(
-            f"load_table({name!r}): unnormalized timestamp columns {bad}; "
-            f"dtypes={df.dtypes}")
+            f"normalize_timestamps({name!r}): unnormalized timestamp "
+            f"columns {bad}; dtypes={df.dtypes}")
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table with :func:`normalize_timestamps` applied.
+
+    The resolved DataFrame is MEMOIZED per (application, path, file
+    mtime in ns, file size) — the no-catalog analogue of a metastore:
+    Spark resolves ``spark.table("t")`` once per session, while a
+    bare-path ``spark.read.parquet`` re-lists the directory, re-reads
+    footer schema and re-runs the dtype-normalization py4j chatter on
+    EVERY call.  The memo holds a PLAN (scan + timestamp-normalization
+    projections), never data — every action on it still scans parquet,
+    so no result is ever cached; a rewritten fixture file invalidates its
+    entry via the mtime/size key (the size catches a rewrite that keeps
+    the mtime), and entries never leak across Spark applications.
+    """
+    apply_runtime_confs(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        stamp = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        stamp = (None, None)
+    key = (spark.sparkContext.applicationId, path, *stamp)
+    cached = _TABLE_CACHE.get(key)
+    if cached is not None:
+        return cached
+    df = normalize_timestamps(spark.read.parquet(path), name)
     _TABLE_CACHE[key] = df
     return df
 

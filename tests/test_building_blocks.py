@@ -323,3 +323,23 @@ def test_load_tables_loads_every_fixture(spark):
     assert set(t) == {"region", "nation"}
     assert t["region"].count() == 5
     assert set(TABLE_NAMES) >= {"region", "nation", "lineitem", "documents"}
+
+
+def test_load_table_memo_sees_rewrite_with_same_mtime(spark, tmp_path):
+    """A fixture rewritten with a different row count but the old mtime
+    must not be served from the load_table memo: the memoized scan would
+    still split the file at its old length and miss row groups."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gcp_serverless_mapreduce_spark.tables import load_table
+
+    path = tmp_path / "memo_probe.parquet"
+    pq.write_table(pa.table({"x": [1, 2, 3]}), path)
+    before = os.stat(path)
+    assert load_table(spark, str(tmp_path), "memo_probe").count() == 3
+    pq.write_table(pa.table({"x": list(range(1000))}), path,
+                   row_group_size=100)
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    assert os.stat(path).st_mtime_ns == before.st_mtime_ns
+    assert load_table(spark, str(tmp_path), "memo_probe").count() == 1000

@@ -30,7 +30,8 @@ def test_no_data_batch_skip_is_result_identical(spark, shape):
 
     def build():
         if shape == "inner_join":
-            return sp.click_purchase_join(sp.stream_events(spark, SF_DIR))
+            return sp.click_purchase_join(
+                sp.stream_table(spark, SF_DIR, "events"))
         ev = sp.stream_events_redelivered(spark, SF_DIR)
         return (ev.withWatermark("ts", "1 hour")
                 .dropDuplicatesWithinWatermark(["event_id"]))

@@ -84,7 +84,7 @@ def test_run_available_now_mapped_matches_batch_rows(spark):
             docs.select("doc_id", F.size(F.split("text", " ")).alias("n"))
             .collect()}
     got_df = pipeline.run_available_now_mapped(
-        pipeline.stream_documents(spark, SF),
+        pipeline.stream_table(spark, SF, "documents"),
         lambda b: b.select("doc_id",
                            F.size(F.split("text", " ")).alias("n")),
         "t_r15b6_mapped", no_data_batch=False)

@@ -15,7 +15,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_stateful_totals_match_batch(spark):
     stream = stateful.running_user_totals(
-        pipeline.stream_events(spark, SF_DIR))
+        pipeline.stream_table(spark, SF_DIR, "events"))
     q = (stream.writeStream.format("memory")
          .queryName("stateful_totals_sink")
          .outputMode("update")

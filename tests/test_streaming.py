@@ -16,7 +16,8 @@ def _as_set(df):
 def test_stream_matches_batch(spark):
     batch = pipeline.windowed_event_stats(load_table(spark, SF_DIR, "events"))
     streamed = pipeline.run_available_now(
-        pipeline.windowed_event_stats(pipeline.stream_events(spark, SF_DIR)),
+        pipeline.windowed_event_stats(
+            pipeline.stream_table(spark, SF_DIR, "events")),
         "test_stream_matches_batch_sink")
     assert _as_set(streamed) == _as_set(batch)
     assert streamed.columns == ["window_start", "event_type", "n_events",
@@ -24,7 +25,7 @@ def test_stream_matches_batch(spark):
 
 
 def test_stream_is_actually_streaming(spark):
-    assert pipeline.stream_events(spark, SF_DIR).isStreaming
+    assert pipeline.stream_table(spark, SF_DIR, "events").isStreaming
 
 
 def test_rate_source_matches_file_source(spark):
@@ -38,7 +39,8 @@ def test_rate_source_matches_file_source(spark):
     static = load_table(spark, SF_DIR, "events")
     expected_events = static.count()
     file_result = _as_set(pipeline.run_available_now(
-        pipeline.windowed_event_stats(pipeline.stream_events(spark, SF_DIR)),
+        pipeline.windowed_event_stats(
+            pipeline.stream_table(spark, SF_DIR, "events")),
         "rate_vs_file_file_sink"))
 
     rate_stream = pipeline.stream_events_rate(spark, SF_DIR,
@@ -62,6 +64,70 @@ def test_rate_source_matches_file_source(spark):
     assert got == file_result
 
 
+def test_rate_replay_counts_past_recent_progress_cap(spark):
+    """Replay completion and RUN_STATS count every micro-batch, also when
+    Spark keeps only the last 3 progress entries and the replay of the
+    1000-row fixture takes 10 batches."""
+    from gcp_serverless_mapreduce_spark.tables import table_row_count
+
+    n = table_row_count(SF_DIR, "events")
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = pipeline.run_rate_replay(
+            pipeline.windowed_event_stats(pipeline.stream_events_rate(
+                spark, SF_DIR, rows_per_batch=100)),
+            "rate_replay_cap_sink", n, timeout_s=120)
+        stats = pipeline.RUN_STATS[-1]
+    finally:
+        spark.conf.set(key, prev)
+    batch = pipeline.windowed_event_stats(load_table(spark, SF_DIR, "events"))
+    assert _as_set(got) == _as_set(batch)
+    assert n == 1000
+    assert stats["sink"] == "rate_replay_cap_sink"
+    assert stats["input_rows"] == n
+
+
+def test_progress_record_counts_each_batch_once_under_threads():
+    """The listener record is shared by the listener-bus callback and the
+    waiting runner: progress events delivered concurrently and repeated
+    per batchId must still count each batch exactly once, and a waiter
+    must wake when its condition holds."""
+    import sys
+    import threading
+    from types import SimpleNamespace as NS
+
+    prog = pipeline._Progress()
+    prog.expect("q")
+    prog.onQueryStarted(NS(name="q", runId="r"))
+
+    def deliver():
+        for b in range(200):
+            prog.onQueryProgress(NS(progress=NS(
+                runId="r", batchId=b, numInputRows=10,
+                durationMs={"triggerExecution": 2, "addBatch": 1},
+                stateOperators=[NS(commitTimeMs=3)])))
+
+    threads = [threading.Thread(target=deliver) for _ in range(8)]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        rec = prog.wait("r", lambda r: r["input_rows"] >= 2000, 30)
+        for t in threads:
+            t.join(timeout=30)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(prev)
+    assert rec["input_rows"] == 2000
+    prog.onQueryTerminated(NS(runId="r"))
+    assert prog.record("r") == {
+        "batches": 200, "input_rows": 2000, "trigger_exec_ms": 400,
+        "add_batch_ms": 200, "state_commit_ms": 600, "terminated": True}
+
+
 def test_left_outer_join_null_emission_matches_watermark_rule(spark):
     """Unmatched clicks emit their null row iff the terminal watermark
     (min of both sides' max event time, minus the 1 h delay) has passed
@@ -72,7 +138,8 @@ def test_left_outer_join_null_emission_matches_watermark_rule(spark):
     from pyspark.sql import functions as F
 
     got = pipeline.run_available_now(
-        pipeline.click_purchase_left_join(pipeline.stream_events(spark, SF_DIR)),
+        pipeline.click_purchase_join(
+            pipeline.stream_table(spark, SF_DIR, "events"), how="left"),
         "loj_rule_sink", mode="append").collect()
 
     static = load_table(spark, SF_DIR, "events")
@@ -108,7 +175,8 @@ def test_full_outer_join_emits_both_sides_on_eviction(spark):
     from pyspark.sql import functions as F
 
     got = pipeline.run_available_now(
-        pipeline.click_purchase_full_join(pipeline.stream_events(spark, SF_DIR)),
+        pipeline.click_purchase_join(
+            pipeline.stream_table(spark, SF_DIR, "events"), how="full"),
         "foj_rule_sink", mode="append").collect()
 
     static = load_table(spark, SF_DIR, "events")

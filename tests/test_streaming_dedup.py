@@ -80,7 +80,7 @@ def test_stream_holds_no_state_and_matches_batch(spark):
     # check the finalized decisions equal operators/dedup's batch
     # incremental_dedup frame doc for doc.
     docs, old_h, ob = _static_indexes(spark)
-    new_stream = (pipeline.stream_documents(spark, SF_DIR)
+    new_stream = (pipeline.stream_table(spark, SF_DIR, "documents")
                   .filter(F.col("doc_id") % INC_MOD == 0))
     routed = dedup.incremental_dedup_route(
         new_stream, old_h, ob, NUM_PERM, BANDS, RPB)

@@ -44,6 +44,24 @@ def test_windowed_agg_across_batches(spark, split_events_dir):
         {tuple(r) for r in batch.collect()}
 
 
+def test_available_now_stats_count_every_batch(spark, split_events_dir):
+    """RUN_STATS counts every micro-batch of the run, also when Spark
+    keeps fewer progress entries than the run has batches."""
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        pipeline.run_available_now(
+            pipeline.windowed_event_stats(_stream(spark, split_events_dir)),
+            "multibatch_stats_sink")
+        stats = pipeline.RUN_STATS[-1]
+    finally:
+        spark.conf.set(key, prev)
+    assert stats["sink"] == "multibatch_stats_sink"
+    assert stats["input_rows"] == spark.read.parquet(split_events_dir).count()
+    assert stats["batches"] >= N_FILES
+
+
 def test_grouped_state_across_batches(spark, split_events_dir):
     q = (stateful.running_user_totals(_stream(spark, split_events_dir))
          .writeStream.format("memory").queryName("multibatch_state_sink")

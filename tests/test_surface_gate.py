@@ -83,7 +83,7 @@ def test_tws_operator_builds_plan(spark):
     covered in test_stateful_streaming.py."""
     from gcp_serverless_mapreduce_spark.streaming import pipeline, stateful
     out = stateful.running_user_totals_tws(
-        pipeline.stream_events(spark, SF_DIR))
+        pipeline.stream_table(spark, SF_DIR, "events"))
     assert [f.name for f in out.schema.fields] == \
         ["user_id", "n_events", "total_value"]
     assert out.isStreaming
