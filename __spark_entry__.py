@@ -1,12 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract of the engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` is the flagship smoke query.  Each ``queries()[name]``
+has a DuckDB twin ``oracle_sql()[name]``; ``tools/check_parity.py`` and
+perfbench's ``query_mix`` compare the two (row-count + schema +
+order-insensitive values).
 
 Implementation lives in ``gcp_serverless_mapreduce_spark``; this module is
-the thin adapter the driver imports.
+the thin adapter that callers import.
 """
 
 from __future__ import annotations

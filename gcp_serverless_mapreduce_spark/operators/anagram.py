@@ -18,11 +18,8 @@ AQE skew-join/partition-coalescing on top, this plan survives 100×.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.text import (
     anagram_signature,
@@ -35,8 +32,7 @@ from ..functions.text import (
 def tokenize_documents(docs: DataFrame,
                        doc_col: str = "doc_id",
                        text_col: str = "text",
-                       gutenberg: bool = False,
-                       arrow: bool = False) -> DataFrame:
+                       gutenberg: bool = False) -> DataFrame:
     """Splitter stage (P1-P4): text -> one row per *distinct lowered token
     per document*: (doc_col, word).
 
@@ -47,33 +43,13 @@ def tokenize_documents(docs: DataFrame,
     explode-then-``distinct()`` plan would exchange every token.  The
     pipeline's only shuffle stays the signature groupBy.
 
-    ``arrow`` chooses the tokenizer implementation — both measured:
-
-    - pandas UDF wins ~9× when per-row array work dominates (the dedup
-      shingle chain, dedup.shingle_array) because higher-order functions
-      are interpreted, not codegen'd;
-    - here it's a WASH on fixture-sized docs (~160 chars) and a 20%
-      REGRESSION on book-sized docs (430 KB): Arrow must ship the whole
-      text to the Python worker, and split+lower+distinct are cheap
-      enough expressions that transfer dominates.  Hence default False.
-
-    Side note: Python ``str.split()`` matches Go ``strings.Fields``
-    (split.go:68) on Unicode whitespace MORE faithfully than Java's
-    ASCII-only ``\\s+`` (e.g. U+00A0 in Latin-1 books) — flip to
-    ``arrow=True`` if that parity edge ever matters more than speed.
+    Known gap: Java ``\\s+`` does not split on U+0085 or U+00A0, while Go
+    ``strings.Fields`` (split.go:68) does (ROADMAP item 2).
     """
     text = F.col(text_col)
     if gutenberg:
         text = strip_gutenberg(text)
-    if arrow:
-        @pandas_udf("array<string>")
-        def _words(texts: pd.Series) -> pd.Series:
-            return pd.Series(
-                [list({w.lower() for w in (t or "").split()}) for t in texts])
-
-        words = _words(text)
-    else:
-        words = F.array_distinct(F.transform(tokenize(text), F.lower))
+    words = F.array_distinct(F.transform(tokenize(text), F.lower))
     return docs.select(F.col(doc_col), F.explode(words).alias("word"))
 
 

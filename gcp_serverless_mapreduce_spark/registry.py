@@ -1,8 +1,9 @@
 """Query registry behind ``__spark_entry__.queries()`` / ``oracle_sql()``.
 
 Each entry pairs a Spark callable ``(spark, sf_dir) -> DataFrame`` with the
-ANSI-SQL twin DuckDB runs over the same parquet fixtures — the driver's
-correctness gate (row-count + schema + order-insensitive value-hash).
+ANSI-SQL twin DuckDB runs over the same parquet fixtures — the parity
+gate (``tools/check_parity.py``: row-count + schema + order-insensitive
+values).  Registry order is module import order (``suite/__init__.py``).
 
 Conventions that keep the two engines hash-identical:
 - every computed column aliased identically on both sides;
@@ -30,7 +31,7 @@ def register(name: str, oracle: str | None):
     """Decorator: add a query + its DuckDB oracle twin to the registry.
 
     ``oracle=None`` registers a rows-only query (for genuinely
-    non-SQL-expressible operators — the driver records a weaker check).
+    non-SQL-expressible operators — the parity gate records a weaker check).
     """
     def deco(fn: SparkQuery) -> SparkQuery:
         if name in _REGISTRY:
@@ -38,24 +39,6 @@ def register(name: str, oracle: str | None):
         _REGISTRY[name] = (fn, oracle)
         return fn
     return deco
-
-
-def promote(names: list[str]) -> None:
-    """Reorder the registry so ``names`` (in the given order) come first.
-
-    The round driver's correctness gate checks registry entries
-    front-to-back within a bounded window, so promotion rotates
-    never-yet-verified or newly-changed queries into the window without
-    reshuffling module import order.  Raises on unknown names so a typo
-    can't silently leave a query outside the window."""
-    missing = [n for n in names if n not in _REGISTRY]
-    if missing:
-        raise KeyError(f"promote: unknown queries {missing}")
-    front = {n: _REGISTRY[n] for n in names}
-    rest = {n: v for n, v in _REGISTRY.items() if n not in front}
-    _REGISTRY.clear()
-    _REGISTRY.update(front)
-    _REGISTRY.update(rest)
 
 
 def queries() -> dict[str, SparkQuery]:

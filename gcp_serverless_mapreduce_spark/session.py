@@ -56,7 +56,7 @@ def get_spark(app_name: str = "gcp-serverless-mapreduce-spark",
     """Build (or get) a tuned local session.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
-    ``local[*]``); tests and bench.py share this factory.
+    ``local[*]``); the tests, tools and perfbench share this factory.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -81,30 +81,24 @@ def get_spark(app_name: str = "gcp-serverless-mapreduce-spark",
         # re-executions re-pay Janino compilation; sized so that a full
         # suite pass stays resident.  Scale-neutral: this is a JVM
         # compile cache (driver + executors), not data memory.
-        .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         # PySpark call-site capture for error context (Spark 4,
         # spark.python.sql.dataFrameDebugging.enabled, STATIC conf,
         # default true): every wrapped DataFrame/Column API call pays a
         # conf read + PySparkCurrentOrigin.set/clear (3-4 py4j round
-        # trips) + a Python stack walk.  cProfile on the r16 build-cost
-        # sweep attributes ~0.2-0.3 s per query BUILD to this wrapper
-        # at zero execution benefit; the suite runs ~238 query builds
-        # per bench pass.  Driver-side Python only — nothing about the
-        # executed plan or its scale behavior changes; flip the env for
-        # interactive debugging sessions where call-site context in
-        # error messages matters more than build latency.
-        .config("spark.python.sql.dataFrameDebugging.enabled",
-                os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"))
+        # trips) + a Python stack walk, ~0.2-0.3 s per query build at
+        # zero execution benefit (TUNING.md).  Driver-side Python only —
+        # nothing about the executed plan or its scale behavior changes.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # AQE coalescing floor.  With parallelismFirst (default on) the
         # coalesce target is max(shuffleBytes/parallelism, THIS); the
         # 1 MB default collapses any sub-32 MB shuffle to a handful of
         # partitions, serializing CPU-bound Arrow/pandas kernel stages
-        # whose cost AQE's byte model cannot see.  64k only changes the
+        # whose cost AQE's byte model cannot see.  256k only changes the
         # tiny-shuffle regime — at real volumes shuffleBytes/parallelism
         # dominates the max(), so production coalescing is unaffected.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_COALESCED_PARTITION", "256k"))
+                "256k")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

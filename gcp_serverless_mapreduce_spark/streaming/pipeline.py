@@ -194,8 +194,8 @@ def distinct_user_event_pairs(events: DataFrame) -> DataFrame:
 
 # One entry per runner call, appended in call order: the run's progress
 # record (see _Progress.record) plus ``sink`` and ``batch_side_ms``.
-# bench.py and the benchmark's tracer read the entries added around each
-# query.
+# perfbench's tracer (``perfbench/trace.py``) reads the entries added
+# around each query.
 RUN_STATS: list[dict] = []
 
 # Driver-timed batch-side compute of hybrid stream+batch queries (static

@@ -489,11 +489,10 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4 x 15-bit bands; any pair within hamming {MAX_HAMMING} shares an
     exact band), exact bit_count(xor) re-check.  Shuffles only on the
     band value — the simhash analog of the MinHash-LSH candidate plan.
-    Round 12: degenerate bands are CAPPED at {MAX_BUCKET} docs (smallest
-    ids kept), the same contract as the LSH pair join — the sf1 decade
-    check caught the uncapped plan emitting m^2/2 pairs per
-    identical-fingerprint group under replica-heavy data (36x wall on
-    10x data, 101x output; SCALING_SF1.md).  Pairs can be missed under
+    Degenerate bands are CAPPED at {MAX_BUCKET} docs (smallest ids kept),
+    the same contract as the LSH pair join, so an identical-fingerprint
+    group under replica-heavy data cannot emit m^2/2 pairs (round 12
+    measured 36x wall on 10x data uncapped).  Pairs can be missed under
     the cap, never invented."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_near_dups(docs, MAX_HAMMING, NEAR_BITS, NEAR_BANDS,
@@ -993,8 +992,8 @@ def stream_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rationale as stream_events_rate's indexed frame).  timed_batch_side:
     # this build is the bulk of the query's wall-vs-trigger-compute gap
     # (3.2 of 4.3 s at sf0.1) — batch-side work a steady-state deployment
-    # amortizes across ingest batches, timed so bench.py's
-    # compute-adjusted total counts it instead of calling it overhead.
+    # amortizes across ingest batches, timed so perfbench reports it as
+    # ``streaming.batch_side_share`` instead of unexplained overhead.
     with pipeline.timed_batch_side():
         old_h = (old.select(F.md5("text").alias("h")).distinct()
                  .withColumn("_seen", F.lit(1)).localCheckpoint())

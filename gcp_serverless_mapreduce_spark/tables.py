@@ -25,8 +25,6 @@ TABLE_NAMES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """GUARDED round-robin spread of an under-parallelized scan — the

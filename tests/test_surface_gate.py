@@ -6,7 +6,9 @@ scripts/coverage-report.sh per-package floor."""
 from __future__ import annotations
 
 import hashlib
+import importlib.util
 import math
+import os
 import subprocess
 import sys
 
@@ -93,3 +95,17 @@ def test_surface_coverage_gate_passes():
     r = subprocess.run([sys.executable, "tools/coverage_gate.py"],
                        capture_output=True, text=True, cwd="/root/repo")
     assert r.returncode == 0, r.stdout + r.stderr
+
+
+def test_surface_coverage_gate_fails_on_missing_consumer(monkeypatch, capsys):
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "coverage_gate", os.path.join(root, "tools", "coverage_gate.py"))
+    gate = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gate)
+    assert gate.missing_consumers(gate.CONSUMERS) == []
+    gone = os.path.join(root, "no_such_consumer.py")
+    assert gate.missing_consumers([gate.PKG, gone]) == [gone]
+    monkeypatch.setattr(gate, "CONSUMERS", gate.CONSUMERS + [gone])
+    assert gate.main() == 1
+    assert "no_such_consumer.py" in capsys.readouterr().out

@@ -1,11 +1,10 @@
-"""Local simulation of the driver's correctness gate.
+"""Parity gate: every registered query against its DuckDB twin.
 
 Runs ``__spark_entry__.entry`` (smoke) and every ``queries()`` entry against
 its ``oracle_sql()`` twin via DuckDB at the given sf dir, comparing
 row-count, column names, and an order-insensitive value multiset (columns
 sorted by name, rows canonicalized to strings — floats rounded to 9
-significant digits to absorb engine-formatting differences, matching the
-spirit of the driver's value-hash).
+significant digits to absorb engine-formatting differences).
 
 Full-suite runs (no query-name subset) also record a machine-checkable
 summary in ``PARITY_SUMMARY.json`` at the repo root — pass count, wall
@@ -53,10 +52,10 @@ def row_multiset(cols: list[str], rows) -> Counter:
 
 
 def dtype_class(t: str) -> str:
-    """Collapse an engine type name to the class the driver's value-hash
+    """Collapse an engine type name to the class the parity check
     distinguishes.  int-vs-float (round 2: DuckDB epoch() -> DOUBLE) and
-    int-vs-HUGEINT (round 1: SUM(int) -> int128/object) both burned a red
-    CORRECTNESS row on value-identical results, so those classes stay
+    int-vs-HUGEINT (round 1: SUM(int) -> int128/object) both failed a
+    correctness row on value-identical results, so those classes stay
     distinct; exact int widths within int64 do not (both engines render
     them identically)."""
     t = t.strip().lower()

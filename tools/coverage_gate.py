@@ -13,7 +13,8 @@ This is deliberately a NAME-reference audit, not an import audit: a
 symbol re-exported but never called still fails, so padding via
 re-export cannot pass.
 
-Usage: python tools/coverage_gate.py        (exit 1 on orphans)
+Usage: python tools/coverage_gate.py        (exit 1 on orphans or on a
+                                             missing CONSUMERS path)
        python tools/coverage_gate.py -v     (per-module table)
 """
 
@@ -28,7 +29,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "gcp_serverless_mapreduce_spark")
 CONSUMERS = [PKG, os.path.join(ROOT, "tests"),
              os.path.join(ROOT, "__spark_entry__.py"),
-             os.path.join(ROOT, "bench.py"),
              os.path.join(ROOT, "tools")]
 
 # Framework-invoked methods/classes: referenced by Spark by NAME or
@@ -42,8 +42,8 @@ PROTOCOL_OK = {
 
 def _is_registered(node) -> bool:
     """True for suite queries carrying the @register(...) decorator —
-    those are invoked through the registry by the driver's correctness
-    gate and tools/check_parity.py, which runs every entry."""
+    those are invoked through the registry by tools/check_parity.py,
+    which runs every entry."""
     for dec in getattr(node, "decorator_list", []):
         d = dec.func if isinstance(dec, ast.Call) else dec
         if isinstance(d, ast.Name) and d.id == "register":
@@ -74,6 +74,12 @@ def public_defs(path: str) -> dict[str, list[tuple[str, int, bool]]]:
             if syms:
                 out[rel] = syms
     return out
+
+
+def missing_consumers(consumers: list[str]) -> list[str]:
+    """Consumer paths that do not exist.  A deleted consumer must fail
+    the gate rather than silently shrink the reference set."""
+    return [c for c in consumers if not os.path.exists(c)]
 
 
 def referenced_names() -> dict[str, set[str]]:
@@ -119,6 +125,12 @@ def referenced_names() -> dict[str, set[str]]:
 
 def main() -> int:
     verbose = "-v" in sys.argv
+    missing = missing_consumers(CONSUMERS)
+    if missing:
+        print("MISSING CONSUMERS (restore them or drop them from CONSUMERS):")
+        for m in missing:
+            print(f"  {os.path.relpath(m, ROOT)}")
+        return 1
     defs = public_defs(PKG)
     refs = referenced_names()
     total = ok = 0

@@ -28,10 +28,6 @@ import types
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-# run_traced() imports bench_baseline from this tools/ dir; insert at
-# module scope so main() also works when line_coverage is *imported*
-# (e.g. by run_gates), not only under the __main__ guard.
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "gcp_serverless_mapreduce_spark") + os.sep
 
 # Per-module minimum line coverage (percent), calibrated to the traced
@@ -143,6 +139,19 @@ def executable_lines(path: str) -> set[int]:
     return out
 
 
+def _write_books(path: str) -> None:
+    """Three small Latin-1 books with Gutenberg markers and a few anagram
+    families, so the strip, tokenize and sink paths all run."""
+    os.makedirs(path)
+    body = "listen silent enlist, race care acre; garçon naïve stone notes\n"
+    for i in range(3):
+        text = (f"Book {i} front matter\n"
+                "*** START OF THIS PROJECT GUTENBERG EBOOK ***\n"
+                + body * 50 + "End of the Project Gutenberg EBook\n")
+        with open(os.path.join(path, f"book{i}.txt"), "wb") as fh:
+            fh.write(text.encode("ISO-8859-1"))
+
+
 def run_traced(sf_dir: str) -> None:
     """Execute, in-process under the tracer: the PACKAGE IMPORT itself
     (module-level registration/constant lines count), entry(), every
@@ -172,10 +181,9 @@ def run_traced(sf_dir: str) -> None:
         import shutil
         import tempfile
 
-        from bench_baseline import generate_corpus  # tools/ sibling
         scratch = tempfile.mkdtemp(prefix="line_cov_gutenberg_")
         try:
-            generate_corpus(os.path.join(scratch, "in"), 3, 60_000)
+            _write_books(os.path.join(scratch, "in"))
             docs = (read_gutenberg_corpus(spark, os.path.join(scratch, "in"))
                     .withColumnRenamed("path", "doc_id")
                     .withColumnRenamed("content", "text"))

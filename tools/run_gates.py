@@ -2,16 +2,16 @@
 scripts/test-unit.sh + coverage-report.sh): runs, in order,
 
 1. the unit/plan/golden test suite (pytest),
-2. the full DuckDB parity sweep at the driver's sf0.01 gate scale,
+2. the full DuckDB parity sweep at sf0.01,
 3. the public-surface coverage gate (tools/coverage_gate.py),
 4. the physical-plan drift gate (tools/plan_audit.py --check — fails
    if any query's plan shape changed without a PLANS.md regen),
 5. the line-coverage floor (tools/line_coverage.py — a traced parity
    sweep at sf0.001 vs per-module floors).
 
-Exits non-zero on the first failing gate.  The bench pair
-(bench.py at sf0.01/sf0.1 + tools/scaling_report.py) is separate
-because it is a measurement, not a gate.
+Exits non-zero on the first failing gate.  The benchmark
+(``python3 perfbench/run.py``) is separate because it is a measurement,
+not a gate.
 
 Usage: python tools/run_gates.py [sf_dir]
 """
