@@ -7,9 +7,8 @@ codegen); no row-at-a-time Python UDFs.
 from .text import (  # noqa: F401
     STOPWORDS,
     anagram_signature,
-    normalize_word,
     strip_gutenberg,
-    tokenize,
+    words,
 )
 from .vectors import cosine_similarity, dot, l2_norm  # noqa: F401
 from .hashing import fnv32a, md5_long, minhash_expr  # noqa: F401

@@ -3,17 +3,16 @@
 Reference parity map (all as Column expressions, JVM-side):
 
 - P1 strip_gutenberg      <- removeBookHeaderAndFooter, mapphase/split.go:90-116
-- P2 tokenize             <- strings.Fields split,     mapphase/split.go:68
-- P3 lower                <- strings.ToLower,          mapphase/split.go:126
-- P5 trim_non_letters     <- trimNonAlphabeticCharacters, mapphase/map.go:118-139
-- P6 STOPWORDS membership <- 185-entry stop-word set,  mapphase/map.go:84-107
-- P7 letters-only rlike   <- containsOnlyLetters,      mapphase/map.go:142-151
+- P2-P8 words             <- strings.Fields split (split.go:68), ToLower
+  (split.go:126), per-book distinct (split.go:119-133) and preProcessWord
+  (map.go:82-151: edge trim, 185-entry stop words, letters only), fused
+  into one regex pass per document
 - P9 anagram_signature    <- sort word's chars,        mapphase/map.go:68-76
 
 The Go trim loops have edge quirks (a word with no letters is left
 untrimmed), but every such residue is then dropped by the letters-only
-predicate, so `regexp_replace('^[^\\p{L}]+|[^\\p{L}]+$')` + `rlike('^\\p{L}+$')`
-is observationally equivalent — pinned by the goldens ported from
+check, so matching only tokens whose edge-trimmed core is ``\\p{L}+`` is
+observationally equivalent — pinned by the goldens ported from
 map_test.go:135-181 in tests/test_text_functions.py.
 """
 
@@ -57,6 +56,19 @@ _HEADER_RE = r"\*\*\*.*START OF TH(E|IS) PROJECT GUTENBERG EBOOK.*\*\*\*"
 _FOOTER1_RE = r"End of[ th(e|is)]* Project Gutenberg"
 _FOOTER2_RE = r"\*\*\*.*END OF TH(E|IS) PROJECT GUTENBERG EBOOK.*\*\*\*"
 
+# Go's unicode.IsSpace restricted to Latin-1, the separator set of
+# strings.Fields (split.go:68) on the decoded corpus.  Java's `\s` lacks
+# U+0085 and U+00A0, RE2's also lacks U+000B.  The class is written in the
+# dialect subset Java and RE2 share, so the DuckDB twins use it verbatim.
+_GO_SPACE = r"\t\n\x0B\f\r \x{85}\x{A0}"
+
+# P2+P5+P7 as one pattern: a whole Fields token whose edge-trimmed core is
+# letters only.  Group 1 is the core.  The lookarounds pin both ends of
+# the match to token boundaries, so a token with an interior non-letter
+# matches nowhere.
+_WORD_RE = (rf"(?<![^{_GO_SPACE}])[^\p{{L}}{_GO_SPACE}]*(\p{{L}}+)"
+            rf"[^\p{{L}}{_GO_SPACE}]*(?![^{_GO_SPACE}])")
+
 
 def strip_gutenberg(text: Column) -> Column:
     """P1: drop everything up to+incl the START marker (+1 char, matching
@@ -64,60 +76,31 @@ def strip_gutenberg(text: Column) -> Column:
     footer marker on.  Footer form 1 wins over form 2 when both exist
     (split.go:100-114).
 
-    The header pattern MUST be ``\\A``-anchored: an unanchored leading
-    lazy ``[\\s\\S]*?`` makes the regex engine's find-loop over start
-    positions multiply with the lazy expansion loop — O(n²), which hung
-    book-sized (~430 KB) strings (the 43 MB corpus benchmark never
-    finished).  Anchoring kills the outer loop; same first-match
-    semantics, measured 10× faster than any extract variant.
+    Each cut is a first-match ``split(..., 2)``, so each marker regex
+    scans the book at most once (TUNING.md "Flagship map stage").
     """
-    after = F.regexp_replace(
-        text, r"\A[\s\S]*?" + _HEADER_RE + r"[\s\S]", "")
-    return F.when(
-        after.rlike(_FOOTER1_RE),
-        F.regexp_replace(after, _FOOTER1_RE + r"[\s\S]*", ""),
-    ).otherwise(
-        F.regexp_replace(after, _FOOTER2_RE + r"[\s\S]*", ""),
+    after = F.element_at(F.split(text, _HEADER_RE + r"[\s\S]", 2), -1)
+    form1 = F.split(after, _FOOTER1_RE, 2)
+    return F.when(F.size(form1) == 2, form1[0]).otherwise(
+        F.split(after, _FOOTER2_RE, 2)[0])
+
+
+def words(text: Column) -> Column:
+    """P2-P8 fused: the distinct kept words of one document, in one scan
+    of the text.  A kept word is a Fields token, lower-cased, with its
+    non-letter edges trimmed, that is letters only and not a stop word.
+
+    Lower-casing the whole text equals lower-casing each token: no
+    separator is a cased or case-ignorable character, so no case mapping
+    looks across a token boundary.  ``array_except`` also drops repeats,
+    which is the per-document distinct (P4).
+    """
+    return F.array_except(
+        F.regexp_extract_all(F.lower(text), F.lit(_WORD_RE), 1),
+        F.array(*[F.lit(w) for w in STOPWORDS]),
     )
-
-
-def tokenize(text: Column) -> Column:
-    """P2: strings.Fields — split on whitespace runs, no empty tokens.
-
-    Returns array<string>.  ``split`` on ``\\s+`` leaves a leading empty
-    token when the text starts with whitespace; filter mirrors Fields.
-    """
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
-
-
-def trim_non_letters(word: Column) -> Column:
-    """P5: strip non-letter runes from both ends (Unicode category L)."""
-    return F.regexp_replace(word, r"^[^\p{L}]+|[^\p{L}]+$", "")
-
-
-def letters_only(word: Column) -> Column:
-    """P7: true iff every rune is a Unicode letter (non-empty)."""
-    return word.rlike(r"^\p{L}+$")
-
-
-def is_stopword(word: Column) -> Column:
-    """P6: membership in the reference's stop-word set."""
-    return word.isin(*STOPWORDS)
-
-
-def normalize_word(word: Column) -> Column:
-    """P5+P6+P7+P8 fused: preProcessWord (map.go:82-115).
-
-    Returns the cleaned word, or NULL when the word is dropped (stop word,
-    interior non-letters, or empty after trim).  NULL (vs '') lets callers
-    filter with ``isNotNull`` and keeps the expression null-safe.
-    """
-    trimmed = trim_non_letters(word)
-    return F.when(
-        letters_only(trimmed) & ~is_stopword(trimmed), trimmed
-    ).otherwise(F.lit(None))
 
 
 def anagram_signature(word: Column) -> Column:
     """P9: sort the word's characters — 'race' -> 'acer' (map.go:68-76)."""
-    return F.concat_ws("", F.array_sort(F.split(word, "")))
+    return F.concat_ws("", F.sort_array(F.split(word, "")))

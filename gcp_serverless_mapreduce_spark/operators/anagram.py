@@ -23,9 +23,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     anagram_signature,
-    normalize_word,
     strip_gutenberg,
-    tokenize,
+    words,
 )
 
 
@@ -33,8 +32,9 @@ def tokenize_documents(docs: DataFrame,
                        doc_col: str = "doc_id",
                        text_col: str = "text",
                        gutenberg: bool = False) -> DataFrame:
-    """Splitter stage (P1-P4): text -> one row per *distinct lowered token
-    per document*: (doc_col, word).
+    """Splitter+Mapper word stages (P1-P8): text -> one row per *distinct
+    kept word per document*: (doc_col, word), the word lower-cased,
+    edge-trimmed, letters only and not a stop word.
 
     Per-document distinct scope matters: the reference dedups within one
     book only (split.go:119-133), not globally — two documents both emit a
@@ -42,26 +42,11 @@ def tokenize_documents(docs: DataFrame,
     *inside the row* before the explode: zero shuffle, where an
     explode-then-``distinct()`` plan would exchange every token.  The
     pipeline's only shuffle stays the signature groupBy.
-
-    Known gap: Java ``\\s+`` does not split on U+0085 or U+00A0, while Go
-    ``strings.Fields`` (split.go:68) does (ROADMAP item 2).
     """
     text = F.col(text_col)
     if gutenberg:
         text = strip_gutenberg(text)
-    words = F.array_distinct(F.transform(tokenize(text), F.lower))
-    return docs.select(F.col(doc_col), F.explode(words).alias("word"))
-
-
-def map_words(tokens: DataFrame) -> DataFrame:
-    """Mapper stage (P5-P9): normalize each word, drop nulls, project the
-    anagram signature (map.go:57-79): -> (sorted_word, word)."""
-    cleaned = tokens.withColumn("word", normalize_word(F.col("word"))).filter(
-        F.col("word").isNotNull()
-    )
-    return cleaned.select(
-        anagram_signature(F.col("word")).alias("sorted_word"), "word"
-    )
+    return docs.select(F.col(doc_col), F.explode(words(text)).alias("word"))
 
 
 def group_anagrams(mapped: DataFrame, min_group_size: int = 2) -> DataFrame:
@@ -71,13 +56,13 @@ def group_anagrams(mapped: DataFrame, min_group_size: int = 2) -> DataFrame:
       HashAggregateExec;
     - ``collect_set`` = the Redis list union + reduce-side dedup
       (shuffle.go:112, reduce.go:102-115);
-    - ``array_sort`` = per-group value sort (reduce.go:88);
+    - ``sort_array`` = per-group value sort (reduce.go:88);
     - size filter = HAVING len > 1 (reduce.go:86).
     -> (sorted_word, anagrams array<string>, n_anagrams)
     """
     return (
         mapped.groupBy("sorted_word")
-        .agg(F.array_sort(F.collect_set("word")).alias("anagrams"))
+        .agg(F.sort_array(F.collect_set("word")).alias("anagrams"))
         .filter(F.size("anagrams") >= min_group_size)
         .withColumn("n_anagrams", F.size("anagrams"))
     )
@@ -86,12 +71,16 @@ def group_anagrams(mapped: DataFrame, min_group_size: int = 2) -> DataFrame:
 def anagram_pipeline(docs: DataFrame,
                      doc_col: str = "doc_id",
                      text_col: str = "text",
-                     gutenberg: bool = False) -> DataFrame:
-    """End-to-end: documents -> anagram groups.
+                     gutenberg: bool = False,
+                     min_group_size: int = 2) -> DataFrame:
+    """End-to-end: documents -> anagram groups of at least
+    ``min_group_size`` words.
 
     Flagship query for ``__spark_entry__.entry`` over the ``documents``
     fixture table; with ``gutenberg=True`` it is the exact reference job
     over a text corpus (compose with sources.read_gutenberg_corpus).
     """
     tokens = tokenize_documents(docs, doc_col, text_col, gutenberg)
-    return group_anagrams(map_words(tokens))
+    mapped = tokens.select(
+        anagram_signature(F.col("word")).alias("sorted_word"), "word")
+    return group_anagrams(mapped, min_group_size)

@@ -34,16 +34,15 @@ def read_gutenberg_corpus(spark: SparkSession, path: str,
         .option("pathGlobFilter", f"*{suffix}")
         .load(path)
     )
-    # binaryFile packs files into tasks by size (maxPartitionBytes), but the
-    # per-file work downstream (regex strip + tokenize) is CPU-bound, not
-    # IO-bound: a 43 MB corpus otherwise lands in ONE task and serializes
-    # the whole map phase.  Spread files across cores first — shuffling
-    # whole small files is cheap, idle cores are not (measured 2.4× on the
-    # 43 MB baseline job).  GUARDED: only when the scan genuinely
-    # under-parallelizes (fewer splits than cores).  At 100 TB the file
-    # source already yields ~10^5-10^6 splits >> cores and an unconditional
-    # repartition would shuffle every payload byte for nothing; the
-    # partition count is plan-time metadata (file listing), not a job.
+    # The per-file work downstream (regex strip + tokenize) is CPU-bound,
+    # so every core needs a task.  The file source already packs files
+    # into about one split per core (split size = total bytes / cores,
+    # within openCostInBytes..maxPartitionBytes: the 100-book 43 MB corpus
+    # gets 4 splits on 4 cores), but a binaryFile row is never split, so
+    # fewer files than cores means fewer tasks than cores.  Only then
+    # spread the rows; a repartition with enough splits would shuffle
+    # every payload byte for nothing.  The partition count is plan-time
+    # metadata (file listing), not a job.
     parallelism = spark.sparkContext.defaultParallelism
     if raw.rdd.getNumPartitions() < parallelism:
         raw = raw.repartition(parallelism)

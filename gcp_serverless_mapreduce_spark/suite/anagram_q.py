@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import STOPWORDS
+from ..functions.text import _GO_SPACE, STOPWORDS
 from ..operators import anagram
 from ..registry import register
 from ..tables import load_table
@@ -18,12 +18,13 @@ def _sql_quote(s: str) -> str:
 _STOPWORDS_SQL = ", ".join(_sql_quote(w) for w in STOPWORDS)
 
 # Shared CTE prefix: tokenize -> per-doc distinct (P2-P4) -> normalize
-# (P5-P7) -> anagram signature (P9); mirrors operators/anagram.py stage for
-# stage.  DuckDB regexes are RE2, Spark's are java.util.regex; the patterns
-# used are in the common dialect subset (\p{L}, anchors, alternation).
+# (P5-P7) -> anagram signature (P9), one step per stage: the per-stage
+# reference for the fused ``words()`` expression the engine runs.  DuckDB
+# regexes are RE2, Spark's are java.util.regex; the patterns used are in
+# the common dialect subset (\p{L}, anchors, alternation, \x{..} escapes).
 _ANAGRAM_CTE = f"""
 WITH toks AS (
-    SELECT DISTINCT doc_id, lower(unnest(string_split_regex(trim(text), '\\s+'))) AS word
+    SELECT DISTINCT doc_id, lower(unnest(string_split_regex(trim(text), '[{_GO_SPACE}]+'))) AS word
     FROM documents
 ),
 cleaned AS (
@@ -45,9 +46,7 @@ sigs AS (
 def _anagram_groups_df(spark: SparkSession, sf_dir: str,
                        min_group_size: int) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tokens = anagram.tokenize_documents(docs)
-    grouped = anagram.group_anagrams(anagram.map_words(tokens),
-                                     min_group_size=min_group_size)
+    grouped = anagram.anagram_pipeline(docs, min_group_size=min_group_size)
     return grouped.select(
         "sorted_word",
         F.array_join("anagrams", " ").alias("anagrams"),

@@ -6,12 +6,17 @@ from __future__ import annotations
 
 import os
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+import __spark_entry__
+
+from gcp_serverless_mapreduce_spark.functions.text import anagram_signature
 from gcp_serverless_mapreduce_spark.operators.anagram import (
     anagram_pipeline,
     group_anagrams,
-    map_words,
     tokenize_documents,
 )
 from gcp_serverless_mapreduce_spark.sources.text import (
@@ -23,11 +28,10 @@ from gcp_serverless_mapreduce_spark.sources.text import (
 def test_mapper_golden(spark):
     # ["the","quick","brown","fox","quick"] => {cikqu:[quick], bnorw:[brown],
     # fox:[fox]} — stop word dropped, dup collapsed (map_test.go:21-44).
-    words = spark.createDataFrame(
-        [(1, w) for w in ["the", "quick", "brown", "fox", "quick"]],
-        ["doc_id", "word"],
-    ).distinct()
-    mapped = map_words(words)
+    docs = spark.createDataFrame([(1, "the quick brown fox quick")],
+                                 ["doc_id", "text"])
+    mapped = tokenize_documents(docs).select(
+        anagram_signature(F.col("word")).alias("sorted_word"), "word")
     got = {r["sorted_word"]: r["word"] for r in mapped.collect()}
     assert got == {"cikqu": "quick", "bnorw": "brown", "fox": "fox"}
 
@@ -77,16 +81,53 @@ def test_corpus_pipeline(spark, tmp_path):
     assert "acdert" not in got
 
 
+def test_tokenize_documents_emits_kept_words_per_doc(spark):
+    # One row per distinct normalized word per document: case, edge
+    # punctuation, stop words and words with digits are handled before
+    # the explode, and a word shared by two documents is emitted twice.
+    docs = spark.createDataFrame(
+        [(1, "Race race, RACE! the 1a"), (2, "care race")],
+        ["doc_id", "text"])
+    got = sorted(map(tuple, tokenize_documents(docs).collect()))
+    assert got == [(1, "race"), (2, "care"), (2, "race")]
+
+
 def test_documents_flagship(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     # The synthetic vocabulary (31 distinct words) contains no anagram pairs,
     # so the reference-faithful HAVING>1 variant is legitimately empty...
     assert anagram_pipeline(docs).count() == 0
     # ...and the flagship entry() variant keeps all signature groups.
-    tokens = tokenize_documents(docs)
-    out = group_anagrams(map_words(tokens), min_group_size=1)
-    rows = out.collect()
+    rows = anagram_pipeline(docs, min_group_size=1).collect()
     assert len(rows) > 0
     for r in rows:
         assert r["anagrams"] == sorted(set(r["anagrams"]))
         assert r["n_anagrams"] >= 1
+
+
+# "listen", "silent" and "enlist" separated by U+0085 (NEL) and U+00A0
+# (NBSP): Go's strings.Fields (split.go:68) splits on both, Java's and
+# RE2's ``\s`` on neither.
+GO_SPACED = "listen\x85silent\xa0enlist"
+
+
+def test_go_fields_separators_split_words(spark):
+    docs = spark.createDataFrame([(1, GO_SPACED)], ["doc_id", "text"])
+    got = [(r["sorted_word"], r["anagrams"])
+           for r in anagram_pipeline(docs).collect()]
+    assert got == [("eilnst", ["enlist", "listen", "silent"])]
+
+
+def test_go_fields_separators_duckdb_twin(spark, tmp_path):
+    # The DuckDB twin splits on the same eight characters as the engine.
+    text = f"{GO_SPACED}\x0btinsel inlets"
+    pq.write_table(pa.table({"doc_id": [1], "text": [text]}),
+                   tmp_path / "documents.parquet")
+    rows = __spark_entry__.queries()["anagram_pairs"](
+        spark, str(tmp_path)).collect()
+    got = [(r["sorted_word"], r["anagrams"], r["n_anagrams"]) for r in rows]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    want = con.execute(__spark_entry__.oracle_sql()["anagram_pairs"]).fetchall()
+    assert got == want == [("eilnst", "enlist inlets listen silent tinsel", 5)]

@@ -23,20 +23,15 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_trim_non_letters_and_letters_only(spark):
-    from gcp_serverless_mapreduce_spark.functions.text import (
-        is_stopword, letters_only, trim_non_letters)
+    from gcp_serverless_mapreduce_spark.functions.text import words
 
     df = spark.createDataFrame(
-        [("--ça!",), ("abc",), ("1a2",), ("the",), ("''",)], ["w"])
-    rows = df.select(
-        trim_non_letters(F.col("w")).alias("t"),
-        letters_only(F.col("w")).alias("lo"),
-        is_stopword(F.col("w")).alias("sw")).collect()
-    # edge trim strips non-letter runes (digits included) from both
-    # ends but keeps interior ones (P5) — "1a2" trims to "a"
-    assert [r["t"] for r in rows] == ["ça", "abc", "a", "the", ""]
-    assert [r["lo"] for r in rows] == [False, True, False, True, False]
-    assert [r["sw"] for r in rows] == [False, False, False, True, False]
+        [("--ça!",), ("abc",), ("1b2",), ("x1y",), ("the",), ("''",)], ["w"])
+    got = [r["k"] for r in df.select(words(F.col("w")).alias("k")).collect()]
+    # edge trim strips non-letter runes (digits included) from both ends
+    # (P5) — "1b2" trims to "b"; an interior non-letter (P7), a stop word
+    # (P6) or nothing left after the trim (P8) drops the word
+    assert got == [["ça"], ["abc"], ["b"], [], [], []]
 
 
 def test_word_bigrams_udtf_eval():

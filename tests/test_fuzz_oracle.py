@@ -10,13 +10,16 @@ from __future__ import annotations
 import bisect
 import datetime as dt
 import random
+import re
 import unicodedata
 
 from pyspark.sql import functions as F
 
-from gcp_serverless_mapreduce_spark.functions.text import STOPWORDS
+from gcp_serverless_mapreduce_spark.functions.text import (
+    STOPWORDS, anagram_signature, words)
 from gcp_serverless_mapreduce_spark.operators import temporal, textstats
-from gcp_serverless_mapreduce_spark.operators.anagram import map_words
+from gcp_serverless_mapreduce_spark.operators.anagram import (
+    tokenize_documents)
 
 RNG = random.Random(20260813)
 BASE = dt.datetime(2024, 3, 1)
@@ -41,17 +44,50 @@ def _py_preprocess(word: str) -> str | None:
 
 def test_normalize_and_signature_fuzz(spark):
     alphabet = "abcdeé'ç1.-ßπ!" + "xyz"
-    words = ["".join(RNG.choices(alphabet, k=RNG.randint(1, 10)))
-             for _ in range(400)] + list(STOPWORDS[:20]) + ["", "...", "a1a"]
-    df = spark.createDataFrame([(i, w) for i, w in enumerate(words)],
-                               ["doc_id", "word"])
-    got = {(r["word"], r["sorted_word"]) for r in map_words(df).collect()}
+    toks = ["".join(RNG.choices(alphabet, k=RNG.randint(1, 10)))
+            for _ in range(400)] + list(STOPWORDS[:20]) + ["", "...", "a1a"]
+    df = spark.createDataFrame([(i, w) for i, w in enumerate(toks)],
+                               ["doc_id", "text"])
+    got = {(r["word"], r["sorted_word"]) for r in tokenize_documents(df)
+           .select("word", anagram_signature(F.col("word"))
+                   .alias("sorted_word")).collect()}
     expect = set()
-    for w in words:
+    for w in toks:
         p = _py_preprocess(w)
         if p is not None:
             expect.add((p, "".join(sorted(p))))
     assert got == expect
+
+
+# ---- P2-P8: fused words() vs strings.Fields + preProcessWord ----------
+
+# Go unicode.IsSpace on Latin-1; \x1c is a Python str.split() separator
+# but not a Go one.
+_GO_SPACES = "\t\n\x0b\x0c\r \x85\xa0"
+
+
+def _py_words(text: str | None) -> list[str] | None:
+    if text is None:
+        return None
+    kept = (_py_preprocess(t.lower())
+            for t in re.split(f"[{_GO_SPACES}]+", text) if t)
+    return list(dict.fromkeys(w for w in kept if w is not None))
+
+
+def test_words_fuzz(spark):
+    rng = random.Random(20261017)
+    chars = _GO_SPACES + "\x1c" + "aBcEéÉçÇßªºÿÀ" + "019" + "'.-!;[]/,"
+    pieces = list(chars) + [w.upper() for w in STOPWORDS[::9]] + list(
+        STOPWORDS[::4]) + ["Race", "CARE", "acre."]
+    texts = ["".join(rng.choices(pieces, k=rng.randint(0, 40)))
+             for _ in range(2000)] + [None]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    got = {r["i"]: r["w"] for r in df.select(
+        "i", words(F.col("t")).alias("w")).collect()}
+    assert len(got) == len(texts)
+    bad = [(t, got[i], _py_words(t)) for i, t in enumerate(texts)
+           if got[i] != _py_words(t)]
+    assert not bad, bad[:3]
 
 
 # ---- as-of join vs bisect oracle --------------------------------------

@@ -85,8 +85,8 @@ def test_corpus_reader_no_shuffle_on_many_files(spark, tmp_path):
 
 
 def test_corpus_reader_spreads_few_files(spark, tmp_path):
-    # Bench shape: 43 MB lands in ~1 split -> spread across cores fires
-    # (the measured 2.4x on the baseline job depends on this).
+    # Fewer files than cores: each binaryFile row is one unsplittable
+    # split, so the spread across cores fires.
     from gcp_serverless_mapreduce_spark.sources.text import read_gutenberg_corpus
 
     few = tmp_path / "few"
@@ -104,13 +104,9 @@ def test_fnv32a_matches_reference_golden():
 
 
 def test_anagram_sink_partitioned_content_union(spark, tmp_path):
-    from gcp_serverless_mapreduce_spark.operators.anagram import (
-        group_anagrams, map_words, tokenize_documents)
-
     docs = load_table(spark, SF_DIR, "documents")
     # min_group_size=1: the synthetic vocabulary has no true anagram pairs
-    grouped = group_anagrams(map_words(tokenize_documents(docs)),
-                             min_group_size=1)
+    grouped = anagram_pipeline(docs, min_group_size=1)
     assert grouped.repartition(5, F.col("sorted_word")) \
         .rdd.getNumPartitions() == 5  # S6: N reducer shards (X2)
     out = str(tmp_path / "anagrams")

@@ -3,20 +3,24 @@ map_test.go:135-181, split_test.go:237-262)."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
 from gcp_serverless_mapreduce_spark.functions.text import (
+    _FOOTER1_RE,
+    _FOOTER2_RE,
+    _HEADER_RE,
     STOPWORDS,
     anagram_signature,
-    normalize_word,
     strip_gutenberg,
-    tokenize,
+    words,
 )
 
 
-def _norm_one(spark, word: str):
-    df = spark.createDataFrame([(word,)], ["w"])
-    return df.select(normalize_word(F.col("w")).alias("out")).first()["out"]
+def _words_one(spark, text: str):
+    df = spark.createDataFrame([(text,)], ["t"])
+    return df.select(words(F.col("t")).alias("out")).first()["out"]
 
 
 def test_stopword_count():
@@ -29,12 +33,12 @@ def test_stopword_count():
 
 def test_preprocess_goldens(spark):
     # map_test.go:135-181
-    assert _norm_one(spark, "teststring.") == "teststring"  # trailing dot stripped
-    assert _norm_one(spark, "test1string") is None  # interior digit -> dropped
-    assert _norm_one(spark, "the") is None  # stop word
-    assert _norm_one(spark, "would've") is None  # apostrophe form dropped
+    assert _words_one(spark, "teststring.") == ["teststring"]  # trailing dot stripped
+    assert _words_one(spark, "test1string") == []  # interior digit -> dropped
+    assert _words_one(spark, "the") == []  # stop word
+    assert _words_one(spark, "would've") == []  # apostrophe form dropped
     # non-ASCII letter ç survives trim and letters-only (map_test.go:171-181)
-    assert _norm_one(spark, ";'.[]/,'][çteststringç];/];];/'") == "çteststringç"
+    assert _words_one(spark, ";'.[]/,'][çteststringç];/];];/'") == ["çteststringç"]
 
 
 def test_anagram_signature(spark):
@@ -44,9 +48,12 @@ def test_anagram_signature(spark):
 
 
 def test_tokenize_fields_semantics(spark):
-    df = spark.createDataFrame([("  The quick\nbrown\t fox  ",)], ["t"])
-    got = df.select(tokenize(F.col("t")).alias("toks")).first()["toks"]
-    assert got == ["The", "quick", "brown", "fox"]
+    # strings.Fields separators on Latin-1 include VT, FF, NEL and NBSP.
+    # \x1c is not one: "lazy\x1cdog" stays one token with an interior
+    # non-letter, so it is dropped.
+    got = _words_one(spark, "  The quick\nbrown\t fox\x0bjumps\x85over\xa0"
+                            "the lazy\x1cdog\x0cRed\rsky  ")
+    assert got == ["quick", "brown", "fox", "jumps", "over", "red", "sky"]
 
 
 HEADER_TEXT = (
@@ -80,3 +87,53 @@ def test_no_header_no_footer_passthrough(spark):
     assert df.select(strip_gutenberg(F.col("t")).alias("b")).first()["b"] == (
         "plain text no markers"
     )
+
+
+def _strip_gutenberg_reference(text):
+    """Three-regex form of P1: a ``\\A``-anchored lazy whole-text replace
+    for the header, then an ``rlike`` picking which footer form to cut.
+    Slow on book-sized text, kept as the reference for the first-match
+    cuts of ``strip_gutenberg``."""
+    after = F.regexp_replace(
+        text, r"\A[\s\S]*?" + _HEADER_RE + r"[\s\S]", "")
+    return F.when(
+        after.rlike(_FOOTER1_RE),
+        F.regexp_replace(after, _FOOTER1_RE + r"[\s\S]*", ""),
+    ).otherwise(
+        F.regexp_replace(after, _FOOTER2_RE + r"[\s\S]*", ""),
+    )
+
+
+_MARKER_PIECES = (
+    "*** START OF THE PROJECT GUTENBERG EBOOK ***",
+    "***START OF THIS PROJECT GUTENBERG EBOOK FOO***",
+    "*** START OF THE PROJECT GUTENBERG EBOOK",
+    "End of the Project Gutenberg", "End of this Project Gutenberg",
+    "End of Project Gutenberg", "End ofthe Project Gutenberg",
+    "*** END OF THE PROJECT GUTENBERG EBOOK ***",
+    "*** END OF THIS PROJECT GUTENBERG EBOOK ***",
+    " ***", "***", "*", "\n", " ", "\r\n", "body", "text é", "End",
+)
+
+
+def test_strip_gutenberg_matches_reference(spark):
+    rng = random.Random(20261017)
+    texts = ["".join(rng.choices(_MARKER_PIECES, k=rng.randint(0, 12)))
+             for _ in range(1000)]
+    texts += [
+        "x *** START OF THE PROJECT GUTENBERG EBOOK ***",  # no next char
+        "*** START OF THE PROJECT GUTENBERG EBOOK *** ***",
+        "*** START OF THE PROJECT GUTENBERG EBOOK *** ***\nbody",
+        "a\n*** END OF THE PROJECT GUTENBERG EBOOK ***\nb\n"
+        "End of the Project Gutenberg\nc",  # form 2 before form 1
+        "", None,
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, t string")
+    rows = df.select(
+        "i", strip_gutenberg(F.col("t")).alias("got"),
+        _strip_gutenberg_reference(F.col("t")).alias("want")).collect()
+    assert len(rows) == len(texts)
+    bad = [(texts[r["i"]], r["got"], r["want"])
+           for r in rows if r["got"] != r["want"]]
+    assert not bad, bad[:3]
