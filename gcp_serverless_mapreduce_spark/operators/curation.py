@@ -368,7 +368,7 @@ def inline_bloom_spans(bitmap: list[int], n: int = 3,
         # fold: this replaces the r13 accumulator-concat fold that was
         # O(hits^2) on a wall-to-wall contaminated document (r13
         # watch-item 3) and drops its fragile element_at(acc, -1)
-        # behind-short-circuit probe (ADVICE r13) entirely.
+        # behind-short-circuit probe entirely.
         tail = F.greatest(F.size(ps) - 1, F.lit(0))
         prevs = F.concat(F.array(-gap - 1), F.slice(ps, 1, tail))
         nexts = F.concat(F.slice(ps, 2, tail), F.array(big))

@@ -54,11 +54,11 @@ def py_tokens(text: str | None) -> list[str]:
     vertical tab U+000B out of ``\\s``, so text containing it is outside
     the Spark/DuckDB parity contract.
 
-    Semantics reproduced exactly, not just on ASCII (r15 verdict task 4
-    / ADVICE): lowercase first; trim strips SPACES only (Spark/DuckDB
-    ``trim`` default); the split KEEPS empty tokens, so leading/trailing
-    non-space whitespace yields the same empty first/last token the JVM
-    expression emits, and Unicode whitespace does NOT split.  The
+    Semantics reproduced exactly, not just on ASCII: lowercase first;
+    trim strips SPACES only (Spark/DuckDB ``trim`` default); the split
+    KEEPS empty tokens, so leading/trailing non-space whitespace yields
+    the same empty first/last token the JVM expression emits, and
+    Unicode whitespace does NOT split.  The
     previous ``str.strip().lower().split()`` silently diverged on
     leading tabs, trailing newlines and NBSP — fine on the fixtures'
     ASCII, wrong at 100 TB of real text.  Callers that need the
@@ -324,7 +324,7 @@ def incremental_dedup_route(new_docs: DataFrame, old_hashes: DataFrame,
     topology).  posexplode_outer keeps < k-token docs as a null-band
     row so the exact face still covers every new doc.
 
-    Scale assumption (ADVICE r12): the broadcast shape holds only while
+    Scale assumption: the broadcast shape holds only while
     the OLD-corpus fingerprint/band indexes fit the broadcast threshold
     (md5 + band hashes are ~50 B/doc -> ~10^9 docs/TB of index; a
     steady 100 TB/day ingest outgrows that in weeks).  Past that, drop
@@ -675,7 +675,7 @@ def shingle_novelty(docs: DataFrame, k: int = 3,
                     .alias("novelty")))
 
 
-# One-row diagnostic of the last dup_clusters run (round-13 verdict task 6):
+# One-row diagnostic of the last dup_clusters run: the
 # measured iteration count vs the adaptive cap, so a cluster operator that
 # approaches its bound is observable instead of a surprise RuntimeError.
 CC_STATS: dict = {}
@@ -710,8 +710,8 @@ def dup_clusters(pairs: DataFrame, max_iter: int | None = None) -> DataFrame:
     ``max_iter=None`` (default) sizes the cap ADAPTIVELY from the data:
     ceil(log2 n_nodes) + 8 — diameter <= n_nodes, so the doubling bound
     always suffices with margin, and no fixed constant can be outgrown
-    by a pathological 100 TB chain (round-13 verdict task 6; the old
-    fixed 20 refused graphs it could have solved).  The node count is
+    by a pathological 100 TB chain (the old fixed 20 refused graphs it
+    could have solved).  The node count is
     one aggregate over the already-materialized label frame.  The
     measured iteration count lands in module-level ``CC_STATS``
     (n_nodes, rounds, cap, converged) — the one-row diagnostic a
@@ -927,7 +927,7 @@ def ladder_tagged_grams(ns: tuple[int, ...], text_col: str = "text"):
     grams for that rung; shorter than min(ns), an empty array (the old
     pre-explode size filter, folded in).  Token semantics are EXACT
     (:func:`py_tokens` == the twin's ``tokens_col``, empty tokens kept
-    — not just ASCII-equivalent; r15 verdict task 4 / ADVICE); NULL
+    — not just ASCII-equivalent); NULL
     text takes the twin's ``size(NULL)``-guard branch to []."""
     lo = min(ns)
 

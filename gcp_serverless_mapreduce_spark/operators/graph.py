@@ -58,8 +58,8 @@ def pagerank(edges: DataFrame, iters: int = 5,
     # driver action, so the whole fixpoint is ONE lazy plan executed once
     # (measured 3.5× faster at sf0.1 than eager per-round
     # materialization); at ``iters`` beyond ~15 add a periodic checkpoint
-    # for plan depth.  TUNING.md's pagerank-ab section records the full
-    # physical A/B: per-round broadcast-rank variants lose or tie and
+    # for plan depth.  TUNING.md's "PageRank physical-plan A/B" records
+    # the full physical A/B: per-round broadcast-rank variants lose or tie and
     # cannot scale (the rank frame is O(|nodes|)), and persist() — which
     # unlike localCheckpoint keeps the window's src outputPartitioning —
     # measures no difference at sf0.1; at real edge volumes, bucket the

@@ -201,7 +201,7 @@ def compaction_bins(files: DataFrame, target: int,
     Within each partition directory (``part_col``), sub-target entries
     ordered by (size desc, id) get ``bin_id = (exclusive-prefix-sum of
     size) div target`` — integer division on the long prefix sum, so
-    the fold is exact at any cumulative byte count (ADVICE r11).
+    the fold is exact at any cumulative byte count.
     Entries >= target are NOT returned: they are already
     scan-efficient and pass through compaction untouched.
 
@@ -225,8 +225,8 @@ def compact_partition(docs: DataFrame, part_value: str, target: int,
                       id_col: str = "doc_id",
                       size_col: str = "n_chars") -> DataFrame:
     """EXECUTE the compaction manifest for one partition — the
-    verification face of ``file_compaction_plan`` (round-11 verdict
-    task 7): rewrite the partition's sub-target entries into exactly
+    verification face of ``file_compaction_plan``: rewrite the
+    partition's sub-target entries into exactly
     one output file per manifest bin.
 
     ``repartition(bin_id)`` routes each bin's rows to one task;

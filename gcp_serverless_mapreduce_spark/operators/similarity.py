@@ -866,8 +866,8 @@ IVF_TRAIN_Q = 1_000_000
 # sampling modulus scales with corpus row count (train_sample_mod), so
 # the expected sample stays in [TARGET, 2*TARGET) at ANY scale — a fixed
 # 1-in-k fraction would grow linearly with the corpus and turn the
-# coalesce(4)-packed training scan into a serial bottleneck at 100 TB
-# (round-9 verdict watch-item).  Membership stays a pure function of
+# coalesce(4)-packed training scan into a serial bottleneck at 100 TB.
+# Membership stays a pure function of
 # (id, corpus row count), so the DuckDB oracle replays it exactly via
 # `% greatest(1, (SELECT count(*) FROM t) // TARGET) = 0`.
 IVF_TRAIN_TARGET = 4096
@@ -922,8 +922,8 @@ def lloyd_centroids(emb: DataFrame, init_centers: list[list[float]],
 
     ``train_filter`` (e.g. :func:`train_sample_pred`) restricts
     TRAINING to a deterministic hash-sample: cost drops from rounds ×
-    full-corpus scans to rounds × sample scans — the round-6 verdict's
-    "don't pay 2 corpus scans per query" fix — while staying
+    full-corpus scans to rounds × sample scans — no query pays 2 corpus
+    scans — while staying
     oracle-exact because the SQL twin applies the identical predicate
     to its training CTEs.  The localCheckpoint then materializes only
     the sample."""
@@ -1003,8 +1003,7 @@ def ivf_lloyd_topk(emb: DataFrame, k: int, init_centers: list[list[float]],
     indexes every vector.  ``n_rows`` sizes the modulus without a scan
     when the caller already knows the corpus count (parquet footer
     metadata / catalog statistics — tables.table_row_count); left None,
-    it falls back to one ``emb.count()`` job (round-10 verdict
-    watch-item retired at the query layer)."""
+    it falls back to one ``emb.count()`` job."""
     if train_target is not None:
         if n_rows is None:
             n_rows = emb.count()

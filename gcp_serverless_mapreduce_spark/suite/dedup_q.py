@@ -390,8 +390,8 @@ FROM m
 """)
 def dup_clusters_diagnostics(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    """One-row run diagnostic of the connected-components fixpoint
-    (round-13 verdict task 6): a production dedup job should EMIT the
+    """One-row run diagnostic of the connected-components fixpoint:
+    a production dedup job should EMIT the
     iteration telemetry operators/dedup.dup_clusters records in
     CC_STATS, not bury it in a module dict — a cluster pass that edges
     toward its adaptive cap (graph diameter creeping up as a 100 TB
@@ -795,12 +795,11 @@ def max_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df-capped ({SPAN_LIST}) ladder index (bounds the pair set — the
     quadratic danger at scale); each discovered pair is then REFINED to
     its true span by a log(len) binary search over in-row gram sets
-    (round-6 verdict item 4 — the ladder's "≥ n" became the exact
-    maximum).  The oracle computes the same refinement independently
-    as a diagonal-run fold over matching token positions (LCS run
-    length per diagonal), so the two different exact algorithms must
-    agree pair-for-pair.  See operators/dedup.py:
-    max_shared_span_exact."""
+    (the ladder's "≥ n" becomes the exact maximum).  The oracle
+    computes the same refinement independently as a diagonal-run fold
+    over matching token positions (LCS run length per diagonal), so the
+    two different exact algorithms must agree pair-for-pair.  See
+    operators/dedup.py:max_shared_span_exact."""
     docs = load_table(spark, sf_dir, "documents")
     return dedup.max_shared_span_exact(docs, ns=REPORT_SPANS,
                                        df_max=JACCARD_DF_MAX)

@@ -250,8 +250,8 @@ def hilbert_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket min/max pruning boxes this query emits are tighter for
     the same bucket width.  tests/test_round10_ops.py measures exactly
     that: the mean per-bucket bounding-box area under Hilbert vs
-    Z-order on the fixture.  TUNING.md ("layout-pruning",
-    tools/layout_pruning.py) measures the end effect on real written
+    Z-order on the fixture.  TUNING.md ("Clustering-layout file
+    pruning") records the end effect on real written
     files: on 64 footer-stat files and 2%-wide range predicates,
     Hilbert reads 3.2% of files vs Z-order's 5.5% on the conjunctive
     predicate (and wins both single-column families too).
@@ -340,7 +340,7 @@ def file_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bin assignment shared with the executing rewriter
     # (operators/layout.compact_partition) so plan and execution cannot
     # drift; integer `div` on the long prefix sum matches the oracle's
-    # exact `//` at any cumulative byte count (ADVICE r11).
+    # exact `//` at any cumulative byte count.
     binned = layout.compaction_bins(
         docs.select("source", "doc_id", "n_chars"), COMPACT_TARGET)
     return (binned

@@ -414,63 +414,6 @@ SKEW_KEYS = [
 ]
 
 
-def _stacked_key_counts(spark: SparkSession, sf_dir: str,
-                        dual_typed: bool) -> DataFrame:
-    """Per-distinct-key count frame ``(key_name, cnt)`` for every
-    audited join key, each base table scanned ONCE.
-
-    ``dual_typed=True`` (production, A/B-measured — TUNING.md
-    "skew-stack-ab"): integral key columns stack in a LONG lane and
-    everything else (string/date/decimal) in a STRING lane, each lane
-    its own in-row inline() stack + hash aggregate, lanes unioned AFTER
-    aggregation where only (key_name, cnt) survives — so no cross-type
-    cast is ever needed for the union.  This keeps round 10's
-    losslessness guarantee (the string lane still takes any future
-    non-numeric audited column; nothing truncates to NULL) without
-    paying the long→string cast + wider shuffle rows on the numeric
-    keys that dominate real join audits.  ``dual_typed=False`` is the
-    round-10 all-string stack, kept for the A/B harness.  NULLs survive
-    either lane as their own group, matching the oracle's GROUP BY on
-    the raw column."""
-    from pyspark.sql.types import (ByteType, IntegerType, LongType,
-                                   ShortType)
-    by_tbl: dict[str, list[tuple[str, str]]] = {}
-    for label, tbl, col in SKEW_KEYS:
-        by_tbl.setdefault(tbl, []).append((label, col))
-    lanes: dict[str, DataFrame | None] = {"long": None, "str": None}
-    for tbl, cols in by_tbl.items():
-        df = load_table(spark, sf_dir, tbl)
-        groups: dict[str, list] = {"long": [], "str": []}
-        for label, col in cols:
-            integral = isinstance(df.schema[col].dataType,
-                                  (ByteType, ShortType, IntegerType,
-                                   LongType))
-            if dual_typed and integral:
-                groups["long"].append(
-                    (label, F.col(col).cast("long")))
-            else:
-                groups["str"].append(
-                    (label, F.col(col).cast("string")))
-        for lane, items in groups.items():
-            if not items:
-                continue
-            pairs = F.array(*[
-                F.struct(F.lit(label).alias("key_name"),
-                         v.alias("val")) for label, v in items])
-            part = df.select(F.inline(pairs))
-            lanes[lane] = (part if lanes[lane] is None
-                           else lanes[lane].unionByName(part))
-    counted = [
-        lane_df.groupBy("key_name", "val")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("key_name", "cnt")
-        for lane_df in lanes.values() if lane_df is not None]
-    cnts = counted[0]
-    for extra in counted[1:]:
-        cnts = cnts.unionByName(extra)
-    return cnts
-
-
 def _skew_sql(label: str, tbl: str, col: str) -> str:
     """One UNION ALL branch of the skew profile: count-of-counts
     histogram + cumulative quantile pick (same shape as the Spark
@@ -504,20 +447,62 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy — broadcast vs shuffle, salting factor, AQE skew-join
     thresholds — BEFORE paying for a skewed exchange.
 
-    Scale shape (round-9 single-pass rewrite; round-11 dual-typed
-    lanes): each base table is scanned ONCE — its audited key columns
-    are stacked in-row into (key_name, val) pairs via inline(), typed
-    lanes keeping integral keys as LONG (see _stacked_key_counts), and
-    ALL per-key counts ride map-side-combined hash-aggregates keyed on
-    (key_name, val).  Shuffle volume equals the sum of per-key distinct
-    counts, the same bytes the old per-column loop shuffled across five
-    separate aggregates, but lineitem is read once instead of three
-    times and the plan carries 6 exchanges instead of 35.  Everything downstream of the
-    count-of-counts histogram (scalar stats, cumulative quantile pick)
-    operates on hundreds of rows per key_name, windowed/broadcast on
-    key_name — never an N-distinct-key sort."""
+    Scale shape: each base table is scanned ONCE — its audited key
+    columns are stacked in-row into (key_name, val) pairs via inline(),
+    and ALL per-key counts ride map-side-combined hash-aggregates keyed
+    on (key_name, val).  Integral keys stack in a LONG lane and
+    everything else (string/date/decimal) in a STRING lane, each lane
+    its own stack + hash aggregate, unioned AFTER aggregation where only
+    (key_name, cnt) survives — so no cross-type cast is ever needed, no
+    non-numeric key truncates to NULL, and the numeric keys that
+    dominate real join audits skip a long→string cast and wider shuffle
+    rows (A/B-measured — TUNING.md "Join-key skew-profile stacking
+    A/B").  NULLs survive either lane as their own group, matching the
+    oracle's GROUP BY on the raw column.  Shuffle volume equals the sum
+    of per-key distinct counts, the same bytes a per-column loop would
+    shuffle across five separate aggregates, but lineitem is read once
+    instead of three times and the plan carries 6 exchanges instead of
+    35.  Everything downstream of the count-of-counts histogram (scalar
+    stats, cumulative quantile pick) operates on hundreds of rows per
+    key_name, windowed/broadcast on key_name — never an N-distinct-key
+    sort."""
     from pyspark.sql import Window
-    cnts = _stacked_key_counts(spark, sf_dir, dual_typed=True)
+    from pyspark.sql.types import (ByteType, IntegerType, LongType,
+                                   ShortType)
+    by_tbl: dict[str, list[tuple[str, str]]] = {}
+    for label, tbl, col in SKEW_KEYS:
+        by_tbl.setdefault(tbl, []).append((label, col))
+    lanes: dict[str, DataFrame | None] = {"long": None, "str": None}
+    for tbl, cols in by_tbl.items():
+        df = load_table(spark, sf_dir, tbl)
+        groups: dict[str, list] = {"long": [], "str": []}
+        for label, col in cols:
+            integral = isinstance(df.schema[col].dataType,
+                                  (ByteType, ShortType, IntegerType,
+                                   LongType))
+            if integral:
+                groups["long"].append(
+                    (label, F.col(col).cast("long")))
+            else:
+                groups["str"].append(
+                    (label, F.col(col).cast("string")))
+        for lane, items in groups.items():
+            if not items:
+                continue
+            pairs = F.array(*[
+                F.struct(F.lit(label).alias("key_name"),
+                         v.alias("val")) for label, v in items])
+            part = df.select(F.inline(pairs))
+            lanes[lane] = (part if lanes[lane] is None
+                           else lanes[lane].unionByName(part))
+    counted = [
+        lane_df.groupBy("key_name", "val")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select("key_name", "cnt")
+        for lane_df in lanes.values() if lane_df is not None]
+    cnts = counted[0]
+    for extra in counted[1:]:
+        cnts = cnts.unionByName(extra)
     # count-of-counts histogram; EVERYTHING downstream (scalar stats:
     # n_keys = sum k, total_rows = sum cnt*k, max_cnt = max cnt; the
     # cumulative quantile pick) derives from it via windows + one final

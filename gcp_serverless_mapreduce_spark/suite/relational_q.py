@@ -569,8 +569,8 @@ FROM kmv JOIN med USING (grp)
 def approx_stats_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate aggregates — the mergeable-sketch path that replaces
     exact distinct/percentile at 100 TB — now built from DETERMINISTIC
-    sketches so the estimates themselves are oracle-gated (the round-5
-    verdict's ask): distinct parts per return flag via the KMV
+    sketches so the estimates themselves are oracle-gated: distinct
+    parts per return flag via the KMV
     (k-minimum-values) sketch over md5-prefix hashes, and the price
     median via a fixed-width mergeable counting histogram with linear
     interpolation.  Per-group state is bounded (k hashes / live bins)

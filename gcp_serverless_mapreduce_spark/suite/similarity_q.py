@@ -481,7 +481,7 @@ def stream_ivf_cell_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample = similarity.train_sample_pred(
         "vec_id", similarity.train_sample_mod(n_old, _SMALL_TRAIN_TARGET))
     # batch-side: Lloyd training over the OLD corpus sample is real
-    # compute the trigger stats don't see (ADVICE r12) — timed so the
+    # compute the trigger stats don't see — timed so the
     # bench's compute-adjusted total counts it.
     with pipeline.timed_batch_side():
         centers = similarity.lloyd_centroids(

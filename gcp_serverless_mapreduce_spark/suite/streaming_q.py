@@ -49,7 +49,7 @@ def stream_windowed_event_stats_rate(spark: SparkSession, sf_dir: str) -> DataFr
     oracle.  The replay completes when its recorded input rows reach the
     fixture's row count; the transform itself is source-agnostic."""
     # Footer metadata, not a count() scan — the replay-completion
-    # target is an unfiltered row count (round-11 verdict watch-item).
+    # target is an unfiltered row count.
     n_expected = table_row_count(sf_dir, "events")
     stats = pipeline.windowed_event_stats(
         pipeline.stream_events_rate(spark, sf_dir, rows_per_batch=25_000))
@@ -504,7 +504,7 @@ def stream_windowed_event_stats_pyds(spark: SparkSession,
     See sources/pyds.py:EventsStreamReader."""
     from ..sources import pyds
     # Footer metadata, not a count() scan — the replay-completion
-    # target is an unfiltered row count (round-11 verdict watch-item).
+    # target is an unfiltered row count.
     n_expected = table_row_count(sf_dir, "events")
     pyds.register_stream(spark)
     # The fixture file is a single parquet row group, so EVERY

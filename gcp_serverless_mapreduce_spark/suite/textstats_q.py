@@ -444,7 +444,7 @@ def _repetition_stats_kernel():
     (n_tokens, n_distinct, top_bg = most-frequent-bigram count, n_bg).
     Tokenization is EXACT vs textstats.tokens (dedup.py_tokens with
     empties filtered — the Java/RE2 ASCII whitespace class, space-only
-    trim, JVM-identical on non-ASCII text too; r15 verdict task 4);
+    trim, JVM-identical on non-ASCII text too);
     pinned vs the old HOF pipeline in tests/test_r15_batch2.py and on
     non-ASCII rows in tests/test_r16_unicode_tokens.py."""
     from collections import Counter

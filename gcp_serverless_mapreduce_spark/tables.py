@@ -46,8 +46,8 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     computations (string grams, integer hashes, counts, min/max) off the
     spread side, so results are partitioning-independent.
 
-    The partition probe is MEMOIZED per (canonical plan, parallelism)
-    (r16, verdict task 2): ``df.rdd.getNumPartitions()`` runs full
+    The partition probe is MEMOIZED per (canonical plan, parallelism):
+    ``df.rdd.getNumPartitions()`` runs full
     physical planning + a plan→RDD conversion on the driver — measured
     ~120 ms per fresh DataFrame at ~12 call sites per suite pass, while
     ``analyzed().semanticHash()`` costs ~1 ms.  Same-table consumers
@@ -148,7 +148,7 @@ def table_row_count(sf_dir: str, name: str) -> int:
     The IVF/PQ training-sample modulus (operators/similarity.
     train_sample_mod) needs the corpus row count before the training
     predicate exists; deriving it with ``df.count()`` costs one extra
-    full scan job per training query (round-10 verdict watch-item).
+    full scan job per training query.
     Parquet footers already carry ``num_rows`` per file, so this is the
     no-catalog equivalent of reading table statistics: O(files) footer
     reads, zero data I/O.  At 100 TB the same number comes from the
@@ -160,7 +160,7 @@ def table_row_count(sf_dir: str, name: str) -> int:
     For a STREAMING-SINK table (a ``_spark_metadata`` dir at the root)
     Spark's scan reads only files committed in that log, so a plain
     directory walk would overcount orphan part files left by crashed
-    micro-batches (ADVICE r13).  In that case the committed file list
+    micro-batches.  In that case the committed file list
     is read from the sink log itself (latest ``.compact`` snapshot +
     later delta batches, ``add`` minus ``delete`` actions); if the log
     can't be parsed the walk is used and may overcount — matching a
@@ -173,7 +173,7 @@ def table_row_count(sf_dir: str, name: str) -> int:
     # ourselves rather than via ParquetDataset: dataset DISCOVERY parses
     # every non-hidden file's footer, so a stray sidecar/tmp file in a
     # table directory would turn the metadata read into a hard error
-    # (ADVICE r11) — Spark's own scan tolerates those, and so must this.
+    # — Spark's own scan tolerates those, and so must this.
     if os.path.isdir(path):
         frags = _sink_log_files(os.path.join(path, "_spark_metadata"))
         if frags is None:
@@ -181,7 +181,7 @@ def table_row_count(sf_dir: str, name: str) -> int:
             for dp, dns, fns in os.walk(path):
                 # prune hidden/metadata dirs (_spark_metadata,
                 # .hive-staging): Spark's scan never reads those, so
-                # neither may this count (ADVICE r12)
+                # neither may this count
                 dns[:] = [d for d in dns if not d.startswith((".", "_"))]
                 frags.extend(
                     os.path.join(dp, fn) for fn in fns
@@ -247,7 +247,7 @@ def _sink_log_files(meta_dir: str) -> list[str] | None:
 def old_batch_row_count(sf_dir: str, name: str, inc_mod: int) -> int:
     """Row count of the OLD corpus under the incremental-ingest fixture
     split (``id % inc_mod != 0``) from parquet FOOTER metadata only —
-    no scan, no filtered count() job (round-11 verdict watch-item).
+    no scan, no filtered count() job.
 
     The fixture tables carry a DENSE 0..n-1 surrogate id (TESTDATA.md
     generation; the parity gate would fail loudly on the training

@@ -1,6 +1,6 @@
-"""file_compaction_plan execution check (round-11 verdict task 7):
-the manifest is not advisory — executing it must produce exactly the
-file layout it describes, conserve bytes, and lose no content.
+"""file_compaction_plan execution check: the manifest is not advisory —
+executing it must produce exactly the file layout it describes,
+conserve bytes, and lose no content.
 """
 
 from __future__ import annotations

@@ -174,7 +174,7 @@ def test_dup_clusters_adaptive_cap_beats_fixed(spark):
     # doubling rounds.  A fixed cap below that REFUSES (RuntimeError, by
     # contract — never silently-wrong labels); the adaptive default sizes
     # the cap from the node count and passes, recording the measured
-    # iteration count as the one-row diagnostic (round-13 verdict task 6).
+    # iteration count as the one-row diagnostic.
     import pytest
 
     pairs = spark.createDataFrame(
@@ -409,7 +409,7 @@ def test_lsh_cap_recall_floor_on_zipf_skew_corpus(spark):
 
 
 def test_dup_clusters_rounds_exact_on_path_graph(spark):
-    # The doubling worst case (round-13 verdict task 6): on a path graph
+    # The doubling worst case: on a path graph
     # (diameter n-1) the fixpoint converges in EXACTLY ceil(log2 n)
     # rounds — the measured count CC_STATS records, which the
     # dup_clusters_diagnostics suite query then emits as a one-row

@@ -198,7 +198,7 @@ def test_table_row_count_multi_file_directory(tmp_path):
 def test_table_row_count_ignores_sidecar_files(tmp_path):
     # Dataset discovery lists every non-hidden file in a table dir; a
     # stray sidecar/tmp file must not turn the footer read into a
-    # parse error (ADVICE r11) — only '.parquet' fragments count.
+    # parse error — only '.parquet' fragments count.
     import pyarrow as pa
     import pyarrow.parquet as pq
 

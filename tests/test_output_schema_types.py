@@ -55,7 +55,7 @@ def test_no_driver_fragile_output_types(spark):
 def test_table_row_count_prunes_hidden_dirs(spark, tmp_path):
     # A directory-tree table with _spark_metadata / .hive-staging junk:
     # the footer walk must count exactly what Spark's scan reads
-    # (ADVICE r12 — hidden and underscore dirs are pruned).
+    # (hidden and underscore dirs are pruned).
     import os
 
     from gcp_serverless_mapreduce_spark.tables import table_row_count
@@ -73,7 +73,7 @@ def test_table_row_count_prunes_hidden_dirs(spark, tmp_path):
 def test_table_row_count_streaming_sink_reads_commit_log(spark, tmp_path):
     # A FileStreamSink table: Spark's scan reads only files committed in
     # _spark_metadata, so the footer count must follow the log and skip
-    # orphan part files from crashed micro-batches (ADVICE r13).
+    # orphan part files from crashed micro-batches.
     import shutil
 
     from gcp_serverless_mapreduce_spark.tables import table_row_count

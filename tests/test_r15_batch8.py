@@ -24,7 +24,7 @@ def test_ladder_kernel_matches_expression_twin(spark):
          (9005, "x y z x y z x y z x y z x y z"),
          (9006, "A  b\tC   d e F g h i j k l m n"),
          (9007, None),
-         # r16 (ADVICE): exactly the rows where str.split() and the JVM
+         # exactly the rows where str.split() and the JVM
          # expression used to diverge — leading tab, trailing newline,
          # NBSP (Java \s does not split U+00A0)
          (9008, "\ta b c d e f g h i"),

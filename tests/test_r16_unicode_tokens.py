@@ -4,8 +4,8 @@ Round 15 left the Arrow kernels tokenizing with Python ``str.split()``,
 which differs from the declared ``split(trim(lower(text)), '\\s+')``
 semantics on leading/trailing non-space whitespace (JVM keeps the empty
 token), Unicode whitespace (Python splits NBSP/U+2028, Java/RE2 ``\\s``
-does not) and potentially non-ASCII case folds (r15 verdict task 4,
-ADVICE medium).  ``operators.dedup.py_tokens`` now reproduces the JVM
+does not) and potentially non-ASCII case folds.
+``operators.dedup.py_tokens`` now reproduces the JVM
 semantics exactly; these pins hold every kernel/expression-twin pair to
 equality ON the divergent inputs the r15 pins omitted.
 """

@@ -393,7 +393,7 @@ def test_badwords_token_boundaries(spark, tmp_path):
 def test_badwords_short_and_empty_docs(spark, tmp_path):
     # Docs with fewer tokens than the longest phrase used to make
     # sequence(0, size(toks)-N) DESCEND and throw INVALID_ARRAY_INDEX
-    # under ANSI mode (round-10 ADVICE).  They must count as 0 hits.
+    # under ANSI mode.  They must count as 0 hits.
     from gcp_serverless_mapreduce_spark.suite.curation_q import (
         badwords_filter_rates)
     docs = [
@@ -417,7 +417,7 @@ def test_badwords_short_and_empty_docs(spark, tmp_path):
 
 def test_badwords_quote_escaping(spark):
     # A real blocklist will contain quoted terms; both the Spark
-    # expression and the DuckDB SQL must survive them (round-10 ADVICE).
+    # expression and the DuckDB SQL must survive them.
     import duckdb
 
     from gcp_serverless_mapreduce_spark.suite.curation_q import (

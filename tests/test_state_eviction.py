@@ -1,5 +1,5 @@
-"""Watermark EVICTION under a long micro-batch run (round-6 verdict
-item 6): the 100 TB streaming risk is unbounded state growth, which a
+"""Watermark EVICTION under a long micro-batch run: the 100 TB
+streaming risk is unbounded state growth, which a
 few-batch equality test cannot observe.  Here a month of sf0.1 events
 streams through 20+ micro-batches in event-time order and the state
 store's row count — read from StreamingQueryProgress, the number the
@@ -219,8 +219,8 @@ def test_chained_dedup_agg_state_is_watermark_bounded(spark,
 
 
 def test_kcore_eager_checkpoint_releases_old_round_blocks(spark):
-    """The iterative-operator analog of the streaming state bounds
-    (round-10 verdict item 4): kcore_peel's docstring claims eager
+    """The iterative-operator analog of the streaming state bounds:
+    kcore_peel's docstring claims eager
     per-round localCheckpoint keeps peak pinned storage at ~2 rounds'
     frames because round r-1's blocks lose their last consumer when
     ``bi`` is rebound.  Assert it against the JVM's RDDStorageInfo:

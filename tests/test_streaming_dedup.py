@@ -1,5 +1,5 @@
 """stream_dedup_new_docs: the streaming face of incremental-ingest
-dedup.  Pins the three contracts the round-11 verdict asked for:
+dedup.  Pins its three contracts:
 (1) the probe stage is map-only — zero exchanges before the sink;
 (2) the streaming query holds NO state;
 (3) the stream's decisions equal the batch operator's, doc for doc

@@ -9,6 +9,7 @@ import hashlib
 import importlib.util
 import math
 import os
+import re
 import subprocess
 import sys
 
@@ -109,3 +110,24 @@ def test_surface_coverage_gate_fails_on_missing_consumer(monkeypatch, capsys):
     monkeypatch.setattr(gate, "CONSUMERS", gate.CONSUMERS + [gone])
     assert gate.main() == 1
     assert "no_such_consumer.py" in capsys.readouterr().out
+
+
+def test_cited_tools_exist():
+    """Every ``tools/<name>.py`` that code, tests or the run docs cite
+    must exist, so deleting a tool cannot leave a dangling instruction."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, f) for f in
+             ("__spark_entry__.py", "README.md",
+              os.path.join(".claude", "skills", "verify", "SKILL.md"))]
+    for sub in ("gcp_serverless_mapreduce_spark", "tools", "tests"):
+        for dp, _, fns in os.walk(os.path.join(root, sub)):
+            files += [os.path.join(dp, f) for f in fns if f.endswith(".py")]
+    missing = set()
+    for path in files:
+        if not os.path.exists(path):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            for name in re.findall(r"\btools/(\w+\.py)", fh.read()):
+                if not os.path.exists(os.path.join(root, "tools", name)):
+                    missing.add(f"{os.path.relpath(path, root)}: tools/{name}")
+    assert not missing, sorted(missing)

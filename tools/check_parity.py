@@ -165,8 +165,8 @@ def main() -> int:
             print(f"PASS {name}: rows={len(srows)}")
 
     # Subset runs report executed queries only — a 12-query spot-check
-    # must print "12/12", never the full-registry denominator (VERDICT
-    # r11 minor finding).  The full-run summary stamp is unchanged.
+    # must print "12/12", never the full-registry denominator.  The
+    # full-run summary stamp is unchanged.
     print(f"\n{n_run - len(failures)}/{n_run} queries pass at {sf_dir}"
           + ("" if not only else f" (subset of {len(qs)} registered)"))
     if not only:

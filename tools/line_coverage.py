@@ -192,7 +192,7 @@ def run_traced(sf_dir: str) -> None:
                                num_partitions=2)
             # directory-tree table: the footer-metadata row count must
             # walk part files and prune hidden/metadata dirs exactly
-            # like Spark's scan (ADVICE r12; a literal _spark_metadata dir
+            # like Spark's scan (a literal _spark_metadata dir
             # would flip Spark into its stream-sink log reader, so the
             # junk dir here is a neutral underscore name)
             from gcp_serverless_mapreduce_spark.tables import (
@@ -206,7 +206,7 @@ def run_traced(sf_dir: str) -> None:
             assert table_row_count(scratch, "t") == 10
             # STREAMING-SINK table: the count must follow the
             # _spark_metadata commit log and skip orphan part files from
-            # crashed micro-batches (ADVICE r13) — the sink-log reader
+            # crashed micro-batches — the sink-log reader
             # is runtime surface no parquet-fixture query reaches, so
             # the gate drives it here (same shape as
             # tests/test_output_schema_types.py's pytest twin)
