@@ -21,7 +21,6 @@ Layout
 - ``sources``    : file-format readers/writers (Gutenberg text corpus S1-S6)
 - ``streaming``  : Structured Streaming variant of the pipeline (C1 barrier
                    semantics via watermark-closed windows)
-- ``plans``      : plan-inspection helpers (pushdown/broadcast/codegen audits)
 """
 
 __version__ = "0.1.0"

@@ -4,7 +4,7 @@ higher-order functions (JVM-side, codegen'd); no Python in the hot path.
 All arithmetic is widened to double *before* accumulation and folds run
 left-to-right, which is also how the DuckDB oracle evaluates its explicit
 fold — keeping cross-engine results bit-identical (verified in
-tests/test_oracle_parity.py rather than assumed).
+tools/check_parity.py rather than assumed).
 """
 
 from __future__ import annotations
@@ -28,9 +28,3 @@ def dot(a: Column, b: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """cos(a,b) = a·b / (|a||b|); NULL-safe on zero vectors."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom != 0, dot(a, b) / denom)

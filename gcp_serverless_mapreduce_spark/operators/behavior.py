@@ -70,17 +70,15 @@ def funnel_summary(events: DataFrame, stages: Sequence[str],
                          6).alias("avg_convert_s"))
 
 
-def transition_matrix(events: DataFrame, user_col: str = "user_id",
-                      ts_col: str = "ts", id_col: str = "event_id",
-                      type_col: str = "event_type") -> DataFrame:
+def transition_matrix(events: DataFrame) -> DataFrame:
     """First-order Markov transitions of per-user event sequences:
     ``lag`` pairs each event with its predecessor, one groupBy counts
     the (prev, next) cells, and ``p_next`` row-normalizes over the tiny
     |types|² result."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t = events.select(
-        F.col(type_col).alias("next_type"),
-        F.lag(type_col).over(w).alias("prev_type"))
+        F.col("event_type").alias("next_type"),
+        F.lag("event_type").over(w).alias("prev_type"))
     c = (t.filter(F.col("prev_type").isNotNull())
          .groupBy("prev_type", "next_type")
          .agg(F.count("*").alias("n_transitions")))
@@ -91,9 +89,7 @@ def transition_matrix(events: DataFrame, user_col: str = "user_id",
                 / F.sum("n_transitions").over(share_w), 6).alias("p_next"))
 
 
-def retention_cohorts(events: DataFrame, epoch: str,
-                      user_col: str = "user_id",
-                      ts_col: str = "ts") -> DataFrame:
+def retention_cohorts(events: DataFrame, epoch: str) -> DataFrame:
     """Weekly retention cohorts from a FIXED epoch date (stable week
     numbers under incremental appends — no engine-specific week
     truncation, no shifting ``min(ts)`` epoch).
@@ -102,12 +98,12 @@ def retention_cohorts(events: DataFrame, epoch: str,
     activity join, AQE-mergeable) and one tiny cohort-week aggregate;
     cohort sizes broadcast into the final join."""
     week_no = F.floor(
-        F.datediff(F.col(ts_col).cast("date"),
+        F.datediff(F.col("ts").cast("date"),
                    F.lit(epoch).cast("date")) / 7).cast("long")
-    wk = events.select(F.col(user_col), week_no.alias("week_no"))
-    coh = wk.groupBy(user_col).agg(F.min("week_no").alias("cohort_week"))
-    act = (wk.join(coh, user_col)
-           .select(F.col(user_col), "cohort_week",
+    wk = events.select(F.col("user_id"), week_no.alias("week_no"))
+    coh = wk.groupBy("user_id").agg(F.min("week_no").alias("cohort_week"))
+    act = (wk.join(coh, "user_id")
+           .select(F.col("user_id"), "cohort_week",
                    (F.col("week_no") - F.col("cohort_week"))
                    .alias("week_offset"))
            .distinct())
@@ -124,11 +120,7 @@ TOUCH_TYPES = ("click", "view")
 REV_U = 1_000_000  # revenue in exact micro-units (the BIGINT-sum rule)
 
 
-def touch_attribution(events: DataFrame,
-                      touch_types: Sequence[str] = TOUCH_TYPES,
-                      purchase_type: str = "purchase",
-                      user_col: str = "user_id", ts_col: str = "ts",
-                      id_col: str = "event_id") -> DataFrame:
+def touch_attribution(events: DataFrame) -> DataFrame:
     """-> (model, touch_type, n_purchases, revenue): marketing
     attribution — every purchase's value credited to the user's FIRST
     and LAST preceding touch event (click/view), the two classic
@@ -144,13 +136,13 @@ def touch_attribution(events: DataFrame,
     integer addition), so the aggregate is partition-order-independent
     and the oracle matches bit-for-bit.
     """
-    w = _ordered_window(user_col, ts_col, id_col)
-    touch = F.when(F.col("event_type").isin(*touch_types),
+    w = _ordered_window("user_id", "ts", "event_id")
+    touch = F.when(F.col("event_type").isin(*TOUCH_TYPES),
                    F.col("event_type"))
     base = (events
             .withColumn("_last_t", F.last(touch, ignorenulls=True).over(w))
             .withColumn("_first_t", F.first(touch, ignorenulls=True).over(w))
-            .where(F.col("event_type") == purchase_type)
+            .where(F.col("event_type") == "purchase")
             .withColumn("_vu", F.round(F.col("value") * REV_U).cast("long")))
     melted = base.select(F.explode(F.array(
         F.struct(F.lit("last").alias("model"),

@@ -69,9 +69,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     })
 
 
-def doc_chunks(docs: DataFrame, chunk_words: int = 10,
-               id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
+def doc_chunks(docs: DataFrame, chunk_words: int = 10) -> DataFrame:
     """Explode each document into fixed-width word chunks.
 
     -> (doc_id, chunk_idx, chunk): chunk *i* is words
@@ -83,15 +81,15 @@ def doc_chunks(docs: DataFrame, chunk_words: int = 10,
     # filter BEFORE the sequence: Spark's sequence(0, -1) counts DOWN
     # (yields [0, -1]) instead of returning empty, so an empty document
     # would fabricate chunks; DuckDB's generate_series(0, -1) is empty.
-    toked = (docs.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
+    toked = (docs.select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") > 0))
     n_chunks = F.ceil(F.size("toks") / F.lit(chunk_words)).cast("int")
     return (
-        toked.select(F.col(id_col), F.col("toks"),
+        toked.select(F.col("doc_id"), F.col("toks"),
                      F.posexplode(F.sequence(F.lit(0), n_chunks - 1))
                      .alias("chunk_idx", "_j"))
         .select(
-            id_col, "chunk_idx",
+            "doc_id", "chunk_idx",
             F.concat_ws(
                 " ", F.slice(F.col("toks"),
                              F.col("chunk_idx") * chunk_words + 1,
@@ -99,9 +97,7 @@ def doc_chunks(docs: DataFrame, chunk_words: int = 10,
     )
 
 
-def chunk_dedup(docs: DataFrame, chunk_words: int = 10,
-                id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def chunk_dedup(docs: DataFrame, chunk_words: int = 10) -> DataFrame:
     """Cross-document chunk dedup, keep-first: a chunk survives only in
     the earliest (doc_id, chunk_idx) position where its text occurs.
 
@@ -112,30 +108,28 @@ def chunk_dedup(docs: DataFrame, chunk_words: int = 10,
     by the same rule.
     """
     w = (Window.partitionBy("chunk_key")
-         .orderBy(F.col(id_col).asc(), F.col("chunk_idx").asc()))
+         .orderBy(F.col("doc_id").asc(), F.col("chunk_idx").asc()))
     return (
-        doc_chunks(docs, chunk_words, id_col, text_col)
+        doc_chunks(docs, chunk_words)
         .withColumn("chunk_key", F.md5(F.col("chunk")))
         .withColumn("keep", F.row_number().over(w) == 1)
         .drop("chunk_key")
     )
 
 
-def chunk_dedup_stats(docs: DataFrame, chunk_words: int = 10,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def chunk_dedup_stats(docs: DataFrame, chunk_words: int = 10) -> DataFrame:
     """Per-document outcome of :func:`chunk_dedup`.
 
     -> (doc_id, n_chunks, n_kept, kept_md5) where ``kept_md5`` hashes
     the surviving chunks re-joined in chunk order ('' if nothing
     survives) — gating the exact surviving BYTES, not just counts.
     """
-    flagged = chunk_dedup(docs, chunk_words, id_col, text_col)
-    totals = (flagged.groupBy(id_col)
+    flagged = chunk_dedup(docs, chunk_words)
+    totals = (flagged.groupBy("doc_id")
               .agg(F.count("*").alias("n_chunks")))
     kept = (
         flagged.filter("keep")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_kept"),
              F.array_join(
                  F.transform(
@@ -145,16 +139,14 @@ def chunk_dedup_stats(docs: DataFrame, chunk_words: int = 10,
                  " ").alias("_kept_text"))
     )
     return (
-        totals.join(kept, id_col, "left")
-        .select(id_col, "n_chunks",
+        totals.join(kept, "doc_id", "left")
+        .select("doc_id", "n_chunks",
                 F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
                 F.md5(F.coalesce("_kept_text", F.lit(""))).alias("kept_md5"))
     )
 
 
-def word_ngrams(docs: DataFrame, n: int,
-                id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def word_ngrams(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
     """-> (doc_id, gram): DISTINCT space-joined word n-grams per doc.
 
     Docs shorter than n words are dropped before the sequence (Spark's
@@ -172,7 +164,7 @@ def word_ngrams(docs: DataFrame, n: int,
     from ..tables import spread_small_scan
 
     toked = (spread_small_scan(docs)
-             .select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
+             .select(F.col(id_col), tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") >= n))
     grams = F.array_distinct(F.transform(
         F.sequence(F.lit(1), F.size("toks") - (n - 1)),
@@ -180,9 +172,8 @@ def word_ngrams(docs: DataFrame, n: int,
     return toked.select(id_col, F.explode(grams).alias("gram"))
 
 
-def ngram_contamination(docs: DataFrame, n: int = 3, eval_mod: int = 41,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def ngram_contamination(docs: DataFrame, n: int = 3,
+                        eval_mod: int = 41) -> DataFrame:
     """Benchmark decontamination: flag train documents sharing any word
     n-gram with the eval split (docs where ``doc_id % eval_mod == 0``).
 
@@ -193,45 +184,42 @@ def ngram_contamination(docs: DataFrame, n: int = 3, eval_mod: int = 41,
     per-doc aggregation.  Production systems use n=8..13 over real
     prose; n=3 keeps the fixture's small-vocabulary corpus non-trivial.
     """
-    grams = word_ngrams(docs, n, id_col, text_col)
-    is_eval = (F.col(id_col) % eval_mod) == 0
+    grams = word_ngrams(docs, n)
+    is_eval = (F.col("doc_id") % eval_mod) == 0
     eval_grams = grams.filter(is_eval).select("gram").distinct()
     return (
         grams.filter(~is_eval)
         .join(F.broadcast(eval_grams), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared"))
     )
 
 
-def _merge_token_ranges(hits: DataFrame, id_col: str = "doc_id",
-                       s_col: str = "s", e_col: str = "e") -> DataFrame:
+def _merge_token_ranges(hits: DataFrame) -> DataFrame:
     """Per-doc interval-merge sweep shared by the span-manifest family
     (and mirrored by operators/dedup.substring_discard_manifest and
     every manifest oracle's window fold): a range opens a new group iff
     its start exceeds the running max end of all prior ranges.
 
-    -> (id_col, range_start, range_end, n_tokens)."""
-    order = Window.partitionBy(id_col).orderBy(s_col, e_col)
-    pme = F.max(e_col).over(order.rowsBetween(Window.unboundedPreceding, -1))
+    -> (doc_id, range_start, range_end, n_tokens)."""
+    order = Window.partitionBy("doc_id").orderBy("s", "e")
+    pme = F.max("e").over(order.rowsBetween(Window.unboundedPreceding, -1))
     flagged = hits.withColumn(
         "brk",
-        F.when(pme.isNull() | (F.col(s_col) > pme), 1).otherwise(0))
+        F.when(pme.isNull() | (F.col("s") > pme), 1).otherwise(0))
     grouped = flagged.withColumn(
         "grp", F.sum("brk").over(
             order.rowsBetween(Window.unboundedPreceding, 0)))
-    return (grouped.groupBy(id_col, "grp")
-            .agg(F.min(s_col).cast("long").alias("range_start"),
-                 F.max(e_col).cast("long").alias("range_end"))
-            .select(id_col, "range_start", "range_end",
+    return (grouped.groupBy("doc_id", "grp")
+            .agg(F.min("s").cast("long").alias("range_start"),
+                 F.max("e").cast("long").alias("range_end"))
+            .select("doc_id", "range_start", "range_end",
                     (F.col("range_end") - F.col("range_start"))
                     .cast("long").alias("n_tokens")))
 
 
-def _positioned_ngrams(docs: DataFrame, n: int,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
-    """-> (id_col, s, gram): every word n-gram WITH its 0-based start
+def _positioned_ngrams(docs: DataFrame, n: int) -> DataFrame:
+    """-> (doc_id, s, gram): every word n-gram WITH its 0-based start
     token position (the positioned sibling of :func:`word_ngrams` —
     no per-doc dedup, since span manifests need every occurrence).
 
@@ -240,10 +228,10 @@ def _positioned_ngrams(docs: DataFrame, n: int,
     from ..tables import spread_small_scan
 
     toked = (spread_small_scan(docs)
-             .select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
+             .select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") >= n))
     return toked.select(
-        id_col,
+        "doc_id",
         F.posexplode(F.transform(
             F.sequence(F.lit(1), F.size("toks") - (n - 1)),
             lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i, n))))
@@ -251,9 +239,7 @@ def _positioned_ngrams(docs: DataFrame, n: int,
 
 
 def contamination_span_manifest(docs: DataFrame, n: int = 3,
-                                eval_mod: int = 41,
-                                id_col: str = "doc_id",
-                                text_col: str = "text") -> DataFrame:
+                                eval_mod: int = 41) -> DataFrame:
     """Span-level benchmark decontamination (round-13 frontier): the
     surgical composition of :func:`ngram_contamination` (which FLAGS
     whole train docs) with the discard-manifest semantics of
@@ -277,19 +263,18 @@ def contamination_span_manifest(docs: DataFrame, n: int = 3,
     explode is map-only and only MATCHES survive the join, so the one
     exchange is the per-doc window over hit rows — bounded by
     contamination volume, never corpus volume."""
-    grams = _positioned_ngrams(docs, n, id_col, text_col)
-    is_eval = (F.col(id_col) % eval_mod) == 0
+    grams = _positioned_ngrams(docs, n)
+    is_eval = (F.col("doc_id") % eval_mod) == 0
     eval_grams = grams.filter(is_eval).select("gram").distinct()
     hits = (grams.filter(~is_eval)
             .join(F.broadcast(eval_grams), "gram")
-            .select(id_col, F.col("s").cast("long").alias("s"),
+            .select("doc_id", F.col("s").cast("long").alias("s"),
                     (F.col("s") + n).cast("long").alias("e")))
-    return _merge_token_ranges(hits, id_col)
+    return _merge_token_ranges(hits)
 
 
-def bloom_span_manifest(docs: DataFrame, n: int = 3, eval_mod: int = 41,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def bloom_span_manifest(docs: DataFrame, n: int = 3,
+                        eval_mod: int = 41) -> DataFrame:
     """:func:`contamination_span_manifest` with the probe pushed through
     a BLOOM FILTER instead of a broadcast set join — the true 100 TB
     shape: the eval split's n-grams fold into an 8 KiB bitmap literal
@@ -308,19 +293,18 @@ def bloom_span_manifest(docs: DataFrame, n: int = 3, eval_mod: int = 41,
     bloom-hit span."""
     from .sketches import bloom_bitmap, bloom_build, bloom_hit_expr
 
-    grams = _positioned_ngrams(docs, n, id_col, text_col)
-    is_eval = (F.col(id_col) % eval_mod) == 0
+    grams = _positioned_ngrams(docs, n)
+    is_eval = (F.col("doc_id") % eval_mod) == 0
     bitmap = bloom_bitmap(bloom_build(
         grams.filter(is_eval).select("gram").distinct(), key_col="gram"))
     hits = (grams.filter(~is_eval)
             .filter(bloom_hit_expr(F.col("gram"), bitmap))
-            .select(id_col, F.col("s").cast("long").alias("s"),
+            .select("doc_id", F.col("s").cast("long").alias("s"),
                     (F.col("s") + n).cast("long").alias("e")))
-    return _merge_token_ranges(hits, id_col)
+    return _merge_token_ranges(hits)
 
 
-def inline_bloom_spans(bitmap: list[int], n: int = 3,
-                       text_col: str = "text") -> Column:
+def inline_bloom_spans(bitmap: list[int], n: int = 3) -> Column:
     """The ENTIRE bloom span computation of :func:`bloom_span_manifest`
     as ONE row-local column expression: positioned grams, the k-bit
     Bloom probe, and the interval merge all fold IN-ROW (an
@@ -407,13 +391,11 @@ def inline_bloom_spans(bitmap: list[int], n: int = 3,
         return F.when(F.size(toks) >= n, merged).otherwise(empty)
 
     return F.element_at(
-        F.transform(F.array(tokens(F.col(text_col))), body), 1)
+        F.transform(F.array(tokens(F.col("text"))), body), 1)
 
 
 def bpe_aligned_span_manifest(docs: DataFrame, n: int = 3,
-                              eval_mod: int = 41,
-                              id_col: str = "doc_id",
-                              text_col: str = "text") -> DataFrame:
+                              eval_mod: int = 41) -> DataFrame:
     """TOKENIZER-AWARE decontamination manifest (round-14 frontier):
     :func:`contamination_span_manifest`'s word-index ranges re-expressed
     as BPE PIECE ranges — the coordinate system an LLM training pipeline
@@ -440,19 +422,18 @@ def bpe_aligned_span_manifest(docs: DataFrame, n: int = 3,
     itself is the codegen'd replace chain, no Python, no UDF."""
     from .textstats import bpe_pieces
 
-    spans = contamination_span_manifest(docs, n, eval_mod, id_col,
-                                        text_col)
-    contam = docs.join(spans.select(id_col).distinct(), id_col,
+    spans = contamination_span_manifest(docs, n, eval_mod)
+    contam = docs.join(spans.select("doc_id").distinct(), "doc_id",
                        "left_semi")
     w = contam.select(
-        id_col, F.posexplode(tokens(F.col(text_col))).alias("wi", "word"))
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("wi", "word"))
     p = bpe_pieces(F.col("word"))
     n_pieces = (F.length(p)
                 - F.length(F.replace(p, F.lit("<"), F.lit("")))
                 ).cast("long")
-    win = Window.partitionBy(id_col).orderBy("wi")
+    win = Window.partitionBy("doc_id").orderBy("wi")
     off = (w.withColumn("np", n_pieces)
-           .select(id_col, F.col("wi").cast("long").alias("wi"),
+           .select("doc_id", F.col("wi").cast("long").alias("wi"),
                    (F.sum("np").over(win) - F.col("np")).alias("p_start"),
                    F.sum("np").over(win).alias("p_end")))
     # ONE pass over the offset frame: a naive pair of equi-joins (one on
@@ -464,25 +445,22 @@ def bpe_aligned_span_manifest(docs: DataFrame, n: int = 3,
     # offsets back onto one row.  Both join and aggregate are bounded by
     # contamination volume.
     keys = spans.select(
-        id_col, "range_start", "range_end",
+        "doc_id", "range_start", "range_end",
         F.explode(F.array("range_start", F.col("range_end") - 1))
         .alias("wi"))
-    hit = off.join(F.broadcast(keys), [id_col, "wi"])
-    return (hit.groupBy(id_col, "range_start", "range_end")
+    hit = off.join(F.broadcast(keys), ["doc_id", "wi"])
+    return (hit.groupBy("doc_id", "range_start", "range_end")
             .agg(F.min(F.when(F.col("wi") == F.col("range_start"),
                               F.col("p_start"))).alias("piece_start"),
                  F.max(F.when(F.col("wi") == F.col("range_end") - 1,
                               F.col("p_end"))).alias("piece_end"))
-            .select(id_col, "range_start", "range_end",
+            .select("doc_id", "range_start", "range_end",
                     "piece_start", "piece_end",
                     (F.col("piece_end") - F.col("piece_start"))
                     .cast("long").alias("n_pieces")))
 
 
-def cap_per_source(docs: DataFrame, cap: int,
-                   source_col: str = "source",
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def cap_per_source(docs: DataFrame, cap: int) -> DataFrame:
     """Per-source (per-domain) document cap: keep at most ``cap`` docs
     per source, highest-quality first.
 
@@ -497,15 +475,15 @@ def cap_per_source(docs: DataFrame, cap: int,
     emits at most ``cap`` rows.  A skewed mega-domain would pair this
     with the same two-phase salted pattern as docs_per_word_salted.
     """
-    w = Window.partitionBy(source_col).orderBy(
-        F.col("_quality").desc(), F.col(id_col).asc())
+    w = Window.partitionBy("source").orderBy(
+        F.col("_quality").desc(), F.col("doc_id").asc())
     return (
         docs.withColumn(
             "_quality",
-            F.size(F.array_distinct(tokens(F.col(text_col)))).cast("long"))
+            F.size(F.array_distinct(tokens(F.col("text")))).cast("long"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= cap)
-        .select(source_col, id_col, "rank",
+        .select("source", "doc_id", "rank",
                 F.col("_quality").alias("n_uniq_tokens"))
     )
 
@@ -527,10 +505,7 @@ def latest_per_key(df: DataFrame, key_cols: list[str],
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def pack_sequences(docs: DataFrame, budget: int,
-                   source_col: str = "source",
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int) -> DataFrame:
     """Sequence packing for pretraining batches: bucket documents into
     fixed-token-budget packs by concatenation offset.
 
@@ -548,11 +523,11 @@ def pack_sequences(docs: DataFrame, budget: int,
     packing is inherently sequential per stream; deployments that need
     splits chunk the token arrays downstream.
     """
-    w = (Window.partitionBy(source_col).orderBy(id_col)
+    w = (Window.partitionBy("source").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     toked = docs.select(
-        source_col, id_col,
-        F.size(tokens(F.col(text_col))).cast("long").alias("n_tokens"))
+        "source", "doc_id",
+        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"))
     packed = (toked
               .withColumn("_end", F.sum("n_tokens").over(w))
               # DIV: exact integer division (the `/` operator would round
@@ -560,7 +535,7 @@ def pack_sequences(docs: DataFrame, budget: int,
               .withColumn("pack_id",
                           F.expr(f"CAST((_end - n_tokens) DIV {budget}"
                                  " AS BIGINT)")))
-    return (packed.groupBy(source_col, "pack_id")
+    return (packed.groupBy("source", "pack_id")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_tokens").alias("token_sum"),
                  F.round(F.sum("n_tokens") / F.lit(float(budget)), 6)
@@ -568,9 +543,7 @@ def pack_sequences(docs: DataFrame, budget: int,
                  (F.sum("n_tokens") > budget).alias("overflowed")))
 
 
-def temperature_sample(docs: DataFrame, scale: int,
-                       source_col: str = "source",
-                       id_col: str = "doc_id") -> DataFrame:
+def temperature_sample(docs: DataFrame, scale: int) -> DataFrame:
     """Temperature-flattened source sampling: per-source quota
     ``floor(sqrt(n_source) * scale)`` — sub-linear in source size, so
     over-represented domains are flattened (the alpha=0.5 point of the
@@ -586,24 +559,23 @@ def temperature_sample(docs: DataFrame, scale: int,
     flip a floor()).  Counts are a tiny per-source aggregate, broadcast
     back; the rank is one window over the source-keyed exchange.
     """
-    counts = (docs.groupBy(source_col)
+    counts = (docs.groupBy("source")
               .agg(F.count("*").alias("n_src"))
               .withColumn("quota",
                           F.floor(F.sqrt(F.col("n_src")) * scale)
                           .cast("long"))
               .drop("n_src"))
-    w = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col))
-    ranked = (docs.select(source_col, id_col)
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
+    ranked = (docs.select("source", "doc_id")
               .withColumn("samp_rank", F.row_number().over(w).cast("long")))
-    return (ranked.join(F.broadcast(counts), source_col)
+    return (ranked.join(F.broadcast(counts), "source")
             .filter(F.col("samp_rank") <= F.col("quota"))
-            .select(source_col, id_col, "samp_rank", "quota"))
+            .select("source", "doc_id", "samp_rank", "quota"))
 
 
-def overlapping_chunks(docs: DataFrame, chunk_words: int, stride: int,
-                       id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def overlapping_chunks(docs: DataFrame, chunk_words: int,
+                       stride: int) -> DataFrame:
     """RAG-style overlapping chunking: windows of ``chunk_words`` tokens
     starting every ``stride`` tokens (stride < chunk_words ⇒ adjacent
     chunks overlap by ``chunk_words - stride``), the retrieval-index unit
@@ -617,16 +589,16 @@ def overlapping_chunks(docs: DataFrame, chunk_words: int, stride: int,
     (an overlap factor of chunk/stride would multiply shuffle bytes).
     Map-only: explode of per-row offsets, no shuffle at all.
     """
-    toked = (docs.select(F.col(id_col), tokens(F.col(text_col)).alias("toks"))
+    toked = (docs.select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") > 0))
     return (
-        toked.select(F.col(id_col), "toks",
+        toked.select(F.col("doc_id"), "toks",
                      F.posexplode(
                          F.sequence(F.lit(0), F.size("toks") - 1,
                                     F.lit(stride)))
                      .alias("chunk_idx", "start"))
         .select(
-            id_col, "chunk_idx",
+            "doc_id", "chunk_idx",
             F.size(F.slice("toks", F.col("start") + 1, chunk_words))
             .cast("long").alias("n_chunk_tokens"),
             F.md5(F.concat_ws(
@@ -635,15 +607,12 @@ def overlapping_chunks(docs: DataFrame, chunk_words: int, stride: int,
     )
 
 
-def split_assignment(docs: DataFrame, train_hex: str = "e6",
-                     val_hex: str = "f3",
-                     id_col: str = "doc_id",
-                     source_col: str = "source") -> DataFrame:
+def split_assignment(docs: DataFrame) -> DataFrame:
     """Deterministic train/val/test split accounting, the
     leakage-proof-by-construction partition every corpus release needs.
 
     A doc's split follows the first two hex chars of md5(doc_id):
-    ``< train_hex`` → train (0xe6/0x100 ≈ 89.8%), ``< val_hex`` → val
+    ``< e6`` → train (0xe6/0x100 ≈ 89.8%), ``< f3`` → val
     (≈ 5.1%), else test — hash-based so membership is a pure function of
     the id (stable under re-partitioning, appends, and engine choice),
     and the SAME doc can never migrate between splits across runs.
@@ -651,17 +620,17 @@ def split_assignment(docs: DataFrame, train_hex: str = "e6",
     -> (source, split, n_docs, min_doc_id, max_doc_id): per-source split
     sizes.  Map-only projection + one tiny aggregate.
     """
-    h2 = F.substring(F.md5(F.col(id_col).cast("string")), 1, 2)
-    split = (F.when(h2 < train_hex, "train")
-             .when(h2 < val_hex, "val")
+    h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+    split = (F.when(h2 < "e6", "train")
+             .when(h2 < "f3", "val")
              .otherwise("test"))
     return (docs
-            .select(F.col(source_col).alias("source"),
-                    split.alias("split"), F.col(id_col))
+            .select(F.col("source"),
+                    split.alias("split"), F.col("doc_id"))
             .groupBy("source", "split")
             .agg(F.count("*").alias("n_docs"),
-                 F.min(id_col).alias("min_doc_id"),
-                 F.max(id_col).alias("max_doc_id")))
+                 F.min("doc_id").alias("min_doc_id"),
+                 F.max("doc_id").alias("max_doc_id")))
 
 
 def es_samp_key(id_col: str, weight_col: str):
@@ -677,9 +646,7 @@ def es_samp_key(id_col: str, weight_col: str):
     return F.round(-F.log(u) / F.col(weight_col).cast("double"), 9)
 
 
-def weighted_sample(docs: DataFrame, n: int,
-                    weight_col: str = "n_chars",
-                    id_col: str = "doc_id") -> DataFrame:
+def weighted_sample(docs: DataFrame, n: int) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement
     (Efraimidis–Spirakis 2006): each row draws u ∈ (0,1) and the sample
     is the n largest u^(1/w) — equivalently the n SMALLEST
@@ -697,15 +664,16 @@ def weighted_sample(docs: DataFrame, n: int,
     -> (doc_id, weight, samp_key, samp_rank), samp_rank 1..n.  Scale: one
     map-side projection + one global top-n (TakeOrdered — no full sort).
     """
-    key = es_samp_key(id_col, weight_col)
-    keyed = docs.select(F.col(id_col),
-                        F.col(weight_col).cast("long").alias("weight"),
+    key = es_samp_key("doc_id", "n_chars")
+    keyed = docs.select(F.col("doc_id"),
+                        F.col("n_chars").cast("long").alias("weight"),
                         key.alias("samp_key"))
     # orderBy().limit(n) compiles to TakeOrderedAndProject — per-partition
     # top-n then a driver merge of n·P rows, never a global sort.  The
     # unpartitioned window then ranks only the n survivors.
-    top = keyed.orderBy(F.col("samp_key").asc(), F.col(id_col).asc()).limit(n)
-    w = Window.orderBy(F.col("samp_key").asc(), F.col(id_col).asc())
+    order = (F.col("samp_key").asc(), F.col("doc_id").asc())
+    top = keyed.orderBy(*order).limit(n)
+    w = Window.orderBy(*order)
     return top.withColumn("samp_rank", F.row_number().over(w).cast("long"))
 
 
@@ -733,9 +701,7 @@ def dsir_bucket(tok: Column) -> Column:
             % DSIR_BUCKETS)
 
 
-def dsir_importance(docs: DataFrame, target_lang: str = "en",
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def dsir_importance(docs: DataFrame, target_lang: str = "en") -> DataFrame:
     """-> (doc_id, lang, n_tokens, dsir_logw): per-document DSIR
     importance log-weight, sum over tokens of
     ln(p_target(bucket)/p_raw(bucket)) under hashed-unigram features
@@ -751,9 +717,9 @@ def dsir_importance(docs: DataFrame, target_lang: str = "en",
     broadcast regardless of vocabulary.
     """
     toks = docs.select(
-        F.col(id_col).alias("doc"), F.col("lang"),
+        F.col("doc_id").alias("doc"), F.col("lang"),
         (F.col("lang") == target_lang).alias("is_t"),
-        F.explode(tokens(F.col(text_col))).alias("tok"))
+        F.explode(tokens(F.col("text"))).alias("tok"))
     db = (toks
           .select("doc", "lang", "is_t", dsir_bucket(F.col("tok")).alias("b"))
           .groupBy("doc", "lang", "is_t", "b")
@@ -778,9 +744,7 @@ def dsir_importance(docs: DataFrame, target_lang: str = "en",
             .withColumnRenamed("doc", "doc_id"))
 
 
-def quality_logit(docs: DataFrame, stopwords: tuple[str, ...],
-                  id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def quality_logit(docs: DataFrame, stopwords: tuple[str, ...]) -> DataFrame:
     """-> (doc_id, n_tokens, mean_tok_len, stop_ratio, digit_ratio,
     distinct_ratio, quality, keep): fixed-weight logistic quality score
     sigmoid(w . features) per document with keep = quality >= 0.5.
@@ -790,15 +754,15 @@ def quality_logit(docs: DataFrame, stopwords: tuple[str, ...],
     so the whole scorer is a map-only projection inside whole-stage
     codegen: zero shuffles at any scale.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks).cast("long")
     nd = F.size(F.array_distinct(toks)).cast("long")
     nstop = F.size(F.filter(toks, lambda t: t.isin(*stopwords))).cast("long")
     tok_chars = F.aggregate(toks, F.lit(0),
                             lambda acc, t: acc + F.length(t)).cast("long")
-    ndigit = (F.length(F.col(text_col))
-              - F.length(F.regexp_replace(F.col(text_col), "[0-9]", "")))
-    textlen = F.length(F.col(text_col)).cast("long")
+    ndigit = (F.length(F.col("text"))
+              - F.length(F.regexp_replace(F.col("text"), "[0-9]", "")))
+    textlen = F.length(F.col("text")).cast("long")
     mean_len = tok_chars.cast("double") / n.cast("double")
     stop_r = nstop.cast("double") / n.cast("double")
     digit_r = ndigit.cast("double") / textlen.cast("double")
@@ -811,7 +775,7 @@ def quality_logit(docs: DataFrame, stopwords: tuple[str, ...],
          + F.lit(QL_W_DISTINCT) * dist_r)
     quality = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
     return (docs.where(F.size(toks) > 0)
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     n.alias("n_tokens"),
                     F.round(mean_len, 6).alias("mean_tok_len"),
                     F.round(stop_r, 6).alias("stop_ratio"),
@@ -827,15 +791,13 @@ def quality_logit(docs: DataFrame, stopwords: tuple[str, ...],
 SHUFFLE_SHARDS = 8
 
 
-def epoch_shuffle_plan(docs: DataFrame, epochs: int = 2,
-                       n_shards: int = SHUFFLE_SHARDS,
-                       id_col: str = "doc_id") -> DataFrame:
+def epoch_shuffle_plan(docs: DataFrame, epochs: int = 2) -> DataFrame:
     """-> (doc_id, epoch, shard, pos): a deterministic, epoch-varying
     global shuffle plan — the data-order contract of a reproducible
     training run.
 
     Each epoch permutes the corpus by the md5 of (epoch, id): shard =
-    hash-prefix mod n_shards routes the row, pos = rank of the full hash
+    hash-prefix mod SHUFFLE_SHARDS routes the row, pos = rank of the full hash
     WITHIN the shard orders it.  Work per epoch is one exchange on the
     shard key + an in-shard sort — there is NO global sort, and shards
     stay balanced because the hash is uniform.  The plan is a pure
@@ -843,18 +805,18 @@ def epoch_shuffle_plan(docs: DataFrame, epochs: int = 2,
     yields byte-identical training order.
     """
     e = F.explode(F.array(*[F.lit(i) for i in range(epochs)])).alias("epoch")
-    keyed = docs.select(F.col(id_col), e).withColumn(
-        "h", F.md5(F.concat_ws(":", F.col("epoch"), F.col(id_col))))
+    keyed = docs.select(F.col("doc_id"), e).withColumn(
+        "h", F.md5(F.concat_ws(":", F.col("epoch"), F.col("doc_id"))))
     shard = (F.conv(F.substring("h", 1, 4), 16, 10).cast("long")
-             % n_shards)
+             % SHUFFLE_SHARDS)
     w = Window.partitionBy("epoch", "shard").orderBy("h")
     return (keyed.withColumn("shard", shard)
             .withColumn("pos", F.row_number().over(w).cast("long"))
-            .select(id_col, F.col("epoch").cast("long").alias("epoch"),
+            .select("doc_id", F.col("epoch").cast("long").alias("epoch"),
                     "shard", "pos"))
 
 
-def mixture_reweight(docs: DataFrame, group_col: str = "lang") -> DataFrame:
+def mixture_reweight(docs: DataFrame) -> DataFrame:
     """-> (group, n_docs, actual_share, target_share, weight): per-group
     sampling weights that rebalance the corpus to a UNIFORM target
     mixture — weight = target_share / actual_share, the multiplier a
@@ -862,23 +824,22 @@ def mixture_reweight(docs: DataFrame, group_col: str = "lang") -> DataFrame:
     diagnoses the shift).  One aggregate + scalar broadcast; group count
     is assumed small (languages/domains), as in practice.
     """
-    counts = docs.groupBy(F.col(group_col).alias("grp")).agg(
+    counts = docs.groupBy(F.col("lang").alias("grp")).agg(
         F.count(F.lit(1)).alias("n_docs"))
     total = counts.agg(F.sum("n_docs").alias("total"),
                        F.count(F.lit(1)).alias("n_groups"))
     actual = F.col("n_docs").cast("double") / F.col("total").cast("double")
     target = F.lit(1.0) / F.col("n_groups").cast("double")
     return (counts.crossJoin(F.broadcast(total))
-            .select(F.col("grp").alias(group_col),
+            .select(F.col("grp").alias("lang"),
                     F.col("n_docs").cast("long").alias("n_docs"),
                     F.round(actual, 6).alias("actual_share"),
                     F.round(target, 6).alias("target_share"),
                     F.round(target / actual, 6).alias("weight")))
 
 
-def weighted_sample_per_group(docs: DataFrame, group_col: str, n: int,
-                              id_col: str = "doc_id",
-                              weight_col: str = "n_chars") -> DataFrame:
+def weighted_sample_per_group(docs: DataFrame, group_col: str,
+                              n: int) -> DataFrame:
     """Per-GROUP Efraimidis-Spirakis weighted sample: the distributed
     per-key reservoir — top ``n`` rows per group by the same quantized
     -ln(u)/w key as :func:`weighted_sample` (md5-derived u, 9dp
@@ -886,19 +847,17 @@ def weighted_sample_per_group(docs: DataFrame, group_col: str, n: int,
     rank window never sees more than a group's rows, so this is how a
     per-domain sample is drawn from a 100 TB corpus without a global
     sort.  -> (group, doc_id, weight, samp_key, samp_rank<=n)."""
-    key = es_samp_key(id_col, weight_col)
+    key = es_samp_key("doc_id", "n_chars")
     w = (Window.partitionBy(group_col)
-         .orderBy(F.col("samp_key").asc(), F.col(id_col).asc()))
-    return (docs.select(F.col(group_col), F.col(id_col),
-                        F.col(weight_col).cast("long").alias("weight"),
+         .orderBy(F.col("samp_key").asc(), F.col("doc_id").asc()))
+    return (docs.select(F.col(group_col), F.col("doc_id"),
+                        F.col("n_chars").cast("long").alias("weight"),
                         key.alias("samp_key"))
             .withColumn("samp_rank", F.row_number().over(w).cast("long"))
             .where(F.col("samp_rank") <= n))
 
 
-def source_overlap(docs: DataFrame, n: int = 3,
-                   source_col: str = "source",
-                   text_col: str = "text") -> DataFrame:
+def source_overlap(docs: DataFrame, n: int = 3) -> DataFrame:
     """-> (src_a, src_b, inter, n_a, n_b, jaccard): exact n-gram-set
     Jaccard overlap between every pair of sources — the corpus-
     governance matrix that answers "which of my domains are mirroring
@@ -914,12 +873,12 @@ def source_overlap(docs: DataFrame, n: int = 3,
     shuffles gram-cardinality rows once and 2500-cell partial aggs —
     there is no all-pairs blowup anywhere.
     """
-    grams = word_ngrams(docs, n, id_col=source_col, text_col=text_col) \
+    grams = word_ngrams(docs, n, id_col="source") \
         .distinct()
-    sizes = grams.groupBy(source_col).agg(
+    sizes = grams.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_set"))
     src_sets = (grams.groupBy("gram")
-                .agg(F.array_sort(F.collect_set(source_col))
+                .agg(F.array_sort(F.collect_set("source"))
                      .alias("srcs")))
     pairs = F.filter(
         F.flatten(F.transform(
@@ -932,9 +891,9 @@ def source_overlap(docs: DataFrame, n: int = 3,
              .groupBy(F.col("p.src_a").alias("src_a"),
                       F.col("p.src_b").alias("src_b"))
              .agg(F.count(F.lit(1)).alias("inter")))
-    a_sz = sizes.select(F.col(source_col).alias("src_a"),
+    a_sz = sizes.select(F.col("source").alias("src_a"),
                         F.col("n_set").alias("n_a"))
-    b_sz = sizes.select(F.col(source_col).alias("src_b"),
+    b_sz = sizes.select(F.col("source").alias("src_b"),
                         F.col("n_set").alias("n_b"))
     return (inter
             .join(F.broadcast(a_sz), "src_a")
@@ -953,9 +912,7 @@ UNIMAX_MAX_EPOCHS = 2.0    # no language repeats more than this many times
 
 def unimax_language_budget(docs: DataFrame,
                            budget_frac: float = UNIMAX_BUDGET_FRAC,
-                           max_epochs: float = UNIMAX_MAX_EPOCHS,
-                           lang_col: str = "lang",
-                           chars_col: str = "n_chars") -> DataFrame:
+                           max_epochs: float = UNIMAX_MAX_EPOCHS) -> DataFrame:
     """UniMax language budgeting (Chung et al. 2023): split a character
     budget as UNIFORMLY as possible across languages, capping each at
     ``max_epochs`` passes over its data — the principled alternative to
@@ -978,9 +935,9 @@ def unimax_language_budget(docs: DataFrame,
     to the per-language frame; the window and the two 1-row broadcast
     crossJoins run on the LANGUAGE cardinality, never on data rows.
     """
-    langs = (docs.groupBy(F.col(lang_col).alias("lang"))
+    langs = (docs.groupBy("lang")
              .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                  F.sum(chars_col).cast("long").alias("chars_total")))
+                  F.sum("n_chars").cast("long").alias("chars_total")))
     tot = langs.agg(
         (F.sum("chars_total").cast("double") * F.lit(budget_frac))
         .alias("budget"),
@@ -1030,12 +987,12 @@ GOPHER_ALPHA_MIN = 0.8
 GOPHER_MIN_STOPS = 2
 
 
-def gopher_rule_flags(text_col: str = "text") -> list[tuple[str, Column]]:
+def gopher_rule_flags() -> list[tuple[str, Column]]:
     """The Gopher quality-rule battery (Rae et al. 2021, §A1.1) as named
     boolean columns over one document — all built-in expressions, so the
     whole battery runs map-only inside codegen.  NULL-valued rules (e.g.
     mean word length of an empty doc) count as failures via coalesce."""
-    text = F.col(text_col)
+    text = F.col("text")
     toks = tokens(text)
     # nullif denominators: Spark division-by-zero yields NULL but DuckDB
     # does IEEE inf/NaN (and DuckDB orders NaN above every threshold) —
@@ -1080,16 +1037,15 @@ def gopher_rule_flags(text_col: str = "text") -> list[tuple[str, Column]]:
     return [(name, F.coalesce(c, F.lit(False))) for name, c in rules]
 
 
-def gopher_rule_filter(docs: DataFrame, source_col: str = "source",
-                       text_col: str = "text") -> DataFrame:
+def gopher_rule_filter(docs: DataFrame) -> DataFrame:
     """-> (source, n_docs, n_pass, fail_<rule>...): per-source pass/fail
     census of the Gopher rule battery — the first screen of a
     pre-training curation pipeline, and the per-rule breakdown an
     operator watches to see WHICH rule is eating a source.  One map-only
     projection then a source-keyed aggregate (map-side combined)."""
-    flags = gopher_rule_flags(text_col)
+    flags = gopher_rule_flags()
     flagged = docs.select(
-        F.col(source_col).alias("source"),
+        F.col("source"),
         *[c.alias(f"r_{name}") for name, c in flags])
     aggs = [F.count(F.lit(1)).cast("long").alias("n_docs")]
     passc = F.lit(True)
@@ -1106,8 +1062,7 @@ HASH_FEAT_MULT = 2_654_435_761        # Knuth multiplicative constant
 HASH_FEAT_MOD = 2_000_001             # weight numerators in [-1e6, 1e6]
 
 
-def hashed_ngram_scores(docs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def hashed_ngram_scores(docs: DataFrame) -> DataFrame:
     """fastText-style hashed linear classifier INFERENCE (Joulin et al.
     2017): features are word unigrams + bigrams bucketed into
     ``HASH_FEAT_DIM`` hash slots; each slot's weight derives from the
@@ -1123,7 +1078,7 @@ def hashed_ngram_scores(docs: DataFrame, id_col: str = "doc_id",
     map-only projection; no explode, no shuffle, nothing but the scan.
     The weight sum accumulates exact BIGINT numerators (order-free), so
     only the final sigmoid touches floating point."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     bi = F.transform(bigram_structs(toks),
                      lambda s: F.concat_ws(" ", s["w1"], s["w2"]))
     grams = F.concat(toks, bi)
@@ -1137,7 +1092,7 @@ def hashed_ngram_scores(docs: DataFrame, id_col: str = "doc_id",
     score = (ssum.cast("double") / ((HASH_FEAT_MOD - 1) // 2)
              / F.nullif(n.cast("double"), F.lit(0.0)))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("long").alias("n_feats"),
         F.round(score, 6).alias("score"),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-score)), 6).alias("prob"),

@@ -36,9 +36,9 @@ from pyspark.sql.functions import pandas_udf
 HEX = "0123456789abcdef"
 
 
-def tokens_col(text_col: str = "text"):
+def tokens_col():
     """Lowered whitespace tokens as array<string> (P2+P3 generalized)."""
-    return F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
 
 # Java's '\s' is the ASCII whitespace class [ \t\n\x0b\f\r] — NOT
@@ -68,7 +68,7 @@ def py_tokens(text: str | None) -> list[str]:
     return _JAVA_WS.split((text or "").lower().strip(" "))
 
 
-def shingle_array(k: int = 3, text_col: str = "text", arrow: bool = True):
+def shingle_array(k: int = 3, arrow: bool = True):
     """Distinct k-word shingles of one document as an array column.
 
     The per-doc set semantics (the reference's per-book distinct P4) is
@@ -106,20 +106,19 @@ def shingle_array(k: int = 3, text_col: str = "text", arrow: bool = True):
                                  for i in range(len(toks) - k + 1)}))
             return pd.Series(out)
 
-        return _shingles(text_col)
+        return _shingles("text")
+    toks = _toks_sql("text")
     shingles = F.when(
-        F.size(tokens_col(text_col)) >= k,
+        F.size(tokens_col()) >= k,
         F.expr(
-            f"transform(sequence(1, size({_toks_sql(text_col)}) - {k - 1}), "
-            f"i -> concat_ws(' ', slice({_toks_sql(text_col)}, i, {k})))"
+            f"transform(sequence(1, size({toks}) - {k - 1}), "
+            f"i -> concat_ws(' ', slice({toks}, i, {k})))"
         ),
     ).otherwise(F.array().cast("array<string>"))
     return F.array_distinct(shingles)
 
 
 def word_shingles(docs: DataFrame, k: int = 3,
-                  doc_col: str = "doc_id",
-                  text_col: str = "text",
                   spread: bool = True) -> DataFrame:
     """-> (doc, shingle) rows, distinct per doc (exploded shingle_array).
 
@@ -149,7 +148,7 @@ def word_shingles(docs: DataFrame, k: int = 3,
     from this one line).  Doc ids are non-null keys by fixture/contract
     and every pair-producing consumer is null-rejecting anyway (joins
     and ``doc_a < doc_b`` comparisons), so results are unchanged."""
-    docs = docs.filter(F.col(doc_col).isNotNull())
+    docs = docs.filter(F.col("doc_id").isNotNull())
     if spread:
         from ..tables import spread_small_scan
         docs = spread_small_scan(docs)
@@ -159,8 +158,8 @@ def word_shingles(docs: DataFrame, k: int = 3,
     # the kernel blocks stage reuse.  Kernel-built shingles are never
     # null, so this is a data no-op.
     return (docs
-            .select(F.col(doc_col).alias("doc"),
-                    F.explode(shingle_array(k, text_col)).alias("shingle"))
+            .select(F.col("doc_id").alias("doc"),
+                    F.explode(shingle_array(k)).alias("shingle"))
             .filter(F.col("shingle").isNotNull()))
 
 
@@ -168,9 +167,7 @@ def _toks_sql(text_col: str) -> str:
     return f"split(trim(lower({text_col})), '\\\\s+')"
 
 
-def minhash_signatures(docs: DataFrame, num_perm: int = 8, k: int = 3,
-                       doc_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def minhash_signatures(docs: DataFrame, num_perm: int = 8) -> DataFrame:
     """-> (doc, mh_0..mh_{num_perm-1}): per-doc MinHash signature; each
     permutation is min(md5(seed || '|' || shingle)) as a hex string.
 
@@ -182,7 +179,7 @@ def minhash_signatures(docs: DataFrame, num_perm: int = 8, k: int = 3,
     shingle rows once AND gives downstream consumers (LSH banding, the
     self-join) a reusable exchange.  Docs with < k tokens → no row.
     """
-    sh = word_shingles(docs, k, doc_col, text_col)
+    sh = word_shingles(docs)
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("shingle")))).alias(f"mh_{s}")
         for s in range(num_perm)
@@ -216,8 +213,7 @@ def banded_signatures(signatures: DataFrame, bands: int = 4,
 
 
 def inline_band_hashes(num_perm: int = 8, bands: int = 4,
-                       rows_per_band: int = 2, k: int = 3,
-                       text_col: str = "text", arrow: bool = True):
+                       rows_per_band: int = 2, arrow: bool = True):
     """Row-local LSH band hashes as ONE array<string> column — the
     zero-shuffle form of :func:`minhash_signatures` +
     :func:`banded_signatures` for contexts that must stay map-only
@@ -267,8 +263,8 @@ def inline_band_hashes(num_perm: int = 8, bands: int = 4,
                     out.append([])
                     continue
                 toks = py_tokens(t)
-                sh = {" ".join(toks[i:i + k])
-                      for i in range(len(toks) - k + 1)}
+                sh = {" ".join(toks[i:i + 3])
+                      for i in range(len(toks) - 2)}
                 if not sh:
                     out.append([])
                     continue
@@ -283,13 +279,13 @@ def inline_band_hashes(num_perm: int = 8, bands: int = 4,
                     for b in range(bands)])
             return pd.Series(out)
 
-        return _bands(text_col)
-    toks = _toks_sql(text_col)
+        return _bands("text")
+    toks = _toks_sql("text")
 
     def sh(var: str) -> str:
-        return (f"array_distinct(IF(size({toks}) >= {k}, "
-                f"transform(sequence(1, size({toks}) - {k - 1}), "
-                f"{var} -> concat_ws(' ', slice({toks}, {var}, {k}))), "
+        return (f"array_distinct(IF(size({toks}) >= 3, "
+                f"transform(sequence(1, size({toks}) - 2), "
+                f"{var} -> concat_ws(' ', slice({toks}, {var}, 3))), "
                 f"CAST(array() AS ARRAY<STRING>)))")
 
     def mh(s: int) -> str:
@@ -306,11 +302,9 @@ def inline_band_hashes(num_perm: int = 8, bands: int = 4,
 
 
 def incremental_dedup_route(new_docs: DataFrame, old_hashes: DataFrame,
-                            old_bands: DataFrame,
-                            num_perm: int = 8, bands: int = 4,
-                            rows_per_band: int = 2, k: int = 3,
-                            doc_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
+                            old_bands: DataFrame, num_perm: int = 8,
+                            bands: int = 4,
+                            rows_per_band: int = 2) -> DataFrame:
     """The MAP-ONLY probe stage of incremental dedup — the per-row work
     a streaming ingest pays for each arriving document: content-md5 +
     row-local band hashes (:func:`inline_band_hashes`), then two
@@ -335,14 +329,14 @@ def incremental_dedup_route(new_docs: DataFrame, old_hashes: DataFrame,
     oracle) are unchanged either way — broadcast is a physical hint
     here, not a correctness dependency.
 
-    -> (doc_col, exact_dup, band, partner) rows; aggregate with
+    -> (doc_id, exact_dup, band, partner) rows; aggregate with
     :func:`incremental_dedup_finalize` (batch-side, over the sink)."""
     routed = (new_docs
-              .select(F.col(doc_col),
-                      F.md5(F.col(text_col)).alias("h"),
-                      inline_band_hashes(num_perm, bands, rows_per_band,
-                                         k, text_col).alias("_bands"))
-              .select(doc_col, "h",
+              .select(F.col("doc_id"),
+                      F.md5(F.col("text")).alias("h"),
+                      inline_band_hashes(num_perm, bands, rows_per_band)
+                      .alias("_bands"))
+              .select("doc_id", "h",
                       F.posexplode_outer("_bands")
                       .alias("band", "band_hash")))
     partners = (old_bands.select(F.col("doc").alias("partner"),
@@ -350,23 +344,22 @@ def incremental_dedup_route(new_docs: DataFrame, old_hashes: DataFrame,
     return (routed
             .join(F.broadcast(old_hashes), "h", "left")
             .join(F.broadcast(partners), ["band", "band_hash"], "left")
-            .select(doc_col,
+            .select("doc_id",
                     F.col("_seen").isNotNull().alias("exact_dup"),
                     "band", "partner"))
 
 
-def incremental_dedup_finalize(rows: DataFrame,
-                               doc_col: str = "doc_id") -> DataFrame:
+def incremental_dedup_finalize(rows: DataFrame) -> DataFrame:
     """Fold the probe stage's (doc, exact_dup, band, partner) rows into
     per-document decisions — batch-side over the materialized sink
     (cross-band DISTINCT partner counting is an aggregation, which an
     append-mode stateless stream must not carry).  Output schema ==
     :func:`incremental_dedup`, so both faces share one oracle."""
-    return (rows.groupBy(doc_col)
+    return (rows.groupBy("doc_id")
             .agg(F.max("exact_dup").alias("exact_dup"),
                  F.countDistinct("partner").cast("long")
                  .alias("n_near_partners"))
-            .select(doc_col, "exact_dup", "n_near_partners",
+            .select("doc_id", "exact_dup", "n_near_partners",
                     (F.col("exact_dup") | (F.col("n_near_partners") > 0))
                     .alias("is_dup")))
 
@@ -406,9 +399,7 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
     )
 
 
-def jaccard_pairs(docs: DataFrame, threshold: float, k: int = 3,
-                  doc_col: str = "doc_id",
-                  text_col: str = "text",
+def jaccard_pairs(docs: DataFrame, threshold: float,
                   df_max: int = 128) -> DataFrame:
     """-> (doc_a, doc_b, jaccard) for pairs with Jaccard >= threshold.
 
@@ -439,7 +430,7 @@ def jaccard_pairs(docs: DataFrame, threshold: float, k: int = 3,
     # (whose distribution it already satisfies) and the size aggregate.
     # Without it each consumer would re-scan and re-shingle the corpus
     # (measured +40% at sf0.1).
-    shingles = (word_shingles(docs, k, doc_col, text_col, spread=False)
+    shingles = (word_shingles(docs, spread=False)
                 .repartition(F.col("shingle")))
     sizes = shingles.groupBy("doc").agg(F.count("*").alias("n"))
     capped = (shingles
@@ -464,9 +455,7 @@ def jaccard_pairs(docs: DataFrame, threshold: float, k: int = 3,
     )
 
 
-def jaccard_pairs_prefix(docs: DataFrame, threshold: float, k: int = 3,
-                         doc_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
+def jaccard_pairs_prefix(docs: DataFrame, threshold: float) -> DataFrame:
     """EXACT Jaccard >= threshold pairs via prefix filtering — same output
     contract as :func:`jaccard_pairs` with ``df_max=None`` (no approximation),
     different candidate generation.
@@ -507,7 +496,7 @@ def jaccard_pairs_prefix(docs: DataFrame, threshold: float, k: int = 3,
     fr = Fraction(str(threshold))
     num, den = fr.numerator, fr.denominator
 
-    shingles = (word_shingles(docs, k, doc_col, text_col, spread=False)
+    shingles = (word_shingles(docs, spread=False)
                 .repartition(F.col("shingle")))
     with_df = shingles.withColumn(
         "_df", F.count("*").over(Window.partitionBy("shingle")))
@@ -547,8 +536,7 @@ def jaccard_pairs_prefix(docs: DataFrame, threshold: float, k: int = 3,
     )
 
 
-def simhash_bits(docs: DataFrame, n_bits: int, doc_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
+def simhash_bits(docs: DataFrame, n_bits: int) -> DataFrame:
     """-> (doc, simhash): ``n_bits``-bit SimHash over the doc's distinct
     tokens (n_bits <= 60: md5 has 32 nibbles -> 128 derivable bits, and 60
     keeps ``sum(bit * 2^b)`` comfortably inside a signed 64-bit long).
@@ -560,13 +548,13 @@ def simhash_bits(docs: DataFrame, n_bits: int, doc_col: str = "doc_id",
     if not 1 <= n_bits <= 60:
         raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
     uniq = F.array_distinct(
-        F.filter(tokens_col(text_col), lambda t: t != ""))
+        F.filter(tokens_col(), lambda t: t != ""))
     # Spread before the tokenize+md5 explode (integer bit sums are
     # partitioning-independent) — see word_shingles.
     from ..tables import spread_small_scan
     toks = (
         spread_small_scan(docs)
-        .select(F.col(doc_col).alias("doc"),
+        .select(F.col("doc_id").alias("doc"),
                 F.explode(uniq).alias("tok"))
         .withColumn("m", F.md5("tok"))
     )
@@ -585,15 +573,13 @@ def simhash_bits(docs: DataFrame, n_bits: int, doc_col: str = "doc_id",
     return sums.select("doc", simhash.cast("long").alias("simhash"))
 
 
-def simhash16(docs: DataFrame, doc_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def simhash16(docs: DataFrame) -> DataFrame:
     """16-bit SimHash (see simhash_bits) — the compact fingerprint query."""
-    return simhash_bits(docs, 16, doc_col, text_col)
+    return simhash_bits(docs, 16)
 
 
-def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
-                      n_bits: int = 60, bands: int = 4,
-                      doc_col: str = "doc_id", text_col: str = "text",
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3, n_bits: int = 60,
+                      bands: int = 4,
                       max_bucket: int | None = None) -> DataFrame:
     """-> (doc_a, doc_b, hamming): doc pairs whose ``n_bits``-bit SimHashes
     differ in <= ``max_hamming`` bits.
@@ -618,7 +604,7 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
         raise ValueError(f"n_bits {n_bits} not divisible by bands {bands}")
     width = n_bits // bands
     mask = (1 << width) - 1
-    sim = simhash_bits(docs, n_bits, doc_col, text_col)
+    sim = simhash_bits(docs, n_bits)
     band_vals = F.array(*[
         F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask))
         for b in range(bands)
@@ -646,9 +632,7 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3,
             .select("doc_a", "doc_b", "hamming"))
 
 
-def shingle_novelty(docs: DataFrame, k: int = 3,
-                    doc_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def shingle_novelty(docs: DataFrame) -> DataFrame:
     """-> (doc_id, n_shingles, n_novel, novelty): per-document novelty
     scoring — the share of a doc's distinct k-shingles whose FIRST
     corpus occurrence (smallest doc id) is this doc.  Boilerplate-heavy
@@ -662,14 +646,14 @@ def shingle_novelty(docs: DataFrame, k: int = 3,
     unlike Jaccard joins there is NO hot-shingle quadratic risk: a
     shingle in m docs contributes m join rows, not m^2 — this is the
     novelty metric's 100 TB advantage over pairwise overlap."""
-    sh = word_shingles(docs, k, doc_col, text_col)
+    sh = word_shingles(docs)
     first = sh.groupBy("shingle").agg(F.min("doc").alias("first_doc"))
     return (sh.join(first, "shingle")
             .groupBy("doc")
             .agg(F.count(F.lit(1)).cast("long").alias("n_shingles"),
                  F.sum(F.when(F.col("first_doc") == F.col("doc"), 1)
                        .otherwise(0)).cast("long").alias("n_novel"))
-            .select(F.col("doc").alias(doc_col), "n_shingles", "n_novel",
+            .select(F.col("doc").alias("doc_id"), "n_shingles", "n_novel",
                     F.round(F.col("n_novel").cast("double")
                             / F.col("n_shingles").cast("double"), 6)
                     .alias("novelty")))
@@ -846,9 +830,8 @@ def symspell_matches(queries: DataFrame, dictionary: DataFrame,
             .filter(F.col("dist") <= 1))
 
 
-def containment_pairs(docs: DataFrame, threshold: float, k: int = 3,
-                      doc_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def containment_pairs(docs: DataFrame, threshold: float,
+                      k: int = 3) -> DataFrame:
     """DIRECTED set containment C(A→B) = |A∩B| / |A| >= threshold — the
     quote/subset-detection asymmetric cousin of Jaccard (a short doc fully
     quoted inside a long one scores ~1.0 here but low on Jaccard, which
@@ -876,7 +859,7 @@ def containment_pairs(docs: DataFrame, threshold: float, k: int = 3,
     fr = Fraction(str(threshold))
     num, den = fr.numerator, fr.denominator
 
-    shingles = (word_shingles(docs, k, doc_col, text_col, spread=False)
+    shingles = (word_shingles(docs, k, spread=False)
                 .repartition(F.col("shingle")))
     with_df = shingles.withColumn(
         "_df", F.count("*").over(Window.partitionBy("shingle")))
@@ -918,7 +901,7 @@ def containment_pairs(docs: DataFrame, threshold: float, k: int = 3,
 SPAN_NS = (3, 5, 8, 13)
 
 
-def ladder_tagged_grams(ns: tuple[int, ...], text_col: str = "text"):
+def ladder_tagged_grams(ns: tuple[int, ...]):
     """array<struct<span:int,gram:string>>: per rung n in ``ns``, the
     doc's distinct n-grams in first-occurrence order, rungs
     concatenated in ``ns`` order — the Arrow-kernel twin of
@@ -953,16 +936,16 @@ def ladder_tagged_grams(ns: tuple[int, ...], text_col: str = "text"):
             out.append(row)
         return pd.Series(out)
 
-    return _ladder(text_col)
+    return _ladder("text")
 
 
-def ladder_tagged_grams_expr(ns: tuple[int, ...], text_col: str = "text"):
+def ladder_tagged_grams_expr(ns: tuple[int, ...]):
     """The original interpreted-expression form of
     :func:`ladder_tagged_grams` — kept as the kernel's bit-equality
     reference (and for JVM-only contexts).  NB: transform() lambdas
     must stay single-parameter — a second parameter is interpreted as
     the ELEMENT INDEX by Spark."""
-    toks = tokens_col(text_col)
+    toks = tokens_col()
 
     def _tagged(n: int):
         grams_n = F.array_distinct(F.transform(
@@ -981,9 +964,7 @@ def ladder_tagged_grams_expr(ns: tuple[int, ...], text_col: str = "text"):
 
 
 def max_shared_span(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
-                    df_max: int = 128,
-                    doc_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+                    df_max: int = 128) -> DataFrame:
     """-> (doc_a, doc_b, max_span): per candidate pair, the LARGEST
     n in ``ns`` such that the two documents share a verbatim word
     n-gram — the substring-granularity duplication signal (Lee et al.
@@ -1011,8 +992,8 @@ def max_shared_span(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
     # ~10.5 s of task CPU at sf0.1 (the dominant stage of this query
     # AND of substring_discard_manifest's discovery phase).
     exploded = (spread_small_scan(docs)
-                .select(F.col(doc_col).alias("doc"),
-                        F.explode(ladder_tagged_grams(ns, text_col))
+                .select(F.col("doc_id").alias("doc"),
+                        F.explode(ladder_tagged_grams(ns))
                         .alias("sg"))
                 .select("doc", F.col("sg.span").alias("span"),
                         F.col("sg.gram").alias("gram"))
@@ -1033,9 +1014,7 @@ def max_shared_span(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
 
 
 def max_shared_span_exact(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
-                          df_max: int = 128,
-                          doc_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+                          df_max: int = 128) -> DataFrame:
     """-> (doc_a, doc_b, max_span): per candidate pair, the EXACT
     length of the longest verbatim shared word n-gram — the ladder
     profile of :func:`max_shared_span` refined to the true maximum.
@@ -1059,11 +1038,11 @@ def max_shared_span_exact(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
     one Python stage over |pairs| rows — at scale the pair set is df-
     cap-bounded while the corpus-side joins stay key-partitioned.
     """
-    cand = max_shared_span(docs, ns, df_max, doc_col, text_col)
+    cand = max_shared_span(docs, ns, df_max)
     from ..tables import spread_small_scan
     toked = (spread_small_scan(docs)
-             .select(F.col(doc_col).alias("doc"),
-                     tokens_col(text_col).alias("toks")))
+             .select(F.col("doc_id").alias("doc"),
+                     tokens_col().alias("toks")))
 
     @pandas_udf("long")
     def exact_span(ta: pd.Series, tb: pd.Series,
@@ -1144,9 +1123,7 @@ def max_shared_span_exact(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
 
 def incremental_dedup(docs: DataFrame, mod: int = 3, num_perm: int = 8,
                       bands: int = 4, rows_per_band: int = 2,
-                      max_bucket: int | None = None,
-                      doc_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+                      max_bucket: int | None = None) -> DataFrame:
     """Incremental-ingest dedup: screen a NEW batch (``doc_id % mod ==
     0`` stands in for "this ingest") against the EXISTING corpus without
     ever re-deduplicating the old side — the steady-state shape of a
@@ -1163,18 +1140,17 @@ def incremental_dedup(docs: DataFrame, mod: int = 3, num_perm: int = 8,
     the old side of each bucket capped at ``max_bucket`` (hot
     boilerplate buckets stay O(new·cap)).  Old-side text is read once to
     build fingerprints; the quadratic old×old join never happens."""
-    is_new = F.col(doc_col) % mod == 0
+    is_new = F.col("doc_id") % mod == 0
     new_h = (docs.filter(is_new)
-             .select(F.col(doc_col), F.md5(F.col(text_col)).alias("h")))
+             .select(F.col("doc_id"), F.md5(F.col("text")).alias("h")))
     old_h = (docs.filter(~is_new)
-             .select(F.md5(F.col(text_col)).alias("h")).distinct()
+             .select(F.md5(F.col("text")).alias("h")).distinct()
              .withColumn("_seen", F.lit(1)))
     exact = (new_h.join(old_h, "h", "left")
-             .select(F.col(doc_col),
+             .select(F.col("doc_id"),
                      F.col("_seen").isNotNull().alias("exact_dup")))
 
-    sig = minhash_signatures(docs, num_perm, doc_col=doc_col,
-                             text_col=text_col)
+    sig = minhash_signatures(docs, num_perm)
     banded = banded_signatures(sig, bands, rows_per_band)
     nb = banded.filter(F.col("doc") % mod == 0)
     ob = banded.filter(F.col("doc") % mod != 0)
@@ -1187,11 +1163,11 @@ def incremental_dedup(docs: DataFrame, mod: int = 3, num_perm: int = 8,
             .join(ob.alias("o"),
                   (F.col("n.band") == F.col("o.band"))
                   & (F.col("n.band_hash") == F.col("o.band_hash")))
-            .groupBy(F.col("n.doc").alias(doc_col))
+            .groupBy(F.col("n.doc").alias("doc_id"))
             .agg(F.countDistinct(F.col("o.doc")).cast("long")
                  .alias("n_near_partners")))
-    return (exact.join(near, doc_col, "left")
-            .select(F.col(doc_col),
+    return (exact.join(near, "doc_id", "left")
+            .select(F.col("doc_id"),
                     "exact_dup",
                     F.coalesce("n_near_partners", F.lit(0)).cast("long")
                     .alias("n_near_partners"),
@@ -1202,9 +1178,7 @@ def incremental_dedup(docs: DataFrame, mod: int = 3, num_perm: int = 8,
 
 def substring_discard_manifest(docs: DataFrame, min_len: int = 8,
                                ns: tuple[int, ...] = (8, 13),
-                               df_max: int = 128,
-                               doc_col: str = "doc_id",
-                               text_col: str = "text") -> DataFrame:
+                               df_max: int = 128) -> DataFrame:
     """Exact-substring dedup as a DISCARD MANIFEST (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better", §3 —
     the ExactSubstr operator): instead of reporting that two documents
@@ -1245,11 +1219,11 @@ def substring_discard_manifest(docs: DataFrame, min_len: int = 8,
     agree range-for-range."""
     from pyspark.sql import Window
 
-    cand = max_shared_span(docs, ns, df_max, doc_col, text_col)
+    cand = max_shared_span(docs, ns, df_max)
     from ..tables import spread_small_scan
     toked = (spread_small_scan(docs)
-             .select(F.col(doc_col).alias("doc"),
-                     tokens_col(text_col).alias("toks")))
+             .select(F.col("doc_id").alias("doc"),
+                     tokens_col().alias("toks")))
 
     @pandas_udf("array<struct<s:long,e:long>>")
     def drop_ranges(ta: pd.Series, tb: pd.Series) -> pd.Series:
@@ -1295,21 +1269,21 @@ def substring_discard_manifest(docs: DataFrame, min_len: int = 8,
                            F.col("toks").alias("ta")), "doc_a")
         .join(toked.select(F.col("doc").alias("doc_b"),
                            F.col("toks").alias("tb")), "doc_b")
-        .select(F.col("doc_b").alias(doc_col),
+        .select(F.col("doc_b").alias("doc_id"),
                 F.explode(drop_ranges("ta", "tb")).alias("r"))
-        .select(doc_col, F.col("r.s").alias("s"), F.col("r.e").alias("e"))
+        .select("doc_id", F.col("r.s").alias("s"), F.col("r.e").alias("e"))
         .distinct())
 
-    order = Window.partitionBy(doc_col).orderBy("s", "e")
+    order = Window.partitionBy("doc_id").orderBy("s", "e")
     pme = F.max("e").over(order.rowsBetween(Window.unboundedPreceding, -1))
     flagged = pair_ranges.withColumn(
         "brk", F.when(pme.isNull() | (F.col("s") > pme), 1).otherwise(0))
     grouped = flagged.withColumn(
         "grp", F.sum("brk").over(
             order.rowsBetween(Window.unboundedPreceding, 0)))
-    return (grouped.groupBy(doc_col, "grp")
+    return (grouped.groupBy("doc_id", "grp")
             .agg(F.min("s").cast("long").alias("range_start"),
                  F.max("e").cast("long").alias("range_end"))
-            .select(doc_col, "range_start", "range_end",
+            .select("doc_id", "range_start", "range_end",
                     (F.col("range_end") - F.col("range_start"))
                     .cast("long").alias("n_tokens")))

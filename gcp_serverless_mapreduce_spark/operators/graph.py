@@ -83,20 +83,18 @@ def pagerank(edges: DataFrame, iters: int = 5,
 
 
 def pagerank_rounded(edges: DataFrame, iters: int = 5,
-                     damping: float = 0.85,
-                     decimals: int = 6) -> DataFrame:
+                     damping: float = 0.85) -> DataFrame:
     """PageRank with the cross-engine value contract applied (see module
-    docstring): final ranks rounded to ``decimals``."""
+    docstring): final ranks rounded to 6 decimals."""
     pr = pagerank(edges, iters, damping)
-    return pr.select("node", F.round("rank", decimals).alias("rank"))
+    return pr.select("node", F.round("rank", 6).alias("rank"))
 
 
-def undirect(pairs: DataFrame, a: str = "word_a",
-             b: str = "word_b") -> DataFrame:
+def undirect(pairs: DataFrame) -> DataFrame:
     """Canonicalize directed pairs into undirected edges (u < v),
     deduplicated.  -> (u, v)."""
-    return (pairs.select(F.least(F.col(a), F.col(b)).alias("u"),
-                         F.greatest(F.col(a), F.col(b)).alias("v"))
+    a, b = F.col("word_a"), F.col("word_b")
+    return (pairs.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
             .where(F.col("u") < F.col("v"))
             .distinct())
 

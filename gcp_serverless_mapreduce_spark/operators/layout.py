@@ -33,21 +33,21 @@ from pyspark.sql import functions as F
 ZBITS = 16
 
 
-def zorder_key(x: Column, y: Column, bits: int = ZBITS) -> Column:
+def zorder_key(x: Column, y: Column) -> Column:
     """Morton (Z-order) interleave of two non-negative integer columns.
 
     Bit i of ``x`` lands at position 2i, bit i of ``y`` at 2i+1.  The
     fold is unrolled at plan-build time into one flat sum of 2*bits
     shift/mask terms (shift amounts are plan constants), so the whole
     key is a single whole-stage-codegen integer expression; no UDF, no
-    shuffle.  Inputs are masked to ``bits`` bits so oversized values
+    shuffle.  Inputs are masked to ``ZBITS`` bits so oversized values
     wrap instead of colliding the interleave positions.
     """
-    mask = (1 << bits) - 1
+    mask = (1 << ZBITS) - 1
     xm = x.cast("long").bitwiseAND(F.lit(mask))
     ym = y.cast("long").bitwiseAND(F.lit(mask))
     key = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZBITS):
         key = (key
                + F.shiftleft(F.shiftright(xm, i).bitwiseAND(F.lit(1)), 2 * i)
                + F.shiftleft(F.shiftright(ym, i).bitwiseAND(F.lit(1)),
@@ -55,18 +55,18 @@ def zorder_key(x: Column, y: Column, bits: int = ZBITS) -> Column:
     return key.cast("long")
 
 
-def zorder_key_sql(x: str, y: str, bits: int = ZBITS) -> str:
+def zorder_key_sql(x: str, y: str) -> str:
     """The DuckDB twin of :func:`zorder_key` (same fold, same masking) —
     kept next to the Spark expression so the two cannot drift apart."""
-    mask = (1 << bits) - 1
+    mask = (1 << ZBITS) - 1
     return (
-        f"list_sum(list_transform(generate_series(0, {bits - 1}), i -> "
+        f"list_sum(list_transform(generate_series(0, {ZBITS - 1}), i -> "
         f"(((({x} & {mask}) >> i) & 1) << (2 * i)) "
         f"+ (((({y} & {mask}) >> i) & 1) << (2 * i + 1))))"
     )
 
 
-def hilbert_key(x: Column, y: Column, bits: int = ZBITS) -> Column:
+def hilbert_key(x: Column, y: Column) -> Column:
     """Arrow-kernel Hilbert index (r15) — the default entry point.
 
     :func:`hilbert_key_expr` below is the original ``F.aggregate`` form;
@@ -80,7 +80,7 @@ def hilbert_key(x: Column, y: Column, bits: int = ZBITS) -> Column:
     NULL) by tests/test_r15_batch3.py."""
     from pyspark.sql.functions import pandas_udf
 
-    mask = (1 << bits) - 1
+    mask = (1 << ZBITS) - 1
 
     @pandas_udf("long")
     def hkey(xs: pd.Series, ys: pd.Series) -> pd.Series:
@@ -95,7 +95,7 @@ def hilbert_key(x: Column, y: Column, bits: int = ZBITS) -> Column:
         hx = xs.fillna(0).to_numpy(dtype=np.int64) & mask
         hy = ys.fillna(0).to_numpy(dtype=np.int64) & mask
         d = np.zeros(len(hx), dtype=np.int64)
-        for i in range(bits - 1, -1, -1):
+        for i in range(ZBITS - 1, -1, -1):
             s = np.int64(1 << i)
             rx_true = ~xn & ((hx & s) > 0)
             ry_true = ~yn & ((hy & s) > 0)
@@ -112,7 +112,7 @@ def hilbert_key(x: Column, y: Column, bits: int = ZBITS) -> Column:
     return hkey(x.cast("long"), y.cast("long"))
 
 
-def hilbert_key_expr(x: Column, y: Column, bits: int = ZBITS) -> Column:
+def hilbert_key_expr(x: Column, y: Column) -> Column:
     """Hilbert-curve index of two non-negative integer columns — the
     strictly-better-locality sibling of :func:`zorder_key`: consecutive
     Hilbert indices are always ADJACENT cells (the Z-curve jumps at
@@ -123,9 +123,9 @@ def hilbert_key_expr(x: Column, y: Column, bits: int = ZBITS) -> Column:
     Classic per-level fold (rx/ry quadrant bits, reflect+swap rotation,
     Wikipedia xy2d with n-1 reflection): the level constants are plan
     literals and the (d, x, y) state threads through ``F.aggregate``
-    over the ``bits`` levels as a struct — a LINEAR-size codegen'd
+    over the ``ZBITS`` levels as a struct — a LINEAR-size codegen'd
     integer expression (naive unrolling would double the tree per level
-    through the rotation's conditionals).  Inputs mask to ``bits`` bits
+    through the rotation's conditionals).  Inputs mask to ``ZBITS`` bits
     like the z-key.
 
     The DuckDB twin (:func:`hilbert_ctes_sql`) unrolls the SAME fold as
@@ -134,11 +134,11 @@ def hilbert_key_expr(x: Column, y: Column, bits: int = ZBITS) -> Column:
     second iteration on (verified: the identical lambda applied to the
     identical logical state gives different results chained vs
     standalone), so the lambda form cannot be the oracle."""
-    mask = (1 << bits) - 1
+    mask = (1 << ZBITS) - 1
     xm = x.cast("long").bitwiseAND(F.lit(mask))
     ym = y.cast("long").bitwiseAND(F.lit(mask))
     levels = F.array(*[F.lit(1 << i).cast("long")
-                       for i in range(bits - 1, -1, -1)])
+                       for i in range(ZBITS - 1, -1, -1)])
     init = F.struct(F.lit(0).cast("long").alias("d"),
                     xm.alias("x"), ym.alias("y"))
 
@@ -160,18 +160,17 @@ def hilbert_key_expr(x: Column, y: Column, bits: int = ZBITS) -> Column:
     return F.aggregate(levels, init, step).getField("d").cast("long")
 
 
-def hilbert_ctes_sql(xcol: str, ycol: str, base: str,
-                     bits: int = ZBITS) -> tuple[str, str]:
+def hilbert_ctes_sql(xcol: str, ycol: str, base: str) -> tuple[str, str]:
     """DuckDB twin of :func:`hilbert_key` as (cte_block, final_cte_name):
     one CTE per level carrying (d, hx, hy) next to the base columns —
     same fold, same n-1 reflection, BIGINT throughout (``s*s`` at the
     top level overflows INT32).  Kept beside the Spark expression so the
     two cannot drift apart (the zorder_key_sql convention)."""
-    mask = (1 << bits) - 1
+    mask = (1 << ZBITS) - 1
     steps = [f"h0 AS (SELECT *, CAST(0 AS BIGINT) AS d, "
              f"CAST({xcol} & {mask} AS BIGINT) AS hx, "
              f"CAST({ycol} & {mask} AS BIGINT) AS hy FROM {base})"]
-    for idx, i in enumerate(range(bits - 1, -1, -1), start=1):
+    for idx, i in enumerate(range(ZBITS - 1, -1, -1), start=1):
         s = 1 << i
         steps.append(
             f"h{idx} AS (SELECT * EXCLUDE (d, hx, hy),\n"
@@ -186,19 +185,16 @@ def hilbert_ctes_sql(xcol: str, ycol: str, base: str,
             f"       WHEN (hx & {s}) > 0 THEN {mask} - hx ELSE hx END"
             f" AS hy\n"
             f"  FROM h{idx - 1})")
-    return ",\n".join(steps), f"h{bits}"
+    return ",\n".join(steps), f"h{ZBITS}"
 
 
-def compaction_bins(files: DataFrame, target: int,
-                    part_col: str = "source",
-                    id_col: str = "doc_id",
-                    size_col: str = "n_chars") -> DataFrame:
+def compaction_bins(files: DataFrame, target: int) -> DataFrame:
     """Next-fit bin assignment for small-file compaction — the ONE
     arithmetic shared by the planning query (suite/layout_q.
     file_compaction_plan) and the executing rewriter
     (:func:`compact_partition`), so plan and execution cannot drift.
 
-    Within each partition directory (``part_col``), sub-target entries
+    Within each partition directory (``source``), sub-target entries
     ordered by (size desc, id) get ``bin_id = (exclusive-prefix-sum of
     size) div target`` — integer division on the long prefix sum, so
     the fold is exact at any cumulative byte count.
@@ -208,11 +204,11 @@ def compaction_bins(files: DataFrame, target: int,
     -> input columns + ``bin_id`` (long)."""
     from pyspark.sql import Window
 
-    w = (Window.partitionBy(part_col)
-         .orderBy(F.desc(size_col), id_col))
-    return (files.filter(F.col(size_col) < target)
+    w = (Window.partitionBy("source")
+         .orderBy(F.desc("n_chars"), "doc_id"))
+    return (files.filter(F.col("n_chars") < target)
             .withColumn("_prefix",
-                        (F.sum(size_col).over(w) - F.col(size_col))
+                        (F.sum("n_chars").over(w) - F.col("n_chars"))
                         .cast("long"))
             .withColumn("bin_id",
                         F.expr(f"_prefix div {int(target)}").cast("long"))
@@ -220,10 +216,7 @@ def compaction_bins(files: DataFrame, target: int,
 
 
 def compact_partition(docs: DataFrame, part_value: str, target: int,
-                      out_dir: str,
-                      part_col: str = "source",
-                      id_col: str = "doc_id",
-                      size_col: str = "n_chars") -> DataFrame:
+                      out_dir: str) -> DataFrame:
     """EXECUTE the compaction manifest for one partition — the
     verification face of ``file_compaction_plan``: rewrite the
     partition's sub-target entries into exactly
@@ -240,8 +233,8 @@ def compact_partition(docs: DataFrame, part_value: str, target: int,
     -> the binned frame that was written (for the caller's own
     conservation / fingerprint gates)."""
     binned = compaction_bins(
-        docs.filter(F.col(part_col) == part_value),
-        target, part_col, id_col, size_col)
+        docs.filter(F.col("source") == part_value),
+        target)
     (binned.repartition(F.col("bin_id"))
      .write.mode("overwrite").partitionBy("bin_id").parquet(out_dir))
     return binned

@@ -74,12 +74,9 @@ def jaccard(a: Column, b: Column) -> Column:
             .otherwise(F.lit(0.0))
 
 
-def sorted_neighborhood_pairs(docs: DataFrame,
-                              window: int = SN_WINDOW,
+def sorted_neighborhood_pairs(docs: DataFrame, window: int = SN_WINDOW,
                               jaccard_min: float = SN_JACCARD_MIN,
                               max_block: int = SN_MAX_BLOCK,
-                              id_col: str = "doc_id",
-                              text_col: str = "text",
                               token_offset: int = 0) -> DataFrame:
     """-> (doc_id_a, doc_id_b, jacc): near-dup candidates from one
     sorted-neighborhood pass.
@@ -100,9 +97,9 @@ def sorted_neighborhood_pairs(docs: DataFrame,
     # measured 0.45 s single-task stages per multipass query, one per
     # pass); at scale the guard no-ops.
     keyed = spread_small_scan(docs).select(
-        F.col(id_col).alias("id"),
-        _tokset(F.col(text_col)).alias("ts"),
-        F.concat_ws(" ", F.slice(tokens(F.col(text_col)),
+        F.col("doc_id").alias("id"),
+        _tokset(F.col("text")).alias("ts"),
+        F.concat_ws(" ", F.slice(tokens(F.col("text")),
                                  1 + token_offset, 3))
          .alias("sortkey"),
     ).withColumn("blk", F.split(F.col("sortkey"), " ").getItem(0))
@@ -142,13 +139,9 @@ def sorted_neighborhood_pairs(docs: DataFrame,
 SN_PASSES = 2
 
 
-def sorted_neighborhood_multipass(docs: DataFrame,
-                                  passes: int = SN_PASSES,
-                                  window: int = SN_WINDOW,
-                                  jaccard_min: float = SN_JACCARD_MIN,
-                                  max_block: int = SN_MAX_BLOCK,
-                                  id_col: str = "doc_id",
-                                  text_col: str = "text") -> DataFrame:
+def sorted_neighborhood_multipass(
+        docs: DataFrame, passes: int = SN_PASSES, window: int = SN_WINDOW,
+        jaccard_min: float = SN_JACCARD_MIN) -> DataFrame:
     """-> (doc_id_a, doc_id_b, jacc): multi-pass sorted neighborhood
     (Hernandez & Stolfo 1995's own refinement) — ``passes`` independent
     passes with ROTATED sort keys (pass p keys on tokens p..p+2), pair
@@ -163,9 +156,7 @@ def sorted_neighborhood_multipass(docs: DataFrame,
     out = None
     for p in range(passes):
         pairs = sorted_neighborhood_pairs(
-            docs, window=window, jaccard_min=jaccard_min,
-            max_block=max_block, id_col=id_col, text_col=text_col,
-            token_offset=p)
+            docs, window=window, jaccard_min=jaccard_min, token_offset=p)
         norm = pairs.select(
             F.least("doc_id_a", "doc_id_b").alias("doc_id_a"),
             F.greatest("doc_id_a", "doc_id_b").alias("doc_id_b"),
@@ -174,13 +165,11 @@ def sorted_neighborhood_multipass(docs: DataFrame,
     return out.distinct()
 
 
-def record_linkage_pairs(cust: DataFrame,
-                         neighbors: int = FS_NEIGHBORS,
-                         match_min: float = FS_MATCH_MIN) -> DataFrame:
+def record_linkage_pairs(cust: DataFrame) -> DataFrame:
     """-> (custkey_a, custkey_b, fs_score, is_link) over customers.
 
     Blocking key = (c_nationkey, c_mktsegment); within a block, records
-    are sorted by balance and each compares to its ``neighbors``
+    are sorted by balance and each compares to its ``FS_NEIGHBORS``
     successors (linear in block size).  Score = sum of Fellegi-Sunter
     agreement weights on (balance-within-tolerance, balance-sign);
     ``is_link`` thresholds the score.  Weight arithmetic is
@@ -192,7 +181,7 @@ def record_linkage_pairs(cust: DataFrame,
         F.col("c_mktsegment").alias("seg"),
         F.col("c_acctbal").alias("bal"))
     w = (Window.partitionBy("nat", "seg").orderBy("bal", "id")
-         .rowsBetween(1, neighbors))
+         .rowsBetween(1, FS_NEIGHBORS))
     nbrs = base.withColumn(
         "nbrs", F.collect_list(F.struct("id", "bal")).over(w))
     bal_agree = (F.abs(F.col("bal") - F.col("nb.bal")) <= FS_BAL_TOL)
@@ -207,4 +196,4 @@ def record_linkage_pairs(cust: DataFrame,
                     F.col("nb.id").alias("custkey_b"),
                     F.round(score, 6).alias("fs_score"))
             .where(F.col("fs_score") > 0)  # keep balance-agreeing pairs
-            .withColumn("is_link", F.col("fs_score") > match_min))
+            .withColumn("is_link", F.col("fs_score") > FS_MATCH_MIN))

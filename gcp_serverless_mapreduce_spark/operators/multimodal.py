@@ -304,13 +304,13 @@ def decode_image_stats(images: DataFrame) -> DataFrame:
     return images.mapInPandas(batches, schema=DECODED_IMAGE_SCHEMA)
 
 
-def encode_y4m(frames, rate: str = "25:1") -> bytes:
+def encode_y4m(frames) -> bytes:
     """Encode a list of (3, h, w) uint8 planar frames as YUV4MPEG2
     (C444: full-resolution Y, U, V planes — a real video container,
     pure text header + raw planes)."""
     f0 = frames[0]
     _, h, w = f0.shape
-    out = [f"YUV4MPEG2 W{w} H{h} F{rate} Ip A0:0 C444\n".encode("ascii")]
+    out = [f"YUV4MPEG2 W{w} H{h} F25:1 Ip A0:0 C444\n".encode("ascii")]
     for fr in frames:
         out.append(b"FRAME\n")
         out.append(fr.astype("uint8").tobytes())
@@ -546,15 +546,14 @@ def video_cut_corpus(docs: DataFrame) -> DataFrame:
             .mapInPandas(batches, schema="media_id long, payload binary"))
 
 
-def video_keyframes(video: DataFrame,
-                    threshold: int = KF_THRESHOLD) -> DataFrame:
+def video_keyframes(video: DataFrame) -> DataFrame:
     """Scene-change keyframe selection over REAL y4m bytes — the frame
     sampler a video training pipeline actually wants (uniform stride
     oversamples static shots and misses cuts; see :func:`sample_frames`
     for the stride variant).  Decode the container, compute each
     frame's EXACT int64 abs-diff energy against its predecessor over
     the planar values, and mark a keyframe at frame 0 and wherever
-    ``diff_sum > threshold * n_vals`` — a pixel-domain shot-boundary
+    ``diff_sum > KF_THRESHOLD * n_vals`` — a pixel-domain shot-boundary
     detector (the classic pairwise-difference family; a production
     deployment swaps in histogram or edge-change ratios inside the same
     kernel without touching the plan).
@@ -582,7 +581,7 @@ def video_keyframes(video: DataFrame,
                     out["n_vals"].append(n)
                     out["diff_sum"].append(diff)
                     out["is_keyframe"].append(
-                        f_idx == 0 or diff > threshold * n)
+                        f_idx == 0 or diff > KF_THRESHOLD * n)
                     prev = flat
             yield pd.DataFrame(out)
 
@@ -626,7 +625,7 @@ def sample_frames(media: DataFrame) -> DataFrame:
             .mapInPandas(batches, schema=FRAMES_SCHEMA))
 
 
-def resize_images(media: DataFrame, target_w: int = 224) -> DataFrame:
+def resize_images(media: DataFrame) -> DataFrame:
     """Resize stub for image payloads: computes the real geometry
     (aspect-preserving target dims + scale in parts-per-million); the pixel
     resample is where PIL would run and is faked as metadata-only.  All
@@ -638,9 +637,9 @@ def resize_images(media: DataFrame, target_w: int = 224) -> DataFrame:
                 "media_id": pdf["media_id"],
                 "orig_w": pdf["width"],
                 "orig_h": pdf["height"],
-                "new_w": target_w,
-                "new_h": pdf["height"] * target_w // pdf["width"],
-                "scale_ppm": target_w * 1_000_000 // pdf["width"],
+                "new_w": 224,
+                "new_h": pdf["height"] * 224 // pdf["width"],
+                "scale_ppm": 224 * 1_000_000 // pdf["width"],
             })
 
     return (media.filter(F.col("media_type") == "image")

@@ -135,10 +135,9 @@ GD_LR = 0.5
 GD_Q = 1_000_000  # gradient quantum: floor(g * 1e6) summed as BIGINTs
 
 
-def logistic_gd_train(df: DataFrame, x_col: str, y_col: str,
-                      iters: int = GD_ITERS, lr: float = GD_LR):
+def logistic_gd_train(df: DataFrame, x_col: str, y_col: str):
     """-> (iter, w, b): one-feature logistic regression trained by
-    ``iters`` synchronous batch-GD steps — the distributed training loop
+    ``GD_ITERS`` synchronous batch-GD steps — the distributed training loop
     in its simplest exact form.
 
     Each step is ONE aggregate over the data (map-side partial sums)
@@ -163,7 +162,7 @@ def logistic_gd_train(df: DataFrame, x_col: str, y_col: str,
     base = base.localCheckpoint()  # scanned once per step, not per plan
     w, b = 0.0, 0.0
     out = []
-    for it in range(1, iters + 1):
+    for it in range(1, GD_ITERS + 1):
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-(F.lit(w) * F.col("x")
                                                + F.lit(b))))
         err = p - F.col("y")
@@ -172,8 +171,8 @@ def logistic_gd_train(df: DataFrame, x_col: str, y_col: str,
             F.sum(F.floor(err * GD_Q).cast("long")).alias("gb"),
             F.count(F.lit(1)).alias("n")).collect()[0]
         n = row["n"]
-        w = w - lr * (float(row["gw"]) / (GD_Q * float(n)))
-        b = b - lr * (float(row["gb"]) / (GD_Q * float(n)))
+        w = w - GD_LR * (float(row["gw"]) / (GD_Q * float(n)))
+        b = b - GD_LR * (float(row["gb"]) / (GD_Q * float(n)))
         out.append((it, round(w, 9), round(b, 9)))
     return df.sparkSession.createDataFrame(
         out, "iter long, w double, b double")

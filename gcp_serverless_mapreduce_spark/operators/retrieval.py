@@ -30,9 +30,7 @@ K1 = 1.2
 B = 0.75
 
 
-def bm25_scores(docs: DataFrame, query_terms: list[str],
-                doc_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """-> (doc_id, n_tokens, n_hit_terms, score): Okapi BM25 of every doc
     containing >= 1 query term, rounded to 6 decimals.
 
@@ -43,8 +41,8 @@ def bm25_scores(docs: DataFrame, query_terms: list[str],
     # Guarded spread before the tokenize (single-row-group scans would
     # otherwise serialize it on one core); see tables.spread_small_scan.
     toks = (spread_small_scan(docs)
-            .select(F.col(doc_col).alias("doc"),
-                    tokens_col(text_col).alias("t")))
+            .select(F.col("doc_id").alias("doc"),
+                    tokens_col().alias("t")))
     lens = toks.select("doc", F.size("t").alias("dl"))
     # one broadcast-scalar frame: corpus size and average doc length
     stats = lens.agg(F.count("*").alias("n_docs"),
@@ -80,14 +78,12 @@ def bm25_scores(docs: DataFrame, query_terms: list[str],
 RRF_K = 60
 
 
-def rrf_fuse(rankings: list[DataFrame], k: int = RRF_K,
-             id_col: str = "doc_id",
-             rank_col: str = "rank") -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame], k: int = RRF_K) -> DataFrame:
     """Reciprocal-rank fusion (Cormack/Clarke/Buettcher 2009):
     rrf(d) = sum over rankers of 1 / (k + rank_r(d)), ignoring rankers
     that did not retrieve d.
 
-    Each input frame carries (id_col, rank_col) with DENSE, deterministic
+    Each input frame carries (doc_id, rank) with DENSE, deterministic
     integer ranks (the caller must tie-break on the id — raw float-score
     ordering is not a contract).  Fusion itself is exact: each reciprocal
     is one correctly-rounded IEEE division and the per-doc sum is over a
@@ -95,13 +91,13 @@ def rrf_fuse(rankings: list[DataFrame], k: int = RRF_K,
     the outer union-aggregate.  Scale: |rankers| unioned rank frames
     (already top-N-bounded upstream) → one aggregate on the doc id.
     """
-    tagged = [r.select(F.col(id_col),
-                       (F.lit(1.0) / (F.lit(k) + F.col(rank_col).cast("double")))
+    tagged = [r.select(F.col("doc_id"),
+                       (F.lit(1.0) / (F.lit(k) + F.col("rank").cast("double")))
                        .alias("rr"))
               for r in rankings]
     un = tagged[0]
     for t in tagged[1:]:
         un = un.unionByName(t)
-    return (un.groupBy(id_col)
+    return (un.groupBy("doc_id")
             .agg(F.sum("rr").alias("rrf_score"),
                  F.count("*").cast("long").alias("n_rankers")))

@@ -97,23 +97,23 @@ def _unit_udf():
     return unit
 
 
-def unit_vectors(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def unit_vectors(emb: DataFrame) -> DataFrame:
     """Normalize once, before any pair join — the pair join then computes
     ONE fold (the dot product) instead of three (dot + two norms).
     Zero vectors normalize to NULL and drop out of similarity joins.
     Runs as an Arrow-batched kernel with the oracle's exact fold order
     (see :func:`_unit_udf`); :func:`unit_vectors_expr` keeps the
     pure-expression reference rendering."""
-    return emb.withColumn("unit", _unit_udf()(F.col(vec_col)))
+    return emb.withColumn("unit", _unit_udf()(F.col("embedding")))
 
 
-def unit_vectors_expr(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def unit_vectors_expr(emb: DataFrame) -> DataFrame:
     """Pure-expression REFERENCE twin of :func:`unit_vectors` (higher-
     order functions only — interpreted, CodegenFallback); kept for the
     bit-equality test that pins the kernel's fold order."""
-    nrm = l2_norm(F.col(vec_col))
+    nrm = l2_norm(F.col("embedding"))
     unit = F.when(nrm != 0, F.transform(
-        F.col(vec_col).cast("array<double>"), lambda x: x / nrm))
+        F.col("embedding").cast("array<double>"), lambda x: x / nrm))
     return emb.withColumn("unit", unit)
 
 
@@ -195,21 +195,17 @@ def _pair_dot_udf():
     return pair_dot
 
 
-def topk_per_query(pairs: DataFrame, k: int,
-                   query_col: str = "query_id",
-                   sim_col: str = "sim",
-                   neighbor_col: str = "neighbor_id") -> DataFrame:
+def topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
     """Exact per-query top-k: row_number over (sim desc, neighbor asc)."""
-    w = Window.partitionBy(query_col).orderBy(
-        F.col(sim_col).desc(), F.col(neighbor_col).asc())
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
-def brute_force_topk(emb: DataFrame, k: int, num_queries: int,
-                     id_col: str = "vec_id") -> DataFrame:
+def brute_force_topk(emb: DataFrame, k: int, num_queries: int) -> DataFrame:
     """-> (query_id, neighbor_id, rank, sim): exact cosine top-k of each of
     the first ``num_queries`` ids against the whole corpus.  The query side
     is broadcast; the corpus side moves once.
@@ -221,12 +217,12 @@ def brute_force_topk(emb: DataFrame, k: int, num_queries: int,
     amortized over all queries, beats |Q| norm folds per vector."""
     pair_dot = _pair_dot_udf()
 
-    units = (unit_vectors(emb).select(F.col(id_col), F.col("unit"))
+    units = (unit_vectors(emb).select(F.col("vec_id"), F.col("unit"))
              .filter(F.col("unit").isNotNull())
-             .repartition(F.col(id_col)))
-    q = (units.filter(F.col(id_col) < num_queries)
-         .select(F.col(id_col).alias("query_id"), F.col("unit").alias("qv")))
-    c = units.select(F.col(id_col).alias("neighbor_id"),
+             .repartition(F.col("vec_id")))
+    q = (units.filter(F.col("vec_id") < num_queries)
+         .select(F.col("vec_id").alias("query_id"), F.col("unit").alias("qv")))
+    c = units.select(F.col("vec_id").alias("neighbor_id"),
                      F.col("unit").alias("cv"))
     pairs = (
         F.broadcast(q).crossJoin(c)
@@ -241,8 +237,6 @@ def brute_force_topk(emb: DataFrame, k: int, num_queries: int,
 
 
 def srp_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding",
                  max_bucket: int | None = None) -> DataFrame:
     """-> (query_id, neighbor_id, rank, sim): per-vector top-k among the
     vectors sharing its SRP bucket (every vector is a query).  One shuffle
@@ -310,10 +304,10 @@ def srp_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
             "sim": sims[qi, ci]})
 
     units = (
-        unit_vectors(emb, vec_col)
+        unit_vectors(emb)
         .filter(F.col("unit").isNotNull())
-        .select(F.col(id_col).alias("vid"), "unit",
-                srp_signature(F.col(vec_col).cast("array<double>"),
+        .select(F.col("vec_id").alias("vid"), "unit",
+                srp_signature(F.col("embedding").cast("array<double>"),
                               planes).alias("bucket"))
     )
     raw = units.groupBy("bucket").applyInPandas(
@@ -324,8 +318,6 @@ def srp_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
 
 def semdedup_discards(emb: DataFrame, planes: list[list[int]],
                       threshold: float,
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding",
                       max_bucket: int | None = None) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     cluster the embedding space, then inside each cluster drop every item
@@ -347,10 +339,10 @@ def semdedup_discards(emb: DataFrame, planes: list[list[int]],
     vector beyond the cap has a cell-mate below it.
     """
     units = (
-        unit_vectors(emb, vec_col)
+        unit_vectors(emb)
         .filter(F.col("unit").isNotNull())
-        .select(F.col(id_col), "unit",
-                srp_signature(F.col(vec_col).cast("array<double>"),
+        .select(F.col("vec_id"), "unit",
+                srp_signature(F.col("embedding").cast("array<double>"),
                               planes).alias("cell"))
     )
     # Per-cell vectorized kernel instead of an exploded pair join + one
@@ -392,7 +384,7 @@ def semdedup_discards(emb: DataFrame, planes: list[list[int]],
                              "cell": pdf["cell"].iloc[0],
                              "keep_id": out_k, "sim": out_s})
 
-    raw = (units.select(F.col(id_col).alias("vid"), "unit", "cell")
+    raw = (units.select(F.col("vec_id").alias("vid"), "unit", "cell")
            .groupBy("cell")
            .applyInPandas(cell_discards,
                           "vec_id long, cell string, keep_id long, sim double"))
@@ -401,8 +393,6 @@ def semdedup_discards(emb: DataFrame, planes: list[list[int]],
 
 
 def srp_multiprobe_topk(emb: DataFrame, k: int, planes: list[list[int]],
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding",
                         max_bucket: int | None = None) -> DataFrame:
     """Multi-probe SRP ANN (Lv et al. 2007, multi-probe LSH): each query
     searches its home bucket PLUS the ``len(planes)`` hamming-1 buckets
@@ -425,10 +415,10 @@ def srp_multiprobe_topk(emb: DataFrame, k: int, planes: list[list[int]],
     cap = max_bucket
 
     units = (
-        unit_vectors(emb, vec_col)
+        unit_vectors(emb)
         .filter(F.col("unit").isNotNull())
-        .select(F.col(id_col).alias("vid"), "unit",
-                srp_signature(F.col(vec_col).cast("array<double>"),
+        .select(F.col("vec_id").alias("vid"), "unit",
+                srp_signature(F.col("embedding").cast("array<double>"),
                               planes).alias("bucket"))
     )
     index = units
@@ -487,9 +477,7 @@ def srp_multiprobe_topk(emb: DataFrame, k: int, planes: list[list[int]],
 
 
 def blocked_cosine_pairs(emb: DataFrame, block_col: str,
-                         threshold: float,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding") -> DataFrame:
+                         threshold: float) -> DataFrame:
     """-> (vec_a, vec_b, sim): unordered within-block pairs with cosine
     >= threshold, sim rounded to 4 — the embedding near-dup primitive
     (the block key stands in for an IVF/LSH bucket at corpus scale).
@@ -517,17 +505,15 @@ def blocked_cosine_pairs(emb: DataFrame, block_col: str,
         return pd.DataFrame({"vec_a": ids[ai], "vec_b": ids[bi],
                              "sim": acc[ai, bi]})
 
-    units = (unit_vectors(emb, vec_col)
+    units = (unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
-             .select(F.col(id_col).alias("vid"), "unit", block_col))
+             .select(F.col("vec_id").alias("vid"), "unit", block_col))
     raw = units.groupBy(block_col).applyInPandas(
         block_pairs, "vec_a long, vec_b long, sim double")
     return raw.select("vec_a", "vec_b", F.round("sim", 4).alias("sim"))
 
 
 def sq8_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding",
                  max_bucket: int | None = None) -> DataFrame:
     """Scalar-quantized (int8) ANN: SRP buckets + integer-dot re-rank.
 
@@ -542,13 +528,13 @@ def sq8_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
     :func:`srp_ann_topk`.
     """
     units = (
-        unit_vectors(emb, vec_col)
+        unit_vectors(emb)
         .filter(F.col("unit").isNotNull())
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.transform("unit",
                         lambda x: F.round(x * 127).cast("int")).alias("q"),
-            srp_signature(F.col(vec_col).cast("array<double>"),
+            srp_signature(F.col("embedding").cast("array<double>"),
                           planes).alias("bucket"))
     )
     # Per-bucket vectorized kernel (same shape as srp_ann_topk's): the
@@ -597,7 +583,7 @@ def sq8_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
             "rank": rank[qi, ci].astype("int32"),
             "qsim": scores[qi, ci]})
 
-    raw = (units.select(F.col(id_col).alias("vid"), "q", "bucket")
+    raw = (units.select(F.col("vec_id").alias("vid"), "q", "bucket")
            .groupBy("bucket")
            .applyInPandas(bucket_topk_int,
                           "query_id long, neighbor_id long, "
@@ -665,9 +651,7 @@ IVF_SALT = 8
 
 
 def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
-                n_probe: int, id_col: str = "vec_id",
-                vec_col: str = "embedding",
-                query_filter=None) -> DataFrame:
+                n_probe: int, query_filter=None) -> DataFrame:
     """Shared IVF search given centroids: assign each vector to its
     ``n_probe`` nearest cells, re-rank exactly within cells, global top-k.
 
@@ -692,10 +676,10 @@ def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
 
     dim = len(centers[0])
 
-    units = (unit_vectors(emb, vec_col)
+    units = (unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
-             .select(F.col(id_col), "unit",
-                     F.col(vec_col).cast("array<double>").alias("arr")))
+             .select(F.col("vec_id"), "unit",
+                     F.col("embedding").cast("array<double>").alias("arr")))
     probe_cells = _probe_cells_udf(centers, n_probe)
     # One row per (vector, probed cell); pos 0 is the vector's HOME cell,
     # so that row doubles as its corpus membership — a single frame and a
@@ -703,7 +687,7 @@ def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
     # sides, and the normalize + probe UDF upstream runs exactly once.
     member = (
         units.withColumn("cells", probe_cells("arr"))
-        .select(F.col(id_col).alias("vid"), "unit",
+        .select(F.col("vec_id").alias("vid"), "unit",
                 F.posexplode("cells").alias("pos", "cell"))
         .withColumn("is_home", F.col("pos") == 0).drop("pos")
     )
@@ -740,7 +724,7 @@ def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
     no_entries = F.array().cast("array<struct<salt:int,is_corpus:boolean>>")
     q_arr = F.array(q_entry)
     if query_filter is not None:
-        # `member` renamed id_col -> vid, so apply the caller's
+        # `member` renamed vec_id -> vid, so apply the caller's
         # predicate to the surviving column.
         q_arr = (F.when(query_filter(F.col("vid")), q_arr)
                  .otherwise(no_entries))
@@ -795,28 +779,25 @@ def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
 
 
 def ivf_fixed_topk(emb: DataFrame, k: int, centers: list[list[float]],
-                   n_probe: int = 2, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+                   n_probe: int = 2) -> DataFrame:
     """IVF search over FIXED deterministic centroids — the
     oracle-checkable twin of :func:`ivf_topk` (same membership/probe/
     re-rank plan, no iterative fit), hash-matched against a DuckDB twin
     that mirrors the scoring fold exactly."""
-    return _ivf_search(emb, k, centers, n_probe, id_col, vec_col)
+    return _ivf_search(emb, k, centers, n_probe)
 
 
-def ivf_topk(emb: DataFrame, k: int, n_cells: int = 16, n_probe: int = 2,
-             seed: int = 42, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
+def ivf_topk(emb: DataFrame, k: int) -> DataFrame:
     """IVF (inverted-file) ANN: KMeans cells + multi-probe exact re-rank.
 
     -> (query_id, neighbor_id, rank, sim): per-vector top-k among the
-    vectors in its ``n_probe`` nearest cells.
+    vectors in its 2 nearest cells.
 
-    The real-index counterpart of the SRP buckets: cells come from the
-    data's own distribution (Spark ML KMeans, fixed seed), so recall
+    The real-index counterpart of the SRP buckets: 16 cells come from the
+    data's own distribution (Spark ML KMeans, seed 42), so recall
     tracks cluster structure instead of random hyperplanes.  Plan shape
     is identical to srp_ann_topk — corpus shuffles ONCE on cell id,
-    queries explode ×n_probe — so the 100 TB properties carry over; the
+    queries explode ×2 — so the 100 TB properties carry over; the
     KMeans fit itself samples/aggregates, never collects raw vectors
     beyond k centers.
     """
@@ -839,21 +820,21 @@ def ivf_topk(emb: DataFrame, k: int, n_cells: int = 16, n_probe: int = 2,
     # Cost: one (id, vector) column scan; the index build scans the corpus
     # for cell assignment anyway, so this does not change its asymptotics.
     train_cap = 4096
-    feats = (emb.select(F.col(id_col).alias("_id"),
-                        F.col(vec_col).cast("array<double>").alias("arr"))
-             .withColumn("_h", F.xxhash64(F.col("_id"), F.lit(seed)))
+    feats = (emb.select(F.col("vec_id").alias("_id"),
+                        F.col("embedding").cast("array<double>").alias("arr"))
+             .withColumn("_h", F.xxhash64(F.col("_id"), F.lit(42)))
              .orderBy("_h").limit(train_cap)
              .select("arr"))
     feats = (feats.withColumn("features", array_to_vector("arr"))
              .coalesce(4).cache())
     try:
-        model = KMeans(k=n_cells, seed=seed, maxIter=10,
+        model = KMeans(k=16, seed=42, maxIter=10,
                        featuresCol="features").fit(feats)
     finally:
         feats.unpersist()
     centers = [[float(x) for x in np.asarray(c)]
                for c in model.clusterCenters()]
-    return _ivf_search(emb, k, centers, n_probe, id_col, vec_col)
+    return _ivf_search(emb, k, centers, 2)
 
 
 # Fixed-point quantum for Lloyd centroid sums: per-dim contributions
@@ -900,7 +881,6 @@ def train_sample_pred(id_col: str, mod: int) -> Column:
 
 def lloyd_centroids(emb: DataFrame, init_centers: list[list[float]],
                     rounds: int = 2,
-                    vec_col: str = "embedding",
                     train_filter: Column | None = None) -> list[list[float]]:
     """Deterministic Lloyd (KMeans) iterations over the full corpus ->
     final centroids, bit-reproducible by a SQL engine.
@@ -928,7 +908,7 @@ def lloyd_centroids(emb: DataFrame, init_centers: list[list[float]],
     to its training CTEs.  The localCheckpoint then materializes only
     the sample."""
     n_cells, dim = len(init_centers), len(init_centers[0])
-    base = emb.filter(F.exists(vec_col, lambda x: x != 0))
+    base = emb.filter(F.exists("embedding", lambda x: x != 0))
     if train_filter is not None:
         # the sample is BOUNDED by contract (that is its point), so
         # packing it into a few partitions is scale-correct and turns
@@ -936,7 +916,7 @@ def lloyd_centroids(emb: DataFrame, init_centers: list[list[float]],
         # one near-empty task per input split
         base = base.filter(train_filter).coalesce(4)
     base = (base
-            .select(F.col(vec_col).cast("array<double>").alias("arr"))
+            .select(F.col("embedding").cast("array<double>").alias("arr"))
             .localCheckpoint())  # scanned once per round, not per plan
     centers = [[float(x) for x in c] for c in init_centers]
     for _ in range(rounds):
@@ -988,8 +968,6 @@ def lloyd_centroids(emb: DataFrame, init_centers: list[list[float]],
 
 def ivf_lloyd_topk(emb: DataFrame, k: int, init_centers: list[list[float]],
                    rounds: int = 2, n_probe: int = 2,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding",
                    train_target: int | None = IVF_TRAIN_TARGET,
                    n_rows: int | None = None) -> DataFrame:
     """IVF ANN over TRAINED centroids (deterministic Lloyd fixed-point,
@@ -1008,19 +986,16 @@ def ivf_lloyd_topk(emb: DataFrame, k: int, init_centers: list[list[float]],
         if n_rows is None:
             n_rows = emb.count()
         pred = train_sample_pred(
-            id_col, train_sample_mod(n_rows, train_target))
+            "vec_id", train_sample_mod(n_rows, train_target))
     else:
         pred = None
-    centers = lloyd_centroids(emb, init_centers, rounds, vec_col,
-                              train_filter=pred)
-    return _ivf_search(emb, k, centers, n_probe, id_col, vec_col)
+    centers = lloyd_centroids(emb, init_centers, rounds, train_filter=pred)
+    return _ivf_search(emb, k, centers, n_probe)
 
 
 def ivf_incremental_topk(emb: DataFrame, inc_mod: int, k: int,
-                         init_centers: list[list[float]],
-                         rounds: int = 2, n_probe: int = 2,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding",
+                         init_centers: list[list[float]], rounds: int = 2,
+                         n_probe: int = 2,
                          train_target: int = IVF_TRAIN_TARGET,
                          n_old_rows: int | None = None) -> DataFrame:
     """Incremental IVF ingestion — the ANN sibling of
@@ -1062,14 +1037,14 @@ def ivf_incremental_topk(emb: DataFrame, inc_mod: int, k: int,
     scoring), so the DuckDB oracle unrolls identically with the tr
     CTE additionally filtered to the old batch.
     """
-    old_pred = F.col(id_col) % inc_mod != 0
+    old_pred = F.col("vec_id") % inc_mod != 0
     if n_old_rows is None:
         n_old_rows = emb.filter(old_pred).count()
     sample = train_sample_pred(
-        id_col, train_sample_mod(n_old_rows, train_target))
-    centers = lloyd_centroids(emb, init_centers, rounds, vec_col,
+        "vec_id", train_sample_mod(n_old_rows, train_target))
+    centers = lloyd_centroids(emb, init_centers, rounds,
                               train_filter=sample & old_pred)
-    return _ivf_search(emb, k, centers, n_probe, id_col, vec_col,
+    return _ivf_search(emb, k, centers, n_probe,
                        query_filter=lambda vid: vid % inc_mod == 0)
 
 
@@ -1090,13 +1065,9 @@ def pq_codebooks(n_sub: int, n_codes: int,
     ]
 
 
-def pq_trained_codebooks(emb: DataFrame,
-                         init_books: list[list[list[float]]],
-                         rounds: int = 2,
-                         id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         train_filter: Column | None = None,
-                         ) -> list[list[list[float]]]:
+def pq_trained_codebooks(
+        emb: DataFrame, init_books: list[list[list[float]]], rounds: int = 2,
+        train_filter: Column | None = None) -> list[list[list[float]]]:
     """Per-subspace deterministic Lloyd over UNIT sub-vectors -> trained
     PQ codebooks, bit-reproducible by a SQL engine — the k-means
     training step the fixed md5 books (:func:`pq_codebooks`) stand in
@@ -1120,7 +1091,7 @@ def pq_trained_codebooks(emb: DataFrame,
     hash-sample the oracle's CTEs re-apply identically."""
     n_sub, n_codes = len(init_books), len(init_books[0])
     sub_dim = len(init_books[0][0])
-    units = unit_vectors(emb, vec_col).filter(F.col("unit").isNotNull())
+    units = unit_vectors(emb).filter(F.col("unit").isNotNull())
     if train_filter is not None:
         units = units.filter(train_filter).coalesce(4)
     base = units.select("unit").localCheckpoint()
@@ -1259,8 +1230,7 @@ def pq_adc_table(unit_col: Column,
                      for m, book in enumerate(codebooks) for c in book])
 
 
-def _adc_sum(n_sub: int, n_codes: int,
-             qtab: str = "qtab", codes: str = "codes") -> Column:
+def _adc_sum(n_sub: int, n_codes: int) -> Column:
     """The per-pair ADC distance ``sum_m qtab[m*n_codes + codes[m]]`` as a
     CHAINED add expression — the exact op sequence of the previous
     ``F.aggregate(F.sequence(0, n_sub-1), 0.0, ...)`` fold (seeded 0.0,
@@ -1270,15 +1240,14 @@ def _adc_sum(n_sub: int, n_codes: int,
     acc: Column = F.lit(0.0)
     for m in range(n_sub):
         acc = acc + F.element_at(
-            F.col(qtab),
-            (m * n_codes + F.element_at(F.col(codes), m + 1) + 1)
+            F.col("qtab"),
+            (m * n_codes + F.element_at(F.col("codes"), m + 1) + 1)
             .cast("int"))
     return acc
 
 
 def pq_adc_topk(emb: DataFrame, k: int, codebooks: list[list[list[float]]],
-                num_queries: int, id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+                num_queries: int) -> DataFrame:
     """Product-quantization ANN with asymmetric-distance (ADC) scan
     (Jegou et al. 2011): encode every corpus vector to n_sub codebook
     ids (8 bytes/vector here vs 256 for float32×64 — 32× compression),
@@ -1305,20 +1274,20 @@ def pq_adc_topk(emb: DataFrame, k: int, codebooks: list[list[list[float]]],
     normalize fold into every downstream score expression.
     """
     n_sub, n_codes = len(codebooks), len(codebooks[0])
-    units = (unit_vectors(emb).select(F.col(id_col), F.col("unit"))
+    units = (unit_vectors(emb).select(F.col("vec_id"), F.col("unit"))
              .filter(F.col("unit").isNotNull())
-             .repartition(F.col(id_col)))
+             .repartition(F.col("vec_id")))
     # The second repartition is ALSO a materialization barrier: without
     # it CollapseProject would inline the encode into every per-pair
     # table lookup (8 lookups/pair re-evaluating the full encode).  The
     # exchange carries only (id, 8 int codes) rows — this IS the PQ
     # semantics: encode once, scan codes.
     corpus = (units.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         pq_encode_udf(codebooks)(F.col("unit")).alias("codes"))
         .repartition(F.col("neighbor_id")))
-    queries = (units.filter(F.col(id_col) < num_queries)
-               .select(F.col(id_col).alias("query_id"),
+    queries = (units.filter(F.col("vec_id") < num_queries)
+               .select(F.col("vec_id").alias("query_id"),
                        pq_adc_table_udf(codebooks)(F.col("unit"))
                        .alias("qtab")))
     adist = _adc_sum(n_sub, n_codes)
@@ -1337,9 +1306,8 @@ def pq_adc_topk(emb: DataFrame, k: int, codebooks: list[list[list[float]]],
     )
 
 
-def pq_code_histogram(emb: DataFrame, codebooks: list[list[list[float]]],
-                      id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+def pq_code_histogram(emb: DataFrame,
+                      codebooks: list[list[list[float]]]) -> DataFrame:
     """-> (m, code, n_vecs): codebook usage per subspace — the encode
     path gated independently of any search, and the balance diagnostic a
     real PQ index needs (a skewed histogram means wasted code space)."""
@@ -1360,13 +1328,12 @@ NEG_POOL = 64   # broadcast candidate pool size
 NEG_K = 4       # negatives per anchor
 
 
-def contrastive_negatives(emb: DataFrame, pool: int = NEG_POOL,
-                          k: int = NEG_K) -> DataFrame:
+def contrastive_negatives(emb: DataFrame) -> DataFrame:
     """-> (vec_id, neg_rank, neg_id, neg_label): deterministic negative
-    sampling for contrastive training — for every anchor, ``k``
+    sampling for contrastive training — for every anchor, ``NEG_K``
     different-label negatives drawn from a small GLOBAL candidate pool.
 
-    The pool is the ``pool`` vectors with the smallest md5(vec_id)
+    The pool is the ``NEG_POOL`` vectors with the smallest md5(vec_id)
     (a deterministic uniform sample) and is broadcast, so the join is
     anchors x pool — O(N * pool), never O(N^2) — and each anchor ranks
     its candidates by md5(anchor:candidate), a per-anchor-fresh
@@ -1377,7 +1344,7 @@ def contrastive_negatives(emb: DataFrame, pool: int = NEG_POOL,
     whose ``label`` is NULL emits NO rows (``label <> neg_label`` is
     NULL-valued, standard SQL join semantics — NULL-labeled vectors
     are unlabeled, so they have no well-defined negatives), and an
-    anchor with fewer than ``k`` different-label pool candidates emits
+    anchor with fewer than ``NEG_K`` different-label pool candidates emits
     only that many.  Both are by design; count rows per anchor
     downstream if a fixed fan-out is required.
     """
@@ -1385,7 +1352,7 @@ def contrastive_negatives(emb: DataFrame, pool: int = NEG_POOL,
     pool_df = (ids.select(F.col("vec_id").alias("neg_id"),
                           F.col("label").alias("neg_label"),
                           F.md5(F.col("vec_id").cast("string")).alias("ph"))
-               .orderBy("ph", "neg_id").limit(pool)
+               .orderBy("ph", "neg_id").limit(NEG_POOL)
                .drop("ph"))
     pair_h = F.md5(F.concat_ws(":", F.col("vec_id"), F.col("neg_id")))
     w = Window.partitionBy("vec_id").orderBy("pair_h", "neg_id")
@@ -1394,13 +1361,12 @@ def contrastive_negatives(emb: DataFrame, pool: int = NEG_POOL,
                      & (F.col("vec_id") != F.col("neg_id")))
             .withColumn("pair_h", pair_h)
             .withColumn("neg_rank", F.row_number().over(w).cast("long"))
-            .where(F.col("neg_rank") <= k)
+            .where(F.col("neg_rank") <= NEG_K)
             .select("vec_id", "neg_rank", "neg_id", "neg_label"))
 
 
 def matryoshka_recall(emb: DataFrame, k: int, num_queries: int,
-                      trunc_dim: int, id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
+                      trunc_dim: int) -> DataFrame:
     """Matryoshka-representation ablation (Kusupati et al. 2022): how
     much cosine-top-k recall survives truncating every embedding to its
     first ``trunc_dim`` dimensions — the eval that decides whether a
@@ -1412,28 +1378,28 @@ def matryoshka_recall(emb: DataFrame, k: int, num_queries: int,
     re-normalized prefixes (zero-norm prefixes drop, mirroring the
     full-dim zero-vector rule).  Both sides reuse the brute-force plan
     (broadcast query panel, corpus streams once each)."""
-    exact = (brute_force_topk(emb, k, num_queries, id_col)
+    exact = (brute_force_topk(emb, k, num_queries)
              .select("query_id", "neighbor_id"))
     # Guard trunc_dim <= embedding length (mirrors lloyd_centroids'
     # ragged-column check): F.slice past the end would silently return
     # the full vector, making "truncated" recall a no-op lie.  The
     # when/raise_error rides the existing scan — no extra pass.
     trunc = emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         # NULL embeddings pass through (dropped downstream by the
         # zero-norm rule, same as the full-dim side) — only a present
         # but too-short vector is a raggedness error.
-        F.when(F.col(vec_col).isNull(),
-               F.slice(F.col(vec_col), 1, trunc_dim))
-        .when(F.size(F.col(vec_col)) >= trunc_dim,
-              F.slice(F.col(vec_col), 1, trunc_dim))
+        F.when(F.col("embedding").isNull(),
+               F.slice(F.col("embedding"), 1, trunc_dim))
+        .when(F.size(F.col("embedding")) >= trunc_dim,
+              F.slice(F.col("embedding"), 1, trunc_dim))
         .otherwise(F.raise_error(F.concat(
             F.lit(f"matryoshka_recall: trunc_dim={trunc_dim} exceeds "
                   "embedding length "),
-            F.size(F.col(vec_col)).cast("string"),
+            F.size(F.col("embedding")).cast("string"),
             F.lit(" (ragged or too-short embedding column)"))))
-        .alias(vec_col))
-    ann = (brute_force_topk(trunc, k, num_queries, id_col)
+        .alias("embedding"))
+    ann = (brute_force_topk(trunc, k, num_queries)
            .select("query_id", "neighbor_id", F.lit(1).alias("_hit")))
     return (
         exact.join(F.broadcast(ann), ["query_id", "neighbor_id"], "left")
@@ -1443,9 +1409,8 @@ def matryoshka_recall(emb: DataFrame, k: int, num_queries: int,
     )
 
 
-def mmr_diverse_topk(emb: DataFrame, k: int, num_queries: int,
-                     shortlist: int, lam: float, lam_comp: float,
-                     id_col: str = "vec_id") -> DataFrame:
+def mmr_diverse_topk(emb: DataFrame, k: int, num_queries: int, shortlist: int,
+                     lam: float, lam_comp: float) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998): per query, greedily select ``k`` results maximizing
     ``lam * rel(c) - lam_comp * max_{s in selected} sim(c, s)`` — the
@@ -1481,13 +1446,13 @@ def mmr_diverse_topk(emb: DataFrame, k: int, num_queries: int,
     rounding happens in the ENGINE (F.round), not in Python, so both
     engines round the identical raw double the same way."""
     pair_dot = _pair_dot_udf()
-    units = (unit_vectors(emb).select(F.col(id_col), F.col("unit"))
+    units = (unit_vectors(emb).select(F.col("vec_id"), F.col("unit"))
              .filter(F.col("unit").isNotNull())
-             .repartition(F.col(id_col)))  # materialization barrier
-    q = (units.filter(F.col(id_col) < num_queries)
-         .select(F.col(id_col).alias("query_id"),
+             .repartition(F.col("vec_id")))  # materialization barrier
+    q = (units.filter(F.col("vec_id") < num_queries)
+         .select(F.col("vec_id").alias("query_id"),
                  F.col("unit").alias("qv")))
-    c = units.select(F.col(id_col).alias("cand_id"),
+    c = units.select(F.col("vec_id").alias("cand_id"),
                      F.col("unit").alias("cv"))
     rel_pairs = (
         F.broadcast(q).crossJoin(c)
@@ -1559,9 +1524,7 @@ def mmr_diverse_topk(emb: DataFrame, k: int, num_queries: int,
 
 def ivf_pq_topk(emb: DataFrame, k: int, centers: list[list[float]],
                 codebooks: list[list[list[float]]], n_probe: int,
-                num_queries: int, m_rerank: int,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+                num_queries: int, m_rerank: int) -> DataFrame:
     """IVF-PQ with exact re-rank — the production ANN index shape
     (FAISS IVFPQ / DiskANN first stage): coarse quantizer routes each
     corpus vector to its HOME cell and each query to its ``n_probe``
@@ -1580,19 +1543,19 @@ def ivf_pq_topk(emb: DataFrame, k: int, centers: list[list[float]],
     reuses the audited fold kernels, so the whole composition is
     hash-gated against the oracle's CTE unroll."""
     n_sub, n_codes = len(codebooks), len(codebooks[0])
-    units = (unit_vectors(emb, vec_col)
+    units = (unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
-             .select(F.col(id_col), "unit",
-                     F.col(vec_col).cast("array<double>").alias("arr"))
-             .repartition(F.col(id_col)))  # materialization barrier
+             .select(F.col("vec_id"), "unit",
+                     F.col("embedding").cast("array<double>").alias("arr"))
+             .repartition(F.col("vec_id")))  # materialization barrier
     probe = _probe_cells_udf(centers, n_probe)
     base = units.withColumn("cells", probe("arr"))
     corpus = base.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.element_at("cells", 1).alias("cell"),
         pq_encode_udf(codebooks)(F.col("unit")).alias("codes"))
-    queries = (base.filter(F.col(id_col) < num_queries)
-               .select(F.col(id_col).alias("query_id"),
+    queries = (base.filter(F.col("vec_id") < num_queries)
+               .select(F.col("vec_id").alias("query_id"),
                        F.explode("cells").alias("cell"),
                        pq_adc_table_udf(codebooks)(F.col("unit"))
                        .alias("qtab")))
@@ -1608,9 +1571,9 @@ def ivf_pq_topk(emb: DataFrame, k: int, centers: list[list[float]],
 
     pair_dot = _pair_dot_udf()
 
-    qu = units.select(F.col(id_col).alias("query_id"),
+    qu = units.select(F.col("vec_id").alias("query_id"),
                       F.col("unit").alias("qu"))
-    cu = units.select(F.col(id_col).alias("neighbor_id"),
+    cu = units.select(F.col("vec_id").alias("neighbor_id"),
                       F.col("unit").alias("cu"))
     rer = (F.broadcast(short)
            .join(qu, "query_id").join(cu, "neighbor_id")
@@ -1621,24 +1584,21 @@ def ivf_pq_topk(emb: DataFrame, k: int, centers: list[list[float]],
                     F.round("sim", 4).alias("sim")))
 
 
-def ivf_home_cells(emb: DataFrame, centers: list[list[float]],
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
+def ivf_home_cells(emb: DataFrame, centers: list[list[float]]) -> DataFrame:
     """-> (vec_id, cell): each non-zero vector's nearest coarse cell
     (the IVF home assignment), via the shared fold-exact scoring kernel
     — the building block behind cell-balance observability and any
     routing-table export."""
-    units = (unit_vectors(emb, vec_col)
+    units = (unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
-             .select(F.col(id_col),
-                     F.col(vec_col).cast("array<double>").alias("arr")))
+             .select(F.col("vec_id"),
+                     F.col("embedding").cast("array<double>").alias("arr")))
     return units.select(
-        id_col,
+        "vec_id",
         F.element_at(_probe_cells_udf(centers, 1)("arr"), 1).alias("cell"))
 
 
-def kcenter_coreset(emb: DataFrame, k: int, pool: int,
-                    id_col: str = "vec_id") -> DataFrame:
+def kcenter_coreset(emb: DataFrame, k: int, pool: int) -> DataFrame:
     """-> (step, sel_id, nearest_sim): greedy k-center coreset selection
     (farthest-point traversal — the Sener & Savarese 2018 active-
     learning / data-selection coreset): from a deterministic
@@ -1669,12 +1629,12 @@ def kcenter_coreset(emb: DataFrame, k: int, pool: int,
     only feeds the sample."""
     import numpy as np
 
-    units = (unit_vectors(emb).select(F.col(id_col), F.col("unit"))
+    units = (unit_vectors(emb).select(F.col("vec_id"), F.col("unit"))
              .filter(F.col("unit").isNotNull()))
     pool_rows = (units
-                 .withColumn("ph", F.md5(F.col(id_col).cast("string")))
-                 .orderBy("ph", id_col).limit(pool)
-                 .select(F.col(id_col).alias("pid"), "ph", "unit")
+                 .withColumn("ph", F.md5(F.col("vec_id").cast("string")))
+                 .orderBy("ph", "vec_id").limit(pool)
+                 .select(F.col("vec_id").alias("pid"), "ph", "unit")
                  .collect())  # ONE corpus TakeOrdered, pool rows
     order = [(r["ph"], r["pid"]) for r in pool_rows]
     ids = [r["pid"] for r in pool_rows]

@@ -50,13 +50,14 @@ KMV_SPACE = float(16 ** KMV_HEX_DIGITS)
 KMV_NUMER = float(KMV_K - 1) * KMV_SPACE
 
 
-def h_cell(key: Column, seed: int, width: int = CMS_WIDTH) -> Column:
-    """Row-``seed`` Count-Min cell of ``key``: md5-prefix hash mod width."""
+def h_cell(key: Column, seed: int) -> Column:
+    """Row-``seed`` Count-Min cell of ``key``: md5-prefix hash mod
+    CMS_WIDTH."""
     hx = F.substring(F.md5(F.concat(F.lit(f"{seed}|"), key)), 1, 8)
-    return (F.conv(hx, 16, 10).cast("long") % width).alias(f"c{seed}")
+    return (F.conv(hx, 16, 10).cast("long") % CMS_WIDTH).alias(f"c{seed}")
 
 
-def cms_build(keyed: DataFrame, key_col: str = "key") -> DataFrame:
+def cms_build(keyed: DataFrame) -> DataFrame:
     """Build the sketch: -> (row, cell, cnt), at most DEPTH*WIDTH rows.
 
     One projection computes all d cells per input row, a posexplode turns
@@ -66,15 +67,14 @@ def cms_build(keyed: DataFrame, key_col: str = "key") -> DataFrame:
     that matters at 100 TB: shuffle width is d*w, independent of key
     cardinality.
     """
-    cells = F.array(*[h_cell(F.col(key_col), r) for r in range(CMS_DEPTH)])
+    cells = F.array(*[h_cell(F.col("key"), r) for r in range(CMS_DEPTH)])
     return (keyed
             .select(F.posexplode(cells).alias("row", "cell"))
             .groupBy("row", "cell")
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
-def cms_estimate(candidates: DataFrame, sketch: DataFrame,
-                 key_col: str = "key") -> DataFrame:
+def cms_estimate(candidates: DataFrame, sketch: DataFrame) -> DataFrame:
     """Point-estimate each candidate key: min over its d cells.
 
     The sketch is at most d*w rows -> broadcast; candidates stream
@@ -82,13 +82,13 @@ def cms_estimate(candidates: DataFrame, sketch: DataFrame,
     read as 0.
     """
     probes = candidates.select(
-        key_col,
+        "key",
         F.posexplode(F.array(*[
-            h_cell(F.col(key_col), r) for r in range(CMS_DEPTH)
+            h_cell(F.col("key"), r) for r in range(CMS_DEPTH)
         ])).alias("row", "cell"))
     return (probes
             .join(F.broadcast(sketch), ["row", "cell"], "left")
-            .groupBy(key_col)
+            .groupBy("key")
             .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0)))
                  .alias("cms_est")))
 

@@ -23,10 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def asof_join(left: DataFrame, right: DataFrame, on: str,
-              left_ts: str = "ts", right_ts: str = "ts",
-              value_cols: list[str] | None = None,
-              suffix: str = "_asof") -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """Left as-of join: every left row + the latest right values whose
     timestamp is <= the left timestamp, matched on ``on``.
 
@@ -39,21 +36,20 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     for later left rows (silent corruption).  Rejected here rather than
     auto-renamed so the output schema stays predictable.
     """
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (on, right_ts)]
+    value_cols = [c for c in right.columns if c not in (on, "ts")]
     clash = set(value_cols) & set(left.columns)
     if clash:
         raise ValueError(
             f"asof_join: right value column(s) {sorted(clash)} collide with "
             f"left columns; rename them before joining")
 
-    lhs = left.withColumn("_tag", F.lit(1)).withColumn("_ats", F.col(left_ts))
+    lhs = left.withColumn("_tag", F.lit(1)).withColumn("_ats", F.col("ts"))
     rhs = right.select(
         F.col(on),
-        F.col(right_ts).alias("_ats"),
+        F.col("ts").alias("_ats"),
         F.lit(0).alias("_tag"),
         *[F.col(c) for c in value_cols],
-    ).withColumn(f"{right_ts}{suffix}", F.col("_ats"))
+    ).withColumn("ts_asof", F.col("_ats"))
 
     missing_in_rhs = [c for c in lhs.columns if c not in rhs.columns]
     missing_in_lhs = [c for c in rhs.columns if c not in lhs.columns]
@@ -68,22 +64,19 @@ def asof_join(left: DataFrame, right: DataFrame, on: str,
     w = (Window.partitionBy(on)
          .orderBy(F.col("_ats").asc(), F.col("_tag").asc())
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    carried = [F.last(c, ignorenulls=True).over(w).alias(f"{c}{suffix}")
+    carried = [F.last(c, ignorenulls=True).over(w).alias(f"{c}_asof")
                for c in value_cols] + [
-        F.last(f"{right_ts}{suffix}", ignorenulls=True).over(w)
-        .alias(f"_{right_ts}{suffix}")]
+        F.last("ts_asof", ignorenulls=True).over(w).alias("_ts_asof")]
     out = (unioned.select("*", *carried)
            .filter(F.col("_tag") == 1))
     keep = [c for c in left.columns]
-    renames = [F.col(f"{c}{suffix}") for c in value_cols] + [
-        F.col(f"_{right_ts}{suffix}").alias(f"{right_ts}{suffix}")]
+    renames = [F.col(f"{c}_asof") for c in value_cols] + [
+        F.col("_ts_asof").alias("ts_asof")]
     return out.select(*keep, *renames)
 
 
 def range_join_binned(left: DataFrame, right: DataFrame, on: str,
-                      left_ts: str = "ts", right_ts: str = "ts",
-                      lo_s: int = 0, hi_s: int = 300,
-                      right_cols: list[str] | None = None) -> DataFrame:
+                      lo_s: int = 0, hi_s: int = 300) -> DataFrame:
     """Rows of ``right`` whose ts lies in [left.ts + lo_s, left.ts + hi_s]
     (seconds), per key — as a sparse equi-join on (key, time bin).
 
@@ -92,16 +85,15 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
     all, and the join is a plain shuffle/broadcast equi-join Catalyst can
     plan normally — never an O(n·m) BroadcastNestedLoopJoin.
     """
-    right_cols = right_cols or [
-        c for c in right.columns if c not in (on, right_ts)]
+    right_cols = [c for c in right.columns if c not in (on, "ts")]
     span = max(hi_s - lo_s, 1)
 
     # Timestamp-type-agnostic epoch seconds: TIMESTAMP_NTZ cannot cast to
     # BIGINT directly, but casts to TIMESTAMP exactly under the pinned UTC
     # session TZ (session.py); for TIMESTAMP the extra cast is a no-op that
     # Catalyst folds away.
-    l_epoch = F.col(left_ts).cast("timestamp").cast("long")
-    r_epoch = F.col(right_ts).cast("timestamp").cast("long")
+    l_epoch = F.col("ts").cast("timestamp").cast("long")
+    r_epoch = F.col("ts").cast("timestamp").cast("long")
     lbins = F.array_distinct(F.array(
         ((l_epoch + lo_s) / span).cast("long"),
         ((l_epoch + hi_s) / span).cast("long"),
@@ -110,7 +102,7 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
     rhs = right.select(
         F.col(on).alias("_rk"),
         (r_epoch / span).cast("long").alias("_bin"),
-        F.col(right_ts).alias("_rts"),
+        F.col("ts").alias("_rts"),
         *[F.col(c).alias(f"_r_{c}") for c in right_cols],
     )
     # exact filter on full-precision timestamps (epoch casts above are
@@ -120,12 +112,12 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
         rhs,
         (F.col(on) == F.col("_rk")) & (lhs["_bin"] == rhs["_bin"]),
     ).filter(
-        (F.col("_rts") >= F.col(left_ts) + F.expr(f"INTERVAL {lo_s} SECOND"))
-        & (F.col("_rts") <= F.col(left_ts) + F.expr(f"INTERVAL {hi_s} SECOND"))
+        (F.col("_rts") >= F.col("ts") + F.expr(f"INTERVAL {lo_s} SECOND"))
+        & (F.col("_rts") <= F.col("ts") + F.expr(f"INTERVAL {hi_s} SECOND"))
     )
     return joined.select(
         *[F.col(c) for c in left.columns],
-        F.col("_rts").alias(f"{right_ts}_right"),
+        F.col("_rts").alias("ts_right"),
         *[F.col(f"_r_{c}").alias(c) for c in right_cols],
     )
 
@@ -133,9 +125,8 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
 DAY_US = 86_400_000_000
 
 
-def interval_overlap_join(left: DataFrame, right: DataFrame, key: str,
-                          bin_us: int = DAY_US,
-                          strict: bool = True) -> DataFrame:
+def interval_overlap_join(left: DataFrame, right: DataFrame,
+                          key: str) -> DataFrame:
     """Interval x interval overlap join per key — the third temporal-join
     shape next to as-of (point x latest-point) and range (point x window).
 
@@ -149,8 +140,8 @@ def interval_overlap_join(left: DataFrame, right: DataFrame, key: str,
     distinct exchange: it is kept only in the bin containing the overlap
     start (floor(max(s_a, s_b)/bin)).
 
-    -> left columns + right columns + ``overlap_us``.  ``strict`` keeps
-    only pairs with positive-length overlap (touching endpoints drop).
+    -> left columns + right columns + ``overlap_us``, only pairs with
+    positive-length overlap (touching endpoints drop).
     """
     def binned(df: DataFrame, tag: str) -> DataFrame:
         return (df.select(
@@ -158,25 +149,21 @@ def interval_overlap_join(left: DataFrame, right: DataFrame, key: str,
             F.col("id").alias(f"{tag}_id"),
             F.col("s_us").alias(f"s_{tag}"),
             F.col("e_us").alias(f"e_{tag}"),
-            F.explode(F.sequence(F.floor(F.col("s_us") / bin_us),
-                                 F.floor(F.col("e_us") / bin_us)))
+            F.explode(F.sequence(F.floor(F.col("s_us") / DAY_US),
+                                 F.floor(F.col("e_us") / DAY_US)))
              .alias("bin")))
 
     a, b = binned(left, "a"), binned(right, "b")
     start = F.greatest(F.col("s_a"), F.col("s_b"))
     overlap = F.least(F.col("e_a"), F.col("e_b")) - start
     out = (a.join(b, [key, "bin"])
-           .where(F.floor(start / bin_us) == F.col("bin"))
+           .where(F.floor(start / DAY_US) == F.col("bin"))
            .withColumn("overlap_us", overlap)
            .drop("bin"))
-    return out.where(F.col("overlap_us") > 0) if strict \
-        else out.where(F.col("overlap_us") >= 0)
+    return out.where(F.col("overlap_us") > 0)
 
 
-def scd2_intervals(events: DataFrame, key_col: str = "user_id",
-                   state_col: str = "event_type",
-                   ts_col: str = "ts",
-                   tie_col: str = "event_id") -> DataFrame:
+def scd2_intervals(events: DataFrame) -> DataFrame:
     """Slowly-changing-dimension type-2 history from an event log: per
     key, collapse consecutive runs of the same state into validity
     intervals — the warehouse operator that turns an append-only event
@@ -186,7 +173,7 @@ def scd2_intervals(events: DataFrame, key_col: str = "user_id",
 
     -> (key, state, valid_from_us, valid_to_us, n_events, is_current):
     ``valid_to_us`` is the next run's start (NULL on the open current
-    run).  Ties on ``ts`` break on ``tie_col`` so run boundaries are
+    run).  Ties on ``ts`` break on ``event_id`` so run boundaries are
     deterministic cross-engine.
 
     Scale shape: ONE shuffle on the key drives both windows and the run
@@ -194,29 +181,29 @@ def scd2_intervals(events: DataFrame, key_col: str = "user_id",
     per-key collect.  100 TB of events with a bounded key space flows
     through as an ordinary windowed aggregation.
     """
-    w = Window.partitionBy(key_col).orderBy(ts_col, tie_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # eqNullSafe, not `!=`: a NULL state must open its own run (plain
     # inequality evaluates to NULL there, silently merging a NULL-state
     # event into the prior run and leaving two groupBy rows sharing one
     # run id — a nondeterministic lead() downstream).  The first row of
     # a partition (lag NULL vs non-NULL state) still flags 1.
-    prev = F.lag(state_col).over(w)
-    chg = F.when(prev.eqNullSafe(F.col(state_col)), 0).otherwise(1)
+    prev = F.lag("event_type").over(w)
+    chg = F.when(prev.eqNullSafe(F.col("event_type")), 0).otherwise(1)
     runs = (events
             .withColumn("_run", F.sum(chg).over(
                 w.rowsBetween(Window.unboundedPreceding, 0)))
-            .groupBy(key_col, "_run", state_col)
-            .agg(F.min(F.unix_micros(ts_col)).alias("valid_from_us"),
+            .groupBy("user_id", "_run", "event_type")
+            .agg(F.min(F.unix_micros("ts")).alias("valid_from_us"),
                  F.count(F.lit(1)).cast("long").alias("n_events")))
     # order on the run id, not valid_from_us: two adjacent runs can
     # share a start microsecond when ts ties straddle a state change
-    # (the tie_col breaks the ordering inside the run window above),
+    # (event_id breaks the ordering inside the run window above),
     # and the run id is monotone in that same (ts, tie) order.
-    w2 = Window.partitionBy(key_col).orderBy("_run")
+    w2 = Window.partitionBy("user_id").orderBy("_run")
     nxt = F.lead("valid_from_us").over(w2)
     return (runs
-            .select(F.col(key_col),
-                    F.col(state_col).alias("state"),
+            .select(F.col("user_id"),
+                    F.col("event_type").alias("state"),
                     "valid_from_us",
                     nxt.alias("valid_to_us"),
                     "n_events",

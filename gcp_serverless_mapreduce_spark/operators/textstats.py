@@ -46,20 +46,19 @@ def lang_hits(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*markers)))
 
 
-def language_scores(docs: DataFrame, doc_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def language_scores(docs: DataFrame) -> DataFrame:
     """-> (doc_id, cand_lang, n_hits) — one row per (doc, candidate
     language).  Single scan: the per-lang counts are computed in one
     projection and exploded, not one pass per language."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     cands = F.array(*[
         F.struct(F.lit(lang).alias("cand_lang"),
                  lang_hits(toks, lang).cast("long").alias("n_hits"))
         for lang in sorted(LANG_MARKERS)
     ])
     return docs.select(
-        F.col(doc_col), F.explode(cands).alias("c")
-    ).select(doc_col, "c.cand_lang", "c.n_hits")
+        F.col("doc_id"), F.explode(cands).alias("c")
+    ).select("doc_id", "c.cand_lang", "c.n_hits")
 
 
 def bpe_token_count(text: Column) -> Column:
@@ -84,8 +83,7 @@ def poly_fingerprint(s: Column) -> Column:
     return F.when(F.length(s) > 0, fold).otherwise(F.lit(FP_SEED).cast("long"))
 
 
-def build_vocab(docs: DataFrame, size: int,
-                text_col: str = "text") -> DataFrame:
+def build_vocab(docs: DataFrame, size: int) -> DataFrame:
     """Tokenizer-style vocabulary construction: the ``size`` most frequent
     corpus tokens with dense ids assigned by (freq desc, token asc) — the
     deterministic tie-break every release needs so two builds of the same
@@ -98,7 +96,7 @@ def build_vocab(docs: DataFrame, size: int,
     """
     from pyspark.sql import Window
 
-    counts = (docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+    counts = (docs.select(F.explode(tokens(F.col("text"))).alias("word"))
               .groupBy("word").agg(F.count("*").alias("freq")))
     top = counts.orderBy(F.col("freq").desc(), F.col("word")).limit(size)
     w = Window.orderBy(F.col("freq").desc(), F.col("word"))
@@ -106,8 +104,8 @@ def build_vocab(docs: DataFrame, size: int,
             .select("vocab_id", "word", "freq"))
 
 
-def cooccurrence_pmi(docs: DataFrame, max_gap: int = 2, min_count: int = 5,
-                     text_col: str = "text") -> DataFrame:
+def cooccurrence_pmi(docs: DataFrame, max_gap: int = 2,
+                     min_count: int = 5) -> DataFrame:
     """Directed word co-occurrence with pointwise mutual information over
     a forward window of ``max_gap`` tokens (the word2vec/GloVe statistic).
 
@@ -122,7 +120,7 @@ def cooccurrence_pmi(docs: DataFrame, max_gap: int = 2, min_count: int = 5,
 
     -> (word_a, word_b, n_pair, pmi) for pairs with c_ab >= min_count.
     """
-    toks = docs.select(tokens(F.col(text_col)).alias("t"))
+    toks = docs.select(tokens(F.col("text")).alias("t"))
     pair_arrays = [
         F.arrays_zip(F.slice("t", 1, F.greatest(F.size("t") - g, F.lit(0))),
                      F.slice("t", 1 + g,
@@ -133,7 +131,7 @@ def cooccurrence_pmi(docs: DataFrame, max_gap: int = 2, min_count: int = 5,
              .select(F.col("p.0").alias("word_a"),
                      F.col("p.1").alias("word_b")))
     pc = pairs.groupBy("word_a", "word_b").agg(F.count("*").alias("n_pair"))
-    wc = (docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
+    wc = (docs.select(F.explode(tokens(F.col("text"))).alias("word"))
           .groupBy("word").agg(F.count("*").alias("n_word")))
     totals = (pc.agg(F.sum("n_pair").alias("t_pairs"))
               .crossJoin(wc.agg(F.sum("n_word").alias("t_words"))))
@@ -150,8 +148,7 @@ def cooccurrence_pmi(docs: DataFrame, max_gap: int = 2, min_count: int = 5,
             .select("word_a", "word_b", "n_pair", pmi.alias("pmi")))
 
 
-def token_entropy(docs: DataFrame, doc_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """-> (doc_id, n_tokens, n_distinct, entropy): per-document unigram
     Shannon entropy (nats), rounded to 6 — the repetitiveness signal a
     quality filter reads (boilerplate/spam ≈ low entropy at high length).
@@ -161,8 +158,8 @@ def token_entropy(docs: DataFrame, doc_col: str = "doc_id",
     count → per-doc aggregate: two shuffles, both on the doc id, so AQE
     coalesces them into one effective exchange chain.
     """
-    toks = docs.select(F.col(doc_col).alias("doc"),
-                       F.explode(tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.col("doc_id").alias("doc"),
+                       F.explode(tokens(F.col("text"))).alias("tok"))
     tc = toks.groupBy("doc", "tok").agg(F.count("*").alias("c"))
     p = F.col("c").cast("double") / F.col("n")
     return (tc.withColumn("n", F.sum("c").over(Window.partitionBy("doc")))
@@ -173,8 +170,7 @@ def token_entropy(docs: DataFrame, doc_col: str = "doc_id",
             .withColumnRenamed("doc", "doc_id"))
 
 
-def source_token_kl(docs: DataFrame, source_col: str = "source",
-                    text_col: str = "text") -> DataFrame:
+def source_token_kl(docs: DataFrame) -> DataFrame:
     """-> (source, n_tokens, kl_from_corpus): KL(P_source ‖ P_corpus) of
     each source's unigram distribution from the whole-corpus distribution
     (nats, rounded 6) — the distribution-shift diagnostic a data-mixing
@@ -186,8 +182,8 @@ def source_token_kl(docs: DataFrame, source_col: str = "source",
     count frames join on the token (one shuffle each), the totals
     broadcast as scalars.
     """
-    toks = docs.select(F.col(source_col).alias("source"),
-                       F.explode(tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.col("source"),
+                       F.explode(tokens(F.col("text"))).alias("tok"))
     sc = toks.groupBy("source", "tok").agg(F.count("*").alias("cs"))
     cc = toks.groupBy("tok").agg(F.count("*").alias("cc"))
     stot = sc.groupBy("source").agg(F.sum("cs").alias("ns"))
@@ -256,17 +252,16 @@ def bpe_pieces(text: Column) -> Column:
     return s
 
 
-def bpe_piece_stats(docs: DataFrame, doc_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def bpe_piece_stats(docs: DataFrame) -> DataFrame:
     """-> (doc_id, n_chars_sym, n_pieces, pieces_md5): per-document BPE
     piece count and an exact fingerprint of the piece stream.  Map-only
     projection — the merge loop is a fixed chain of string replaces, so
     at 100 TB this is one codegen'd scan, no shuffle, no UDF."""
-    s = bpe_pieces(F.col(text_col))
+    s = bpe_pieces(F.col("text"))
     n_open = F.length(s) - F.length(F.replace(s, F.lit("<"), F.lit("")))
-    raw = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s", "")
+    raw = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s", "")
     return docs.select(
-        F.col(doc_col),
+        F.col("doc_id"),
         F.length(raw).cast("long").alias("n_chars_sym"),
         n_open.cast("long").alias("n_pieces"),
         F.md5(s).alias("pieces_md5"))
@@ -282,15 +277,12 @@ BPE_BATCH = 8      # top-M candidate pairs considered per round
 BPE_MIN_PAIR = 2
 
 
-def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_LEARN_ROUNDS,
-                     min_pair: int = BPE_MIN_PAIR,
-                     batch: int = BPE_BATCH,
-                     text_col: str = "text"):
+def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_LEARN_ROUNDS):
     """LEARN a BPE merge table from the corpus (closing the tokenizer
     loop that :func:`bpe_pieces` applies) with BATCHED rounds — the
     standard scalable-BPE trick that decouples learned-vocab size from
     the number of corpus scans: each round counts adjacent in-word
-    symbol pairs corpus-wide ONCE, takes the top ``batch`` candidates
+    symbol pairs corpus-wide ONCE, takes the top ``BPE_BATCH`` candidates
     (count desc, sym_a, sym_b — deterministic), and applies every
     candidate that does not INTERFERE with any higher-ranked candidate.
     Interference is (a) sharing a symbol, (b) either of the candidate's
@@ -309,16 +301,16 @@ def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_LEARN_ROUNDS,
 
     -> (rank, sym_a, sym_b, pair_count) for each APPLIED merge, ranks
     numbered in application order across rounds (up to
-    ``rounds × batch`` merges from ``rounds`` scans).
+    ``rounds × BPE_BATCH`` merges from ``rounds`` scans).
 
     Scale shape: each round is one explode + one hash-agg over the
-    corpus plus a <= ``batch``-row driver collect (the candidate list
+    corpus plus a <= ``BPE_BATCH``-row driver collect (the candidate list
     steers the next round's literal replaces — scalar steering like
     KMeans centroid updates, never a data collect).  Only the INITIAL
     symbol frame is localCheckpoint-ed; each round replays the
     accumulated literal-replace chain on top of it (replace chains are
     codegen'd and cheaper than materializing per-round frames — commit
-    f8bef46), bounded by ``rounds × batch`` replaces at fixed depth.
+    f8bef46), bounded by ``rounds × BPE_BATCH`` replaces at fixed depth.
     """
     # Spread the scan first (guarded, tables.spread_small_scan): the
     # checkpointed symbol frame inherits the scan's partitioning, so an
@@ -328,8 +320,8 @@ def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_LEARN_ROUNDS,
     # spread cannot perturb the learned merges.
     from ..tables import spread_small_scan
 
-    cur = spread_small_scan(docs.select(F.col(text_col))).select(
-        F.regexp_replace(bpe_escape(F.lower(F.trim(F.col(text_col)))),
+    cur = spread_small_scan(docs.select(F.col("text"))).select(
+        F.regexp_replace(bpe_escape(F.lower(F.trim(F.col("text")))),
                          _BPE_UNIT_RE, "<$1>").alias("s"))
     cur = cur.localCheckpoint()
     merges = []
@@ -343,8 +335,8 @@ def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_LEARN_ROUNDS,
                      F.slice("y", 2, F.size("y") - 1))).alias("p"))
                  .select(F.col("p.0").alias("a"), F.col("p.1").alias("b")))
         cand = (pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c"))
-                .where(F.col("c") >= min_pair)
-                .orderBy(F.col("c").desc(), "a", "b").limit(batch)
+                .where(F.col("c") >= BPE_MIN_PAIR)
+                .orderBy(F.col("c").desc(), "a", "b").limit(BPE_BATCH)
                 .collect())
         if not cand:
             break
@@ -372,9 +364,7 @@ def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_LEARN_ROUNDS,
         merges, "rank long, sym_a string, sym_b string, pair_count long")
 
 
-def zipf_fit_by_source(docs: DataFrame, topn: int = 100,
-                       source_col: str = "source",
-                       text_col: str = "text") -> DataFrame:
+def zipf_fit_by_source(docs: DataFrame, topn: int = 100) -> DataFrame:
     """-> (source, n_words, slope, intercept, r2): closed-form OLS fit of
     ln(freq) ~ ln(rank) over each source's ``topn`` most frequent words —
     the Zipf-law diagnostic for corpus naturalness (natural language sits
@@ -386,8 +376,8 @@ def zipf_fit_by_source(docs: DataFrame, topn: int = 100,
     itself is a ``topn``-row-per-source aggregate.  At 100 TB the only
     data-sized stage is the (source, word) count — map-side combined —
     and the window runs on the counted frame, never on raw tokens."""
-    toks = docs.select(F.col(source_col).alias("source"),
-                       F.explode(tokens(F.col(text_col))).alias("tok"))
+    toks = docs.select(F.col("source"),
+                       F.explode(tokens(F.col("text"))).alias("tok"))
     wc = toks.groupBy("source", "tok").agg(F.count("*").alias("freq"))
     w = Window.partitionBy("source").orderBy(F.col("freq").desc(),
                                              F.col("tok").asc())
@@ -426,9 +416,7 @@ def bigram_structs(toks: Column) -> Column:
     return F.filter(pairs, lambda s: s["w2"].isNotNull())
 
 
-def heldout_bigram_xent(docs: DataFrame, train_mod: int = 2,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def heldout_bigram_xent(docs: DataFrame, train_mod: int = 2) -> DataFrame:
     """CCNet-style perplexity filter (Wenzek et al. 2020) with a
     HELD-OUT language model: bigram counts train on the ``doc_id %
     train_mod == 0`` half only, and every OTHER doc scores its mean
@@ -444,10 +432,10 @@ def heldout_bigram_xent(docs: DataFrame, train_mod: int = 2,
     are vocab-sized aggregates off ONE exploded train frame (exchange
     reuse); scoring joins key on the gram, V broadcasts as a scalar.
     """
-    toked = docs.select(F.col(id_col),
-                        tokens(F.col(text_col)).alias("toks"))
-    train = toked.filter(F.col(id_col) % train_mod == 0)
-    score = toked.filter(F.col(id_col) % train_mod != 0)
+    toked = docs.select(F.col("doc_id"),
+                        tokens(F.col("text")).alias("toks"))
+    train = toked.filter(F.col("doc_id") % train_mod == 0)
+    score = toked.filter(F.col("doc_id") % train_mod != 0)
     tb = train.select(F.explode(bigram_structs(F.col("toks"))).alias("b"))
     c2 = (tb.groupBy(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
           .agg(F.count(F.lit(1)).alias("c2")))
@@ -456,8 +444,8 @@ def heldout_bigram_xent(docs: DataFrame, train_mod: int = 2,
     vocab = (train.select(F.explode("toks").alias("tok"))
              .agg(F.countDistinct("tok").cast("long").alias("v")))
     sb = score.select(
-        F.col(id_col), F.explode(bigram_structs(F.col("toks"))).alias("b")
-    ).select(id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+        F.col("doc_id"), F.explode(bigram_structs(F.col("toks"))).alias("b")
+    ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
     # nullif: a train split with zero tokens gives V = 0 and an unseen
     # context gives c1 = 0 — the denominator would be 0 and Spark's
     # default ANSI mode THROWS on division by zero (DuckDB gives inf);
@@ -469,7 +457,7 @@ def heldout_bigram_xent(docs: DataFrame, train_mod: int = 2,
     return (sb.join(c2, ["w1", "w2"], "left")
             .join(c1, "w1", "left")
             .crossJoin(F.broadcast(vocab))
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
                  xent.alias("xent"))
             .withColumn("ppl", F.round(F.exp("xent"), 4)))

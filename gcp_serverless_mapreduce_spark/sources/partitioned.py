@@ -23,13 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_partitioned(df: DataFrame, path: str, *part_cols: str,
-                      mode: str = "overwrite") -> None:
+def write_partitioned(df: DataFrame, path: str, *part_cols: str) -> None:
     """Write ``df`` as parquet partitioned by ``part_cols`` (hive layout:
     ``part_col=value/`` directories).  Pre-repartitioning on the partition
     key bounds output files to one per (task, partition-value) pair."""
     (df.repartition(*part_cols)
-     .write.mode(mode).partitionBy(*part_cols).parquet(path))
+     .write.mode("overwrite").partitionBy(*part_cols).parquet(path))
 
 
 def overwrite_partitions_dynamic(df: DataFrame, path: str,

@@ -22,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_gutenberg_corpus(spark: SparkSession, path: str,
-                          suffix: str = ".txt") -> DataFrame:
+def read_gutenberg_corpus(spark: SparkSession, path: str) -> DataFrame:
     """S1+S2+S4: one row per file: (path string, content string).
 
     Suffix predicate mirrors storage/client.go:80; pushed into the file
@@ -31,7 +30,7 @@ def read_gutenberg_corpus(spark: SparkSession, path: str,
     """
     raw = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", f"*{suffix}")
+        .option("pathGlobFilter", "*.txt")
         .load(path)
     )
     # The per-file work downstream (regex strip + tokenize) is CPU-bound,
@@ -52,12 +51,11 @@ def read_gutenberg_corpus(spark: SparkSession, path: str,
     )
 
 
-def format_anagram_lines(df: DataFrame,
-                         key: str = "sorted_word",
-                         values: str = "anagrams") -> DataFrame:
+def format_anagram_lines(df: DataFrame) -> DataFrame:
     """S5: format ``"<key>: <v1> <v2> ... <vN>"`` (storage/client.go:106)."""
     return df.select(
-        F.concat_ws(": ", F.col(key), F.array_join(F.col(values), " ")).alias("value")
+        F.concat_ws(": ", F.col("sorted_word"),
+                    F.array_join(F.col("anagrams"), " ")).alias("value")
     )
 
 

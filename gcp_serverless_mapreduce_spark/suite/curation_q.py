@@ -532,7 +532,7 @@ def lang_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     step a pretraining mixture applies after distribution-shift
     diagnostics.  See operators/curation.py:mixture_reweight."""
     docs = load_table(spark, sf_dir, "documents")
-    return curation.mixture_reweight(docs, "lang")
+    return curation.mixture_reweight(docs)
 
 
 # ---- composed corpus-prep pipeline v2 -------------------------------------

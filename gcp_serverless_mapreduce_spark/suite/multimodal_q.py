@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import multimodal
+from ..operators import dedup, multimodal
 from ..registry import register
 from ..tables import load_table
 
@@ -539,7 +539,7 @@ def crossmodal_pair_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     decoded = multimodal.decode_image_stats(
         multimodal.image_corpus(docs)).select("media_id", "px_w", "px_h")
-    toks = F.split(F.trim(F.lower("text")), r"\s+")
+    toks = dedup.tokens_col()
     cap = docs.select(
         F.col("doc_id"), "source",
         F.size(toks).alias("n_toks"),

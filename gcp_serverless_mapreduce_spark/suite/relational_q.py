@@ -13,7 +13,7 @@ Scale notes (the judge's question — "would this survive 100×?"):
 - all aggregations are partial+final hash aggs (map-side combine free);
 - top-k = TakeOrderedAndProject (no global sort materialization);
 - filters/projections sit directly on the parquet scan (pushdown audited in
-  tests/test_plans.py).
+  tests/test_plans_and_sinks.py).
 """
 
 from __future__ import annotations

@@ -73,8 +73,8 @@ def test_shingle_array_arrow_matches_expression(spark):
     df = spark.createDataFrame(
         [("a b c d e",), ("x y",), ("",)], ["text"])
     got = df.select(
-        F.sort_array(shingle_array(3, "text", arrow=True)).alias("a"),
-        F.sort_array(shingle_array(3, "text", arrow=False)).alias("e"),
+        F.sort_array(shingle_array(3, arrow=True)).alias("a"),
+        F.sort_array(shingle_array(3, arrow=False)).alias("e"),
     ).collect()
     for r in got:
         assert r["a"] == r["e"]

@@ -133,8 +133,7 @@ def test_inline_band_hashes_fuzz_both_variants(spark):
     for arrow in (True, False):
         inline = {r["doc_id"]: list(r["b"]) for r in df.select(
             "doc_id",
-            dedup.inline_band_hashes(8, 4, 2, 3, "text",
-                                     arrow=arrow).alias("b"))
+            dedup.inline_band_hashes(8, 4, 2, arrow=arrow).alias("b"))
             .collect()}
         for d, _txt in rows:
             if d in batch:

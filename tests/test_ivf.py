@@ -10,7 +10,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 def test_ivf_recall_and_shape(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    ivf = similarity.ivf_topk(emb, k=5, n_cells=16, n_probe=2).collect()
+    ivf = similarity.ivf_topk(emb, k=5).collect()
     assert all(r["neighbor_id"] != r["query_id"] for r in ivf)
     assert all(1 <= r["rank"] <= 5 for r in ivf)
 
@@ -68,7 +68,7 @@ def test_sq8_quantization_recall(spark):
     # above the RANDOM collision rate implied by the actual bucket-size
     # distribution (sum s·(s-1) / n·(n-1) ~ 0.004 at sf0.01).
     from pyspark.sql import functions as F
-    sizes = (similarity.unit_vectors(emb, "embedding")
+    sizes = (similarity.unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
              .select(similarity.srp_signature(
                  F.col("embedding").cast("array<double>"),

@@ -1,37 +1,13 @@
-"""Partition-policy math + multi-format source round-trips."""
+"""Multi-format source round-trips."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from gcp_serverless_mapreduce_spark.plans.policy import (
-    MAX_PARTITIONS,
-    configure_for_input,
-    shuffle_partitions_for,
-)
 from gcp_serverless_mapreduce_spark.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_shuffle_partition_policy_bounds():
-    # tiny input -> floor of 2x cores
-    assert shuffle_partitions_for(1 << 20, cores=32) == 64
-    # 1 TiB shuffle at 128 MiB targets -> 8192 partitions
-    assert shuffle_partitions_for(1 << 40, cores=32) == 8192
-    # absurd input clamps at the ceiling
-    assert shuffle_partitions_for(1 << 60, cores=32) == MAX_PARTITIONS
-
-
-def test_configure_for_input_sets_conf(spark):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        n = configure_for_input(spark, 100 << 30)  # 100 GiB input
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
-        assert n >= 2 * spark.sparkContext.defaultParallelism
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_csv_and_json_source_roundtrip(spark, tmp_path):

@@ -43,7 +43,7 @@ def test_py_tokens_matches_tokens_col(spark):
     df = spark.createDataFrame(UNICODE_ROWS, SCHEMA)
     got = {r["doc_id"]: r["t"]
            for r in df.select("doc_id",
-                              dedup.tokens_col("text").alias("t")).collect()}
+                              dedup.tokens_col().alias("t")).collect()}
     for doc_id, text in UNICODE_ROWS:
         if text is None:
             assert got[doc_id] is None
@@ -55,8 +55,8 @@ def test_shingle_kernel_matches_expr_twin_unicode(spark):
     df = spark.createDataFrame(UNICODE_ROWS, SCHEMA)
     both = df.select(
         "doc_id",
-        F.sort_array(dedup.shingle_array(3, "text", arrow=True)).alias("k"),
-        F.sort_array(dedup.shingle_array(3, "text", arrow=False)).alias("x"))
+        F.sort_array(dedup.shingle_array(3, arrow=True)).alias("k"),
+        F.sort_array(dedup.shingle_array(3, arrow=False)).alias("x"))
     for r in both.collect():
         assert r["k"] == r["x"], r["doc_id"]
 
@@ -113,7 +113,7 @@ def test_word_bigrams_udtf_matches_oracle_tokens(spark):
         (r["bigram"],) for r in spark.sql(
             "SELECT b.bigram FROM unicode_docs_udtf, "
             "LATERAL word_bigrams(text) AS b").collect())
-    toks = dedup.tokens_col("text")
+    toks = dedup.tokens_col()
     want = sorted(
         (r["bigram"],) for r in df.select(
             F.explode(F.when(

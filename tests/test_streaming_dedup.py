@@ -48,8 +48,7 @@ def test_inline_band_hashes_match_batch_banding(spark):
     for arrow in (True, False):
         inline = {r["doc_id"]: list(r["b"]) for r in docs.select(
             "doc_id", dedup.inline_band_hashes(
-                NUM_PERM, BANDS, RPB, 3, "text",
-                arrow=arrow).alias("b")).collect()}
+                NUM_PERM, BANDS, RPB, arrow=arrow).alias("b")).collect()}
         assert set(inline) >= set(batch)
         for doc_id, bands in inline.items():
             if doc_id in batch:

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import hashlib
 import importlib.util
-import math
 import os
 import re
 import subprocess
@@ -18,12 +17,10 @@ from pyspark.sql import functions as F
 from gcp_serverless_mapreduce_spark.functions.hashing import (
     fnv32a, fnv32a_py, md5_long, minhash_expr,
 )
-from gcp_serverless_mapreduce_spark.functions.vectors import (
-    cosine_similarity,
-)
 from gcp_serverless_mapreduce_spark.tables import register_views
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_fnv32a_column_matches_python_and_reference_golden(spark):
@@ -58,19 +55,6 @@ def test_minhash_expr_matches_python_min(spark):
         assert got == want
 
 
-def test_cosine_similarity_column(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]),
-         ([1.0, 1.0], [1.0, 0.0]), ([0.0, 0.0], [1.0, 0.0])],
-        "a array<double>, b array<double>")
-    got = [r["c"] for r in
-           df.select(cosine_similarity(F.col("a"), F.col("b"))
-                     .alias("c")).collect()]
-    assert got[0] == 1.0 and got[1] == 0.0
-    assert math.isclose(got[2], 1 / math.sqrt(2), rel_tol=1e-12)
-    assert got[3] is None  # zero vector -> NULL, not a division error
-
-
 def test_register_views_enables_sql(spark):
     register_views(spark, SF_DIR, ["region", "nation"])
     n = spark.sql("SELECT count(*) AS n FROM region "
@@ -94,40 +78,81 @@ def test_tws_operator_builds_plan(spark):
 
 def test_surface_coverage_gate_passes():
     r = subprocess.run([sys.executable, "tools/coverage_gate.py"],
-                       capture_output=True, text=True, cwd="/root/repo")
+                       capture_output=True, text=True, cwd=ROOT)
     assert r.returncode == 0, r.stdout + r.stderr
 
 
-def test_surface_coverage_gate_fails_on_missing_consumer(monkeypatch, capsys):
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def _gate():
     spec = importlib.util.spec_from_file_location(
-        "coverage_gate", os.path.join(root, "tools", "coverage_gate.py"))
+        "coverage_gate", os.path.join(ROOT, "tools", "coverage_gate.py"))
     gate = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gate)
+    return gate
+
+
+def test_surface_coverage_gate_fails_on_missing_consumer(monkeypatch, capsys):
+    gate = _gate()
     assert gate.missing_consumers(gate.CONSUMERS) == []
-    gone = os.path.join(root, "no_such_consumer.py")
+    gone = os.path.join(ROOT, "no_such_consumer.py")
     assert gate.missing_consumers([gate.PKG, gone]) == [gone]
     monkeypatch.setattr(gate, "CONSUMERS", gate.CONSUMERS + [gone])
     assert gate.main() == 1
     assert "no_such_consumer.py" in capsys.readouterr().out
 
 
-def test_cited_tools_exist():
-    """Every ``tools/<name>.py`` that code, tests or the run docs cite
-    must exist, so deleting a tool cannot leave a dangling instruction."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = [os.path.join(root, f) for f in
+def test_option_rule_reports_unchosen_options(tmp_path):
+    """``outer(col)`` is only ever passed its default and ``inner(col)``
+    only receives ``outer``'s unchosen ``col``: the gate reports both,
+    and not ``outer(n)``, which a caller sets."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "def inner(df, col='text'):\n"
+        "    return df[col]\n"
+        "\n"
+        "\n"
+        "def outer(df, col='text', n=3):\n"
+        "    return inner(df, col=col), n\n")
+    caller = tmp_path / "caller.py"
+    caller.write_text("from pkg.mod import outer\n"
+                      "outer({}, n=4)\n"
+                      "outer({}, col='text')\n")
+    got = _gate().unchosen_options(str(pkg), [str(pkg), str(caller)],
+                                   root=str(tmp_path))
+    assert got == [os.path.join("pkg", "mod.py") + ":1 inner(col)",
+                   os.path.join("pkg", "mod.py") + ":5 outer(col)"]
+
+
+def _missing_citations(kind: str) -> set[str]:
+    """``<kind>/<name>.py`` files that code, tests or the run docs cite
+    but that do not exist."""
+    files = [os.path.join(ROOT, f) for f in
              ("__spark_entry__.py", "README.md",
               os.path.join(".claude", "skills", "verify", "SKILL.md"))]
     for sub in ("gcp_serverless_mapreduce_spark", "tools", "tests"):
-        for dp, _, fns in os.walk(os.path.join(root, sub)):
+        for dp, _, fns in os.walk(os.path.join(ROOT, sub)):
             files += [os.path.join(dp, f) for f in fns if f.endswith(".py")]
     missing = set()
     for path in files:
         if not os.path.exists(path):
             continue
         with open(path, encoding="utf-8") as fh:
-            for name in re.findall(r"\btools/(\w+\.py)", fh.read()):
-                if not os.path.exists(os.path.join(root, "tools", name)):
-                    missing.add(f"{os.path.relpath(path, root)}: tools/{name}")
+            for name in re.findall(rf"\b{kind}/(\w+\.py)", fh.read()):
+                if not os.path.exists(os.path.join(ROOT, kind, name)):
+                    missing.add(f"{os.path.relpath(path, ROOT)}: "
+                                f"{kind}/{name}")
+    return missing
+
+
+def test_cited_tools_exist():
+    """Every cited ``tools/<name>.py`` exists, so deleting a tool cannot
+    leave a dangling instruction."""
+    missing = _missing_citations("tools")
+    assert not missing, sorted(missing)
+
+
+def test_cited_tests_exist():
+    """Every cited ``tests/<name>.py`` exists, so a docstring cannot
+    point at a test file that was renamed or never written."""
+    missing = _missing_citations("tests")
     assert not missing, sorted(missing)

@@ -52,7 +52,7 @@ def test_asof_join_rejects_colliding_value_columns(spark):
     right = spark.createDataFrame(
         [(1, 9, 7.0)], ["k", "ts", "price"])  # "price" collides
     with pytest.raises(ValueError, match="price"):
-        temporal.asof_join(left, right, on="k", left_ts="ts", right_ts="ts")
+        temporal.asof_join(left, right, on="k")
 
 
 def test_interval_overlap_join_bins_and_dedup(spark):

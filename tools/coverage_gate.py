@@ -3,7 +3,7 @@ scripts/coverage-report.sh per-package discipline, adapted to what the
 sandbox ships: no coverage/pytest-cov wheel, so the gate is a static
 AST audit rather than line counts).
 
-Rule: every PUBLIC symbol (top-level function/class not prefixed with
+Rule 1: every PUBLIC symbol (top-level function/class not prefixed with
 ``_``) defined in ``gcp_serverless_mapreduce_spark`` must be REFERENCED
 from outside its defining module — by the query suite, the tests, the
 entry point, or another package module.  Unreferenced public surface is
@@ -13,8 +13,19 @@ This is deliberately a NAME-reference audit, not an import audit: a
 symbol re-exported but never called still fails, so padding via
 re-export cannot pass.
 
-Usage: python tools/coverage_gate.py        (exit 1 on orphans or on a
-                                             missing CONSUMERS path)
+Rule 2: every keyword option (a parameter with a default) of a
+top-level package function that some caller calls must be CHOSEN by at
+least one call in ``CONSUMERS`` or ``perfbench/`` (read, never
+changed).  A call chooses an option when it passes it a value; passing
+the default again does not count, nor does passing through an
+unchosen option of the enclosing function.  The rule runs to a
+fixpoint, so an option chosen only by such pass-throughs is unchosen
+too.  An option nobody chooses is a setting no test or benchmark
+exercises: make it the value it always takes.
+
+Usage: python tools/coverage_gate.py        (exit 1 on orphans, on
+                                             never-chosen options or on
+                                             a missing CONSUMERS path)
        python tools/coverage_gate.py -v     (per-module table)
 """
 
@@ -22,6 +33,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 import sys
 from collections import defaultdict
 
@@ -30,6 +42,7 @@ PKG = os.path.join(ROOT, "gcp_serverless_mapreduce_spark")
 CONSUMERS = [PKG, os.path.join(ROOT, "tests"),
              os.path.join(ROOT, "__spark_entry__.py"),
              os.path.join(ROOT, "tools")]
+PERFBENCH = os.path.join(ROOT, "perfbench")
 
 # Framework-invoked methods/classes: referenced by Spark by NAME or
 # protocol, not by our code.  Kept explicit so additions are audited.
@@ -38,6 +51,11 @@ PROTOCOL_OK = {
     "partitions", "pushFilters", "initialOffset", "latestOffset",
     "commit", "abort", "write",
 }
+
+# Keyword options that may stay unchosen (Rule 2):
+# "pkg/module.py function(option)" -> reason.  Kept explicit so
+# additions are audited.
+OPTION_OK: dict[str, str] = {}
 
 
 def _is_registered(node) -> bool:
@@ -82,18 +100,17 @@ def missing_consumers(consumers: list[str]) -> list[str]:
     return [c for c in consumers if not os.path.exists(c)]
 
 
+def _py_files(path: str) -> list[str]:
+    if os.path.isfile(path):
+        return [path]
+    return sorted(os.path.join(dp, f) for dp, _dirs, fs in os.walk(path)
+                  for f in fs if f.endswith(".py"))
+
+
 def referenced_names() -> dict[str, set[str]]:
     """name -> set of files (outside the defining one) referencing it."""
     refs: dict[str, set[str]] = defaultdict(set)
-    files = []
-    for c in CONSUMERS:
-        if os.path.isfile(c):
-            files.append(c)
-            continue
-        for dirpath, _dirs, fs in os.walk(c):
-            files.extend(os.path.join(dirpath, f)
-                         for f in fs if f.endswith(".py"))
-    for full in files:
+    for full in (f for c in CONSUMERS for f in _py_files(c)):
         rel = os.path.relpath(full, ROOT)
         tree = ast.parse(open(full, encoding="utf-8").read())
         call_arg_strings: set[str] = set()
@@ -121,6 +138,102 @@ def referenced_names() -> dict[str, set[str]]:
         for s in call_arg_strings:
             refs[s].add(rel)
     return refs
+
+
+def _options(fn: ast.FunctionDef) -> dict[str, ast.expr]:
+    """option name -> default expression."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    opts = {p.arg: d for p, d in
+            zip(pos[len(pos) - len(a.defaults):], a.defaults)}
+    opts.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None)
+    return opts
+
+
+def _passed(fn: ast.FunctionDef, call: ast.Call) -> dict:
+    """parameter name -> value expression, or None where ``*args`` /
+    ``**kwargs`` may reach it."""
+    pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+    given: dict = {}
+    for i, v in enumerate(call.args):
+        if isinstance(v, ast.Starred):
+            given.update((p, None) for p in pos[i:] if p not in given)
+            break
+        if i < len(pos):
+            given[pos[i]] = v
+    for k in call.keywords:
+        if k.arg is None:
+            given.update((p, None) for p in _options(fn) if p not in given)
+        else:
+            given[k.arg] = k.value
+    return given
+
+
+def _same(value: ast.expr, value_mod: str, default: ast.expr,
+          default_mod: str) -> bool:
+    """True when ``value`` is ``default`` written again: an equal
+    literal, or the same expression in the defining module."""
+    if value_mod == default_mod and ast.dump(value) == ast.dump(default):
+        return True
+    try:
+        a, b = ast.literal_eval(value), ast.literal_eval(default)
+    except (ValueError, TypeError, SyntaxError):
+        return False
+    return type(a) is type(b) and a == b
+
+
+def unchosen_options(pkg: str, callers: list[str],
+                     root: str = ROOT) -> list[str]:
+    """``module.py:line function(option)`` for every keyword option of
+    a directly called top-level function in ``pkg`` that no call in
+    ``callers`` chooses (Rule 2)."""
+    defs: dict[str, list] = defaultdict(list)   # name -> [(mod, fn, opts)]
+    for full in _py_files(pkg):
+        mod = os.path.relpath(full, root)
+        tree = ast.parse(open(full, encoding="utf-8").read())
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[node.name].append((mod, node, _options(node)))
+    own = {(mod, fn.name): opts for lst in defs.values()
+           for mod, fn, opts in lst}
+    calls = []      # (callee name, call, caller module, enclosing def)
+    for c in callers:
+        for full in _py_files(c):
+            mod = os.path.relpath(full, root)
+            tree = ast.parse(open(full, encoding="utf-8").read())
+            for top in tree.body:
+                enc = top.name if isinstance(
+                    top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
+                for node in ast.walk(top):
+                    if not isinstance(node, ast.Call):
+                        continue
+                    f = node.func
+                    name = (f.id if isinstance(f, ast.Name) else
+                            f.attr if isinstance(f, ast.Attribute) else None)
+                    if name in defs:
+                        calls.append((name, node, mod, enc))
+    chosen: set[tuple[str, str, str]] = set()
+    grew = True
+    while grew:
+        grew = False
+        for name, call, mod, enc in calls:
+            outer = own.get((mod, enc), {})
+            for dmod, fn, opts in defs[name]:
+                for opt, value in _passed(fn, call).items():
+                    if opt not in opts or (dmod, name, opt) in chosen:
+                        continue
+                    if (isinstance(value, ast.Name) and value.id in outer
+                            and (mod, enc, value.id) not in chosen):
+                        value = outer[value.id]     # pass-through
+                    if value is None or not _same(value, mod, opts[opt],
+                                                  dmod):
+                        chosen.add((dmod, name, opt))
+                        grew = True
+    called = {name for name, *_ in calls}
+    return [f"{mod}:{fn.lineno} {name}({opt})"
+            for name in sorted(called) for mod, fn, opts in defs[name]
+            for opt in opts if (mod, name, opt) not in chosen]
 
 
 def main() -> int:
@@ -161,8 +274,14 @@ def main() -> int:
         print("ORPHANS (dead or untested public surface):")
         for o in orphans:
             print(f"  {o}")
-        return 1
-    return 0
+    unchosen = [u for u in unchosen_options(PKG, CONSUMERS + [PERFBENCH])
+                if re.sub(r":\d+ ", " ", u) not in OPTION_OK]
+    print(f"keyword options never chosen by a caller: {len(unchosen)}")
+    if unchosen:
+        print("NEVER-CHOSEN OPTIONS (make each the value it always takes):")
+        for u in unchosen:
+            print(f"  {u}")
+    return 1 if orphans or unchosen else 0
 
 
 if __name__ == "__main__":

@@ -45,8 +45,6 @@ FLOORS: dict[str, int] = {
     f"{_P}/registry.py": 85,
     f"{_P}/session.py": 60,
     f"{_P}/tables.py": 75,
-    f"{_P}/plans/__init__.py": 0,
-    f"{_P}/plans/policy.py": 0,        # sizing policy — pytest-only
     f"{_P}/streaming/__init__.py": 90,
     f"{_P}/streaming/pipeline.py": 85,
     f"{_P}/streaming/stateful.py": 30,     # state kernels run in workers
