@@ -49,12 +49,14 @@ STOPWORDS: tuple[str, ...] = (
     "you'll", "you're", "you've", "your",
 )
 
-# Gutenberg markers, same regex strings as the reference (split.go:92, :101,
-# :107).  Java and Go (RE2) agree on this syntax; `.*` excludes newlines in
-# both, so the marker match stays within one line.
-_HEADER_RE = r"\*\*\*.*START OF TH(E|IS) PROJECT GUTENBERG EBOOK.*\*\*\*"
+# Gutenberg markers, the reference's regex strings (split.go:92, :101,
+# :107) with `.` written `[^\n]`.  RE2's `.` matches any character but
+# `\n`; Java's `.` also stops at `\r`, U+0085, U+2028 and U+2029, so a
+# marker line holding one of those would not match.  `[^\n]` reads the same
+# in Java, RE2 and DuckDB: each marker match stays within one line.
+_HEADER_RE = r"\*\*\*[^\n]*START OF TH(E|IS) PROJECT GUTENBERG EBOOK[^\n]*\*\*\*"
 _FOOTER1_RE = r"End of[ th(e|is)]* Project Gutenberg"
-_FOOTER2_RE = r"\*\*\*.*END OF TH(E|IS) PROJECT GUTENBERG EBOOK.*\*\*\*"
+_FOOTER2_RE = r"\*\*\*[^\n]*END OF TH(E|IS) PROJECT GUTENBERG EBOOK[^\n]*\*\*\*"
 
 # Go's unicode.IsSpace restricted to Latin-1, the separator set of
 # strings.Fields (split.go:68) on the decoded corpus.  Java's `\s` lacks

@@ -838,19 +838,18 @@ def mixture_reweight(docs: DataFrame) -> DataFrame:
                     F.round(target / actual, 6).alias("weight")))
 
 
-def weighted_sample_per_group(docs: DataFrame, group_col: str,
-                              n: int) -> DataFrame:
-    """Per-GROUP Efraimidis-Spirakis weighted sample: the distributed
+def weighted_sample_per_group(docs: DataFrame, n: int) -> DataFrame:
+    """Per-``source`` Efraimidis-Spirakis weighted sample: the distributed
     per-key reservoir — top ``n`` rows per group by the same quantized
     -ln(u)/w key as :func:`weighted_sample` (md5-derived u, 9dp
     quantization + id tie-break).  One exchange on the group key; the
     rank window never sees more than a group's rows, so this is how a
     per-domain sample is drawn from a 100 TB corpus without a global
-    sort.  -> (group, doc_id, weight, samp_key, samp_rank<=n)."""
+    sort.  -> (source, doc_id, weight, samp_key, samp_rank<=n)."""
     key = es_samp_key("doc_id", "n_chars")
-    w = (Window.partitionBy(group_col)
+    w = (Window.partitionBy("source")
          .orderBy(F.col("samp_key").asc(), F.col("doc_id").asc()))
-    return (docs.select(F.col(group_col), F.col("doc_id"),
+    return (docs.select(F.col("source"), F.col("doc_id"),
                         F.col("n_chars").cast("long").alias("weight"),
                         key.alias("samp_key"))
             .withColumn("samp_rank", F.row_number().over(w).cast("long"))

@@ -107,7 +107,7 @@ def shingle_array(k: int = 3, arrow: bool = True):
             return pd.Series(out)
 
         return _shingles("text")
-    toks = _toks_sql("text")
+    toks = _TOKS_SQL
     shingles = F.when(
         F.size(tokens_col()) >= k,
         F.expr(
@@ -163,8 +163,7 @@ def word_shingles(docs: DataFrame, k: int = 3,
             .filter(F.col("shingle").isNotNull()))
 
 
-def _toks_sql(text_col: str) -> str:
-    return f"split(trim(lower({text_col})), '\\\\s+')"
+_TOKS_SQL = "split(trim(lower(text)), '\\\\s+')"
 
 
 def minhash_signatures(docs: DataFrame, num_perm: int = 8) -> DataFrame:
@@ -280,7 +279,7 @@ def inline_band_hashes(num_perm: int = 8, bands: int = 4,
             return pd.Series(out)
 
         return _bands("text")
-    toks = _toks_sql("text")
+    toks = _TOKS_SQL
 
     def sh(var: str) -> str:
         return (f"array_distinct(IF(size({toks}) >= 3, "

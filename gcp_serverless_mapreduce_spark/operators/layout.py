@@ -55,13 +55,14 @@ def zorder_key(x: Column, y: Column) -> Column:
     return key.cast("long")
 
 
-def zorder_key_sql(x: str, y: str) -> str:
-    """The DuckDB twin of :func:`zorder_key` (same fold, same masking) —
-    kept next to the Spark expression so the two cannot drift apart."""
+def zorder_key_sql(y: str) -> str:
+    """The DuckDB twin of :func:`zorder_key` (same fold, same masking)
+    with ``o_custkey`` as x — kept next to the Spark expression so the
+    two cannot drift apart."""
     mask = (1 << ZBITS) - 1
     return (
         f"list_sum(list_transform(generate_series(0, {ZBITS - 1}), i -> "
-        f"(((({x} & {mask}) >> i) & 1) << (2 * i)) "
+        f"((((o_custkey & {mask}) >> i) & 1) << (2 * i)) "
         f"+ (((({y} & {mask}) >> i) & 1) << (2 * i + 1))))"
     )
 
@@ -160,16 +161,17 @@ def hilbert_key_expr(x: Column, y: Column) -> Column:
     return F.aggregate(levels, init, step).getField("d").cast("long")
 
 
-def hilbert_ctes_sql(xcol: str, ycol: str, base: str) -> tuple[str, str]:
-    """DuckDB twin of :func:`hilbert_key` as (cte_block, final_cte_name):
+def hilbert_ctes_sql() -> tuple[str, str]:
+    """DuckDB twin of :func:`hilbert_key` over x = ``o_custkey``,
+    y = ``day_no`` of the CTE ``base``, as (cte_block, final_cte_name):
     one CTE per level carrying (d, hx, hy) next to the base columns —
     same fold, same n-1 reflection, BIGINT throughout (``s*s`` at the
     top level overflows INT32).  Kept beside the Spark expression so the
     two cannot drift apart (the zorder_key_sql convention)."""
     mask = (1 << ZBITS) - 1
     steps = [f"h0 AS (SELECT *, CAST(0 AS BIGINT) AS d, "
-             f"CAST({xcol} & {mask} AS BIGINT) AS hx, "
-             f"CAST({ycol} & {mask} AS BIGINT) AS hy FROM {base})"]
+             f"CAST(o_custkey & {mask} AS BIGINT) AS hx, "
+             f"CAST(day_no & {mask} AS BIGINT) AS hy FROM base)"]
     for idx, i in enumerate(range(ZBITS - 1, -1, -1), start=1):
         s = 1 << i
         steps.append(

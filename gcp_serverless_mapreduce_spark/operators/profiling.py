@@ -74,10 +74,10 @@ def histogram_quantiles(df: DataFrame, group_col: str, value_col: str,
                     F.round(est, 6).alias("est")))
 
 
-def trailing_zscore(df: DataFrame, series_col: str, bucket_col: str,
-                    count_col: str, trail: int = ANOM_TRAIL,
+def trailing_zscore(df: DataFrame, series_col: str, trail: int = ANOM_TRAIL,
                     z_flag: float = ANOM_Z) -> DataFrame:
-    """-> input + (mean_t, sd_t, z, is_anomaly) per (series, bucket).
+    """-> input + (mean_t, sd_t, z, is_anomaly) per (series, ``bucket``),
+    scoring the count column ``n``.
 
     mean/stddev over the ``trail`` PRECEDING buckets only (never the
     current one — self-inclusion would dampen the very spike being
@@ -88,15 +88,15 @@ def trailing_zscore(df: DataFrame, series_col: str, bucket_col: str,
     rounded to 4 to absorb cross-engine Welford-vs-sum-of-squares ulp
     noise.
     """
-    w = (Window.partitionBy(series_col).orderBy(bucket_col)
+    w = (Window.partitionBy(series_col).orderBy("bucket")
          .rowsBetween(-trail, -1))
     full = F.count(F.lit(1)).over(w) == trail
-    mean_t = F.avg(F.col(count_col)).over(w)
-    sd_t = F.stddev(F.col(count_col)).over(w)
+    mean_t = F.avg(F.col("n")).over(w)
+    sd_t = F.stddev(F.col("n")).over(w)
     z = F.when(full & (sd_t > 0),
-               (F.col(count_col) - mean_t) / sd_t)
+               (F.col("n") - mean_t) / sd_t)
     flat_spike = (full & (sd_t == 0)
-                  & (F.col(count_col).cast("double") != mean_t))
+                  & (F.col("n").cast("double") != mean_t))
     return (df
             .withColumn("mean_t", F.when(full, F.round(mean_t, 6)))
             .withColumn("sd_t", F.when(full, F.round(sd_t, 6)))
@@ -135,8 +135,9 @@ GD_LR = 0.5
 GD_Q = 1_000_000  # gradient quantum: floor(g * 1e6) summed as BIGINTs
 
 
-def logistic_gd_train(df: DataFrame, x_col: str, y_col: str):
-    """-> (iter, w, b): one-feature logistic regression trained by
+def logistic_gd_train(df: DataFrame):
+    """-> (iter, w, b): one-feature logistic regression of label ``y`` on
+    feature ``x``, trained by
     ``GD_ITERS`` synchronous batch-GD steps — the distributed training loop
     in its simplest exact form.
 
@@ -157,8 +158,8 @@ def logistic_gd_train(df: DataFrame, x_col: str, y_col: str):
     own precision.)  The oracle unrolls every step as CTEs with
     identical arithmetic, so the trained weights match bit-for-bit.
     """
-    base = df.select(F.col(x_col).cast("double").alias("x"),
-                     F.col(y_col).cast("double").alias("y"))
+    base = df.select(F.col("x").cast("double").alias("x"),
+                     F.col("y").cast("double").alias("y"))
     base = base.localCheckpoint()  # scanned once per step, not per plan
     w, b = 0.0, 0.0
     out = []
@@ -187,9 +188,10 @@ PI_SCALE = 1 << 20     # iterate components renormalized to [-2^20, 2^20]
 PI_ROUNDS = 4
 
 
-def gram_matrix(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
+def gram_matrix(emb: DataFrame, dim: int) -> DataFrame:
     """-> (i, j, g): the exact dim x dim Gram matrix sum_v q[i]*q[j]
-    over fixed-point quantized vectors q = floor(x * PI_EMB_Q).
+    over fixed-point quantized ``embedding`` vectors
+    q = floor(x * PI_EMB_Q).
 
     The distributed shape is the one that matters at 100 TB: each row
     expands IN-ROW (nested transform, whole-stage codegen, no join) to
@@ -236,14 +238,14 @@ def gram_matrix(emb: DataFrame, vec_col: str, dim: int) -> DataFrame:
                                 "g": G.ravel()})
 
     return (emb
-            .where(F.size(F.col(vec_col)) == dim)
-            .select(F.col(vec_col).cast("array<double>").alias("_v"))
+            .where(F.size(F.col("embedding")) == dim)
+            .select(F.col("embedding").cast("array<double>").alias("_v"))
             .mapInPandas(gram_partials, "i int, j int, g long")
             .groupBy("i", "j")
             .agg(F.sum("g").alias("g")))
 
 
-def power_iteration_pc1(emb: DataFrame, vec_col: str, dim: int,
+def power_iteration_pc1(emb: DataFrame, dim: int,
                         rounds: int = PI_ROUNDS) -> DataFrame:
     """-> (round, i, v): the power-iteration trajectory toward the top
     principal direction of the (uncentered) Gram matrix, in EXACT
@@ -266,20 +268,20 @@ def power_iteration_pc1(emb: DataFrame, vec_col: str, dim: int,
     DYNAMICS — a transposed matrix or swapped normalization shows up in
     round 1, not as a mysteriously-rotated final vector.
     """
-    traj = pc1_trajectory(emb, vec_col, dim, rounds)
+    traj = pc1_trajectory(emb, dim, rounds)
     out = [(rnd, i, v[i])
            for rnd, v in enumerate(traj) for i in range(dim)]
     return emb.sparkSession.createDataFrame(
         out, "rnd long, i long, v long")
 
 
-def pc1_trajectory(emb: DataFrame, vec_col: str, dim: int,
+def pc1_trajectory(emb: DataFrame, dim: int,
                    rounds: int = PI_ROUNDS) -> list[list[int]]:
     """The integer power-iteration trajectory [v_0, ..., v_rounds]
     behind power_iteration_pc1 (see its docstring for the exactness
     argument); exposed so downstream operators can reuse the converged
     vector as plan literals."""
-    cells = gram_matrix(emb, vec_col, dim).collect()
+    cells = gram_matrix(emb, dim).collect()
     G: dict[tuple[int, int], int] = {(r["i"], r["j"]): r["g"]
                                      for r in cells}
     v = [PI_SCALE] * dim
@@ -302,11 +304,11 @@ def pc1_trajectory(emb: DataFrame, vec_col: str, dim: int,
 PC1_BUCKET_WIDTH = 1 << 37
 
 
-def pc1_projection_hist(emb: DataFrame, vec_col: str, dim: int,
-                        label_col: str,
+def pc1_projection_hist(emb: DataFrame, dim: int,
                         rounds: int = PI_ROUNDS,
                         width: int = PC1_BUCKET_WIDTH) -> DataFrame:
-    """-> (bucket, n_vecs, n_labels, min_proj, max_proj): the corpus
+    """-> (bucket, n_vecs, n_labels, min_proj, max_proj): the ``embedding``
+    corpus
     histogrammed along its top principal direction — the semantic-
     bucketing step (SemDeDup-style pipelines project onto leading
     components before bucketed near-dup search, and skew along PC1 is
@@ -319,7 +321,7 @@ def pc1_projection_hist(emb: DataFrame, vec_col: str, dim: int,
     the fixed bucket grid.  Both the quantized coordinates and v are
     exact integers, so proj is exact and the floor-of-division
     bucketing reproduces in the oracle bit-for-bit."""
-    v = pc1_trajectory(emb, vec_col, dim, rounds)[-1]
+    v = pc1_trajectory(emb, dim, rounds)[-1]
     # Exact integer projection sum_i floor(x_i * Q) * v_i as an Arrow-
     # batched kernel (int64 — same width and therefore same overflow
     # contract as the previous interpreted zip_with/aggregate fold;
@@ -339,17 +341,17 @@ def pc1_projection_hist(emb: DataFrame, vec_col: str, dim: int,
         q = np.floor(m * float(PI_EMB_Q)).astype(np.int64)
         return pd.Series(q @ varr)
 
-    proj = proj_udf(F.col(vec_col).cast("array<double>"))
+    proj = proj_udf(F.col("embedding").cast("array<double>"))
     # floor division on a possibly-negative BIGINT: pmod identity
     bucket = ((F.col("_proj")
                - F.pmod(F.col("_proj"), F.lit(width))) / width) \
         .cast("long")
     return (emb
-            .where(F.size(F.col(vec_col)) == dim)
+            .where(F.size(F.col("embedding")) == dim)
             .withColumn("_proj", proj)
             .withColumn("bucket", bucket)
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n_vecs"),
-                 F.countDistinct(F.col(label_col)).alias("n_labels"),
+                 F.countDistinct(F.col("label")).alias("n_labels"),
                  F.min("_proj").alias("min_proj"),
                  F.max("_proj").alias("max_proj")))

@@ -476,11 +476,10 @@ def srp_multiprobe_topk(emb: DataFrame, k: int, planes: list[list[int]],
                     F.round("sim", 4).alias("sim")))
 
 
-def blocked_cosine_pairs(emb: DataFrame, block_col: str,
-                         threshold: float) -> DataFrame:
-    """-> (vec_a, vec_b, sim): unordered within-block pairs with cosine
+def blocked_cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
+    """-> (vec_a, vec_b, sim): unordered within-``label`` pairs with cosine
     >= threshold, sim rounded to 4 — the embedding near-dup primitive
-    (the block key stands in for an IVF/LSH bucket at corpus scale).
+    (the label block stands in for an IVF/LSH bucket at corpus scale).
 
     Per-block vectorized kernel (same bit-parity shape as the ANN
     re-ranks): pairwise dots accumulate dimension by dimension — the
@@ -507,8 +506,8 @@ def blocked_cosine_pairs(emb: DataFrame, block_col: str,
 
     units = (unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
-             .select(F.col("vec_id").alias("vid"), "unit", block_col))
-    raw = units.groupBy(block_col).applyInPandas(
+             .select(F.col("vec_id").alias("vid"), "unit", "label"))
+    raw = units.groupBy("label").applyInPandas(
         block_pairs, "vec_a long, vec_b long, sim double")
     return raw.select("vec_a", "vec_b", F.round("sim", 4).alias("sim"))
 
@@ -787,10 +786,10 @@ def ivf_fixed_topk(emb: DataFrame, k: int, centers: list[list[float]],
     return _ivf_search(emb, k, centers, n_probe)
 
 
-def ivf_topk(emb: DataFrame, k: int) -> DataFrame:
+def ivf_topk(emb: DataFrame) -> DataFrame:
     """IVF (inverted-file) ANN: KMeans cells + multi-probe exact re-rank.
 
-    -> (query_id, neighbor_id, rank, sim): per-vector top-k among the
+    -> (query_id, neighbor_id, rank, sim): per-vector top-5 among the
     vectors in its 2 nearest cells.
 
     The real-index counterpart of the SRP buckets: 16 cells come from the
@@ -834,7 +833,7 @@ def ivf_topk(emb: DataFrame, k: int) -> DataFrame:
         feats.unpersist()
     centers = [[float(x) for x in np.asarray(c)]
                for c in model.clusterCenters()]
-    return _ivf_search(emb, k, centers, 2)
+    return _ivf_search(emb, 5, centers, 2)
 
 
 # Fixed-point quantum for Lloyd centroid sums: per-dim contributions
@@ -863,9 +862,9 @@ def train_sample_mod(n_rows: int, target: int = IVF_TRAIN_TARGET) -> int:
     return max(1, n_rows // target)
 
 
-def train_sample_pred(id_col: str, mod: int) -> Column:
+def train_sample_pred(mod: int) -> Column:
     """Deterministic hash-sample membership: keep rows whose
-    md5(CAST(id AS STRING)) 8-hex-char prefix is ≡ 0 (mod ``mod``).
+    md5(CAST(vec_id AS STRING)) 8-hex-char prefix is ≡ 0 (mod ``mod``).
 
     Pseudo-uniform and engine-portable — the DuckDB oracle evaluates
     the identical predicate as
@@ -874,7 +873,7 @@ def train_sample_pred(id_col: str, mod: int) -> Column:
     end-to-end.  Unlike ``TABLESAMPLE``/``rand()``, membership is a
     pure function of the id: stable across retries, partitionings and
     engines."""
-    h = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
+    h = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
                16, 10)
     return h.cast("long") % mod == 0
 
@@ -985,8 +984,7 @@ def ivf_lloyd_topk(emb: DataFrame, k: int, init_centers: list[list[float]],
     if train_target is not None:
         if n_rows is None:
             n_rows = emb.count()
-        pred = train_sample_pred(
-            "vec_id", train_sample_mod(n_rows, train_target))
+        pred = train_sample_pred(train_sample_mod(n_rows, train_target))
     else:
         pred = None
     centers = lloyd_centroids(emb, init_centers, rounds, train_filter=pred)
@@ -1040,8 +1038,7 @@ def ivf_incremental_topk(emb: DataFrame, inc_mod: int, k: int,
     old_pred = F.col("vec_id") % inc_mod != 0
     if n_old_rows is None:
         n_old_rows = emb.filter(old_pred).count()
-    sample = train_sample_pred(
-        "vec_id", train_sample_mod(n_old_rows, train_target))
+    sample = train_sample_pred(train_sample_mod(n_old_rows, train_target))
     centers = lloyd_centroids(emb, init_centers, rounds,
                               train_filter=sample & old_pred)
     return _ivf_search(emb, k, centers, n_probe,

@@ -75,17 +75,18 @@ def asof_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     return out.select(*keep, *renames)
 
 
-def range_join_binned(left: DataFrame, right: DataFrame, on: str,
+def range_join_binned(left: DataFrame, right: DataFrame,
                       lo_s: int = 0, hi_s: int = 300) -> DataFrame:
     """Rows of ``right`` whose ts lies in [left.ts + lo_s, left.ts + hi_s]
-    (seconds), per key — as a sparse equi-join on (key, time bin).
+    (seconds), per ``user_id`` — as a sparse equi-join on (user_id, time
+    bin).
 
     Bin width = window span: each left row's window touches at most two
     bins, so the left side explodes ×2 (bounded), the right side not at
     all, and the join is a plain shuffle/broadcast equi-join Catalyst can
     plan normally — never an O(n·m) BroadcastNestedLoopJoin.
     """
-    right_cols = [c for c in right.columns if c not in (on, "ts")]
+    right_cols = [c for c in right.columns if c not in ("user_id", "ts")]
     span = max(hi_s - lo_s, 1)
 
     # Timestamp-type-agnostic epoch seconds: TIMESTAMP_NTZ cannot cast to
@@ -100,7 +101,7 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
     ))
     lhs = left.withColumn("_bin", F.explode(lbins))
     rhs = right.select(
-        F.col(on).alias("_rk"),
+        F.col("user_id").alias("_rk"),
         (r_epoch / span).cast("long").alias("_bin"),
         F.col("ts").alias("_rts"),
         *[F.col(c).alias(f"_r_{c}") for c in right_cols],
@@ -110,7 +111,7 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
     # comparison itself)
     joined = lhs.join(
         rhs,
-        (F.col(on) == F.col("_rk")) & (lhs["_bin"] == rhs["_bin"]),
+        (F.col("user_id") == F.col("_rk")) & (lhs["_bin"] == rhs["_bin"]),
     ).filter(
         (F.col("_rts") >= F.col("ts") + F.expr(f"INTERVAL {lo_s} SECOND"))
         & (F.col("_rts") <= F.col("ts") + F.expr(f"INTERVAL {hi_s} SECOND"))
@@ -125,12 +126,12 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
 DAY_US = 86_400_000_000
 
 
-def interval_overlap_join(left: DataFrame, right: DataFrame,
-                          key: str) -> DataFrame:
-    """Interval x interval overlap join per key — the third temporal-join
-    shape next to as-of (point x latest-point) and range (point x window).
+def interval_overlap_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Interval x interval overlap join per ``user_id`` — the third
+    temporal-join shape next to as-of (point x latest-point) and range
+    (point x window).
 
-    Inputs carry ``(key, id, s_us, e_us)`` with s <= e in epoch
+    Inputs carry ``(user_id, id, s_us, e_us)`` with s <= e in epoch
     microseconds.  Both sides explode each interval into the time bins
     it covers (``sequence`` of floor(s/bin) .. floor(e/bin)); the join is
     an EQUI-join on (key, bin), so fan-out is bounded by
@@ -145,7 +146,7 @@ def interval_overlap_join(left: DataFrame, right: DataFrame,
     """
     def binned(df: DataFrame, tag: str) -> DataFrame:
         return (df.select(
-            F.col(key),
+            F.col("user_id"),
             F.col("id").alias(f"{tag}_id"),
             F.col("s_us").alias(f"s_{tag}"),
             F.col("e_us").alias(f"e_{tag}"),
@@ -156,7 +157,7 @@ def interval_overlap_join(left: DataFrame, right: DataFrame,
     a, b = binned(left, "a"), binned(right, "b")
     start = F.greatest(F.col("s_a"), F.col("s_b"))
     overlap = F.least(F.col("e_a"), F.col("e_b")) - start
-    out = (a.join(b, [key, "bin"])
+    out = (a.join(b, ["user_id", "bin"])
            .where(F.floor(start / DAY_US) == F.col("bin"))
            .withColumn("overlap_us", overlap)
            .drop("bin"))

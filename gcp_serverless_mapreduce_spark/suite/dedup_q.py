@@ -527,7 +527,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import blocked_cosine_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return blocked_cosine_pairs(emb, "label", COSINE_THRESHOLD)
+    return blocked_cosine_pairs(emb, COSINE_THRESHOLD)
 
 
 # SymSpell fuzzy-match gate: the fixture vocabulary is tiny word soup, so

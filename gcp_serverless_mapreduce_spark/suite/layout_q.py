@@ -25,7 +25,7 @@ DATE_EPOCH = "1995-01-01"
 BUCKET_SHIFT = 18
 
 _ZKEY_SQL = layout.zorder_key_sql(
-    "o_custkey", f"datediff('day', DATE '{DATE_EPOCH}', CAST(o_orderdate AS DATE))")
+    f"datediff('day', DATE '{DATE_EPOCH}', CAST(o_orderdate AS DATE))")
 
 
 @register("zorder_layout_keys", f"""
@@ -225,7 +225,7 @@ def fim_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Hilbert-curve clustering keys -----------------------------------------
 
-_H_CTES, _H_LAST = layout.hilbert_ctes_sql("o_custkey", "day_no", "base")
+_H_CTES, _H_LAST = layout.hilbert_ctes_sql()
 
 
 @register("hilbert_layout_keys", f"""

@@ -94,7 +94,7 @@ def hourly_event_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (ev.withColumn("bucket", F.date_trunc("hour", F.col("ts")))
               .groupBy("event_type", "bucket")
               .agg(F.count(F.lit(1)).cast("long").alias("n")))
-    scored = profiling.trailing_zscore(hourly, "event_type", "bucket", "n")
+    scored = profiling.trailing_zscore(hourly, "event_type")
     return scored.select(
         "event_type", F.date_format("bucket", _FMT).alias("bucket_start"),
         "n", "mean_t", "sd_t", "z", "is_anomaly")
@@ -243,7 +243,7 @@ def logistic_gd_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ev.select((F.col("value") / F.lit(100.0)).alias("x"),
                   (F.col("event_type") == "purchase")
                   .cast("double").alias("y"))
-    return profiling.logistic_gd_train(d, "x", "y")
+    return profiling.logistic_gd_train(d)
 
 
 # ---------------------------------------------------------------------------
@@ -304,7 +304,7 @@ def power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitening and semantic-dedup projections.
     See operators/profiling.py:power_iteration_pc1."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return profiling.power_iteration_pc1(emb, "embedding", PI_DIM)
+    return profiling.power_iteration_pc1(emb, PI_DIM)
 
 
 def _pc1_hist_sql() -> str:
@@ -348,7 +348,7 @@ def pc1_projection_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing bit-for-bit via the pmod identity in HUGEINT.
     See operators/profiling.py:pc1_projection_hist."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return profiling.pc1_projection_hist(emb, "embedding", PI_DIM, "label")
+    return profiling.pc1_projection_hist(emb, PI_DIM)
 
 
 @register("value_outliers_mad", """

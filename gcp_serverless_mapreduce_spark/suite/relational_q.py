@@ -1,19 +1,23 @@
-"""Relational breadth: joins, aggregations, windows, set ops, date/JSON
-functions, sort/limit, rollup/cube, hash-bucketing (SURVEY §2.6 — operator
-categories the reference lacks; the new engine gets them from Spark
-built-ins, exercised over the fixture star schema).
+"""Relational breadth over the fixture star schema: aggregations, joins,
+windows, set operations, date/JSON/string functions, sort/limit,
+rollup/cube/grouping sets and hash-bucketing (SURVEY §2.6 — operator
+categories the reference lacks, taken from Spark built-ins).
+
+Most queries are one SQL text registered with ``register_sql``: Spark runs
+it with ``spark.sql`` over views of the fixture tables, DuckDB runs it as
+the twin.  Catalyst plans the text: dimension joins broadcast under the
+auto-broadcast threshold, aggregates are partial+final hash aggregates,
+``ORDER BY ... LIMIT`` is a TakeOrderedAndProject, EXISTS / NOT EXISTS
+become semi / anti joins, and filters and projections reach the parquet
+scan (pushdown audited in tests/test_plans_and_sinks.py).  A DataFrame
+builder remains where the twin uses DuckDB-only SQL (``strftime``,
+``epoch_us``, ``QUALIFY``, ``generate_series`` ...) or where the query
+pins a Spark surface the text does not use: the pandas UDAF, ``pivot``,
+the merge hint and checkpoint behind the AQE skew split, and streaming.
 
 Cross-engine determinism: money math in DECIMAL (exact, order-independent)
 cast to DOUBLE at the end; counts cast to BIGINT; timestamps formatted or
 epoch-cast; every ORDER BY under a LIMIT made total with key tiebreakers.
-
-Scale notes (the judge's question — "would this survive 100×?"):
-- dim joins (region/nation/customer) are broadcast-eligible; fact-fact
-  joins shuffle on the join key with AQE skew handling;
-- all aggregations are partial+final hash aggs (map-side combine free);
-- top-k = TakeOrderedAndProject (no global sort materialization);
-- filters/projections sit directly on the parquet scan (pushdown audited in
-  tests/test_plans_and_sinks.py).
 """
 
 from __future__ import annotations
@@ -23,24 +27,14 @@ from pyspark.sql import functions as F
 
 from ..operators import profiling, sketches
 from ..operators.sketches import KMV_HEX_DIGITS, KMV_K, KMV_NUMER
-from ..registry import register
+from ..registry import register, register_sql
 from ..tables import load_table
 
-
-def _dec(col: str, typ: str = "decimal(18,2)"):
-    return F.col(col).cast(typ)
-
-
-def _one():
-    # Function, not module constant: building a Column requires an active
-    # SparkSession, which doesn't exist at import time.
-    return F.lit(1).cast("decimal(8,4)")
-
-# DuckDB-side decimal fragments, mirrored 1:1 with the Spark expressions.
-# Widths chosen so products stay within DuckDB's multiplication width caps:
-# the money columns are exactly 2dp and rates 2dp (verified against the
-# fixtures), so (18,2)*(8,4) -> scale 6 is exact; revenue is recast to
-# DECIMAL(18,6) (no rounding: same scale) before the tax multiply.
+# Decimal fragments of the SQL texts.  Widths chosen so products stay
+# within DuckDB's multiplication width caps: the money columns are
+# exactly 2dp and rates 2dp (verified against the fixtures), so
+# (18,2)*(8,4) -> scale 6 is exact; revenue is recast to DECIMAL(18,6)
+# (no rounding: same scale) before the tax multiply.
 _SQL_PRICE = "CAST(l_extendedprice AS DECIMAL(18,2))"
 _SQL_DISC = "CAST(l_discount AS DECIMAL(8,4))"
 _SQL_TAX = "CAST(l_tax AS DECIMAL(8,4))"
@@ -48,18 +42,11 @@ _SQL_QTY = "CAST(l_quantity AS DECIMAL(18,2))"
 _SQL_REV = f"CAST({_SQL_PRICE} * (CAST(1 AS DECIMAL(8,4)) - {_SQL_DISC}) AS DECIMAL(18,6))"
 
 
-def _revenue():
-    """l_extendedprice * (1 - l_discount), exact decimal (2dp x 4dp -> 6dp,
-    recast to (18,6) to bound downstream multiplication widths)."""
-    return (_dec("l_extendedprice") * (_one() - _dec("l_discount", "decimal(8,4)"))
-            ).cast("decimal(18,6)")
-
-
 # --------------------------------------------------------------------------
 # Aggregations (A-family generalized: sum/avg/min/max/count, having)
 # --------------------------------------------------------------------------
 
-@register("q1_pricing_summary", f"""
+register_sql("q1_pricing_summary", f"""
 SELECT l_returnflag, l_linestatus,
        CAST(SUM({_SQL_QTY}) AS DOUBLE) AS sum_qty,
        CAST(SUM({_SQL_PRICE}) AS DOUBLE) AS sum_base_price,
@@ -72,76 +59,35 @@ FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
 GROUP BY l_returnflag, l_linestatus
 """)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: the canonical partial+final hash-agg (SURVEY A1/A2
-    generalized to numeric aggregates)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(_revenue()).cast("double").alias("sum_disc_price"),
-            F.sum(_revenue() * (_one() + _dec("l_tax"))).cast("double").alias("sum_charge"),
-            (F.sum(_dec("l_quantity")).cast("double") / F.count("*")).alias("avg_qty"),
-            (F.sum(_dec("l_extendedprice")).cast("double") / F.count("*")).alias("avg_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
 
 
-@register("having_orders_per_customer", """
+register_sql("having_orders_per_customer", """
 SELECT o_custkey, COUNT(*) AS n_orders,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
 FROM orders
 GROUP BY o_custkey
 HAVING COUNT(*) >= 12
 """)
-def having_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HAVING on an aggregate (A3 generalized from set-size to count)."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy("o_custkey")
-        .agg(F.count("*").alias("n_orders"),
-             F.sum(_dec("o_totalprice")).cast("double").alias("total_spend"))
-        .filter(F.col("n_orders") >= 12)
-    )
 
 
-@register("rollup_lineitem_status", f"""
+register_sql("rollup_lineitem_status", f"""
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
        CAST(SUM({_SQL_QTY}) AS DOUBLE) AS sum_qty
 FROM lineitem
 GROUP BY ROLLUP(l_returnflag, l_linestatus)
 """)
-def rollup_lineitem_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouping-sets surface: ROLLUP (absent in reference, SURVEY §2.3)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count("*").alias("n"),
-        F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-    )
 
 
-@register("cube_orders_status_priority", """
+register_sql("cube_orders_status_priority", """
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
 FROM orders
 GROUP BY CUBE(o_orderstatus, o_orderpriority)
 """)
-def cube_orders_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n"))
 
 
-@register("distinct_status_priority", """
+register_sql("distinct_status_priority", """
 SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
 """)
-def distinct_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global distinct (P4's global cousin, SURVEY A5)."""
-    return load_table(spark, sf_dir, "orders").select(
-        "o_orderstatus", "o_orderpriority").distinct()
 
 
 # --------------------------------------------------------------------------
@@ -165,9 +111,13 @@ def q3_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: selective dim filter -> fact joins -> agg -> top-k.
     Catalyst broadcasts the filtered customer side; top-k compiles to
     TakeOrderedAndProject (no global sort)."""
-    t = _load_tables3(spark, sf_dir)
-    cust, orders, li = t["customer"], t["orders"], t["lineitem"]
+    cust, orders, li = (load_table(spark, sf_dir, n)
+                        for n in ("customer", "orders", "lineitem"))
     cut = F.lit("1998-03-15").cast("timestamp_ntz")
+    revenue = (F.col("l_extendedprice").cast("decimal(18,2)")
+               * (F.lit(1).cast("decimal(8,4)")
+                  - F.col("l_discount").cast("decimal(8,4)"))
+               ).cast("decimal(18,6)")
     return (
         cust.filter(F.col("c_mktsegment") == "BUILDING")
         .join(orders.filter(F.col("o_orderdate") < cut),
@@ -175,7 +125,7 @@ def q3_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(li.filter(F.col("l_shipdate") > cut),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
+        .agg(F.sum(revenue).cast("double").alias("revenue"))
         .select("l_orderkey", "revenue",
                 F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"))
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
@@ -183,12 +133,7 @@ def q3_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _load_tables3(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n)
-            for n in ("customer", "orders", "lineitem")}
-
-
-@register("q5_supplier_volume_by_nation", f"""
+register_sql("q5_supplier_volume_by_nation", f"""
 SELECT n_name, CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue
 FROM region JOIN nation   ON n_regionkey = r_regionkey
             JOIN supplier ON s_nationkey = n_nationkey
@@ -198,100 +143,46 @@ WHERE o_orderdate >= TIMESTAMP '1996-01-01'
   AND o_orderdate <  TIMESTAMP '1999-01-01'
 GROUP BY n_name
 """)
-def q5_supplier_volume_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-hop star join (region->nation->supplier->lineitem->orders).
-    The three dims are broadcast; only lineitem x orders shuffles."""
-    region = load_table(spark, sf_dir, "region")
-    nation = load_table(spark, sf_dir, "nation")
-    supplier = load_table(spark, sf_dir, "supplier")
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        li.join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-        .join(orders.filter(
-            (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-            & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp_ntz"))),
-            F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("n_name")
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
-    )
 
 
-@register("orders_per_nation", """
+register_sql("orders_per_nation", """
 SELECT n_name, COUNT(*) AS n_orders
 FROM nation JOIN customer ON c_nationkey = n_nationkey
             JOIN orders   ON o_custkey = c_custkey
 GROUP BY n_name
 """)
-def orders_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = load_table(spark, sf_dir, "nation")
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name").agg(F.count("*").alias("n_orders"))
-    )
 
 
-@register("customers_without_orders", """
+register_sql("customers_without_orders", """
 SELECT c_custkey, c_name FROM customer c
 WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 """)
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti join (left_anti — Spark's NOT EXISTS physical form)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return cust.join(orders, F.col("c_custkey") == F.col("o_custkey"),
-                     "left_anti").select("c_custkey", "c_name")
 
 
-@register("customers_with_big_orders", """
+register_sql("customers_with_big_orders", """
 SELECT c_custkey, c_name FROM customer c
 WHERE EXISTS (SELECT 1 FROM orders o
               WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
 """)
-def customers_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi join (left_semi — EXISTS)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    return cust.join(orders.filter(F.col("o_totalprice") > 400000),
-                     F.col("c_custkey") == F.col("o_custkey"),
-                     "left_semi").select("c_custkey", "c_name")
 
 
-@register("order_fill_stats", f"""
+# COUNT of the nullable side counts only matches; an order without lines
+# keeps revenue 0.
+register_sql("order_fill_stats", f"""
 SELECT o_orderkey, COUNT(l_orderkey) AS n_items,
        COALESCE(CAST(SUM({_SQL_REV}) AS DOUBLE), 0.0) AS revenue
 FROM orders LEFT JOIN lineitem ON l_orderkey = o_orderkey
 GROUP BY o_orderkey
 """)
-def order_fill_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outer join with NULL-group handling (count of a nullable side)."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    # The fixture plan broadcasts lineitem (LeftOuter must build right),
-    # so the whole probe+agg lands on the single-task orders scan —
-    # spread the one probe column first (guarded; no-op at scale where
-    # the join is a shuffle join anyway).  Counts/decimal sums are exact.
-    from gcp_serverless_mapreduce_spark.tables import spread_small_scan
-
-    orders = spread_small_scan(orders.select("o_orderkey"))
-    return (
-        orders.join(li, F.col("l_orderkey") == F.col("o_orderkey"), "left")
-        .groupBy("o_orderkey")
-        .agg(F.count("l_orderkey").alias("n_items"),
-             F.coalesce(F.sum(_revenue()).cast("double"), F.lit(0.0)).alias("revenue"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Window functions (absent in reference — SURVEY §2.6)
 # --------------------------------------------------------------------------
 
-@register("window_running_spend", """
+# Explicit ROWS frame and a unique tiebreaker: the default RANGE frame
+# would add order-date peers and tie the result to row order.
+register_sql("window_running_spend", """
 SELECT o_custkey, o_orderkey,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -299,21 +190,9 @@ SELECT o_custkey, o_orderkey,
            AS running_spend
 FROM orders
 """)
-def window_running_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running total per customer.  Explicit ROWS frame + unique tiebreaker:
-    the default RANGE frame would include order-date peers and tie results
-    to engine-internal row order."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_custkey")
-         .orderBy("o_orderdate", "o_orderkey")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return orders.select(
-        "o_custkey", "o_orderkey",
-        F.sum(_dec("o_totalprice")).over(w).cast("double").alias("running_spend"),
-    )
 
 
-@register("window_top3_orders_per_customer", """
+register_sql("window_top3_orders_per_customer", """
 SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
   SELECT o_custkey, o_orderkey, o_totalprice,
          CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
@@ -321,17 +200,6 @@ SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
   FROM orders) t
 WHERE rn <= 3
 """)
-def window_top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-k via row_number (the distributed form of 'per-group
-    sort' — SURVEY A4 generalized)."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        orders.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
 
 
 @register("window_event_value_delta", """
@@ -357,7 +225,7 @@ def window_event_value_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Set operations (SURVEY §2.6)
 # --------------------------------------------------------------------------
 
-@register("setops_customer_segments", """
+register_sql("setops_customer_segments", """
 SELECT 'both' AS tag, c_custkey FROM (
     SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
     INTERSECT
@@ -373,17 +241,6 @@ SELECT 'either' AS tag, c_custkey FROM (
     UNION
     SELECT c_custkey FROM customer WHERE c_acctbal > 1000)
 """)
-def setops_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT / EXCEPT / UNION in one tagged result."""
-    cust = load_table(spark, sf_dir, "customer")
-    seg = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    bal = cust.filter(F.col("c_acctbal") > 1000).select("c_custkey")
-    tag = lambda df, t: df.select(F.lit(t).alias("tag"), "c_custkey")  # noqa: E731
-    return (
-        tag(seg.intersect(bal), "both")
-        .unionByName(tag(seg.exceptAll(bal).distinct(), "only_segment"))
-        .unionByName(tag(seg.union(bal).distinct(), "either"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -391,7 +248,7 @@ def setops_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # JSON scalar functions — none in reference")
 # --------------------------------------------------------------------------
 
-@register("orders_by_month", """
+register_sql("orders_by_month", """
 SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
        CAST(month(o_orderdate) AS BIGINT) AS mon,
        COUNT(*) AS n_orders,
@@ -399,15 +256,6 @@ SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
 FROM orders
 GROUP BY 1, 2
 """)
-def orders_by_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.groupBy(
-            F.year("o_orderdate").cast("long").alias("yr"),
-            F.month("o_orderdate").cast("long").alias("mon"))
-        .agg(F.count("*").alias("n_orders"),
-             F.sum(_dec("o_totalprice")).cast("double").alias("total"))
-    )
 
 
 @register("events_json_stats", """
@@ -431,7 +279,7 @@ def events_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("part_string_functions", """
+register_sql("part_string_functions", """
 SELECT p_partkey,
        upper(p_name) AS name_upper,
        CAST(length(p_name) AS BIGINT) AS name_len,
@@ -439,36 +287,18 @@ SELECT p_partkey,
        concat(p_brand, '/', p_type) AS brand_type
 FROM part
 """)
-def part_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load_table(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        F.upper("p_name").alias("name_upper"),
-        F.length("p_name").cast("long").alias("name_len"),
-        F.substring("p_type", 1, 5).alias("type_prefix"),
-        F.concat_ws("/", "p_brand", "p_type").alias("brand_type"),
-    )
 
 
 # --------------------------------------------------------------------------
 # Global sort / top-k (SURVEY §2.6) and exchange (X2)
 # --------------------------------------------------------------------------
 
-@register("top20_lineitems_by_price", """
+register_sql("top20_lineitems_by_price", """
 SELECT l_orderkey, l_linenumber, l_extendedprice
 FROM lineitem
 ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
 LIMIT 20
 """)
-def top20_lineitems_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k: orderBy+limit compiles to TakeOrderedAndProject —
-    per-partition heap + driver merge, no full sort at any scale."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .orderBy(F.desc("l_extendedprice"), "l_orderkey", "l_linenumber")
-        .limit(20)
-    )
 
 
 _HEX = "0123456789abcdef"
@@ -650,7 +480,7 @@ def daily_orders_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q6_revenue_forecast", """
+register_sql("q6_revenue_forecast", """
 SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
              * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
        CAST(COUNT(*) AS BIGINT) AS n_lines
@@ -660,26 +490,9 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """)
-def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure filter + global agg — every predicate reaches
-    the parquet scan (PushedFilters), zero shuffle beyond the final
-    single-row reduce.  Revenue multiplies in DECIMAL so the sum is
-    partition-order independent."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-            & (F.col("l_discount").between(0.05, 0.07))
-            & (F.col("l_quantity") < 24))
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")
-                   * F.col("l_discount").cast("decimal(4,2)"))
-             .cast("double").alias("revenue"),
-             F.count("*").alias("n_lines"))
-    )
 
 
-@register("q4_order_priority_check", """
+register_sql("q4_order_priority_check", """
 SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders
 FROM orders o
 WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
@@ -689,23 +502,9 @@ WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
                 AND l.l_shipdate > o.o_orderdate)
 GROUP BY o_orderpriority
 """)
-def q4_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: EXISTS as a LEFT SEMI join (no row duplication from
-    multi-line matches), then a tiny agg on priority.  The semi join
-    shuffles only the two key columns of lineitem."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = orders.filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1996-07-01"))
-    semi = o.join(
-        li, (o.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate > o.o_orderdate), "left_semi")
-    return semi.groupBy("o_orderpriority").agg(
-        F.count("*").alias("n_orders"))
 
 
-@register("q13_customer_order_distribution", """
+register_sql("q13_customer_order_distribution", """
 WITH per_cust AS (
     SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
     FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
@@ -713,18 +512,6 @@ WITH per_cust AS (
 SELECT c_count, CAST(COUNT(*) AS BIGINT) AS custdist
 FROM per_cust GROUP BY c_count
 """)
-def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: LEFT OUTER fact join (zero-order customers kept,
-    COUNT of the nullable side counts only matches) feeding a second-level
-    histogram agg — two shuffles, both on shrinking data."""
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
 @register("q2_min_cost_supplier", """
@@ -750,7 +537,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     first exchange's partitioning."""
     li = load_table(spark, sf_dir, "lineitem")
     costs = (li.groupBy("l_partkey", "l_suppkey")
-             .agg(F.min(_dec("l_extendedprice")).alias("min_price"))
+             .agg(F.min(F.col("l_extendedprice").cast("decimal(18,2)"))
+                  .alias("min_price"))
              .alias("c"))
     best = (costs.groupBy("l_partkey")
             .agg(F.min("min_price").alias("best_price")).alias("b"))
@@ -907,7 +695,9 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "lang", "source"))
 
 
-@register("grouping_sets_order_stats", """
+# One Expand + hash aggregate reads orders once for all three sets;
+# GROUPING() tells a set's NULLs from data NULLs.
+register_sql("grouping_sets_order_stats", """
 SELECT COALESCE(o_orderstatus, 'ALL') AS status,
        COALESCE(o_orderpriority, 'ALL') AS priority,
        CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority) AS BIGINT)
@@ -917,28 +707,11 @@ SELECT COALESCE(o_orderstatus, 'ALL') AS status,
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 """)
-def grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (beyond rollup/cube): per-status totals,
-    per-priority totals, and the grand total in ONE pass — Spark expands
-    the sets in a single Expand + hash-agg, reading the fact table once
-    instead of three times.  ``grouping_id`` disambiguates the NULLs of
-    each set from data NULLs."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_gsets_src")
-    return spark.sql("""
-        SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-               COALESCE(o_orderpriority, 'ALL') AS priority,
-               CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority)
-                    AS BIGINT) AS gid,
-               CAST(COUNT(*) AS BIGINT) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS total
-        FROM orders_gsets_src
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """)
 
 
-@register("ntile_customer_value_quartiles", """
+# The global ORDER BY window is a single-partition sort: fine for a
+# dimension table, the wrong tool for a fact table.
+register_sql("ntile_customer_value_quartiles", """
 WITH q AS (
     SELECT c_custkey, c_mktsegment,
            ntile(4) OVER (ORDER BY c_acctbal DESC, c_custkey) AS quartile
@@ -946,21 +719,6 @@ WITH q AS (
 SELECT quartile, c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n
 FROM q GROUP BY quartile, c_mktsegment
 """)
-def ntile_customer_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ntile bucketing: customers split into account-balance quartiles
-    (total order via the custkey tiebreak makes bucket assignment
-    deterministic), then segment mix per quartile.  Note the global
-    ORDER BY window is a single-partition sort — fine for a dimension
-    table, the wrong tool for a fact table (use range partitioning /
-    approx percentiles there)."""
-    cust = load_table(spark, sf_dir, "customer")
-    w = Window.orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
-    return (
-        cust.select("c_custkey", "c_mktsegment",
-                    F.ntile(4).over(w).alias("quartile"))
-        .groupBy("quartile", "c_mktsegment")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
 
 
 @register("hot_key_join_aqe", """
@@ -1054,7 +812,10 @@ def scd2_customer_order_versions(spark: SparkSession,
         F.lead("o_orderkey").over(w).isNull().alias("is_current"))
 
 
-@register("regression_price_vs_quantity", """
+# Pearson corr and OLS fit of price on quantity.  The five moments are
+# exact DECIMAL sums and only the closed form runs in DOUBLE, so both
+# engines agree; the built-in corr/regr_* sum floats in plan order.
+register_sql("regression_price_vs_quantity", """
 WITH m AS (
     SELECT l_returnflag,
            CAST(COUNT(*) AS DOUBLE) AS n,
@@ -1076,36 +837,6 @@ SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
              6) AS intercept
 FROM m
 """)
-def regression_price_vs_quantity(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Statistical aggregates (Pearson corr + OLS slope/intercept of
-    extendedprice on quantity per returnflag) made cross-engine
-    deterministic: the five moments accumulate as EXACT DECIMAL sums
-    (immune to partition/merge order, unlike the built-in corr/regr_*
-    whose float running sums differ per plan), and only the final
-    closed-form formula — identical expression tree on both engines,
-    IEEE ops on identical double inputs — runs in floating point.
-    Map-side partial agg on a 6-value state; one tiny shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("decimal(18,2)")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    m = li.groupBy("l_returnflag").agg(
-        F.count("*").cast("double").alias("n"),
-        F.sum(qty).cast("double").alias("sx"),
-        F.sum(price).cast("double").alias("sy"),
-        F.sum(qty * price).cast("double").alias("sxy"),
-        F.sum(qty * qty).cast("double").alias("sxx"),
-        F.sum(price * price).cast("double").alias("syy"))
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    return m.select(
-        "l_returnflag", n.cast("long").alias("n_rows"),
-        F.round((n * sxy - sx * sy)
-                / (F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)),
-                6).alias("corr_qty_price"),
-        F.round(slope, 6).alias("slope"),
-        F.round((sy - slope * sx) / n, 6).alias("intercept"))
 
 
 # Snapshot boundary for the period-over-period reconciliation: orders
@@ -1138,38 +869,7 @@ FROM a FULL OUTER JOIN b ON a.o_custkey = b.o_custkey
 """
 
 
-@register("snapshot_diff_customers", _SNAPSHOT_DIFF_ORACLE)
-def snapshot_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Period-over-period snapshot reconciliation via FULL OUTER join:
-    per-customer order counts and exact-decimal spend for the before/
-    after halves of the order history, every customer classified
-    new / churned / retained with the spend delta.
-
-    The one §2.6 join flavor the other queries don't exercise.  Both
-    aggregate sides and the join share ``o_custkey`` partitioning — one
-    logical shuffle, AQE coalesces; spend math stays DECIMAL until the
-    final cast so the delta is partition-order-exact.
-    """
-    orders = load_table(spark, sf_dir, "orders")
-    yr = F.year("o_orderdate")
-    spend = F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-    a = (orders.filter(yr < SNAPSHOT_YEAR)
-         .groupBy(F.col("o_custkey").alias("custkey_a"))
-         .agg(F.count("*").alias("n_before"), spend.alias("spend_before")))
-    b = (orders.filter(yr >= SNAPSHOT_YEAR)
-         .groupBy(F.col("o_custkey").alias("custkey_b"))
-         .agg(F.count("*").alias("n_after"), spend.alias("spend_after")))
-    ak, bk = F.col("custkey_a"), F.col("custkey_b")
-    return (a.join(b, ak == bk, "full_outer")
-            .select(F.coalesce(ak, bk).alias("custkey"),
-                    F.when(ak.isNull(), F.lit("new"))
-                    .when(bk.isNull(), F.lit("churned"))
-                    .otherwise(F.lit("retained")).alias("status"),
-                    F.coalesce("n_before", F.lit(0)).alias("n_before"),
-                    F.coalesce("n_after", F.lit(0)).alias("n_after"),
-                    (F.coalesce("spend_after", F.lit(0))
-                     - F.coalesce("spend_before", F.lit(0)))
-                    .cast("double").alias("spend_delta")))
+register_sql("snapshot_diff_customers", _SNAPSHOT_DIFF_ORACLE)
 
 
 @register("stream_snapshot_diff_customers", _SNAPSHOT_DIFF_ORACLE)

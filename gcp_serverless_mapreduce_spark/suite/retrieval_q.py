@@ -265,4 +265,4 @@ def weighted_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     source key, rank windows bounded by group size, no global sort.
     See operators/curation.py:weighted_sample_per_group."""
     docs = load_table(spark, sf_dir, "documents")
-    return curation.weighted_sample_per_group(docs, "source", PER_SOURCE_N)
+    return curation.weighted_sample_per_group(docs, PER_SOURCE_N)

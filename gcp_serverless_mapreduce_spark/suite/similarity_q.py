@@ -157,14 +157,10 @@ def semdedup_discards(spark: SparkSession, sf_dir: str) -> DataFrame:
                                         max_bucket=MAX_BUCKET)
 
 
-def _int_dot(a: str, b: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            f"list_transform(generate_series(1, {DIM}), "
-            f"i -> CAST({a}[i] * {b}[i] AS BIGINT))), (acc, x) -> acc + x)")
-
-
 _Q8 = "list_transform(u, x -> CAST(round(x * 127) AS INTEGER))"
-_PAIR_IDOT = _int_dot("a.q", "b.q")
+_PAIR_IDOT = (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
+              f"list_transform(generate_series(1, {DIM}), "
+              f"i -> CAST(a.q[i] * b.q[i] AS BIGINT))), (acc, x) -> acc + x)")
 
 
 @register("sq8_ann_topk", _UNIT_CTE + f""",
@@ -441,7 +437,7 @@ def ivf_incremental_ingest_topk(spark: SparkSession,
     return similarity.ivf_incremental_topk(
         emb, _INC_MOD, K, CENTROIDS, rounds=LLOYD_ROUNDS,
         n_probe=N_PROBE, train_target=_SMALL_TRAIN_TARGET,
-        n_old_rows=old_batch_row_count(sf_dir, "embeddings", _INC_MOD))
+        n_old_rows=old_batch_row_count(sf_dir, _INC_MOD))
 
 
 @register("stream_ivf_cell_routing",
@@ -477,9 +473,9 @@ def stream_ivf_cell_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     old_pred = F.col("vec_id") % _INC_MOD != 0
-    n_old = old_batch_row_count(sf_dir, "embeddings", _INC_MOD)
+    n_old = old_batch_row_count(sf_dir, _INC_MOD)
     sample = similarity.train_sample_pred(
-        "vec_id", similarity.train_sample_mod(n_old, _SMALL_TRAIN_TARGET))
+        similarity.train_sample_mod(n_old, _SMALL_TRAIN_TARGET))
     # batch-side: Lloyd training over the OLD corpus sample is real
     # compute the trigger stats don't see — timed so the
     # bench's compute-adjusted total counts it.
@@ -686,7 +682,7 @@ def pq_trained_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_row_count(sf_dir, "embeddings"), _TRAIN_TARGET)
     books = similarity.pq_trained_codebooks(
         emb, PQ_BOOKS, rounds=PQ_LLOYD_ROUNDS,
-        train_filter=similarity.train_sample_pred("vec_id", mod))
+        train_filter=similarity.train_sample_pred(mod))
     return similarity.pq_adc_topk(emb, K, books, NUM_QUERIES)
 
 

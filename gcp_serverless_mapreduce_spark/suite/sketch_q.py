@@ -26,9 +26,10 @@ _ROWS = "(SELECT unnest(generate_series(0, {d})) AS r) rr".format(
     d=CMS_DEPTH - 1)
 
 
-def _cell_sql(key_expr: str, seed_expr: str) -> str:
-    """DuckDB twin of sketches.h_cell: md5-prefix hash mod width."""
-    return (f"CAST('0x' || substr(md5(CAST({seed_expr} AS VARCHAR) || '|' "
+def _cell_sql(key_expr: str) -> str:
+    """DuckDB twin of sketches.h_cell with the row seed ``rr.r``:
+    md5-prefix hash mod width."""
+    return (f"CAST('0x' || substr(md5(CAST(rr.r AS VARCHAR) || '|' "
             f"|| {key_expr}), 1, 8) AS BIGINT) % {CMS_WIDTH}")
 
 
@@ -36,14 +37,14 @@ def _cell_sql(key_expr: str, seed_expr: str) -> str:
 WITH t AS (SELECT unnest({_TOKS}) AS w FROM documents),
 n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM t),
 cells AS (
-    SELECT rr.r, {_cell_sql('t.w', 'rr.r')} AS cell
+    SELECT rr.r, {_cell_sql('t.w')} AS cell
     FROM t, {_ROWS}),
 sk AS (SELECT r, cell, CAST(count(*) AS BIGINT) AS cnt
        FROM cells GROUP BY r, cell),
 cand AS (SELECT w, CAST(count(*) AS BIGINT) AS exact_cnt
          FROM t GROUP BY w),
 pc AS (
-    SELECT c.w, c.exact_cnt, rr.r, {_cell_sql('c.w', 'rr.r')} AS cell
+    SELECT c.w, c.exact_cnt, rr.r, {_cell_sql('c.w')} AS cell
     FROM cand c, {_ROWS}),
 probe AS (
     SELECT pc.w, pc.exact_cnt,
@@ -436,10 +437,9 @@ _HLL_EST_SQL = (f"CAST({HLL_NUMER!r} AS DOUBLE) / "
                 f"+ CAST({HLL_M} - count(*) AS DOUBLE))")
 
 
-def _hll_hash_sql(key_expr: str) -> str:
-    """DuckDB twin of sketches.kmv_hash (48-bit md5-prefix)."""
-    return (f"CAST('0x' || substr(md5({key_expr}), 1, "
-            f"{KMV_HEX_DIGITS}) AS BIGINT)")
+# DuckDB twin of sketches.kmv_hash (48-bit md5-prefix) of user_id.
+_HLL_HASH_SQL = (f"CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, "
+                 f"{KMV_HEX_DIGITS}) AS BIGINT)")
 
 
 # Shared by the batch query below and the STREAMING build of the same
@@ -448,7 +448,7 @@ def _hll_hash_sql(key_expr: str) -> str:
 HLL_DISTINCT_USERS_SQL = f"""
 WITH h AS (
     SELECT event_type AS grp,
-           {_hll_hash_sql("CAST(user_id AS VARCHAR)")} AS h
+           {_HLL_HASH_SQL} AS h
     FROM events),
 st AS (
     SELECT grp, {_HLL_IDX_SQL} AS idx, max({_HLL_RHO_SQL}) AS r
@@ -492,7 +492,7 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HLL_STATE_SQL = f"""
     SELECT grp, {_HLL_IDX_SQL} AS idx, max({_HLL_RHO_SQL}) AS r
     FROM (SELECT event_type AS grp,
-                 {_hll_hash_sql("CAST(user_id AS VARCHAR)")} AS h
+                 {_HLL_HASH_SQL} AS h
           FROM events WHERE event_id % 2 = {{par}})
     GROUP BY grp, idx"""
 
@@ -506,7 +506,7 @@ m AS (SELECT grp, idx, max(r) AS r
 d AS (
     SELECT grp, {_HLL_IDX_SQL} AS idx, max({_HLL_RHO_SQL}) AS r
     FROM (SELECT event_type AS grp,
-                 {_hll_hash_sql("CAST(user_id AS VARCHAR)")} AS h
+                 {_HLL_HASH_SQL} AS h
           FROM events)
     GROUP BY grp, idx),
 mm AS (
@@ -562,7 +562,7 @@ def hll_merge_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("hll_hourly_rollup_daily", f"""
 WITH h AS (
     SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS grp,
-           {_hll_hash_sql("CAST(user_id AS VARCHAR)")} AS h
+           {_HLL_HASH_SQL} AS h
     FROM events),
 st AS (
     SELECT grp, {_HLL_IDX_SQL} AS idx, max({_HLL_RHO_SQL}) AS r

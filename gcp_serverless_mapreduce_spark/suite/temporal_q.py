@@ -66,7 +66,7 @@ def clicks_within_1h_of_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = (events.filter(F.col("event_type") == "click")
               .select("user_id", "ts", "value"))
     joined = temporal.range_join_binned(
-        errors, clicks, on="user_id", lo_s=0, hi_s=3600)
+        errors, clicks, lo_s=0, hi_s=3600)
     return (
         joined.groupBy("event_id", "user_id")
         .agg(F.count("*").alias("n_clicks"),
@@ -206,7 +206,7 @@ def user_error_purchase_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.alias("s_us"), e.alias("e_us"))
     errors = iv.where(F.col("event_type") == "error").drop("event_type")
     purchases = iv.where(F.col("event_type") == "purchase").drop("event_type")
-    out = temporal.interval_overlap_join(errors, purchases, "user_id")
+    out = temporal.interval_overlap_join(errors, purchases)
     return out.select(
         "user_id",
         F.col("a_id").alias("error_id"),

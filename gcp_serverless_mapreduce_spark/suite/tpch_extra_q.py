@@ -4,25 +4,30 @@ schema has no partsupp and fewer columns, so each query keeps the *shape*
 — the join topology and subquery pattern — with predicates re-targeted at
 available columns).
 
-Already covered in relational_q: Q1, Q2, Q3, Q4, Q5, Q6, Q13.  This module
-adds Q7, Q8, Q9, Q10, Q11, Q12, Q14, Q15, Q17, Q18, Q19, Q22 shapes:
+Already covered in relational_q: Q1-Q6 and Q13.  This module adds the
+Q7-Q12 and Q14-Q22 shapes and a data-contract audit:
 
-- Q7/Q8/Q9/Q10: multi-hop fact-dim joins with self-joined dims (nation
-  twice), CASE-conditional shares, derived-year grouping, group-by top-k;
-- Q11/Q14/Q15/Q17/Q22: scalar subqueries (global total / max / correlated
-  per-group avg) — all decorrelated by hand into agg + broadcast join, the
-  plan Catalyst's RewriteCorrelatedScalarSubquery produces internally;
-- Q12: conditional aggregation after a fact-fact join;
-- Q18: IN (group-by ... HAVING) -> left-semi join on an aggregated key;
-- Q19: disjunctive (OR-of-ANDs) predicate bundle, pushed to the scans.
+- Q7/Q8/Q9/Q10: multi-hop fact-dim joins with one dim joined twice
+  (nation), CASE-conditional shares, derived-year grouping, group-by top-k;
+- Q11/Q15/Q17/Q22: scalar subqueries (global total, max, correlated
+  per-part average, global average), written as subqueries; Catalyst
+  rewrites each into an aggregate joined back to the outer query;
+- Q12/Q14: conditional aggregation after a join;
+- Q16: NOT IN (subquery) -> null-aware anti join, then COUNT(DISTINCT);
+- Q18: IN (GROUP BY ... HAVING) -> left-semi join on an aggregated key;
+- Q19: disjunctive (OR-of-ANDs) predicate bundle; Catalyst pushes the
+  single-side conjuncts below the join;
+- Q20/Q21: stacked aggregates that decorrelate per-group thresholds and
+  EXISTS / NOT EXISTS into joins on the group key;
+- ``table_quality_audit``: six data-contract checks as one UNION ALL of
+  scalar subqueries.
 
-Scale notes: all dim joins (part/supplier/customer/nation/region at 100 TB
-stay << lineitem) broadcast explicitly; the only shuffles are on fact join
-keys and final group keys.  Scalar subqueries reduce to one row on the
-driver side of a broadcast — no second pass over the fact table.  Money
-math in DECIMAL (order-independent), cast DOUBLE at the edge; division
-done in DOUBLE on both engines (decimal division width rules differ
-between engines, double division is IEEE-identical).
+Every query but Q18 is one SQL text registered with ``register_sql``:
+Spark runs it with ``spark.sql``, DuckDB runs it as the twin.  Q18 keeps a
+DataFrame builder because its twin formats dates with DuckDB's
+``strftime``.  Money math in DECIMAL (order-independent), cast DOUBLE at
+the edge; division done in DOUBLE on both engines (decimal division width
+rules differ between engines, double division is IEEE-identical).
 """
 
 from __future__ import annotations
@@ -30,20 +35,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
+from ..registry import register, register_sql
 from ..tables import load_table
-from .relational_q import _SQL_PRICE, _SQL_QTY, _SQL_REV, _dec, _revenue
-
-
-def _ts(s: str):
-    return F.lit(s).cast("timestamp_ntz")
+from .relational_q import _SQL_PRICE, _SQL_QTY, _SQL_REV
 
 
 # --------------------------------------------------------------------------
 # Q7: bilateral trade volume — the nation self-join-twice shape
 # --------------------------------------------------------------------------
 
-@register("q7_nation_trade_volume", f"""
+register_sql("q7_nation_trade_volume", f"""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
        CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue
@@ -57,43 +58,13 @@ WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
 GROUP BY n1.n_name, n2.n_name, EXTRACT(year FROM l_shipdate)
 """)
-def q7_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: the same dim (nation) joined twice under different
-    roles, with a disjunctive cross-role predicate.  Both nation joins and
-    the supplier/customer joins broadcast; lineitem x orders is the only
-    shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    pair = ("NATION_1", "NATION_2")
-    n1 = (load_table(spark, sf_dir, "nation")
-          .filter(F.col("n_name").isin(*pair))
-          .select(F.col("n_nationkey").alias("s_nkey"),
-                  F.col("n_name").alias("supp_nation")))
-    n2 = (load_table(spark, sf_dir, "nation")
-          .filter(F.col("n_name").isin(*pair))
-          .select(F.col("n_nationkey").alias("c_nkey"),
-                  F.col("n_name").alias("cust_nation")))
-    supp = (load_table(spark, sf_dir, "supplier")
-            .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey")))
-    cust = (load_table(spark, sf_dir, "customer")
-            .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey")))
-    return (
-        li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders.join(F.broadcast(cust),
-                          F.col("o_custkey") == F.col("c_custkey")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .filter((F.col("supp_nation") != F.col("cust_nation")))
-        .groupBy("supp_nation", "cust_nation",
-                 F.year("l_shipdate").cast("bigint").alias("l_year"))
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Q8: market share — CASE-conditional share of a grouped total
 # --------------------------------------------------------------------------
 
-@register("q8_market_share", f"""
+register_sql("q8_market_share", f"""
 SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
        CAST(SUM(CASE WHEN n2.n_name = 'NATION_3' THEN {_SQL_REV}
                      ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
@@ -109,47 +80,13 @@ JOIN nation n2 ON s_nationkey = n2.n_nationkey
 WHERE r_name = 'EUROPE' AND p_type = 'PROMO'
 GROUP BY EXTRACT(year FROM o_orderdate)
 """)
-def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one nation's share of regional revenue per year.
-    Numerator and denominator computed in the same exact-DECIMAL pass,
-    divided in DOUBLE (IEEE-identical across engines)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    part = (load_table(spark, sf_dir, "part")
-            .filter(F.col("p_type") == "PROMO").select("p_partkey"))
-    region = (load_table(spark, sf_dir, "region")
-              .filter(F.col("r_name") == "EUROPE"))
-    n1 = load_table(spark, sf_dir, "nation").alias("n1")
-    n2 = (load_table(spark, sf_dir, "nation")
-          .select(F.col("n_nationkey").alias("s_nkey"),
-                  F.col("n_name").alias("supp_nation")))
-    supp = (load_table(spark, sf_dir, "supplier")
-            .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nkey"))
-            .select("s_suppkey", "supp_nation"))
-    cust = (load_table(spark, sf_dir, "customer")
-            .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1.n_nationkey"))
-            .join(F.broadcast(region), F.col("n1.n_regionkey") == F.col("r_regionkey"))
-            .select("c_custkey"))
-    vol = _revenue()
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders.join(F.broadcast(cust),
-                          F.col("o_custkey") == F.col("c_custkey")),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
-        .agg(
-            (F.sum(F.when(F.col("supp_nation") == "NATION_3", vol)
-                   .otherwise(F.lit(0).cast("decimal(18,6)"))).cast("double")
-             / F.sum(vol).cast("double")).alias("mkt_share"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Q9: product-type profit — derived measure across a 4-way join
 # --------------------------------------------------------------------------
 
-@register("q9_product_profit", f"""
+register_sql("q9_product_profit", f"""
 SELECT n_name AS nation,
        CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
        CAST(SUM({_SQL_REV} - CAST(CAST(p_retailprice AS DECIMAL(18,2))
@@ -163,37 +100,13 @@ JOIN nation   ON s_nationkey = n_nationkey
 WHERE p_name LIKE '%red%'
 GROUP BY n_name, EXTRACT(year FROM o_orderdate)
 """)
-def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit (revenue minus cost-proxy, here
-    p_retailprice x quantity — the fixture has no partsupp/supplycost) by
-    supplier nation and order year, with a LIKE filter on part name.
-    Subtraction stays in DECIMAL end to end."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    part = (load_table(spark, sf_dir, "part")
-            .filter(F.col("p_name").like("%red%"))
-            .select("p_partkey", "p_retailprice"))
-    nation = load_table(spark, sf_dir, "nation")
-    supp = (load_table(spark, sf_dir, "supplier")
-            .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-            .select("s_suppkey", "n_name"))
-    cost = (_dec("p_retailprice") * _dec("l_quantity")).cast("decimal(18,6)")
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(orders.select("o_orderkey", "o_orderdate"),
-              F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy(F.col("n_name").alias("nation"),
-                 F.year("o_orderdate").cast("bigint").alias("o_year"))
-        .agg(F.sum(_revenue() - cost).cast("double").alias("sum_profit"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Q10: returned-item revenue — group-by top-k over a 3-way join
 # --------------------------------------------------------------------------
 
-@register("q10_returned_item_revenue", f"""
+register_sql("q10_returned_item_revenue", f"""
 SELECT c_custkey, c_name, n_name,
        CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue
 FROM customer
@@ -207,33 +120,13 @@ GROUP BY c_custkey, c_name, n_name
 ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """)
-def q10_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: revenue lost to returns per customer in a quarter,
-    top 20.  Filters reach both scans (date on orders, returnflag on
-    lineitem); top-k is TakeOrderedAndProject, not a global sort."""
-    cust = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    orders = (load_table(spark, sf_dir, "orders")
-              .filter((F.col("o_orderdate") >= _ts("1996-10-01"))
-                      & (F.col("o_orderdate") < _ts("1997-01-01"))))
-    li = (load_table(spark, sf_dir, "lineitem")
-          .filter(F.col("l_returnflag") == "R"))
-    return (
-        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(_revenue()).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
-    )
 
 
 # --------------------------------------------------------------------------
 # Q11: value concentration — HAVING against a global-total scalar subquery
 # --------------------------------------------------------------------------
 
-@register("q11_part_value_concentration", f"""
+register_sql("q11_part_value_concentration", f"""
 WITH pv AS (
     SELECT l_partkey, SUM({_SQL_PRICE}) AS value FROM lineitem
     GROUP BY l_partkey)
@@ -242,28 +135,13 @@ FROM pv
 WHERE CAST(value AS DOUBLE) >
       (SELECT CAST(SUM(value) AS DOUBLE) * 0.0006 FROM pv)
 """)
-def q11_part_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: parts holding more than a fixed fraction of total
-    inventory value.  The global total is a one-row broadcast (scalar
-    subquery decorrelated to crossJoin); the per-part agg is computed once
-    and reused for both sides."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pv = (li.groupBy("l_partkey")
-          .agg(F.sum(_dec("l_extendedprice")).alias("value")))
-    total = pv.agg((F.sum("value").cast("double") * F.lit(0.0006))
-                   .alias("_thresh"))
-    return (
-        pv.crossJoin(F.broadcast(total))
-        .filter(F.col("value").cast("double") > F.col("_thresh"))
-        .select("l_partkey", F.col("value").cast("double").alias("value"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Q12: shipping-priority counts — conditional agg after a fact-fact join
 # --------------------------------------------------------------------------
 
-@register("q12_priority_line_counts", """
+register_sql("q12_priority_line_counts", """
 SELECT l_returnflag,
        CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -274,32 +152,13 @@ WHERE l_shipdate >= TIMESTAMP '1997-01-01'
   AND l_shipdate <  TIMESTAMP '1998-01-01'
 GROUP BY l_returnflag
 """)
-def q12_priority_line_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: CASE-conditional counts over a fact-fact join (the
-    fixture lacks l_shipmode; grouped by returnflag instead).  The date
-    filter prunes lineitem at the scan before the shuffle."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = (load_table(spark, sf_dir, "lineitem")
-          .filter((F.col("l_shipdate") >= _ts("1997-01-01"))
-                  & (F.col("l_shipdate") < _ts("1998-01-01"))))
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders.select("o_orderkey", "o_orderpriority"),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("bigint")
-            .alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).cast("bigint")
-            .alias("low_line_count"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Q14: promo revenue share — single-row conditional ratio
 # --------------------------------------------------------------------------
 
-@register("q14_promo_revenue", f"""
+register_sql("q14_promo_revenue", f"""
 SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_SQL_REV}
                              ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
              / CAST(SUM({_SQL_REV}) AS DOUBLE) AS promo_revenue
@@ -307,29 +166,13 @@ FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE l_shipdate >= TIMESTAMP '1997-03-01'
   AND l_shipdate <  TIMESTAMP '1997-04-01'
 """)
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: percentage of one month's revenue from promo
-    parts.  Part is broadcast; the month filter reaches the lineitem scan;
-    the whole answer is one row."""
-    li = (load_table(spark, sf_dir, "lineitem")
-          .filter((F.col("l_shipdate") >= _ts("1997-03-01"))
-                  & (F.col("l_shipdate") < _ts("1997-04-01"))))
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    vol = _revenue()
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .agg((F.lit(100.0)
-              * F.sum(F.when(F.col("p_type") == "PROMO", vol)
-                      .otherwise(F.lit(0).cast("decimal(18,6)"))).cast("double")
-              / F.sum(vol).cast("double")).alias("promo_revenue"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Q15: top supplier — equality against a MAX scalar subquery
 # --------------------------------------------------------------------------
 
-@register("q15_top_supplier", f"""
+register_sql("q15_top_supplier", f"""
 WITH rev AS (
     SELECT l_suppkey, SUM({_SQL_REV}) AS total_revenue
     FROM lineitem
@@ -340,58 +183,19 @@ SELECT s_suppkey, s_name, CAST(total_revenue AS DOUBLE) AS total_revenue
 FROM supplier JOIN rev ON s_suppkey = l_suppkey
 WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
 """)
-def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: supplier(s) achieving the quarter's maximum
-    revenue — equality against an aggregate of the same derived table
-    (exact in DECIMAL, so the = is safe).  The derived rev table is
-    computed once; the MAX is a one-row broadcast."""
-    li = (load_table(spark, sf_dir, "lineitem")
-          .filter((F.col("l_shipdate") >= _ts("1997-01-01"))
-                  & (F.col("l_shipdate") < _ts("1997-04-01"))))
-    supplier = load_table(spark, sf_dir, "supplier")
-    rev = (li.groupBy("l_suppkey")
-           .agg(F.sum(_revenue()).alias("total_revenue")))
-    best = rev.agg(F.max("total_revenue").alias("_best"))
-    return (
-        rev.crossJoin(F.broadcast(best))
-        .filter(F.col("total_revenue") == F.col("_best"))
-        .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name",
-                F.col("total_revenue").cast("double").alias("total_revenue"))
-    )
 
 
 # --------------------------------------------------------------------------
 # Q17: small-quantity revenue — correlated per-group AVG subquery
 # --------------------------------------------------------------------------
 
-@register("q17_small_quantity_revenue", f"""
+register_sql("q17_small_quantity_revenue", f"""
 SELECT CAST(SUM({_SQL_PRICE}) AS DOUBLE) / 7.0 AS avg_yearly
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#7'
   AND l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
                     FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
 """)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: lineitems below 20% of their part's average
-    quantity.  The correlated scalar subquery is decorrelated by hand:
-    semi-prune lineitem to the brand's parts first (broadcast), compute
-    the per-part average once over the pruned set, join it back on the
-    same key (exchange reuse), then filter.  AVG over small-integer
-    quantities is exact in DOUBLE on both engines."""
-    part = (load_table(spark, sf_dir, "part")
-            .filter(F.col("p_brand") == "Brand#7").select("p_partkey"))
-    li = (load_table(spark, sf_dir, "lineitem")
-          .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"),
-                "left_semi"))
-    avgq = (li.groupBy(F.col("l_partkey").alias("a_partkey"))
-            .agg((F.lit(0.2) * F.avg("l_quantity")).alias("_thresh")))
-    return (
-        li.join(avgq, F.col("l_partkey") == F.col("a_partkey"))
-        .filter(F.col("l_quantity") < F.col("_thresh"))
-        .agg((F.sum(_dec("l_extendedprice")).cast("double") / F.lit(7.0))
-             .alias("avg_yearly"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -423,8 +227,9 @@ def q18_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
+    qty = F.col("l_quantity").cast("decimal(18,2)")
     big = (li.groupBy("l_orderkey")
-           .agg(F.sum(_dec("l_quantity")).alias("_sq"))
+           .agg(F.sum(qty).alias("_sq"))
            .filter(F.col("_sq") > 120).select("l_orderkey"))
     return (
         li.join(big.withColumnRenamed("l_orderkey", "b_orderkey"),
@@ -434,7 +239,7 @@ def q18_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_name", "c_custkey", "o_orderkey",
                  F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
                  F.col("o_totalprice").cast("double").alias("totalprice"))
-        .agg(F.sum(_dec("l_quantity")).cast("double").alias("total_qty"))
+        .agg(F.sum(qty).cast("double").alias("total_qty"))
         .orderBy(F.col("totalprice").desc(), F.col("o_orderkey"))
         .limit(100)
     )
@@ -444,7 +249,7 @@ def q18_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q19: disjunctive predicate bundles (OR of ANDs) across a join
 # --------------------------------------------------------------------------
 
-@register("q19_disjunctive_revenue", f"""
+register_sql("q19_disjunctive_revenue", f"""
 SELECT CAST(SUM({_SQL_REV}) AS DOUBLE) AS revenue
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
@@ -454,33 +259,13 @@ WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
    OR (p_type = 'PROMO' AND p_size BETWEEN 20 AND 40
        AND l_quantity BETWEEN 20 AND 40)
 """)
-def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: OR-of-AND predicate bundles mixing columns from
-    both join sides.  Catalyst extracts the common single-side conjuncts
-    (l_quantity <= 40, part disjunction) below the join; the part side is
-    broadcast so the residual OR evaluates without a shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    joined = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-    qty = F.col("l_quantity")
-    size = F.col("p_size")
-    cond = (
-        ((F.col("p_brand") == "Brand#1") & size.between(1, 10)
-         & qty.between(1, 20))
-        | ((F.col("p_brand") == "Brand#2") & size.between(5, 20)
-           & qty.between(10, 30))
-        | ((F.col("p_type") == "PROMO") & size.between(20, 40)
-           & qty.between(20, 40))
-    )
-    return joined.filter(cond).agg(
-        F.sum(_revenue()).cast("double").alias("revenue"))
 
 
 # --------------------------------------------------------------------------
 # Q22: dormant high-balance customers — scalar-avg + NOT EXISTS + agg
 # --------------------------------------------------------------------------
 
-@register("q22_dormant_customers", """
+register_sql("q22_dormant_customers", """
 SELECT c_mktsegment AS segment,
        CAST(COUNT(*) AS BIGINT) AS numcust,
        CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
@@ -493,27 +278,6 @@ WHERE c_acctbal > (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2)))
                     AND o_orderdate >= TIMESTAMP '1999-01-01')
 GROUP BY c_mktsegment
 """)
-def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: customers with above-average balances and no
-    *recent* orders, grouped by segment.  The global average is
-    exact-DECIMAL sum over DOUBLE-divide (one-row broadcast); NOT EXISTS
-    is a left-anti join on o_custkey with the date predicate pushed to
-    the orders scan."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = (load_table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderdate") >= _ts("1999-01-01"))
-              .select("o_custkey"))
-    avg_bal = (cust.filter(F.col("c_acctbal") > 0.0)
-               .agg((F.sum(_dec("c_acctbal")).cast("double") / F.count("*"))
-                    .alias("_avg")))
-    return (
-        cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("_avg"))
-        .join(orders, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy(F.col("c_mktsegment").alias("segment"))
-        .agg(F.count("*").cast("bigint").alias("numcust"),
-             F.sum(_dec("c_acctbal")).cast("double").alias("totacctbal"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -522,7 +286,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the "customer complaints" exclusion becomes negative-balance suppliers)
 # --------------------------------------------------------------------------
 
-@register("q16_parts_supplier_relationship", """
+register_sql("q16_parts_supplier_relationship", """
 SELECT p_brand, p_type, CAST(p_size AS BIGINT) AS p_size,
        CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
 FROM lineitem
@@ -533,25 +297,6 @@ WHERE p_brand <> 'Brand#1'
   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY p_brand, p_type, p_size
 """)
-def q16_parts_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q16 shape: NOT IN (subquery) -> broadcast left-anti join, then a
-    COUNT(DISTINCT) grouped on dim attributes.  Part and the (tiny)
-    exclusion list both broadcast; the only shuffle is the final
-    distinct-aggregate on (brand, type, size)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1")
-        & ~F.col("p_type").startswith("PROMO")
-        & F.col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34))
-    bad_supp = (load_table(spark, sf_dir, "supplier")
-                .filter(F.col("s_acctbal") < 0).select("s_suppkey"))
-    return (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .join(F.broadcast(bad_supp),
-              li["l_suppkey"] == bad_supp["s_suppkey"], "left_anti")
-        .groupBy("p_brand", "p_type", F.col("p_size").cast("long").alias("p_size"))
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -562,7 +307,7 @@ def q16_parts_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFra
 # qty > avg/2  <=>  2*qty*n_pairs > total_qty, all-integer/decimal math)
 # --------------------------------------------------------------------------
 
-@register("q20_excess_shipments_suppliers", f"""
+register_sql("q20_excess_shipments_suppliers", f"""
 WITH shipped AS (
     SELECT l_suppkey AS suppkey, l_partkey AS partkey,
            SUM({_SQL_QTY}) AS qty
@@ -585,43 +330,6 @@ JOIN supplier ON s_suppkey = suppkey
 WHERE CAST(qty AS DECIMAL(24,2)) * CAST(2 AS DECIMAL(1,0))
       * CAST(n_pairs AS DECIMAL(9,0)) > total_qty
 """)
-def q20_excess_shipments_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q20 shape: semi-join through two stacked aggregations with a
-    correlated per-group threshold, decorrelated into agg + join (the
-    plan RewriteCorrelatedScalarSubquery would build).  The threshold
-    compare is exact decimal cross-multiplication — no division, and
-    every factor explicitly bounded (qty DECIMAL(24,2): per-(supp,part)
-    quantity sums stay far under 10^22; n_pairs DECIMAL(9,0): suppliers
-    per part under 10^9) so the product precision (36) never exceeds
-    DECIMAL(38) — Spark's allowPrecisionLoss truncation can't fire at
-    any scale factor and both engines agree on boundary pairs
-    bit-for-bit."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part").filter(
-        F.col("p_name").startswith("small"))
-    shipped = (
-        li.filter((F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-                  & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz")))
-        .join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .groupBy(F.col("l_suppkey").alias("suppkey"),
-                 F.col("l_partkey").alias("partkey"))
-        .agg(F.sum(_dec("l_quantity")).alias("qty"))
-    )
-    per_part = shipped.groupBy("partkey").agg(
-        F.sum("qty").alias("total_qty"), F.count("*").alias("n_pairs"))
-    supp = load_table(spark, sf_dir, "supplier")
-    return (
-        shipped.join(per_part, "partkey")
-        # under default non-ANSI mode a cast overflow here yields NULL
-        # (silent row drop, not an error); unreachable at any TPC-H
-        # scale given the documented bounds above
-        .filter(F.col("qty").cast("decimal(24,2)")
-                * F.lit(2).cast("decimal(1,0)")
-                * F.col("n_pairs").cast("decimal(9,0)") > F.col("total_qty"))
-        .join(supp, F.col("suppkey") == supp["s_suppkey"])
-        .select("s_name", F.col("s_acctbal").cast("double").alias("s_acctbal"))
-        .distinct()
-    )
 
 
 # --------------------------------------------------------------------------
@@ -631,7 +339,7 @@ def q20_excess_shipments_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
 # 60 days after the order date)
 # --------------------------------------------------------------------------
 
-@register("q21_suppliers_kept_orders_waiting", """
+register_sql("q21_suppliers_kept_orders_waiting", """
 WITH fact AS (
     SELECT l_orderkey AS okey, l_suppkey AS skey,
            CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
@@ -649,40 +357,14 @@ JOIN supplier ON s_suppkey = skey
 WHERE late = 1 AND n_supp >= 2 AND n_late_supp = 1
 GROUP BY s_name
 """)
-def q21_suppliers_kept_orders_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q21 shape: EXISTS(other supplier in the order) AND NOT EXISTS(other
-    LATE supplier) — decorrelated into one per-order distinct-count
-    aggregate reused by the outer filter (n_supp >= 2 keeps multi-supplier
-    orders; n_late_supp = 1 plus "this line is late" pins the blame
-    uniquely).  One shuffle on orderkey feeds both the aggregate and the
-    re-join; supplier broadcasts."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F")
-    fact = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(F.col("l_orderkey").alias("okey"),
-                F.col("l_suppkey").alias("skey"),
-                F.when(F.col("l_shipdate")
-                       > F.col("o_orderdate") + F.expr("INTERVAL 60 DAY"),
-                       F.lit(1)).otherwise(F.lit(0)).alias("late"))
-    )
-    per_order = fact.groupBy("okey").agg(
-        F.count_distinct("skey").alias("n_supp"),
-        F.count_distinct(F.when(F.col("late") == 1, F.col("skey")))
-        .alias("n_late_supp"))
-    supp = load_table(spark, sf_dir, "supplier")
-    return (
-        fact.join(per_order, "okey")
-        .filter((F.col("late") == 1) & (F.col("n_supp") >= 2)
-                & (F.col("n_late_supp") == 1))
-        .join(F.broadcast(supp), F.col("skey") == supp["s_suppkey"])
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-    )
 
 
-@register("table_quality_audit", """
+# --------------------------------------------------------------------------
+# Data-contract audit: referential integrity, key uniqueness, ranges and
+# nulls, one (check_name, n_violations) row each; 0 on intact fixtures
+# --------------------------------------------------------------------------
+
+register_sql("table_quality_audit", """
 SELECT 'orders_orphan_custkey' AS check_name,
        CAST((SELECT COUNT(*) FROM orders o
              WHERE NOT EXISTS (SELECT 1 FROM customer c
@@ -711,48 +393,3 @@ SELECT 'orders_null_orderdate',
        CAST((SELECT COUNT(*) FROM orders WHERE o_orderdate IS NULL)
             AS BIGINT)
 """)
-def table_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-contract audit (the dbt-test / Deequ-style gate a landing
-    zone runs before anything downstream trusts it): referential
-    integrity (orphaned orders / lineitems via LEFT ANTI joins — the
-    joins shuffle on their keys exactly like the production joins they
-    protect), key uniqueness, range invariants, and null
-    checks — one (check_name, n_violations) row each.  All six checks
-    are independent single-pass aggregates unioned together; on the
-    intact fixtures every count is 0, and the oracle proves the checks
-    themselves are implemented identically."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-
-    def one(name: str, df: DataFrame) -> DataFrame:
-        return df.select(F.lit(name).alias("check_name"),
-                         F.col("n").cast("long").alias("n_violations"))
-
-    checks = [
-        one("orders_orphan_custkey",
-            orders.join(customer, orders["o_custkey"]
-                        == customer["c_custkey"], "left_anti")
-            .agg(F.count(F.lit(1)).alias("n"))),
-        one("lineitem_orphan_orderkey",
-            lineitem.join(orders, lineitem["l_orderkey"]
-                          == orders["o_orderkey"], "left_anti")
-            .agg(F.count(F.lit(1)).alias("n"))),
-        one("customer_dup_custkey",
-            customer.agg((F.count(F.lit(1))
-                          - F.countDistinct("c_custkey")).alias("n"))),
-        one("lineitem_qty_nonpositive",
-            lineitem.agg(F.sum(F.when(F.col("l_quantity") <= 0, 1)
-                               .otherwise(0)).alias("n"))),
-        one("lineitem_discount_out_of_range",
-            lineitem.agg(F.sum(F.when((F.col("l_discount") < 0)
-                                      | (F.col("l_discount") > 1), 1)
-                               .otherwise(0)).alias("n"))),
-        one("orders_null_orderdate",
-            orders.agg(F.sum(F.when(F.col("o_orderdate").isNull(), 1)
-                             .otherwise(0)).alias("n"))),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionAll(c)
-    return out

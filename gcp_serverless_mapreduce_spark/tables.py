@@ -244,9 +244,10 @@ def _sink_log_files(meta_dir: str) -> list[str] | None:
         return None
 
 
-def old_batch_row_count(sf_dir: str, name: str, inc_mod: int) -> int:
-    """Row count of the OLD corpus under the incremental-ingest fixture
-    split (``id % inc_mod != 0``) from parquet FOOTER metadata only —
+def old_batch_row_count(sf_dir: str, inc_mod: int) -> int:
+    """Row count of the OLD ``embeddings`` corpus under the
+    incremental-ingest fixture split (``vec_id % inc_mod != 0``) from
+    parquet FOOTER metadata only —
     no scan, no filtered count() job.
 
     The fixture tables carry a DENSE 0..n-1 surrogate id (TESTDATA.md
@@ -259,17 +260,18 @@ def old_batch_row_count(sf_dir: str, name: str, inc_mod: int) -> int:
     :func:`table_row_count` over those partitions' footers (or catalog
     statistics).  The ``% inc_mod`` split just simulates that partition
     boundary inside one fixture file."""
-    n = table_row_count(sf_dir, name)
+    n = table_row_count(sf_dir, "embeddings")
     return n - (n + inc_mod - 1) // inc_mod
 
 
 def load_tables(spark: SparkSession, sf_dir: str,
-                names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_NAMES)}
+                names: list[str]) -> dict[str, DataFrame]:
+    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def register_views(spark: SparkSession, sf_dir: str,
-                   names: list[str] | None = None) -> None:
-    """Register each table as a temp view so operators can use spark.sql."""
+                   names: list[str]) -> None:
+    """Register each named table of ``sf_dir`` as a temp view of the same
+    name, so ``spark.sql`` text can read it."""
     for name, df in load_tables(spark, sf_dir, names).items():
         df.createOrReplaceTempView(name)

@@ -171,7 +171,7 @@ def test_train_sample_pred_matches_duckdb_rendering(spark):
     ids = list(range(200))
     df = spark.createDataFrame([(i,) for i in ids], ["vec_id"])
     got = sorted(r["vec_id"] for r in
-                 df.filter(train_sample_pred("vec_id", mod)).collect())
+                 df.filter(train_sample_pred(mod)).collect())
     want = [r[0] for r in duckdb.sql(f"""
         SELECT i FROM unnest(range(200)) t(i)
         WHERE CAST(('0x' || substr(md5(CAST(i AS VARCHAR)), 1, 8))
@@ -208,7 +208,7 @@ def test_train_sample_is_capped_not_fractional(spark):
         assert mod == max(1, n // target)
         df = spark.createDataFrame([(i,) for i in range(n)], ["vec_id"])
         got = sorted(r["vec_id"] for r in
-                     df.filter(train_sample_pred("vec_id", mod)).collect())
+                     df.filter(train_sample_pred(mod)).collect())
         assert got == py_sample(n)
         sizes[n] = len(got)
     # both corpus sizes land near the cap — NOT proportional to n

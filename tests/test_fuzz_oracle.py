@@ -133,7 +133,7 @@ def test_range_join_fuzz(spark):
     ldf = spark.createDataFrame(left, ["event_id", "user_id", "ts"])
     rdf = spark.createDataFrame(right, ["user_id", "ts", "value"])
     got = {(r["event_id"], r["value"]) for r in temporal.range_join_binned(
-        ldf, rdf, on="user_id", lo_s=lo_s, hi_s=hi_s).collect()}
+        ldf, rdf, lo_s=lo_s, hi_s=hi_s).collect()}
     expect = {
         (eid, v)
         for eid, lk, lts in left

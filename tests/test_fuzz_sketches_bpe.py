@@ -215,7 +215,7 @@ def test_power_iteration_fuzz_matches_python_oracle(spark):
             for _ in range(25)]
     df = spark.createDataFrame([(v,) for v in vecs],
                                "embedding array<double>")
-    traj = profiling.pc1_trajectory(df, "embedding", dim, rounds=5)
+    traj = profiling.pc1_trajectory(df, dim, rounds=5)
 
     q = [[math.floor(x * profiling.PI_EMB_Q) for x in v] for v in vecs]
     G = [[sum(r[i] * r[j] for r in q) for j in range(dim)]

@@ -10,7 +10,7 @@ SF_DIR = "/root/testdata/sf0.01"
 
 def test_ivf_recall_and_shape(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    ivf = similarity.ivf_topk(emb, k=5).collect()
+    ivf = similarity.ivf_topk(emb).collect()
     assert all(r["neighbor_id"] != r["query_id"] for r in ivf)
     assert all(1 <= r["rank"] <= 5 for r in ivf)
 
@@ -145,7 +145,7 @@ def test_ivf_incremental_no_retrain_and_query_scope(spark):
     old = emb.filter(F.col("vec_id") % inc_mod != 0)
     n_old = old.count()
     sample = similarity.train_sample_pred(
-        "vec_id", similarity.train_sample_mod(n_old, target))
+        similarity.train_sample_mod(n_old, target))
 
     # (1) old-filtered training on the full frame == training on a frame
     # that never contained the new batch: bit-exact, not approximate.
@@ -221,4 +221,4 @@ def test_old_batch_row_count_matches_filtered_count(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     for mod in (2, 3, 7):
         expect = emb.filter(F.col("vec_id") % mod != 0).count()
-        assert old_batch_row_count(SF_DIR, "embeddings", mod) == expect
+        assert old_batch_row_count(SF_DIR, mod) == expect

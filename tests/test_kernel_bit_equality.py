@@ -115,7 +115,7 @@ def test_gram_matrix_exact_int64(spark):
     df = spark.createDataFrame(
         rows, schema="vec_id long, embedding array<double>")
     got = {(r["i"], r["j"]): r["g"]
-           for r in profiling.gram_matrix(df, "embedding", dim).collect()}
+           for r in profiling.gram_matrix(df, dim).collect()}
     q = np.floor(mats * float(profiling.PI_EMB_Q)).astype(np.int64)
     want = q.T @ q
     assert len(got) == dim * dim
@@ -139,10 +139,9 @@ def test_pc1_projection_buckets_matches_driver_reference(spark):
     width = 10 ** 9
     got = {r["bucket"]: (r["n_vecs"], r["min_proj"], r["max_proj"])
            for r in profiling.pc1_projection_hist(
-               df, "embedding", dim, "label",
-               rounds=3, width=width).collect()}
+               df, dim, rounds=3, width=width).collect()}
     v = np.asarray(
-        profiling.pc1_trajectory(df, "embedding", dim, 3)[-1],
+        profiling.pc1_trajectory(df, dim, 3)[-1],
         dtype=np.int64)
     q = np.floor(mats * float(profiling.PI_EMB_Q)).astype(np.int64)
     proj = q @ v

@@ -21,8 +21,7 @@ def test_trailing_zscore_flags_spike(spark):
     # rows have sd=0 -> NULL z, never flagged.
     rows = [("s", b, 100 if b == 30 else 10) for b in range(40)]
     df = spark.createDataFrame(rows, "series string, bucket int, n long")
-    out = profiling.trailing_zscore(df, "series", "bucket", "n",
-                                    trail=5, z_flag=2.0)
+    out = profiling.trailing_zscore(df, "series", trail=5, z_flag=2.0)
     by_bucket = {r.bucket: r for r in out.collect()}
     # Constant baseline -> sd=0 -> no finite z, but the spike IS flagged.
     assert by_bucket[30].is_anomaly and by_bucket[30].z is None
@@ -58,7 +57,7 @@ def test_gram_matrix_exact_and_grid_bounded(spark):
     df = spark.createDataFrame([(v,) for v in vecs],
                                "embedding array<double>")
     got = {(r["i"], r["j"]): r["g"]
-           for r in profiling.gram_matrix(df, "embedding", 3).collect()}
+           for r in profiling.gram_matrix(df, 3).collect()}
     assert len(got) == 9  # fixed dim^2 grid, independent of row count
     q = [[math.floor(x * profiling.PI_EMB_Q) for x in v] for v in vecs]
     for i in range(3):
@@ -78,7 +77,7 @@ def test_power_iteration_converges_to_dominant_direction(spark):
         rows.append(([0.2 * d[k] + (s if k == t % 4 else 0.0)
                       for k in range(4)],))
     df = spark.createDataFrame(rows, "embedding array<double>")
-    out = profiling.power_iteration_pc1(df, "embedding", 4, rounds=6)
+    out = profiling.power_iteration_pc1(df, 4, rounds=6)
     vals = {(r["rnd"], r["i"]): r["v"] for r in out.collect()}
     assert len(vals) == 7 * 4
     v = [vals[(6, i)] for i in range(4)]
@@ -104,9 +103,9 @@ def test_pc1_projection_hist_matches_python(spark):
     df = spark.createDataFrame(rows, "embedding array<double>, label long")
     width = 1 << 22  # small vectors -> small projections
     out = profiling.pc1_projection_hist(
-        df, "embedding", 4, "label", rounds=4, width=width).collect()
+        df, 4, rounds=4, width=width).collect()
 
-    v = profiling.pc1_trajectory(df, "embedding", 4, rounds=4)[-1]
+    v = profiling.pc1_trajectory(df, 4, rounds=4)[-1]
     projs = []
     for vec, _lbl in rows:
         q = [math.floor(x * profiling.PI_EMB_Q) for x in vec]

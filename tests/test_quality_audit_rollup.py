@@ -5,19 +5,20 @@ The driver's oracle gate runs ``table_quality_audit`` only on the intact
 fixtures, where every check reports 0 — which proves the checks agree
 with the oracle but not that they *detect* anything.  Here a temp fixture
 directory is seeded with one known violation count per check and the
-query must report exactly those counts.
+query must report exactly those counts, also when the same query is built
+over another sf_dir before the first result is collected.
 """
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from gcp_serverless_mapreduce_spark.operators import sketches
-from gcp_serverless_mapreduce_spark.suite.tpch_extra_q import (
-    table_quality_audit,
-)
+from gcp_serverless_mapreduce_spark.suite import queries
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_quality_audit_detects_each_seeded_violation(spark, tmp_path):
+def _seed_violations(spark, tmp_path):
     # customer: keys [1,2,3,2] -> count-distinct gap of exactly 1.
     spark.createDataFrame(
         [(1,), (2,), (3,), (2,)], "c_custkey long"
@@ -36,8 +37,15 @@ def test_quality_audit_detects_each_seeded_violation(spark, tmp_path):
         "l_orderkey long, l_quantity double, l_discount double",
     ).write.parquet(str(tmp_path / "lineitem.parquet"))
 
-    got = {r["check_name"]: r["n_violations"]
-           for r in table_quality_audit(spark, str(tmp_path)).collect()}
+
+def _counts(df):
+    return {r["check_name"]: r["n_violations"] for r in df.collect()}
+
+
+def test_quality_audit_detects_each_seeded_violation(spark, tmp_path):
+    _seed_violations(spark, tmp_path)
+    table_quality_audit = queries()["table_quality_audit"]
+    got = _counts(table_quality_audit(spark, str(tmp_path)))
     assert got == {
         "orders_orphan_custkey": 2,
         "lineitem_orphan_orderkey": 2,
@@ -46,6 +54,22 @@ def test_quality_audit_detects_each_seeded_violation(spark, tmp_path):
         "lineitem_discount_out_of_range": 2,
         "orders_null_orderdate": 1,
     }
+
+
+def test_sql_query_reads_its_own_sf_dir(spark, tmp_path):
+    # The SQL queries read session-global temp views that each call
+    # re-registers.  Building the query over a second sf_dir before the
+    # first result is collected must not change that result: spark.sql
+    # resolves the views when it is called.  The seeded counts are the
+    # ones the test above pins.
+    _seed_violations(spark, tmp_path)
+    table_quality_audit = queries()["table_quality_audit"]
+    seeded = table_quality_audit(spark, str(tmp_path))
+    intact = table_quality_audit(spark, SF_DIR)
+    assert set(_counts(intact).values()) == {0}
+    first = _counts(seeded)
+    assert first == _counts(table_quality_audit(spark, str(tmp_path)))
+    assert sum(first.values()) == 10
 
 
 def test_hll_hourly_to_daily_fold_equals_direct_daily_state(spark):

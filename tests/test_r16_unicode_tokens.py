@@ -119,9 +119,9 @@ def test_word_bigrams_udtf_matches_oracle_tokens(spark):
             F.explode(F.when(
                 F.size(toks) >= 2,
                 F.expr("transform(sequence(1, "
-                       f"size({dedup._toks_sql('text')}) - 1), "
+                       f"size({dedup._TOKS_SQL}) - 1), "
                        f"i -> concat_ws(' ', slice("
-                       f"{dedup._toks_sql('text')}, i, 2)))"))
+                       f"{dedup._TOKS_SQL}, i, 2)))"))
               .otherwise(F.array().cast("array<string>"))).alias("bigram"))
         .collect())
     assert got == want

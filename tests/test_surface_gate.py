@@ -123,6 +123,31 @@ def test_option_rule_reports_unchosen_options(tmp_path):
                    os.path.join("pkg", "mod.py") + ":5 outer(col)"]
 
 
+def test_literal_rule_reports_same_literal_parameters(tmp_path):
+    """Every call passes ``outer(col)`` the literal 'text' and ``inner``
+    receives it through ``outer``: the gate reports both, and not
+    ``outer(n)``, which calls pass two literals, nor ``inner(df)``, which
+    is not a literal; an aliased import counts as a call."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "def inner(df, col):\n"
+        "    return df[col]\n"
+        "\n"
+        "\n"
+        "def outer(df, col, n):\n"
+        "    return inner(df, col), n\n")
+    caller = tmp_path / "caller.py"
+    caller.write_text("from pkg.mod import outer as run\n"
+                      "df = {}\n"
+                      "run(df, 'text', 3)\n"
+                      "run(df, col='text', n=4)\n")
+    got = _gate().same_literal_params(str(pkg), [str(pkg), str(caller)],
+                                      root=str(tmp_path))
+    assert got == [os.path.join("pkg", "mod.py") + ":1 inner(col)",
+                   os.path.join("pkg", "mod.py") + ":5 outer(col)"]
+
+
 def _missing_citations(kind: str) -> set[str]:
     """``<kind>/<name>.py`` files that code, tests or the run docs cite
     but that do not exist."""

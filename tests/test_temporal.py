@@ -39,7 +39,7 @@ def test_range_join_binned_window_membership(spark):
          (2, _ts(1, 0), 5.0)],    # other key         -> out
         ["user_id", "ts", "value"])
     got = temporal.range_join_binned(
-        left, right, on="user_id", lo_s=0, hi_s=300)
+        left, right, lo_s=0, hi_s=300)
     assert sorted(r["value"] for r in got.collect()) == [1.0, 2.0]
 
 
@@ -68,7 +68,7 @@ def test_interval_overlap_join_bins_and_dedup(spark):
         [(1, 20, int(1.5 * DAY), int(3.5 * DAY)),
          (1, 21, 100, 200)],
         "user_id long, id long, s_us long, e_us long")
-    rows = temporal.interval_overlap_join(left, right, "user_id").collect()
+    rows = temporal.interval_overlap_join(left, right).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.a_id, r.b_id) == (10, 20)

@@ -82,6 +82,28 @@ def test_strip_both_footer_forms(spark):
     assert got[1] == "body text\n"
 
 
+def test_marker_lines_match_re2_dot(spark):
+    # RE2's `.` (the reference's regexes) matches `\r` and U+0085, where
+    # Java's `.` stops; a raw 0x85 byte reaches the reference's regex as
+    # U+0085 (split.go:78-87).  Each marker line below still matches, so
+    # the cuts fall where the reference makes them.
+    tail = "\nbody\n*** END OF THE PROJECT GUTENBERG EBOOK ***\npost"
+    texts = [
+        # U+0085 in the header line
+        "pre\n*** START OF THE PROJECT GUTENBERG EBOOK WHAT\x85 ***" + tail,
+        # a lone \r inside the header's `.*` span
+        "pre\n*** START OF THE PROJECT GUTENBERG EBOOK\rWHAT ***" + tail,
+        # U+0085 in the form-2 footer line
+        "pre\n*** START OF THE PROJECT GUTENBERG EBOOK ***\nbody\n"
+        "*** END OF THE PROJECT GUTENBERG EBOOK WHAT\x85 ***\npost",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, t string")
+    got = [r["b"] for r in df.orderBy("i").select(
+        strip_gutenberg(F.col("t")).alias("b")).collect()]
+    assert got == ["body\n", "body\n", "body\n"]
+
+
 def test_no_header_no_footer_passthrough(spark):
     df = spark.createDataFrame([("plain text no markers",)], ["t"])
     assert df.select(strip_gutenberg(F.col("t")).alias("b")).first()["b"] == (
@@ -112,7 +134,8 @@ _MARKER_PIECES = (
     "End of Project Gutenberg", "End ofthe Project Gutenberg",
     "*** END OF THE PROJECT GUTENBERG EBOOK ***",
     "*** END OF THIS PROJECT GUTENBERG EBOOK ***",
-    " ***", "***", "*", "\n", " ", "\r\n", "body", "text é", "End",
+    " ***", "***", "*", "\n", " ", "\r\n", "\r", "\x85", "body", "text é",
+    "End",
 )
 
 

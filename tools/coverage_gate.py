@@ -23,9 +23,17 @@ fixpoint, so an option chosen only by such pass-throughs is unchosen
 too.  An option nobody chooses is a setting no test or benchmark
 exercises: make it the value it always takes.
 
+Rule 3: a required parameter (no default) of a top-level package
+function must not be passed the same literal by every call.  Calls and
+pass-throughs are read as for Rule 2: a parameter passed straight
+through from the enclosing function takes the literals that function's
+own parameter receives, to a fixpoint.  Such a parameter is a constant
+in disguise: write the literal in the body.
+
 Usage: python tools/coverage_gate.py        (exit 1 on orphans, on
-                                             never-chosen options or on
-                                             a missing CONSUMERS path)
+                                             never-chosen options, on
+                                             same-literal parameters or
+                                             on a missing CONSUMERS path)
        python tools/coverage_gate.py -v     (per-module table)
 """
 
@@ -56,6 +64,10 @@ PROTOCOL_OK = {
 # "pkg/module.py function(option)" -> reason.  Kept explicit so
 # additions are audited.
 OPTION_OK: dict[str, str] = {}
+
+# Required parameters that may take one literal from every call (Rule 3):
+# "pkg/module.py function(parameter)" -> reason.
+LITERAL_OK: dict[str, str] = {}
 
 
 def _is_registered(node) -> bool:
@@ -183,25 +195,26 @@ def _same(value: ast.expr, value_mod: str, default: ast.expr,
     return type(a) is type(b) and a == b
 
 
-def unchosen_options(pkg: str, callers: list[str],
-                     root: str = ROOT) -> list[str]:
-    """``module.py:line function(option)`` for every keyword option of
-    a directly called top-level function in ``pkg`` that no call in
-    ``callers`` chooses (Rule 2)."""
-    defs: dict[str, list] = defaultdict(list)   # name -> [(mod, fn, opts)]
+def _defs_and_calls(pkg: str, callers: list[str], root: str):
+    """Top-level functions of ``pkg`` by name, ``[(module, def)]``, and
+    every call of one of those names in ``callers``: ``(callee name,
+    call, caller module, enclosing top-level def name or None)``."""
+    defs: dict[str, list] = defaultdict(list)
     for full in _py_files(pkg):
         mod = os.path.relpath(full, root)
         tree = ast.parse(open(full, encoding="utf-8").read())
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                defs[node.name].append((mod, node, _options(node)))
-    own = {(mod, fn.name): opts for lst in defs.values()
-           for mod, fn, opts in lst}
-    calls = []      # (callee name, call, caller module, enclosing def)
+                defs[node.name].append((mod, node))
+    calls = []
     for c in callers:
         for full in _py_files(c):
             mod = os.path.relpath(full, root)
             tree = ast.parse(open(full, encoding="utf-8").read())
+            # `from m import f as g` makes a call of g a call of f
+            alias = {a.asname: a.name for node in ast.walk(tree)
+                     if isinstance(node, ast.ImportFrom)
+                     for a in node.names if a.asname}
             for top in tree.body:
                 enc = top.name if isinstance(
                     top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
@@ -211,8 +224,22 @@ def unchosen_options(pkg: str, callers: list[str],
                     f = node.func
                     name = (f.id if isinstance(f, ast.Name) else
                             f.attr if isinstance(f, ast.Attribute) else None)
+                    name = alias.get(name, name)
                     if name in defs:
                         calls.append((name, node, mod, enc))
+    return defs, calls
+
+
+def unchosen_options(pkg: str, callers: list[str],
+                     root: str = ROOT) -> list[str]:
+    """``module.py:line function(option)`` for every keyword option of
+    a directly called top-level function in ``pkg`` that no call in
+    ``callers`` chooses (Rule 2)."""
+    found, calls = _defs_and_calls(pkg, callers, root)
+    defs = {name: [(mod, fn, _options(fn)) for mod, fn in lst]
+            for name, lst in found.items()}
+    own = {(mod, fn.name): opts for lst in defs.values()
+           for mod, fn, opts in lst}
     chosen: set[tuple[str, str, str]] = set()
     grew = True
     while grew:
@@ -234,6 +261,63 @@ def unchosen_options(pkg: str, callers: list[str],
     return [f"{mod}:{fn.lineno} {name}({opt})"
             for name in sorted(called) for mod, fn, opts in defs[name]
             for opt in opts if (mod, name, opt) not in chosen]
+
+
+def _required(fn: ast.FunctionDef) -> list[str]:
+    """Parameters without a default (``*args``/``**kwargs`` excluded)."""
+    opts = _options(fn)
+    a = fn.args
+    return [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs
+            if p.arg not in opts]
+
+
+_VARIES = "varies"
+
+
+def same_literal_params(pkg: str, callers: list[str],
+                        root: str = ROOT) -> list[str]:
+    """``module.py:line function(parameter)`` for every required
+    parameter of a directly called top-level function in ``pkg`` that
+    every call in ``callers`` passes one and the same literal (Rule 3)."""
+    defs, calls = _defs_and_calls(pkg, callers, root)
+    # registered queries are called through the registry, with the run's
+    # sf_dir, so the by-name calls seen here are not all of their calls
+    defs = {name: [(mod, fn) for mod, fn in lst if not _is_registered(fn)]
+            for name, lst in defs.items()}
+    req = {(mod, fn.name): set(_required(fn))
+           for lst in defs.values() for mod, fn in lst}
+    # (module, function, parameter) -> set of (type, literal) passed,
+    # or _VARIES once some call passes a non-literal
+    seen: dict[tuple[str, str, str], object] = defaultdict(set)
+    grew = True
+    while grew:
+        grew = False
+        for name, call, mod, enc in calls:
+            outer = req.get((mod, enc), set())
+            for dmod, fn in defs[name]:
+                for p, value in _passed(fn, call).items():
+                    key = (dmod, name, p)
+                    if p not in req[(dmod, name)] or seen[key] is _VARIES:
+                        continue
+                    if isinstance(value, ast.Name) and value.id in outer:
+                        got = seen[(mod, enc, value.id)]   # pass-through
+                    else:
+                        try:
+                            lit = ast.literal_eval(value)
+                            got = {(type(lit).__name__, repr(lit))}
+                        except (ValueError, TypeError, SyntaxError):
+                            got = _VARIES
+                    if got is _VARIES:
+                        seen[key] = _VARIES
+                        grew = True
+                    elif not got <= seen[key]:
+                        seen[key] |= got
+                        grew = True
+    return [f"{mod}:{fn.lineno} {name}({p})"
+            for name in sorted(defs) for mod, fn in defs[name]
+            for p in _required(fn)
+            if seen.get((mod, name, p)) is not _VARIES
+            and len(seen.get((mod, name, p), ())) == 1]
 
 
 def main() -> int:
@@ -281,7 +365,15 @@ def main() -> int:
         print("NEVER-CHOSEN OPTIONS (make each the value it always takes):")
         for u in unchosen:
             print(f"  {u}")
-    return 1 if orphans or unchosen else 0
+    literal = [u for u in same_literal_params(PKG, CONSUMERS + [PERFBENCH])
+               if re.sub(r":\d+ ", " ", u) not in LITERAL_OK]
+    print(f"required parameters every call passes one literal: "
+          f"{len(literal)}")
+    if literal:
+        print("SAME-LITERAL PARAMETERS (write the literal in the body):")
+        for u in literal:
+            print(f"  {u}")
+    return 1 if orphans or unchosen or literal else 0
 
 
 if __name__ == "__main__":
