@@ -10,5 +10,5 @@ from .text import (  # noqa: F401
     strip_gutenberg,
     words,
 )
-from .vectors import dot, l2_norm  # noqa: F401
+from .vectors import dot  # noqa: F401
 from .hashing import fnv32a, md5_long, minhash_expr  # noqa: F401

@@ -25,6 +25,3 @@ def dot(a: Column, b: Column) -> Column:
         lambda acc, x: acc + x,
     )
 
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))

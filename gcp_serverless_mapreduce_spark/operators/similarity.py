@@ -1,40 +1,35 @@
 """Similarity search over the ``embeddings`` table (``array<float>``).
 
-Two plan families — bucketing/filtering is pure built-in expressions
-(JVM codegen); in-bucket re-ranks are vectorized Arrow-batched kernels
-with the oracle's exact IEEE-754 fold order (see _ivf_search):
+Every search first normalizes each vector once (:func:`unit_vectors`) and
+then takes one of two plan shapes:
 
-- **Brute-force top-k**: query set × corpus via a *broadcast* nested-loop
-  join (the query side is small by construction), exact cosine, per-query
-  ``row_number``.  The O(|Q|·N) baseline — correct at any scale where |Q|
-  is bounded, because the corpus side streams and never shuffles.
-- **SRP-LSH ANN**: signed-random-projection signatures (Charikar 2002) —
-  bit p = sign(v · h_p) for fixed ±1 hyperplanes — bucket on the signature,
-  re-rank exactly within buckets.  The pair join shuffles on the bucket id
-  only; expected bucket size N/2^P keeps it near-linear.  This is the IVF
-  stand-in the 100 TB path needs (at that scale: train real centroids, or
-  raise P and probe neighboring buckets for recall).
+- **Scan**: a broadcast query panel cross-joined with the streamed corpus,
+  ranked per query by a ``row_number`` window (:func:`brute_force_topk`,
+  :func:`pq_adc_topk`, :func:`mmr_diverse_topk`).
+- **Bucket**: one shuffle on a candidate key, either an SRP signature
+  (:func:`srp_ann_topk`, :func:`srp_multiprobe_topk`, :func:`sq8_ann_topk`)
+  or a probed IVF cell (:func:`_ivf_search`).  A pandas kernel per key
+  scores the key's queries against its candidates and keeps each query's
+  top-k with :func:`topk_rows`.  Each operator keeps its own key, cap and
+  probes.
 
-Determinism across engines: hyperplanes are ±1 literals derived from md5
-in Python and embedded in BOTH the Spark plan and the oracle SQL; dot
-products fold left-to-right in double on both engines, so even ranking on
-the raw (unrounded) similarity is stable; ties broken by vec_id.
-
-Generalizes the reference's key-equality grouping (shuffle.go:84-91 hashes
-exact keys) to similarity-space grouping; no counterpart exists there.
+Every result matches a DuckDB twin bit for bit.  Float dot products add
+one dimension at a time, left to right from 0.0 (:func:`fold_dot`), which
+is the order of the oracle's ``list_reduce`` fold.  Hyperplanes,
+centroids and codebooks are md5-derived literals that render identically
+in both engines, and ties go to the smaller id.
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-from ..functions.vectors import dot, l2_norm
 
 
 def srp_planes(num_planes: int, dim: int) -> list[list[int]]:
@@ -50,44 +45,93 @@ def srp_planes(num_planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-def _unit_udf():
-    """Arrow-batched unit-vector kernel with the ORACLE's IEEE-754 op
-    sequence: |v|^2 accumulates dimension by dimension, left-to-right,
-    seeded 0.0 (one vectorized add per dim — same bit-parity technique
-    as :func:`_probe_cells_udf`), then sqrt and one elementwise divide.
+def fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """The n×m matrix A·Bᵀ of float64 ``A`` (n×dim) and ``B`` (m×dim).
 
-    Replaces the pure-expression ``transform(v, x -> x / l2_norm(v))``
-    rendering: Spark's higher-order functions are CodegenFallback —
-    every lambda step is an interpreted expression walk — and the
-    normalize measured ~2.4 s per pass over the sf0.1 embeddings
-    (2000×64!) as a single-task stage, the dominant cost of the whole
-    similarity family.  The numpy kernel is the same arithmetic at
-    Arrow-batch speed (guide §4.2).  Semantics preserved exactly:
-    NULL in → NULL out, zero norm → NULL (the ``when(nrm != 0)``
-    rule); mixed-length batches are grouped by length so each group
-    vectorizes (a vector always matches its own length — no ragged
-    zip_with edge cases here)."""
-    import numpy as np
+    Each entry adds one dimension at a time, left to right from 0.0: the
+    IEEE-754 op sequence of the oracle's ``list_reduce`` fold, so every
+    score equals DuckDB's bit for bit (a matmul sums in another order)."""
+    out = np.zeros((A.shape[0], B.shape[0]))
+    tmp = np.empty_like(out)
+    for d in range(A.shape[1]):
+        np.multiply(A[:, d:d + 1], B[None, :, d], out=tmp)
+        out += tmp
+    return out
+
+
+def _row_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise dot products A[i]·B[i], in :func:`fold_dot`'s order."""
+    out = np.zeros(A.shape[0])
+    for d in range(A.shape[1]):
+        out += A[:, d] * B[:, d]
+    return out
+
+
+def _sq_fold(vals: list[float]) -> float:
+    """|c|^2 as a left-to-right Python fold — embedded verbatim as a
+    literal in BOTH engines (same convention as the IVF oracle)."""
+    acc = 0.0
+    for x in vals:
+        acc += x * x
+    return acc
+
+
+def topk_rows(qids: np.ndarray, cids: np.ndarray, scores: np.ndarray,
+              k: int) -> tuple[np.ndarray, ...]:
+    """Each query's top-``k`` candidates as (query_id, neighbor_id, rank,
+    score) arrays, one entry per kept pair, query by query.
+
+    ``scores`` is the len(qids)×len(cids) score matrix and ``cids`` is
+    ascending, so a stable argsort on ``-scores`` orders each row by score
+    descending, then by neighbor id: ``ORDER BY score DESC, neighbor_id``.
+    A query never ranks itself (its own pair scores ``-inf``) and NaN
+    scores are dropped.  Both sort after every finite score, so a row's
+    kept entries are a prefix and rank = position + 1."""
+    scores = np.where(qids[:, None] == cids[None, :], -np.inf, scores)
+    order = np.argsort(-scores, axis=1, kind="stable")[:, :k]
+    top = np.take_along_axis(scores, order, axis=1)
+    qi, pos = np.nonzero(np.isfinite(top))
+    return (qids[qi], cids[order[qi, pos]], (pos + 1).astype(np.int32),
+            top[qi, pos])
+
+
+def _topk_frame(rows: tuple[np.ndarray, ...], score: str) -> pd.DataFrame:
+    """:func:`topk_rows`'s arrays as a frame whose score column is
+    named ``score``."""
+    return pd.DataFrame(
+        dict(zip(("query_id", "neighbor_id", "rank", score), rows)))
+
+
+def _stack(col: pd.Series) -> np.ndarray:
+    """A column of equal-length arrays as one float64 matrix."""
+    return np.vstack(col.to_numpy()).astype(np.float64, copy=False)
+
+
+# The empty result of a bucket kernel that emits (query_id, neighbor_id,
+# sim) candidates.
+_NO_PAIRS = pd.DataFrame({"query_id": pd.Series(dtype="int64"),
+                          "neighbor_id": pd.Series(dtype="int64"),
+                          "sim": pd.Series(dtype="float64")})
+
+
+def _unit_udf():
+    """Arrow-batched unit vectors: |v|^2 in :func:`fold_dot`'s order,
+    then sqrt and one divide per entry.  NULL in gives NULL out, and so
+    does a zero-norm or empty vector (the expression rule
+    ``when(norm != 0, ...)``).  Rows are grouped by length, so each
+    group is one matrix."""
 
     @pandas_udf("array<double>")
     def unit(arrs: pd.Series) -> pd.Series:
-        n = len(arrs)
-        out: list = [None] * n
-        if not n:
-            return pd.Series(out, dtype=object)
-        lens: dict[int, list[int]] = {}
         vals = arrs.to_numpy()
+        out: list = [None] * len(vals)
+        lens: dict[int, list[int]] = {}
         for i, v in enumerate(vals):
-            if v is not None:
+            if v is not None and len(v):
                 lens.setdefault(len(v), []).append(i)
-        for ln, idxs in lens.items():
-            if ln == 0:
-                continue                      # |v| = 0 → NULL
+        for idxs in lens.values():
             m = np.vstack([vals[i] for i in idxs]).astype(np.float64)
-            acc = np.zeros(len(idxs))
-            for d in range(ln):               # fold order = oracle
-                acc += m[:, d] * m[:, d]
-            nrm = np.sqrt(acc)
+            nrm = np.sqrt(_row_dot(m, m))
             u = m / nrm[:, None]
             for r, i in enumerate(idxs):
                 if nrm[r] != 0:
@@ -98,62 +142,33 @@ def _unit_udf():
 
 
 def unit_vectors(emb: DataFrame) -> DataFrame:
-    """Normalize once, before any pair join — the pair join then computes
-    ONE fold (the dot product) instead of three (dot + two norms).
-    Zero vectors normalize to NULL and drop out of similarity joins.
-    Runs as an Arrow-batched kernel with the oracle's exact fold order
-    (see :func:`_unit_udf`); :func:`unit_vectors_expr` keeps the
-    pure-expression reference rendering."""
+    """Adds ``unit``: each embedding divided by its L2 norm, NULL for a
+    NULL or zero vector, which then drops out of every search.  With the
+    vectors normalized before any pair join, a pair costs one fold: the
+    dot product."""
     return emb.withColumn("unit", _unit_udf()(F.col("embedding")))
 
 
-def unit_vectors_expr(emb: DataFrame) -> DataFrame:
-    """Pure-expression REFERENCE twin of :func:`unit_vectors` (higher-
-    order functions only — interpreted, CodegenFallback); kept for the
-    bit-equality test that pins the kernel's fold order."""
-    nrm = l2_norm(F.col("embedding"))
-    unit = F.when(nrm != 0, F.transform(
-        F.col("embedding").cast("array<double>"), lambda x: x / nrm))
-    return emb.withColumn("unit", unit)
-
-
 def srp_signature(vec_col: Column, planes: list[list[int]]) -> Column:
-    """Bit string signature, e.g. '10110100' for 8 planes (sign >= 0 → '1').
+    """Bit-string SRP signature, e.g. '10110100' for 8 planes: bit p is
+    '1' when v·plane_p >= 0, the dot in :func:`fold_dot`'s order.
 
-    Feed the RAW vector, not the unit vector: sign(v·h) is scale-invariant,
-    and a unit-vector input would drag the norm fold into all |planes| dot
-    expressions when CollapseProject inlines it (measured 2× on bucketing).
-
-    Arrow-batched kernel with the oracle's fold order (v·h accumulates
-    dimension by dimension, left-to-right, seeded 0.0 — each plane's
-    fold is the exact IEEE-754 op sequence of the expression twin
-    :func:`srp_signature_expr`, which the pure-HOF rendering evaluated
-    INTERPRETED at ~8 64-dim expression-walk folds per row)."""
-    import numpy as np
-
+    A NULL vector, or one whose length differs from the planes', gets all
+    '0's, as ``when(dot >= 0, '1').otherwise('0')`` does on a NULL dot.
+    Callers pass the raw vector: the sign does not depend on its norm."""
     dim = len(planes[0])
-    n_planes = len(planes)
     pl = np.asarray(planes, dtype=np.float64)        # n_planes × dim
-    zero_sig = "0" * n_planes
+    zero_sig = "0" * len(planes)
 
     @pandas_udf("string")
     def sig(arrs: pd.Series) -> pd.Series:
-        n = len(arrs)
-        out: list = [zero_sig] * n
-        if not n:
-            return pd.Series(out, dtype=object)
         vals = arrs.to_numpy()
+        out: list = [zero_sig] * len(vals)
         ok = [i for i, v in enumerate(vals)
               if v is not None and len(v) == dim]
-        # any other length reproduces the expression twin exactly: a
-        # NULL vector or a zip_with length mismatch nulls the dot, and
-        # ``when(NULL >= 0, '1').otherwise('0')`` emits '0' per plane
         if ok:
             m = np.vstack([vals[i] for i in ok]).astype(np.float64)
-            acc = np.zeros((len(ok), n_planes))
-            for d in range(dim):                     # fold order = oracle
-                acc += m[:, d:d + 1] * pl[None, :, d]
-            bits = np.where(acc >= 0, "1", "0")
+            bits = np.where(fold_dot(m, pl) >= 0, "1", "0")
             for r, i in enumerate(ok):
                 out[i] = "".join(bits[r])
         return pd.Series(out, dtype=object)
@@ -161,36 +176,16 @@ def srp_signature(vec_col: Column, planes: list[list[int]]) -> Column:
     return sig(vec_col)
 
 
-def srp_signature_expr(vec_col: Column, planes: list[list[int]]) -> Column:
-    """Pure-expression REFERENCE twin of :func:`srp_signature` (kept for
-    the bit-equality test that pins the kernel's fold order)."""
-    bits = [
-        F.when(dot(vec_col, F.array(*[F.lit(s) for s in plane])) >= 0,
-               F.lit("1")).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
-
-
 def _pair_dot_udf():
-    """Arrow-batched exact pair dot product over two unit-vector columns.
-
-    Dimension-by-dimension accumulation = the oracle's left-to-right
-    ``list_reduce`` fold, vectorized over the Arrow batch (the
-    interpreted ``F.aggregate`` fold measured ~40% slower over |Q|·N
-    pair rows at sf0.1) — so raw (unrounded) similarities agree
-    bit-for-bit across engines and even rankings on them are stable."""
-    import numpy as np
+    """Arrow-batched dot product of two unit-vector columns, row by row,
+    in :func:`fold_dot`'s order."""
 
     @pandas_udf("double")
     def pair_dot(qv: pd.Series, cv: pd.Series) -> pd.Series:
         if not len(qv):
             return pd.Series(dtype="float64")
-        Q, C = np.vstack(qv.to_numpy()), np.vstack(cv.to_numpy())
-        acc = np.zeros(len(Q))
-        for i in range(Q.shape[1]):
-            acc += Q[:, i] * C[:, i]
-        return pd.Series(acc)
+        return pd.Series(_row_dot(np.vstack(qv.to_numpy()),
+                                  np.vstack(cv.to_numpy())))
 
     return pair_dot
 
@@ -208,13 +203,9 @@ def topk_per_query(pairs: DataFrame, k: int) -> DataFrame:
 def brute_force_topk(emb: DataFrame, k: int, num_queries: int) -> DataFrame:
     """-> (query_id, neighbor_id, rank, sim): exact cosine top-k of each of
     the first ``num_queries`` ids against the whole corpus.  The query side
-    is broadcast; the corpus side moves once.
-
-    The ``repartition()`` is a deliberate materialization barrier: without
-    it CollapseProject inlines the normalize expression into the
-    nested-loop join and every corpus vector is re-normalized once PER
-    QUERY (measured 30× slower at |Q|=20).  One extra corpus shuffle,
-    amortized over all queries, beats |Q| norm folds per vector."""
+    is broadcast; the corpus side moves once.  The ``repartition()``
+    materializes the unit vectors, so the nested-loop join does not
+    normalize each corpus vector once per query."""
     pair_dot = _pair_dot_udf()
 
     units = (unit_vectors(emb).select(F.col("vec_id"), F.col("unit"))
@@ -236,81 +227,38 @@ def brute_force_topk(emb: DataFrame, k: int, num_queries: int) -> DataFrame:
     )
 
 
+def _srp_units(emb: DataFrame, planes: list[list[int]]) -> DataFrame:
+    """(vid, unit, bucket) of every vector with a non-zero norm: its unit
+    vector and the SRP signature of its raw vector."""
+    return (unit_vectors(emb)
+            .filter(F.col("unit").isNotNull())
+            .select(F.col("vec_id").alias("vid"), "unit",
+                    srp_signature(F.col("embedding").cast("array<double>"),
+                                  planes).alias("bucket")))
+
+
 def srp_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
                  max_bucket: int | None = None) -> DataFrame:
     """-> (query_id, neighbor_id, rank, sim): per-vector top-k among the
     vectors sharing its SRP bucket (every vector is a query).  One shuffle
-    keyed on the bucket id; exact cosine re-rank inside buckets.  Buckets
-    come from the raw vector (sign is scale-invariant); the join exchange
-    materializes the unit vectors so the re-rank pays one fold per pair.
+    keyed on the bucket; inside a bucket :func:`fold_dot` scores the
+    vectors against each other and :func:`topk_rows` ranks them.
 
-    ``max_bucket`` caps the NEIGHBOR side of a hot bucket: only the
-    ``max_bucket`` smallest vec_ids serve as candidates there, bounding a
-    degenerate bucket (boilerplate corpus → one bucket holds everything)
-    at O(n·max_bucket) pairs instead of O(n^2).  Every vector still
-    queries — capped buckets lose only candidate DIVERSITY, and the
-    dropped candidates are bucket-mates of the kept ones (near-identical
-    by construction).  Deterministic, so the SQL oracle mirrors it."""
-    # Per-bucket vectorized kernel instead of the exploded pair join +
-    # one interpreted 64-dim fold per pair (measured 4.2 s → 3.6 s at
-    # sf0.1 for this query, 6.1 s → 3.2 s for ann_recall_eval which runs
-    # the index twice; the residual cost is the signature expression +
-    # Arrow transfer, not the pairs).  Dots accumulate dimension by
-    # dimension — the oracle's left-to-right list_reduce op sequence
-    # (same bit-parity technique as _ivf_search) — and the stable
-    # argsort on -sim breaks ties by candidate position = ascending
-    # vec_id, replicating ``ORDER BY sim DESC, neighbor_id`` bit-for-bit.
-    # One shuffle on the bucket.
-    import numpy as np
-
+    ``max_bucket`` caps the candidate side of a bucket to its
+    ``max_bucket`` smallest ids, so a degenerate bucket (a boilerplate
+    corpus puts everything in one) costs O(n·max_bucket) pairs, not
+    O(n²).  Every vector still queries; a capped bucket loses only
+    candidates that are bucket-mates of the kept ones.  Deterministic, so
+    the SQL oracle mirrors it."""
     cap = max_bucket
 
     def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vid").reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [],
-                                 "rank": [], "sim": []}).astype(
-                {"query_id": "int64", "neighbor_id": "int64",
-                 "rank": "int32", "sim": "float64"})
-        u = np.vstack(pdf["unit"].to_numpy()).astype(np.float64)  # n × dim
-        n_cand = n if cap is None else min(n, cap)
-        acc = np.zeros((n, n_cand))
-        for i in range(u.shape[1]):                 # fold order = oracle
-            acc += u[:, i:i + 1] * u[None, :n_cand, i]
-        ids = pdf["vid"].to_numpy()
-        # Fully vectorized per-row top-k: stable argsort on -sim breaks
-        # ties by candidate POSITION = ascending vec_id (rows are
-        # id-sorted), which is exactly ``ORDER BY sim DESC, neighbor``.
-        # Self-matches get -inf so they sort last; take k+1 columns to
-        # cover the row where self was in the window, then drop it and
-        # close the rank gap it left.
-        rows = np.arange(n)
-        self_mask = rows[:, None] == np.arange(n_cand)[None, :]
-        acc_m = np.where(self_mask, -np.inf, acc)
-        width = min(k + 1, n_cand)
-        order = np.argsort(-acc_m, axis=1, kind="stable")[:, :width]
-        sims = np.take_along_axis(acc_m, order, axis=1)
-        sp_hit = order == rows[:, None]
-        sp = np.where(sp_hit.any(1), sp_hit.argmax(1), width + 1)
-        pos = np.arange(width)[None, :]
-        rank = pos + 1 - (sp[:, None] < pos)
-        keep = (~sp_hit) & (rank <= k) & np.isfinite(sims)
-        qi, ci = np.nonzero(keep)
-        return pd.DataFrame({
-            "query_id": ids[qi],
-            "neighbor_id": ids[order[qi, ci]],
-            "rank": rank[qi, ci].astype("int32"),
-            "sim": sims[qi, ci]})
+        pdf = pdf.sort_values("vid")
+        ids, u = pdf["vid"].to_numpy(), _stack(pdf["unit"])
+        return _topk_frame(
+            topk_rows(ids, ids[:cap], fold_dot(u, u[:cap]), k), "sim")
 
-    units = (
-        unit_vectors(emb)
-        .filter(F.col("unit").isNotNull())
-        .select(F.col("vec_id").alias("vid"), "unit",
-                srp_signature(F.col("embedding").cast("array<double>"),
-                              planes).alias("bucket"))
-    )
-    raw = units.groupBy("bucket").applyInPandas(
+    raw = _srp_units(emb, planes).groupBy("bucket").applyInPandas(
         bucket_topk, "query_id long, neighbor_id long, rank int, sim double")
     return raw.select("query_id", "neighbor_id", "rank",
                       F.round("sim", 4).alias("sim"))
@@ -328,53 +276,23 @@ def semdedup_discards(emb: DataFrame, planes: list[list[int]],
     (the deterministic "keep first" rule, same contract as chunk-level
     dedup), ``sim`` that pair's cosine rounded to 4.
 
-    The paper clusters with k-means; here cells are the fixed ±1 SRP
-    signature (scale-invariant, engine-reproducible — the same stand-in
-    trade the IVF family documents).  Plan: one shuffle keyed on the cell
-    id, then a per-cell vectorized kernel (applyInPandas) that scores
-    keeper×member pairs inside cells only — never all-pairs.
-    ``max_bucket`` bounds the KEEPER side of a degenerate cell exactly
-    like :func:`srp_ann_topk`'s neighbor cap — at O(n·cap) pairs — and
-    only ever loses keeper CHOICE, not discard coverage, because any
-    vector beyond the cap has a cell-mate below it.
+    The paper clusters with k-means; here cells are the SRP signature.
+    One shuffle keyed on the cell; inside a cell :func:`fold_dot` scores
+    keepers against members, never all pairs of the corpus.
+    ``max_bucket`` caps the KEEPER side of a cell to its smallest ids,
+    like :func:`srp_ann_topk`'s candidate cap, at O(n·cap) pairs; it only
+    loses keeper CHOICE, not discards, because any vector beyond the cap
+    has a cell-mate below it.
     """
-    units = (
-        unit_vectors(emb)
-        .filter(F.col("unit").isNotNull())
-        .select(F.col("vec_id"), "unit",
-                srp_signature(F.col("embedding").cast("array<double>"),
-                              planes).alias("cell"))
-    )
-    # Per-cell vectorized kernel instead of an exploded pair join + one
-    # interpreted 64-dim fold per pair (measured 1.8× at sf0.1: 5.2 s →
-    # 2.9 s; ~78² pairs/cell × 64 cells of interpreted folds dominate the
-    # join form).  The pairwise dot accumulates DIMENSION BY DIMENSION —
-    # the exact IEEE-754 op sequence of the oracle's left-to-right
-    # list_reduce fold (same bit-parity technique as _ivf_search), so
-    # the threshold comparison and keep-first choice agree with DuckDB
-    # bit-for-bit.  One shuffle, keyed on the cell id.
-    import numpy as np
-
     cap = max_bucket
 
     def cell_discards(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vid").reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"vec_id": [], "cell": [], "keep_id": [],
-                                 "sim": []}).astype(
-                {"vec_id": "int64", "cell": "string",
-                 "keep_id": "int64", "sim": "float64"})
-        u = np.vstack(pdf["unit"].to_numpy()).astype(np.float64)  # n × dim
-        n_keep = n if cap is None else min(n, cap)
-        acc = np.zeros((n_keep, n))
-        for i in range(u.shape[1]):                 # fold order = oracle
-            acc += u[:n_keep, i:i + 1] * u[None, :, i]
-        ids = pdf["vid"].to_numpy()
+        pdf = pdf.sort_values("vid")
+        ids, u = pdf["vid"].to_numpy(), _stack(pdf["unit"])
+        acc = fold_dot(u[:cap], u)                  # keepers × members
         out_v, out_k, out_s = [], [], []
-        for v in range(1, n):
-            uppers = min(v, n_keep)
-            hits = np.nonzero(acc[:uppers, v] >= threshold)[0]
+        for v in range(1, len(ids)):
+            hits = np.nonzero(acc[:v, v] >= threshold)[0]
             if hits.size:
                 k0 = int(hits[0])                   # smallest keeper id
                 out_v.append(int(ids[v]))
@@ -384,7 +302,7 @@ def semdedup_discards(emb: DataFrame, planes: list[list[int]],
                              "cell": pdf["cell"].iloc[0],
                              "keep_id": out_k, "sim": out_s})
 
-    raw = (units.select(F.col("vec_id").alias("vid"), "unit", "cell")
+    raw = (_srp_units(emb, planes).withColumnRenamed("bucket", "cell")
            .groupBy("cell")
            .applyInPandas(cell_discards,
                           "vec_id long, cell string, keep_id long, sim double"))
@@ -396,36 +314,22 @@ def srp_multiprobe_topk(emb: DataFrame, k: int, planes: list[list[int]],
                         max_bucket: int | None = None) -> DataFrame:
     """Multi-probe SRP ANN (Lv et al. 2007, multi-probe LSH): each query
     searches its home bucket PLUS the ``len(planes)`` hamming-1 buckets
-    (one sign bit flipped) — the standard recall lever that avoids the
-    alternative of more tables/replicas.  -> (query_id, neighbor_id,
-    rank, sim), exact cosine rank over the probed candidate union.
+    (one sign bit flipped).  -> (query_id, neighbor_id, rank, sim), exact
+    cosine rank over the probed candidate union.
 
-    Plan: the probe explosion is a per-row 1→(P+1) map (bit-string
-    surgery, no data growth beyond P+1×), then ONE cogrouped shuffle on
-    the bucket id — probe rows meet each bucket's (capped) members in a
-    vectorized kernel that scores and keeps the per-bucket top-k per
-    query (a superset of every global top-k member, since any global
-    winner ranks ≤ k inside its own bucket too); the global window then
-    ranks only ≤ (P+1)·k rows per query.  Dots accumulate dimension by
-    dimension (oracle fold order), ties break on the neighbor id.
+    Each vector explodes into P+1 probe rows; ONE cogrouped shuffle on the
+    bucket meets them with the bucket's (capped) members, and the kernel
+    keeps each probe's top-k inside the bucket (:func:`topk_rows`).  A
+    global top-k member ranks ≤ k inside its own bucket too, so the
+    window after it ranks at most (P+1)·k rows per query.
     """
-    import numpy as np
-
     num_p = len(planes)
-    cap = max_bucket
-
-    units = (
-        unit_vectors(emb)
-        .filter(F.col("unit").isNotNull())
-        .select(F.col("vec_id").alias("vid"), "unit",
-                srp_signature(F.col("embedding").cast("array<double>"),
-                              planes).alias("bucket"))
-    )
+    units = _srp_units(emb, planes)
     index = units
-    if cap is not None:
+    if max_bucket is not None:
         wb = Window.partitionBy("bucket").orderBy("vid")
         index = (index.withColumn("_rn", F.row_number().over(wb))
-                 .filter(F.col("_rn") <= cap).drop("_rn"))
+                 .filter(F.col("_rn") <= max_bucket).drop("_rn"))
     flip = [
         F.concat(
             F.substring("bucket", 1, p),
@@ -438,31 +342,13 @@ def srp_multiprobe_topk(emb: DataFrame, k: int, planes: list[list[int]],
         F.explode(F.array(F.col("bucket"), *flip)).alias("bucket"))
 
     def probe_bucket(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [],
-                              "sim": []}).astype(
-            {"query_id": "int64", "neighbor_id": "int64", "sim": "float64"})
         if left.empty or right.empty:
-            return empty
-        right = right.sort_values("vid").reset_index(drop=True)
-        q = np.vstack(left["unit"].to_numpy()).astype(np.float64)
-        c = np.vstack(right["unit"].to_numpy()).astype(np.float64)
-        acc = np.zeros((len(left), len(right)))
-        for i in range(q.shape[1]):                 # fold order = oracle
-            acc += q[:, i:i + 1] * c[None, :, i]
-        qids = left["vid"].to_numpy()
-        cids = right["vid"].to_numpy()
-        self_mask = qids[:, None] == cids[None, :]
-        acc_m = np.where(self_mask, -np.inf, acc)
-        width = min(k + 1, len(right))
-        order = np.argsort(-acc_m, axis=1, kind="stable")[:, :width]
-        sims = np.take_along_axis(acc_m, order, axis=1)
-        # the self hit (-inf) sorts last, so finite entries are a prefix
-        # of each sorted row and the first k finite ARE the bucket top-k
-        keep = np.isfinite(sims) & (np.arange(width)[None, :] < k)
-        qi, ci = np.nonzero(keep)
-        return pd.DataFrame({"query_id": qids[qi],
-                             "neighbor_id": cids[order[qi, ci]],
-                             "sim": sims[qi, ci]})
+            return _NO_PAIRS
+        right = right.sort_values("vid")
+        rows = topk_rows(left["vid"].to_numpy(), right["vid"].to_numpy(),
+                         fold_dot(_stack(left["unit"]), _stack(right["unit"])),
+                         k)
+        return _topk_frame(rows, "sim").drop(columns="rank")
 
     cand = (probes.groupBy("bucket")
             .cogroup(index.groupBy("bucket"))
@@ -479,28 +365,16 @@ def srp_multiprobe_topk(emb: DataFrame, k: int, planes: list[list[int]],
 def blocked_cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """-> (vec_a, vec_b, sim): unordered within-``label`` pairs with cosine
     >= threshold, sim rounded to 4 — the embedding near-dup primitive
-    (the label block stands in for an IVF/LSH bucket at corpus scale).
-
-    Per-block vectorized kernel (same bit-parity shape as the ANN
-    re-ranks): pairwise dots accumulate dimension by dimension — the
-    oracle's left-to-right fold op sequence — and only the upper
-    triangle (vec_a < vec_b) is emitted.  Measured 4.0 s → 2.6 s at
-    sf0.1 vs the exploded pair join with one interpreted fold per pair.
+    (the label block stands in for an IVF/LSH bucket).  One shuffle keyed
+    on the label; inside a block :func:`fold_dot` scores all pairs and
+    only the upper triangle (vec_a < vec_b) is emitted.
     """
-    import numpy as np
 
     def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vid").reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "sim": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "sim": "float64"})
-        u = np.vstack(pdf["unit"].to_numpy()).astype(np.float64)
-        acc = np.zeros((n, n))
-        for i in range(u.shape[1]):                 # fold order = oracle
-            acc += u[:, i:i + 1] * u[None, :, i]
+        pdf = pdf.sort_values("vid")
+        ids, u = pdf["vid"].to_numpy(), _stack(pdf["unit"])
+        acc = fold_dot(u, u)
         ai, bi = np.nonzero(np.triu(acc >= threshold, k=1))
-        ids = pdf["vid"].to_numpy()
         return pd.DataFrame({"vec_a": ids[ai], "vec_b": ids[bi],
                              "sim": acc[ai, bi]})
 
@@ -516,73 +390,30 @@ def sq8_ann_topk(emb: DataFrame, k: int, planes: list[list[int]],
                  max_bucket: int | None = None) -> DataFrame:
     """Scalar-quantized (int8) ANN: SRP buckets + integer-dot re-rank.
 
-    The memory-bound scale path: unit vectors quantize to
-    ``round(127 * u_i)`` int8 codes (4× smaller than float32, 8× than
-    float64), and the in-bucket re-rank is an INTEGER dot product —
-    exact, associative, no float summation order anywhere, so the SQL
-    oracle matches bit-for-bit trivially.  Ranking uses the raw integer
-    score (a monotone ~127²-scaled cosine estimate); ties break on
-    neighbor id.  Bucketing reuses the SRP signature on the raw vector;
-    the single shuffle keys on the bucket id, identical to
-    :func:`srp_ann_topk`.
+    Unit vectors quantize to ``round(127 * u_i)`` int8 codes (4× smaller
+    than float32), and the in-bucket re-rank is an INTEGER dot product —
+    exact under any summation order, so a plain int64 matmul matches the
+    SQL oracle bit for bit.  Ranking uses the raw integer score (a
+    monotone ~127²-scaled cosine estimate); ties break on neighbor id.
+    Buckets, cap and shuffle are :func:`srp_ann_topk`'s.
     """
-    units = (
-        unit_vectors(emb)
-        .filter(F.col("unit").isNotNull())
-        .select(
-            F.col("vec_id"),
-            F.transform("unit",
-                        lambda x: F.round(x * 127).cast("int")).alias("q"),
-            srp_signature(F.col("embedding").cast("array<double>"),
-                          planes).alias("bucket"))
-    )
-    # Per-bucket vectorized kernel (same shape as srp_ann_topk's): the
-    # integer dot is EXACT under any summation order, so here a straight
-    # int64 matmul is bit-identical to the oracle's fold with no
-    # op-sequence care needed.  Stable argsort on -score breaks ties by
-    # candidate position = ascending vec_id.  Wall-clock gain at sf0.1
-    # is modest (4.5 s → 4.2 s: the quantize + signature expressions and
-    # Arrow transfer dominate, not the pairs), but the kernel removes the
-    # exploded |bucket|² pair rows from the exchange — the term that
-    # grows quadratically in bucket size at corpus scale.
-    import numpy as np
-
     cap = max_bucket
 
     def bucket_topk_int(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vid").reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [],
-                                 "rank": [], "qsim": []}).astype(
-                {"query_id": "int64", "neighbor_id": "int64",
-                 "rank": "int32", "qsim": "int64"})
-        q = np.vstack(pdf["q"].to_numpy()).astype(np.int64)   # n × dim
-        n_cand = n if cap is None else min(n, cap)
-        acc = q @ q[:n_cand].T                                # exact int64
+        pdf = pdf.sort_values("vid")
         ids = pdf["vid"].to_numpy()
-        rows = np.arange(n)
-        self_mask = rows[:, None] == np.arange(n_cand)[None, :]
-        # min+1: np.argsort(-x) negates, and -int64.min overflows back
-        # to itself (would sort the self-sentinel FIRST instead of last)
-        lowest = np.iinfo(np.int64).min + 1
-        acc_m = np.where(self_mask, lowest, acc)
-        width = min(k + 1, n_cand)
-        order = np.argsort(-acc_m, axis=1, kind="stable")[:, :width]
-        scores = np.take_along_axis(acc_m, order, axis=1)
-        sp_hit = order == rows[:, None]
-        sp = np.where(sp_hit.any(1), sp_hit.argmax(1), width + 1)
-        pos = np.arange(width)[None, :]
-        rank = pos + 1 - (sp[:, None] < pos)
-        keep = (~sp_hit) & (rank <= k) & (scores != lowest)
-        qi, ci = np.nonzero(keep)
-        return pd.DataFrame({
-            "query_id": ids[qi],
-            "neighbor_id": ids[order[qi, ci]],
-            "rank": rank[qi, ci].astype("int32"),
-            "qsim": scores[qi, ci]})
+        q = np.vstack(pdf["q"].to_numpy()).astype(np.int64)   # n × dim
+        # |score| <= 127² · dim, far below 2^53: float64 holds it exactly
+        score = (q @ q[:cap].T).astype(np.float64)
+        return (_topk_frame(topk_rows(ids, ids[:cap], score, k), "qsim")
+                .astype({"qsim": "int64"}))
 
-    raw = (units.select(F.col("vec_id").alias("vid"), "q", "bucket")
+    raw = (_srp_units(emb, planes)
+           .select("vid",
+                   F.transform("unit",
+                               lambda x: F.round(x * 127).cast("int"))
+                   .alias("q"),
+                   "bucket")
            .groupBy("bucket")
            .applyInPandas(bucket_topk_int,
                           "query_id long, neighbor_id long, "
@@ -595,9 +426,9 @@ def fixed_centroids(n_cells: int, dim: int) -> list[list[float]]:
 
     Every value is an exact binary fraction in [-2, 2), so the literal
     renders identically into the Spark plan and the DuckDB oracle — the
-    same trick as :func:`srp_planes`.  Gives the IVF *plan shape* (cell
-    membership, multi-probe, per-cell re-rank) a full hash-matchable twin
-    while the trained KMeans variant keeps its recall test."""
+    same trick as :func:`srp_planes`.  Gives the IVF plan (cell
+    membership, multi-probe, per-cell re-rank) a hash-matchable twin
+    without a training step."""
     return [
         [(hashlib.md5(f"cell{c}|{d}".encode()).digest()[0] - 128) / 64.0
          for d in range(dim)]
@@ -607,113 +438,66 @@ def fixed_centroids(n_cells: int, dim: int) -> list[list[float]]:
 
 def _probe_cells_udf(centers: list[list[float]], n_probe: int):
     """Arrow-batched kernel: the ``n_probe`` nearest cells of each
-    vector under score ``|c|^2 - 2·(v·c)``, ties to the smallest cell
-    (= the oracle's ``ORDER BY score, cell``; stable argsort over
-    ascending cell index).  Accumulates DIMENSION BY DIMENSION — the
-    exact IEEE-754 op sequence of the oracle's left-to-right
-    ``list_reduce`` fold — so assignments agree with DuckDB
-    bit-for-bit.  NB: an all-expression rendering of this scoring
-    (16 structs × 64 chained adds + array_sort) measured ~4× SLOWER
-    end-to-end at sf0.1 — Catalyst pays dearly analyzing/compiling the
-    ~1k-node tree and the per-row struct sort stays interpreted — so
-    the batched numpy kernel is the measured fast path, as with
-    shingle_array."""
-    import numpy as np
-
+    vector under score ``|c|^2 - 2·(v·c)``, the dot from
+    :func:`fold_dot`, ties to the smallest cell (the oracle's ``ORDER BY
+    score, cell``; a stable argsort over ascending cell index)."""
     cent = np.asarray(centers, dtype=np.float64)           # n_cells × dim
-    n_cells, dim = cent.shape
-    sqs = []
-    for row in centers:                 # |c|^2, left-to-right Python fold
-        acc = 0.0
-        for x in row:
-            acc += x * x
-        sqs.append(acc)
-    sq_arr = np.asarray(sqs, dtype=np.float64)
+    sq_arr = np.asarray([_sq_fold(c) for c in centers], dtype=np.float64)
 
     @pandas_udf("array<int>")
     def probe_cells(arrs: pd.Series) -> pd.Series:
-        m = np.vstack(arrs.to_numpy())                     # batch × dim
-        acc = np.zeros((m.shape[0], n_cells))
-        for i in range(dim):                               # fold order = oracle
-            acc += m[:, i:i + 1] * cent[None, :, i]
-        scores = sq_arr[None, :] - 2.0 * acc
-        # stable sort on ascending cell index = ORDER BY score, cell
+        scores = sq_arr[None, :] - 2.0 * fold_dot(_stack(arrs), cent)
         order = np.argsort(scores, axis=1, kind="stable")[:, :n_probe]
         return pd.Series(list(order.astype("int32")))
 
     return probe_cells
 
 
-# Query-side salt width for the per-cell re-rank (see _ivf_search):
-# a hot IVF cell's work fans out over this many parallel tasks.
+# Query-side salt width of the per-cell re-rank (see _ivf_search): a hot
+# IVF cell's queries spread over this many tasks.
 IVF_SALT = 8
 
 
 def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
                 n_probe: int, query_filter=None) -> DataFrame:
-    """Shared IVF search given centroids: assign each vector to its
-    ``n_probe`` nearest cells, re-rank exactly within cells, global top-k.
+    """IVF search given centroids -> (query_id, neighbor_id, rank, sim):
+    each vector goes to its ``n_probe`` nearest cells, is re-ranked
+    exactly within each probed cell (:func:`fold_dot`,
+    :func:`topk_rows`), and a window keeps the global top-k over the
+    k·n_probe candidates of each query.
+
+    A vector's nearest cell is its HOME: its corpus entry lives there.
+    The re-rank shuffles on (cell, salt): a query takes one salt from a
+    hash of its id, and a home row is copied to all ``IVF_SALT`` salts,
+    so a hot cell's queries spread over ``IVF_SALT`` tasks that each see
+    the cell's whole corpus.  A query's top-k depends only on the query
+    and the cell's corpus, so the salt width does not change the output.
+    Both roles come out of ONE in-row explode, so the normalize and probe
+    UDFs run once per vector.
 
     ``query_filter`` (a callable ``Column -> Column`` applied to the id
-    column) restricts the QUERY role to matching rows — the corpus side
-    always indexes every vector: an incremental-ingest search ranks only
-    the new batch's vectors without paying the |corpus| × n_probe query
-    fan-out.  The query entry in the in-row role explode below is simply
-    gated on the predicate, so the normalize + probe pipeline still runs
-    exactly once per vector.
+    column) restricts the QUERY role to matching rows; the corpus side
+    always indexes every vector.  An incremental-ingest search ranks only
+    the new batch's vectors this way.
 
-    Cross-engine determinism: the oracle twin scores cells as
-    ``|c|^2 - 2·(v·c)`` (the ``|v|^2`` term is constant per row, so the
-    argmin is unchanged) with the dot a left-to-right ``list_reduce``
-    fold.  The numpy kernels below accumulate DIMENSION BY DIMENSION —
-    the exact same IEEE-754 op sequence as that fold — instead of
-    GEMM/pairwise summation, so scores, similarities, and therefore every
-    rank tie-break agree with DuckDB bit-for-bit.  ~dim vectorized ops
-    per batch, still far cheaper than per-pair interpreted folds.
+    The oracle scores cells as ``|c|^2 - 2·(v·c)`` (the ``|v|^2`` term is
+    constant per row, so the argmin is unchanged) with the dot a
+    left-to-right ``list_reduce`` fold, the order of :func:`fold_dot`.
     """
-    import numpy as np
-
-    dim = len(centers[0])
-
     units = (unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
              .select(F.col("vec_id"), "unit",
                      F.col("embedding").cast("array<double>").alias("arr")))
     probe_cells = _probe_cells_udf(centers, n_probe)
-    # One row per (vector, probed cell); pos 0 is the vector's HOME cell,
-    # so that row doubles as its corpus membership — a single frame and a
-    # single shuffle (keyed by cell) carry both the corpus and the query
-    # sides, and the normalize + probe UDF upstream runs exactly once.
+    # One row per (vector, probed cell); pos 0 is the vector's home cell.
     member = (
         units.withColumn("cells", probe_cells("arr"))
         .select(F.col("vec_id").alias("vid"), "unit",
                 F.posexplode("cells").alias("pos", "cell"))
         .withColumn("is_home", F.col("pos") == 0).drop("pos")
     )
-
-    # Re-rank cell-by-cell with vectorized passes (applyInPandas),
-    # instead of exploding |Q_cell| x |C_cell| pair rows and folding a
-    # 64-dim dot per row in the interpreter (~500k interpreted folds at
-    # sf0.1; measured ~3x slower).  Each bucket emits only its local
-    # top-k per query; the global top-k over the n_probe probed cells
-    # is then a window over k*n_probe candidate rows per query.
-    #
-    # SKEW: cell populations follow the data, and a hot cell would put
-    # its entire |Q| x |C| re-rank in ONE task (measured: one fixed-
-    # centroid cell held half the corpus at sf0.1 — a 2 s single-core
-    # task on a 32-core box).  Standard fix, output-identical: salt the
-    # QUERY side by vid into IVF_SALT buckets and replicate each cell's
-    # (bounded, by construction) corpus block to every bucket, so each
-    # bucket re-ranks its query slice against the FULL cell.  Per-query
-    # results are unchanged — a query's top-k depends only on (query,
-    # cell corpus) — while the hot cell fans out IVF_SALT-wide.  Cost:
-    # the shuffle carries the corpus IVF_SALT times instead of once —
-    # the classic replicate-the-bounded-side trade, same as a salted
-    # broadcast join.
-    # Both roles come out of ONE in-row explode (a query entry for every
-    # member row + IVF_SALT corpus entries for home rows), so the
-    # normalize + probe UDF pipeline still runs exactly once per vector
-    # — a union of two branches over the same source would re-run it.
+    # A query entry for every member row, IVF_SALT corpus entries for
+    # every home row.
     q_entry = F.struct(
         F.pmod(F.xxhash64("vid"), F.lit(IVF_SALT)).cast("int")
         .alias("salt"), F.lit(False).alias("is_corpus"))
@@ -736,34 +520,14 @@ def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
             .select("vid", "unit", "cell", "r.salt", "r.is_corpus"))
 
     def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series(dtype="int64"),
-             "neighbor_id": pd.Series(dtype="int64"),
-             "sim": pd.Series(dtype="float64")})
         qdf = pdf[~pdf["is_corpus"]]
-        cdf = pdf[pdf["is_corpus"]].sort_values("vid")  # nid-asc tie order
+        cdf = pdf[pdf["is_corpus"]].sort_values("vid")
         if qdf.empty or cdf.empty:
-            return empty
-        Q = np.vstack(qdf["unit"].to_numpy())
-        C = np.vstack(cdf["unit"].to_numpy())
-        sims = np.zeros((Q.shape[0], C.shape[0]))
-        tmp = np.empty_like(sims)
-        for i in range(dim):                     # fold order = oracle
-            np.multiply(Q[:, i:i + 1], C[None, :, i], out=tmp)
-            sims += tmp
-        qids = qdf["vid"].to_numpy()
-        nids = cdf["vid"].to_numpy()
-        sims[qids[:, None] == nids[None, :]] = -np.inf   # mask self-pairs
-        kk = min(k, sims.shape[1])
-        # stable argsort of -sims: sim desc, ties in nid-asc (C is sorted)
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        rows = np.repeat(qids, kk)
-        cols = top.ravel()
-        vals = sims[np.repeat(np.arange(len(qids)), kk), cols]
-        keep = vals > -np.inf
-        return pd.DataFrame({"query_id": rows[keep],
-                             "neighbor_id": nids[cols[keep]],
-                             "sim": vals[keep]})
+            return _NO_PAIRS
+        rows = topk_rows(qdf["vid"].to_numpy(), cdf["vid"].to_numpy(),
+                         fold_dot(_stack(qdf["unit"]), _stack(cdf["unit"])),
+                         k)
+        return _topk_frame(rows, "sim").drop(columns="rank")
 
     candidates = (
         both.groupBy("cell", "salt")
@@ -777,65 +541,6 @@ def _ivf_search(emb: DataFrame, k: int, centers: list[list[float]],
     )
 
 
-def ivf_fixed_topk(emb: DataFrame, k: int, centers: list[list[float]],
-                   n_probe: int = 2) -> DataFrame:
-    """IVF search over FIXED deterministic centroids — the
-    oracle-checkable twin of :func:`ivf_topk` (same membership/probe/
-    re-rank plan, no iterative fit), hash-matched against a DuckDB twin
-    that mirrors the scoring fold exactly."""
-    return _ivf_search(emb, k, centers, n_probe)
-
-
-def ivf_topk(emb: DataFrame) -> DataFrame:
-    """IVF (inverted-file) ANN: KMeans cells + multi-probe exact re-rank.
-
-    -> (query_id, neighbor_id, rank, sim): per-vector top-5 among the
-    vectors in its 2 nearest cells.
-
-    The real-index counterpart of the SRP buckets: 16 cells come from the
-    data's own distribution (Spark ML KMeans, seed 42), so recall
-    tracks cluster structure instead of random hyperplanes.  Plan shape
-    is identical to srp_ann_topk — corpus shuffles ONCE on cell id,
-    queries explode ×2 — so the 100 TB properties carry over; the
-    KMeans fit itself samples/aggregates, never collects raw vectors
-    beyond k centers.
-    """
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # Train centroids on a bounded, cached sample: KMeans makes maxIter
-    # passes over its input, so (a) never hand it the full corpus — at
-    # 100 TB centroids come from a few thousand vectors just as well —
-    # and (b) cache the sample so each pass is a memory scan, not a
-    # parquet re-read (measured 6 s -> 1.3 s at sf0.1).
-    #
-    # The sample is count-free AND unbiased: ordering by a seeded xxhash64
-    # of the id and taking the smallest train_cap compiles to
-    # TakeOrderedAndProject — a per-partition size-cap heap + driver merge
-    # of cap-sized winners, NOT a global sort shuffle — so every partition
-    # contributes and the draw is pseudo-uniform (hash order), unlike the
-    # earlier head-biased limit() which sampled only the leading files.
-    # Cost: one (id, vector) column scan; the index build scans the corpus
-    # for cell assignment anyway, so this does not change its asymptotics.
-    train_cap = 4096
-    feats = (emb.select(F.col("vec_id").alias("_id"),
-                        F.col("embedding").cast("array<double>").alias("arr"))
-             .withColumn("_h", F.xxhash64(F.col("_id"), F.lit(42)))
-             .orderBy("_h").limit(train_cap)
-             .select("arr"))
-    feats = (feats.withColumn("features", array_to_vector("arr"))
-             .coalesce(4).cache())
-    try:
-        model = KMeans(k=16, seed=42, maxIter=10,
-                       featuresCol="features").fit(feats)
-    finally:
-        feats.unpersist()
-    centers = [[float(x) for x in np.asarray(c)]
-               for c in model.clusterCenters()]
-    return _ivf_search(emb, 5, centers, 2)
-
-
 # Fixed-point quantum for Lloyd centroid sums: per-dim contributions
 # floor(v[d] * 1e6) summed as BIGINTs — order-independent, so the
 # distributed mean is deterministic and a SQL oracle reproduces it.
@@ -844,11 +549,10 @@ IVF_TRAIN_Q = 1_000_000
 # Lloyd/PQ training samples are bounded by a CAP, not a fraction:
 # centroids need a few thousand representatives, never the corpus.  The
 # sampling modulus scales with corpus row count (train_sample_mod), so
-# the expected sample stays in [TARGET, 2*TARGET) at ANY scale — a fixed
-# 1-in-k fraction would grow linearly with the corpus and turn the
-# coalesce(4)-packed training scan into a serial bottleneck at 100 TB.
-# Membership stays a pure function of
-# (id, corpus row count), so the DuckDB oracle replays it exactly via
+# the expected sample stays in [TARGET, 2*TARGET) at any corpus size,
+# where a fixed 1-in-k fraction would grow with the corpus.  Membership
+# stays a pure function of (id, corpus row count), so the DuckDB oracle
+# replays it exactly via
 # `% greatest(1, (SELECT count(*) FROM t) // TARGET) = 0`.
 IVF_TRAIN_TARGET = 4096
 
@@ -919,17 +623,12 @@ def lloyd_centroids(emb: DataFrame, init_centers: list[list[float]],
             .localCheckpoint())  # scanned once per round, not per plan
     centers = [[float(x) for x in c] for c in init_centers]
     for _ in range(rounds):
-        # nearest-cell assignment: n_probe=1 of the shared scoring
-        # kernel (Arrow-batched; see _probe_cells_udf on why this beats
-        # the all-expression rendering)
+        # nearest-cell assignment: n_probe=1 of the shared scoring kernel
         home = F.element_at(_probe_cells_udf(centers, 1)("arr"), 1)
-        # (cell, dim) exploded layout: ONE sum expression over dim x n
-        # tiny rows instead of a dim-wide aggregate column list.  The
-        # per-(cell,dim) BIGINT sums are identical either way (exact,
-        # order-independent), but each round's plan — rebuilt every
-        # round because the centroids are literals — goes from a
-        # 64-expression agg tree Catalyst must re-analyze/codegen to a
-        # 2-expression one (measured ~2x faster per round at sf0.1).
+        # (cell, dim) exploded layout: one sum expression over dim x n
+        # tiny rows, so each round's freshly built plan (the centroids
+        # are literals) carries a 2-expression aggregate, not a 64-wide
+        # one; the exact BIGINT sums are the same either way.
         sums = (base.withColumn("cell", home)
                 .select("cell", F.posexplode("arr").alias("d", "v"))
                 .groupBy("cell", "d")
@@ -1010,8 +709,7 @@ def ivf_incremental_topk(emb: DataFrame, inc_mod: int, k: int,
        batch never moves the index geometry: new-vector routing is a
        map-only nearest-centroid assignment (the same
        ``_probe_cells_udf`` scan every search pays anyway), not a
-       rounds × scan Lloyd re-fit.  At 100 TB a re-fit per ingest
-       batch would dominate the pipeline; routing is one pass over
+       rounds × scan Lloyd re-fit, so an ingest costs one pass over
        the batch.
     2. **New rows are immediately searchable** — the search side
        indexes every vector (old and new home cells alike); only the
@@ -1117,114 +815,51 @@ def pq_trained_codebooks(
     return books
 
 
-def _sq_fold(vals: list[float]) -> float:
-    """|c|^2 as a left-to-right Python fold — embedded verbatim as a
-    literal in BOTH engines (same convention as the IVF oracle)."""
-    acc = 0.0
-    for x in vals:
-        acc += x * x
-    return acc
-
-
-def _pq_subscore(unit_col: Column, m: int, cent: list[float]) -> Column:
-    """|c|^2 - 2*(u_sub . c) for subspace m: the |u_sub|^2 term is
-    constant per (row, m), so both the per-subspace argmin (encoding)
-    and the summed ADC ranking are unchanged by dropping it.  The dot
-    accumulates dimension by dimension, left-to-right, seeded 0.0 — the
-    exact IEEE-754 op sequence of the oracle's list_reduce fold."""
-    sub_dim = len(cent)
-    acc = F.lit(0.0)
-    for i, cd in enumerate(cent):
-        acc = acc + F.element_at(unit_col, m * sub_dim + i + 1) * F.lit(cd)
-    return F.lit(_sq_fold(cent)) - F.lit(2.0) * acc
-
-
 def _pq_scores_np(codebooks: list[list[list[float]]]):
-    """batch×dim -> batch×n_sub×n_codes score kernel with the ORACLE's
-    IEEE-754 op sequence: within each subspace the dot accumulates
-    dimension by dimension, left-to-right, seeded 0.0 (one vectorized
-    add per dim — never GEMM/pairwise summation, whose different
-    rounding would flip argmin ties vs DuckDB's list_reduce fold).
-    Same bit-parity technique as :func:`_ivf_search`."""
-    import numpy as np
-
+    """batch×dim -> batch×n_sub×n_codes kernel of the scores
+    |c|^2 - 2·(u_sub·c), each subspace's dot from :func:`fold_dot` (the
+    oracle's fold order; the |u_sub|^2 term is constant per (row, m), so
+    neither the encode argmin nor the summed ADC ranking needs it)."""
     cent = np.asarray(codebooks, dtype=np.float64)  # n_sub×n_codes×sub_dim
-    n_sub, n_codes, sub_dim = cent.shape
+    n_sub, _, sub_dim = cent.shape
     sq = np.asarray([[_sq_fold(c) for c in book] for book in codebooks],
                     dtype=np.float64)               # n_sub×n_codes
 
     def scores(mat):                                # mat: batch×dim float64
-        b = mat.shape[0]
-        sub = mat.reshape(b, n_sub, sub_dim)
-        acc = np.zeros((b, n_sub, n_codes))
-        for i in range(sub_dim):                    # fold order = oracle
-            acc += sub[:, :, i:i + 1] * cent[None, :, :, i]
-        return sq[None, :, :] - 2.0 * acc
+        sub = mat.reshape(mat.shape[0], n_sub, sub_dim)
+        dots = np.stack([fold_dot(sub[:, m], cent[m]) for m in range(n_sub)],
+                        axis=1)
+        return sq[None, :, :] - 2.0 * dots
 
     return scores
 
 
 def pq_encode_udf(codebooks: list[list[list[float]]]):
-    """Vectorized twin of :func:`pq_encode` (bit-identical codes): a
-    Pandas UDF batching the per-subspace argmin through numpy.  The
-    expression version's ~4k-node projection exceeds janino's 64 KB
-    method limit at n_sub=8×16 codes, falling out of codegen into
-    per-row interpretation (measured 16 s -> 2.5 s at sf0.1 for the full
-    ADC scan).  np.argmin returns the FIRST minimum = ties -> smallest
-    code = the oracle's ORDER BY score, c."""
-    import numpy as np
-
+    """Arrow-batched PQ encoder: array<int> of per-subspace
+    nearest-centroid codes.  np.argmin returns the FIRST minimum, so ties
+    go to the smallest code (the oracle's ORDER BY score, c)."""
     scores = _pq_scores_np(codebooks)
 
     @pandas_udf("array<int>")
     def encode(arrs: pd.Series) -> pd.Series:
-        m = np.vstack(arrs.to_numpy()).astype(np.float64)
-        codes = np.argmin(scores(m), axis=2).astype("int32")
+        codes = np.argmin(scores(_stack(arrs)), axis=2).astype("int32")
         return pd.Series(list(codes))
 
     return encode
 
 
 def pq_adc_table_udf(codebooks: list[list[list[float]]]):
-    """Vectorized twin of :func:`pq_adc_table` (bit-identical tables),
-    flattened to entry m*n_codes + c like the expression version."""
-    import numpy as np
-
+    """Arrow-batched asymmetric-distance lookup table of a QUERY vector:
+    entry m*n_codes + c = |c|^2 - 2*(q_sub·c).  Computed once per query;
+    a corpus code then resolves to n_sub array lookups (:func:`_adc_sum`)."""
     scores = _pq_scores_np(codebooks)
 
     @pandas_udf("array<double>")
     def table(arrs: pd.Series) -> pd.Series:
-        m = np.vstack(arrs.to_numpy()).astype(np.float64)
-        s = scores(m)
+        s = scores(_stack(arrs))
         return pd.Series(list(s.reshape(s.shape[0], -1)))
 
     return table
-
-
-def pq_encode(unit_col: Column,
-              codebooks: list[list[list[float]]]) -> Column:
-    """array<int> of per-subspace nearest-centroid codes (ties -> the
-    smallest code, = the oracle's ORDER BY score, c).  array_position
-    compares the min against the score list bit-for-bit, so the float
-    tie-break is exact.  Pure-expression REFERENCE implementation: at
-    production codebook sizes the projection overflows janino's 64 KB
-    codegen limit, so the data path uses :func:`pq_encode_udf` (asserted
-    bit-identical in tests/test_curation_pq.py)."""
-    codes = []
-    for m, book in enumerate(codebooks):
-        scores = F.array(*[_pq_subscore(unit_col, m, c) for c in book])
-        codes.append(
-            (F.array_position(scores, F.array_min(scores)) - 1).cast("int"))
-    return F.array(*codes)
-
-
-def pq_adc_table(unit_col: Column,
-                 codebooks: list[list[list[float]]]) -> Column:
-    """Flattened asymmetric-distance lookup table for a QUERY vector:
-    entry m*n_codes + c = |c|^2 - 2*(q_sub . c).  Computed once per
-    query, then every corpus code resolves to n_sub array lookups."""
-    return F.array(*[_pq_subscore(unit_col, m, c)
-                     for m, book in enumerate(codebooks) for c in book])
 
 
 def _adc_sum(n_sub: int, n_codes: int) -> Column:
@@ -1255,16 +890,12 @@ def pq_adc_topk(emb: DataFrame, k: int, codebooks: list[list[list[float]]],
     ascending approximate distance (adist + |q|^2 is the true ADC
     squared distance; the constant shift is dropped on both engines).
 
-    100 TB shape: encoding is a map-only projection (codes replace the
-    raw vectors — this is the memory-reduction path that lets a scan
-    hold 100 TB of vectors in ~3 TB of codes); the scan is a broadcast
-    nested-loop join where the corpus side streams ONCE and only
-    (query, neighbor, adist) rows reach the top-k exchange.  Encode and
-    query tables run through one Arrow-batched numpy kernel per task
-    (:func:`pq_encode_udf` — the expression twin overflows codegen at
-    this codebook size and interprets ~4k nodes/row: 16 s vs 2.5 s at
-    sf0.1); the per-pair 8-lookup ADC fold stays a built-in expression
-    inside codegen.
+    Encoding is a map-only projection whose codes replace the raw
+    vectors; the scan is a broadcast nested-loop join where the corpus
+    side streams once and only (query, neighbor, adist) rows reach the
+    top-k exchange.  Encode and query tables are Arrow-batched numpy
+    kernels (:func:`pq_encode_udf`, :func:`pq_adc_table_udf`); the
+    per-pair ADC sum is a built-in expression inside codegen.
 
     Like :func:`brute_force_topk`, the repartition() is a deliberate
     materialization barrier so CollapseProject cannot inline the
@@ -1366,9 +997,9 @@ def matryoshka_recall(emb: DataFrame, k: int, num_queries: int,
                       trunc_dim: int) -> DataFrame:
     """Matryoshka-representation ablation (Kusupati et al. 2022): how
     much cosine-top-k recall survives truncating every embedding to its
-    first ``trunc_dim`` dimensions — the eval that decides whether a
-    100 TB vector corpus can run its first-stage retrieval on prefix
-    dims (storage/bandwidth ÷ dim ratio) and re-rank on full vectors.
+    first ``trunc_dim`` dimensions — the eval that decides whether
+    first-stage retrieval can run on prefix dims and re-rank on full
+    vectors.
 
     -> (query_id, n_hits, recall_at_k) per probe query: ground truth =
     full-dim exact top-k, candidate = truncated-dim exact top-k over
@@ -1428,11 +1059,9 @@ def mmr_diverse_topk(emb: DataFrame, k: int, num_queries: int, shortlist: int,
     by constants, never by the corpus).  The greedy selection itself is
     inherently SEQUENTIAL (each step's scores depend on the previous
     step's pick), so it runs as ONE cogrouped ``applyInPandas`` per
-    query over those two constant-size frames — the semdedup_discards
-    pattern — instead of k chained DataFrame rounds, whose branched
-    lineage re-executed every prior round per step (measured 321
-    exchanges vs 8 for this shape at identical results).  At 100 TB
-    only the shortlist build touches data.
+    query over those two constant-size frames, instead of k chained
+    DataFrame rounds whose branched lineage re-executes every prior
+    round per step.  Only the shortlist build touches the corpus.
 
     Determinism: similarities come from the shared Arrow fold kernel
     (``_pair_dot_udf`` — the oracle's left-to-right ``list_reduce``
@@ -1532,13 +1161,13 @@ def ivf_pq_topk(emb: DataFrame, k: int, centers: list[list[float]],
 
     -> (query_id, neighbor_id, rank, sim).
 
-    100 TB shape: the corpus side carries (home cell, codes) only —
-    32× smaller than raw vectors — and shuffles once on the cell id;
-    the exact re-rank touches raw vectors for just |Q|·m_rerank rows
-    via a broadcast shortlist join (the "fetch the shortlist's full
-    vectors" I/O pattern of a disk-resident index).  Every stage
-    reuses the audited fold kernels, so the whole composition is
-    hash-gated against the oracle's CTE unroll."""
+    The corpus side carries (home cell, codes) only — 32× smaller than
+    raw vectors — and shuffles once on the cell id; the exact re-rank
+    touches raw vectors for just |Q|·m_rerank rows via a broadcast
+    shortlist join (the "fetch the shortlist's full vectors" I/O pattern
+    of a disk-resident index).  Every stage reuses the fold kernels, so
+    the whole composition is hash-gated against the oracle's CTE
+    unroll."""
     n_sub, n_codes = len(codebooks), len(codebooks[0])
     units = (unit_vectors(emb)
              .filter(F.col("unit").isNotNull())
@@ -1612,20 +1241,10 @@ def kcenter_coreset(emb: DataFrame, k: int, pool: int) -> DataFrame:
     emitting it gates the traversal's DYNAMICS, and read top-down it is
     the coverage-radius curve a labeling-budget decision reads.
 
-    Scale shape: one corpus-wide TakeOrdered picks the pool (no global
-    sort) and is the ONLY distributed work; the pool^2 pairwise sims
-    are computed driver-side from the collected pool x dim unit
-    vectors with the SAME per-dimension left-to-right IEEE fold as
-    ``_pair_dot_udf`` (acc[i,j] += U[i,d]*U[j,d] in ascending d —
-    elementwise numpy doubles, bit-identical per pair; pinned by
-    tests/test_r15_batch5.py against the Arrow kernel).  That replaces
-    the old pool^2 self-join + Arrow stage + pool^2-row collect with
-    one pool-row collect — fewer jobs, and the collect shrinks from
-    pool^2 rows to pool x dim doubles.  The sequential traversal is
-    inherently tiny: k and pool are selection constants, the corpus
-    only feeds the sample."""
-    import numpy as np
-
+    One corpus-wide TakeOrdered picks the pool (no global sort) and is
+    the ONLY distributed work: the pool's unit vectors are collected and
+    the pool² similarities come from :func:`fold_dot` on the driver.  The
+    sequential traversal is tiny: k and pool are selection constants."""
     units = (unit_vectors(emb).select(F.col("vec_id"), F.col("unit"))
              .filter(F.col("unit").isNotNull()))
     pool_rows = (units
@@ -1638,9 +1257,7 @@ def kcenter_coreset(emb: DataFrame, k: int, pool: int) -> DataFrame:
     psim: dict = {}
     if pool_rows:
         U = np.array([r["unit"] for r in pool_rows], dtype=np.float64)
-        acc = np.zeros((len(ids), len(ids)))
-        for d in range(U.shape[1]):
-            acc += U[:, d, None] * U[None, :, d]
+        acc = fold_dot(U, U)
         psim = {(ids[i], ids[j]): float(acc[i, j])
                 for i in range(len(ids)) for j in range(len(ids)) if i != j}
     members = [pid for _, pid in sorted(order)]

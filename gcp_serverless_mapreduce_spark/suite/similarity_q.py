@@ -193,20 +193,13 @@ def _cent_literal(c: list[float]) -> str:
     return "[" + ", ".join(repr(x) for x in c) + "]"
 
 
-def _sq_fold(c: list[float]) -> float:
-    acc = 0.0
-    for x in c:
-        acc += x * x
-    return acc
-
-
 # Cell score = |c|^2 - 2·(v·c): the |v|^2 term is constant per row, so the
 # argmin over cells is the true nearest-centroid assignment without a norm
 # fold.  |c|^2 is a Python-side left-to-right fold embedded as a literal;
 # the dot is the standard list_reduce fold — both reused bit-for-bit by the
 # numpy kernels in operators/similarity._ivf_search.
 _SCORE_CASE = "CASE c.cell " + " ".join(
-    f"WHEN {i} THEN CAST({_sq_fold(cent)!r} AS DOUBLE)"
+    f"WHEN {i} THEN CAST({similarity._sq_fold(cent)!r} AS DOUBLE)"
     f" - 2.0 * {_dot('v', _cent_literal(cent))}"
     for i, cent in enumerate(CENTROIDS)) + " END"
 
@@ -229,14 +222,13 @@ QUALIFY rank <= {K}
 """)
 def ivf_fixed_cells_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-{K} over FIXED md5-derived centroids ({N_CELLS} cells,
-    probe-{N_PROBE}): identical plan shape to the KMeans variant — cell
+    probe-{N_PROBE}): the plan of the Lloyd-trained variants — cell
     membership via posexplode, ONE cell-keyed shuffle carrying corpus and
     query sides, per-cell vectorized re-rank, global window over
-    k·n_probe candidates — but with deterministic centroids mirrored in
-    the oracle, so the whole IVF pipeline is hash-matched; the trained
-    variant keeps its recall test."""
+    k·n_probe candidates — with md5 centroids mirrored in the oracle and
+    no training step."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivf_fixed_topk(emb, K, CENTROIDS, n_probe=N_PROBE)
+    return similarity._ivf_search(emb, K, CENTROIDS, N_PROBE)
 
 
 # Deterministic Lloyd KMeans: rounds unrolled as oracle CTEs.
@@ -274,7 +266,8 @@ def _lloyd_cte(target: int = _TRAIN_TARGET, train_where: str = "") -> str:
     aggregation), then the new centroid list with empty cells keeping
     their previous centroid."""
     c0_rows = ",\n ".join(
-        f"({i}, {_cent_literal(c)}, CAST({_sq_fold(c)!r} AS DOUBLE))"
+        f"({i}, {_cent_literal(c)}, "
+        f"CAST({similarity._sq_fold(c)!r} AS DOUBLE))"
         for i, c in enumerate(CENTROIDS))
     cw = f" WHERE {train_where}" if train_where else ""
     aw = f" AND {train_where}" if train_where else ""
@@ -514,13 +507,14 @@ PQ_BOOKS = similarity.pq_codebooks(M_SUB, PQ_CODES, SUB_DIM)
 # both rendered identically into the Spark plan via similarity.pq_* and
 # into this SQL (same convention as the IVF fixed-centroid twin).
 _PQ_CB_ROWS = ",\n ".join(
-    f"({m}, {c}, CAST({_sq_fold(cent)!r} AS DOUBLE), {_cent_literal(cent)})"
+    f"({m}, {c}, CAST({similarity._sq_fold(cent)!r} AS DOUBLE), "
+    f"{_cent_literal(cent)})"
     for m, book in enumerate(PQ_BOOKS) for c, cent in enumerate(book))
 
 # |c|^2 - 2*(u_sub . c): the |u_sub|^2 term is constant per (row, m) so
 # both the encode argmin and the summed ADC ranking are unchanged; the
 # dot folds left-to-right over the subspace dims = Spark's per-dim
-# accumulation in similarity._pq_subscore.
+# accumulation in similarity._pq_scores_np.
 _PQ_SCORE = "cb.sq - 2.0 * " + _fold_sum(
     f"list_transform(generate_series(1, {SUB_DIM}), "
     f"i -> u.u[cb.m * {SUB_DIM} + i] * cb.cent[i])")
@@ -597,7 +591,7 @@ def _pq_train_cte() -> str:
     fixed-point BIGINT sums, then the new book with empty (m, code)
     cells keeping their previous centroid."""
     rows = ",\n ".join(
-        f"({m}, {c}, CAST({_sq_fold(cent)!r} AS DOUBLE), "
+        f"({m}, {c}, CAST({similarity._sq_fold(cent)!r} AS DOUBLE), "
         f"{_cent_literal(cent)})"
         for m, book in enumerate(PQ_BOOKS) for c, cent in enumerate(book))
     tr_pred = _TRAIN_PRED.replace("vec_id", "u.vec_id")

@@ -189,12 +189,19 @@ WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
 # Q17: small-quantity revenue — correlated per-group AVG subquery
 # --------------------------------------------------------------------------
 
+# The brand's parts are selected before the per-part average, so the
+# average reads only their lineitems (a correlated subquery decorrelates
+# into an aggregate over all of lineitem).
 register_sql("q17_small_quantity_revenue", f"""
+WITH brand_parts AS (
+    SELECT p_partkey FROM part WHERE p_brand = 'Brand#7'),
+qty_limit AS (
+    SELECT l_partkey AS lim_partkey, 0.2 * AVG(l_quantity) AS max_qty
+    FROM lineitem JOIN brand_parts ON p_partkey = l_partkey
+    GROUP BY l_partkey)
 SELECT CAST(SUM({_SQL_PRICE}) AS DOUBLE) / 7.0 AS avg_yearly
-FROM lineitem JOIN part ON p_partkey = l_partkey
-WHERE p_brand = 'Brand#7'
-  AND l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
-                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
+FROM lineitem JOIN qty_limit ON lim_partkey = l_partkey
+WHERE l_quantity < max_qty
 """)
 
 

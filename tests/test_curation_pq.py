@@ -83,6 +83,36 @@ def test_ngram_contamination_flags_overlap(spark):
 BOOKS = similarity.pq_codebooks(4, 4, 2)   # 4 subspaces x 2 dims, 4 codes
 
 
+def _pq_subscore(unit_col, m, cent):
+    """|c|^2 - 2*(u_sub . c) for subspace m, the dot accumulated
+    dimension by dimension, left to right, seeded 0.0."""
+    sub_dim = len(cent)
+    acc = F.lit(0.0)
+    for i, cd in enumerate(cent):
+        acc = acc + F.element_at(unit_col, m * sub_dim + i + 1) * F.lit(cd)
+    return F.lit(similarity._sq_fold(cent)) - F.lit(2.0) * acc
+
+
+def pq_encode(unit_col, codebooks):
+    """Pure-expression reference twin of ``similarity.pq_encode_udf``:
+    per-subspace nearest-centroid codes, ties -> the smallest code.
+    array_position compares the min against the score list bit for bit,
+    so the float tie-break is exact."""
+    codes = []
+    for m, book in enumerate(codebooks):
+        scores = F.array(*[_pq_subscore(unit_col, m, c) for c in book])
+        codes.append(
+            (F.array_position(scores, F.array_min(scores)) - 1).cast("int"))
+    return F.array(*codes)
+
+
+def pq_adc_table(unit_col, codebooks):
+    """Pure-expression reference twin of ``similarity.pq_adc_table_udf``:
+    entry m*n_codes + c = |c|^2 - 2*(q_sub . c)."""
+    return F.array(*[_pq_subscore(unit_col, m, c)
+                     for m, book in enumerate(codebooks) for c in book])
+
+
 def test_pq_encode_matches_numpy_argmin(spark):
     import numpy as np
     rng = np.random.default_rng(7)
@@ -93,7 +123,7 @@ def test_pq_encode_matches_numpy_argmin(spark):
          for i, v in enumerate(vecs)])
     got = {r["vec_id"]: list(r["codes"]) for r in
            df.select("vec_id",
-                     similarity.pq_encode(F.col("unit"), BOOKS)
+                     pq_encode(F.col("unit"), BOOKS)
                      .alias("codes")).collect()}
     cb = np.asarray(BOOKS)                         # m x c x d
     for i, v in enumerate(vecs):
@@ -118,9 +148,9 @@ def test_pq_encode_udf_bit_identical_to_expression(spark):
          for i, v in enumerate(vecs)])
     both = df.select(
         "vec_id",
-        similarity.pq_encode(F.col("unit"), books).alias("expr_codes"),
+        pq_encode(F.col("unit"), books).alias("expr_codes"),
         similarity.pq_encode_udf(books)(F.col("unit")).alias("np_codes"),
-        similarity.pq_adc_table(F.col("unit"), books).alias("expr_tab"),
+        pq_adc_table(F.col("unit"), books).alias("expr_tab"),
         similarity.pq_adc_table_udf(books)(F.col("unit")).alias("np_tab"),
     ).collect()
     for r in both:
@@ -150,7 +180,7 @@ def test_pq_adc_topk_identical_codes_rank_first(spark):
     codes = {r["vec_id"]: list(r["codes"]) for r in
              units.select(
                  "vec_id",
-                 similarity.pq_encode(F.col("unit"), BOOKS)
+                 pq_encode(F.col("unit"), BOOKS)
                  .alias("codes")).collect()}
     assert codes[0] == codes[1] != codes[2]
 

@@ -17,9 +17,29 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from gcp_serverless_mapreduce_spark.functions.vectors import dot
 from gcp_serverless_mapreduce_spark.operators import profiling, similarity
 
 DIM = 8
+
+
+def unit_vectors_expr(emb):
+    """Pure-expression reference twin of ``similarity.unit_vectors``
+    (higher-order functions only, evaluated interpreted)."""
+    nrm = F.sqrt(dot(F.col("embedding"), F.col("embedding")))
+    unit = F.when(nrm != 0, F.transform(
+        F.col("embedding").cast("array<double>"), lambda x: x / nrm))
+    return emb.withColumn("unit", unit)
+
+
+def srp_signature_expr(vec_col, planes):
+    """Pure-expression reference twin of ``similarity.srp_signature``."""
+    bits = [
+        F.when(dot(vec_col, F.array(*[F.lit(s) for s in plane])) >= 0,
+               F.lit("1")).otherwise(F.lit("0"))
+        for plane in planes
+    ]
+    return F.concat(*bits)
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +73,7 @@ def test_unit_vectors_bit_equal_to_expr_twin(spark, vec_df):
     new = {r["vec_id"]: r["unit"]
            for r in similarity.unit_vectors(vec_df).collect()}
     old = {r["vec_id"]: r["unit"]
-           for r in similarity.unit_vectors_expr(vec_df).collect()}
+           for r in unit_vectors_expr(vec_df).collect()}
     assert new.keys() == old.keys()
     for k in new:
         a, b = new[k], old[k]
@@ -72,7 +92,7 @@ def test_srp_signature_bit_equal_to_expr_twin(spark, vec_df):
         .collect()}
     old = {r["vec_id"]: r["b"] for r in vec_df.select(
         "vec_id",
-        similarity.srp_signature_expr(F.col("embedding"), planes).alias("b"))
+        srp_signature_expr(F.col("embedding"), planes).alias("b"))
         .collect()}
     assert new == old
 

@@ -32,10 +32,8 @@ def test_driver_psim_fold_matches_pair_dot_kernel(spark):
     ids = sorted(collected)
     U = np.array([collected[i] for i in ids])
 
-    # driver fold exactly as kcenter_coreset computes it
-    acc = np.zeros((len(ids), len(ids)))
-    for d in range(U.shape[1]):
-        acc += U[:, d, None] * U[None, :, d]
+    # the driver fold kcenter_coreset computes its pool similarities with
+    acc = similarity.fold_dot(U, U)
 
     # kernel reference over every ordered pair
     a = units.select(F.col("vec_id").alias("ca"), F.col("unit").alias("ua"))

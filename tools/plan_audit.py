@@ -7,12 +7,29 @@ committed PLANS.md instead of writing: any drift (a query gained an
 exchange, lost a broadcast, grew a pandas stage...) fails the gate until
 PLANS.md is regenerated — so plan regressions can't land silently.
 
-Usage: python tools/plan_audit.py [sf_dir]           (write PLANS.md)
-       python tools/plan_audit.py --check [sf_dir]   (drift gate)
+``--dump DIR`` writes every registered query's optimized logical plan to
+``DIR/<query>.txt`` with expression ids (``#123``) renumbered in order of
+first appearance, so equal plans print equal text whatever ids the session
+handed out.  (Spark's canonical form is no help here: it orders the sides
+of a comparison by hash code, which changes from run to run.)
+``--diff REF_DIR`` builds the same dumps for the current tree and lists
+the queries whose plan differs from (or is missing in) ``REF_DIR``, with
+a unified diff of each.  Queries in ``UNSTABLE_PLANS`` are left out.  A
+plan prints a Python UDF by name only and shortens long literals, so two
+queries with equal dumps can still differ in the constants they carry
+(the IVF queries' centroids live in their UDF closures), and a string
+literal that contains ``#<digits>`` (``'Brand#7'``) is renumbered like an
+id: an equal dump is necessary for "same work", not sufficient.
+
+Usage: python tools/plan_audit.py [sf_dir]               (write PLANS.md)
+       python tools/plan_audit.py --check [sf_dir]       (drift gate)
+       python tools/plan_audit.py --dump DIR [sf_dir]    (plan dumps)
+       python tools/plan_audit.py --diff REF_DIR [sf_dir] (plan diff)
 """
 
 from __future__ import annotations
 
+import difflib
 import os
 import re
 import sys
@@ -47,6 +64,67 @@ def audit_rows(sf_dir: str) -> list[tuple[str, str, str, str, str]]:
     return rows
 
 
+# Queries whose optimized plan text changes between runs of the same code.
+UNSTABLE_PLANS = {
+    # RewriteDistinctAggregates iterates an unordered set, so the order of
+    # the Expand projections and gid filters of its two distinct
+    # aggregates varies from run to run
+    "q21_suppliers_kept_orders_waiting",
+}
+
+
+def optimized_plans(sf_dir: str) -> dict[str, str]:
+    """query name -> optimized logical plan with ids renumbered."""
+    import __spark_entry__ as e
+    from gcp_serverless_mapreduce_spark.session import get_spark
+
+    spark = get_spark("plan-audit")
+    plans = {}
+    for name, fn in e.queries().items():
+        if name in UNSTABLE_PLANS:
+            continue
+        try:
+            plan = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+            ids: dict[str, int] = {}
+            plans[name] = re.sub(
+                r"#(\d+)",
+                lambda m: f"#{ids.setdefault(m.group(1), len(ids))}",
+                plan.toString())
+        except Exception as ex:
+            plans[name] = f"ERROR: {type(ex).__name__}"
+    return plans
+
+
+def dump(plans: dict[str, str], out_dir: str) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    for name, text in plans.items():
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(text)
+    print(f"wrote {len(plans)} plans to {out_dir}")
+
+
+def diff(plans: dict[str, str], ref_dir: str) -> int:
+    """Print each query whose plan differs from ``ref_dir``; 1 if any."""
+    ref = {f[:-4]: open(os.path.join(ref_dir, f)).read()
+           for f in os.listdir(ref_dir) if f.endswith(".txt")}
+    changed = sorted(n for n in plans.keys() & ref.keys()
+                     if plans[n] != ref[n])
+    for name in changed:
+        print(f"== {name}")
+        for ln in difflib.unified_diff(ref[name].splitlines(),
+                                       plans[name].splitlines(),
+                                       "ref", "now", n=0, lineterm=""):
+            print(ln)
+    for name in sorted(ref.keys() - plans.keys()):
+        print(f"== {name}: only in {ref_dir}")
+    for name in sorted(plans.keys() - ref.keys()):
+        print(f"== {name}: new query")
+    n_diff = len(changed) + len(ref.keys() ^ plans.keys())
+    print(f"plan diff: {n_diff} of {len(plans.keys() | ref.keys())} "
+          f"queries differ ({len(UNSTABLE_PLANS)} unstable excluded)")
+    return 1 if n_diff else 0
+
+
 def render(rows, sf_dir: str) -> str:
     lines = [
         "# PLANS — physical-plan audit of every suite query",
@@ -64,8 +142,16 @@ def render(rows, sf_dir: str) -> str:
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--check"]
-    check = "--check" in sys.argv[1:]
+    args = sys.argv[1:]
+    for mode, act in (("--dump", dump), ("--diff", diff)):
+        if mode in args:
+            i = args.index(mode)
+            target = args[i + 1]
+            rest = args[:i] + args[i + 2:]
+            sf_dir = rest[0] if rest else "/root/testdata/sf0.01"
+            return act(optimized_plans(sf_dir), target) or 0
+    check = "--check" in args
+    args = [a for a in args if a != "--check"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     rows = audit_rows(sf_dir)
     text = render(rows, sf_dir)
