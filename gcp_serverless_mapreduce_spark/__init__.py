@@ -12,13 +12,12 @@ Layout
 ------
 - ``session``    : tuned SparkSession factory (AQE, Arrow, shuffle sizing)
 - ``tables``     : fixture-table loaders (handles TIMESTAMP(NANOS) parquet)
-- ``functions``  : scalar expression library (text normalization, hashing,
-                   vector math) — built-in-function compositions, no UDFs in
-                   the hot path
+- ``functions``  : shared functions (text normalization, vector math, a
+                   Python UDTF)
 - ``operators``  : DataFrame -> DataFrame operators (anagram pipeline,
-                   relational queries, dedup, similarity, text stats,
-                   multimodal plumbing)
-- ``sources``    : file-format readers/writers (Gutenberg text corpus S1-S6)
+                   dedup, similarity, text stats, multimodal plumbing, ...)
+- ``sources``    : file-format readers/writers (Gutenberg text corpus S1-S6,
+                   JSON/CSV, Python data sources over the events fixture)
 - ``streaming``  : Structured Streaming variant of the pipeline (C1 barrier
                    semantics via watermark-closed windows)
 """

@@ -1,14 +1,9 @@
-"""Scalar expression library — compositions of built-in pyspark.sql.functions.
+"""Functions the operators and queries share.
 
-Everything here returns Column expressions that stay JVM-side (whole-stage
-codegen); no row-at-a-time Python UDFs.
+- ``text``    : the flagship's text functions (Gutenberg strip, the Go
+                ``strings.Fields`` word split, anagram signature,
+                stopwords) — built-in column expressions
+- ``vectors`` : the double-precision dot-product fold over embeddings
+- ``udtfs``   : the ``word_bigrams`` Python UDTF (row-at-a-time, kept
+                off the hot paths)
 """
-
-from .text import (  # noqa: F401
-    STOPWORDS,
-    anagram_signature,
-    strip_gutenberg,
-    words,
-)
-from .vectors import dot  # noqa: F401
-from .hashing import fnv32a, md5_long, minhash_expr  # noqa: F401

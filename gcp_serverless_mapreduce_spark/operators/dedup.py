@@ -11,7 +11,10 @@ oracle); MinHash permutations are salts, a permutation's value is the
 lexicographic min of md5 hex strings (valid min-hash over a uniform hash).
 
 Scale design:
-- everything is expression-level (codegen'd, no Python);
+- the per-document kernels (shingles, inline band hashes, the span
+  ladder) are Arrow-batched pandas UDFs, measured faster than their
+  interpreted higher-order-function twins; everything around them is
+  expression-level (codegen'd);
 - LSH candidate generation is a self-equi-join on (band, band_hash) — a
   shuffle keyed on the band hash, never an O(n^2) cross join;
 - exact Jaccard runs only on pairs sharing >= 1 shingle (inverted-index
@@ -68,54 +71,37 @@ def py_tokens(text: str | None) -> list[str]:
     return _JAVA_WS.split((text or "").lower().strip(" "))
 
 
-def shingle_array(k: int = 3, arrow: bool = True):
+def shingle_array(k: int = 3):
     """Distinct k-word shingles of one document as an array column.
 
     The per-doc set semantics (the reference's per-book distinct P4) is
     computed *inside the row* — no shuffle ever happens for dedup scoped
     to a document.
 
-    Two implementations, same results on the fixtures:
-
-    - ``arrow=True`` (default): an Arrow-batched pandas UDF.  Measured
-      9× FASTER than the expression form at sf0.1 (0.34 s vs 3.02 s for
-      the full shingle explode): Spark's higher-order functions
-      (transform/slice/concat_ws lambdas) are *interpreted*, never
-      whole-stage-codegen'd, while the Python loop runs once per Arrow
-      batch.  The exception that proves the "UDFs are the slow path"
-      rule — measure, don't assume.
-    - ``arrow=False``: pure column expressions (no Python worker), for
-      contexts that must stay JVM-only.  Guard: Spark's sequence(1, n)
-      DESCENDS when n < 1, so short docs need the explicit empty array
-      (DuckDB's generate_series is empty there).
+    An Arrow-batched pandas UDF, measured 9× FASTER than the
+    column-expression form (tests/dedup_twins.py, its reference) at
+    sf0.1 (0.34 s vs 3.02 s for the full shingle explode): Spark's
+    higher-order functions (transform/slice/concat_ws lambdas) are
+    *interpreted*, never whole-stage-codegen'd, while the Python loop
+    runs once per Arrow batch.
 
     Token semantics are EXACT (:func:`py_tokens` == ``tokens_col``,
     empty tokens kept), not merely ASCII-equivalent; NULL text takes the
     expression twin's ``size(NULL)``-guard branch to an empty array.
     """
-    if arrow:
-        @pandas_udf("array<string>")
-        def _shingles(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append([])
-                    continue
-                toks = py_tokens(t)
-                out.append(list({" ".join(toks[i:i + k])
-                                 for i in range(len(toks) - k + 1)}))
-            return pd.Series(out)
+    @pandas_udf("array<string>")
+    def _shingles(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            if t is None:
+                out.append([])
+                continue
+            toks = py_tokens(t)
+            out.append(list({" ".join(toks[i:i + k])
+                             for i in range(len(toks) - k + 1)}))
+        return pd.Series(out)
 
-        return _shingles("text")
-    toks = _TOKS_SQL
-    shingles = F.when(
-        F.size(tokens_col()) >= k,
-        F.expr(
-            f"transform(sequence(1, size({toks}) - {k - 1}), "
-            f"i -> concat_ws(' ', slice({toks}, i, {k})))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(shingles)
+    return _shingles("text")
 
 
 def word_shingles(docs: DataFrame, k: int = 3,
@@ -161,9 +147,6 @@ def word_shingles(docs: DataFrame, k: int = 3,
             .select(F.col("doc_id").alias("doc"),
                     F.explode(shingle_array(k)).alias("shingle"))
             .filter(F.col("shingle").isNotNull()))
-
-
-_TOKS_SQL = "split(trim(lower(text)), '\\\\s+')"
 
 
 def minhash_signatures(docs: DataFrame, num_perm: int = 8) -> DataFrame:
@@ -212,7 +195,7 @@ def banded_signatures(signatures: DataFrame, bands: int = 4,
 
 
 def inline_band_hashes(num_perm: int = 8, bands: int = 4,
-                       rows_per_band: int = 2, arrow: bool = True):
+                       rows_per_band: int = 2):
     """Row-local LSH band hashes as ONE array<string> column — the
     zero-shuffle form of :func:`minhash_signatures` +
     :func:`banded_signatures` for contexts that must stay map-only
@@ -229,75 +212,44 @@ def inline_band_hashes(num_perm: int = 8, bands: int = 4,
     here: per-batch rows are bounded and the stream must not shuffle,
     so row-local recompute is the right side of the trade.
 
-    Two implementations, bit-identical results (same convention as
-    :func:`shingle_array`, pinned by tests/test_streaming_dedup.py):
-
-    - ``arrow=True`` (default): one Arrow-batched pandas UDF computing
-      shingles, salted-md5 minima, and band hashes per document in one
-      Python pass.  Measured 4.6x FASTER than the expression form at
-      sf0.1 (2.6 s vs 11.8 s for the new-batch probe stage): Spark's
-      higher-order functions are interpreted, never codegen'd, and the
-      expression form recomputes the shingle array per minhash column.
-    - ``arrow=False``: ONE SQL expression with a UNIQUE lambda variable
-      name per transform, for contexts that must stay JVM-only.
-      Unique names are load-bearing: Spark 4.1 mis-binds same-named
-      Python-lambda variables when several higher-order functions land
-      in one projection over a nested-lambda collection (all PySpark
-      lambdas are named ``x``; reproduced — 8 ``F.transform`` minhash
-      columns in one select all returned the min of the WRONG salted
-      hash set, while the identical SQL with ``x0..x7`` is correct;
-      also pinned by tests/test_streaming_dedup.py)."""
+    One Arrow-batched pandas UDF computes shingles, salted-md5 minima
+    and band hashes per document in one Python pass; measured 4.6x
+    FASTER than the expression form (tests/dedup_twins.py, its
+    reference, pinned bit-identical by tests/test_streaming_dedup.py)
+    at sf0.1 (2.6 s vs 11.8 s for the new-batch probe stage): Spark's
+    higher-order functions are interpreted, never codegen'd, and the
+    expression form recomputes the shingle array per minhash column."""
     if bands * rows_per_band > num_perm:
         raise ValueError("inline_band_hashes: bands*rows_per_band "
                          f"({bands * rows_per_band}) exceeds num_perm "
                          f"({num_perm})")
-    if arrow:
-        import hashlib
+    import hashlib
 
-        @pandas_udf("array<string>")
-        def _bands(texts: pd.Series) -> pd.Series:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append([])
-                    continue
-                toks = py_tokens(t)
-                sh = {" ".join(toks[i:i + 3])
-                      for i in range(len(toks) - 2)}
-                if not sh:
-                    out.append([])
-                    continue
-                mh = [min(hashlib.md5((f"{s}|" + x).encode()).hexdigest()
-                          for x in sh)
-                      for s in range(num_perm)]
-                out.append([
-                    hashlib.md5(
-                        "|".join(mh[b * rows_per_band:
-                                    (b + 1) * rows_per_band]).encode())
-                    .hexdigest()
-                    for b in range(bands)])
-            return pd.Series(out)
+    @pandas_udf("array<string>")
+    def _bands(texts: pd.Series) -> pd.Series:
+        out = []
+        for t in texts:
+            if t is None:
+                out.append([])
+                continue
+            toks = py_tokens(t)
+            sh = {" ".join(toks[i:i + 3])
+                  for i in range(len(toks) - 2)}
+            if not sh:
+                out.append([])
+                continue
+            mh = [min(hashlib.md5((f"{s}|" + x).encode()).hexdigest()
+                      for x in sh)
+                  for s in range(num_perm)]
+            out.append([
+                hashlib.md5(
+                    "|".join(mh[b * rows_per_band:
+                                (b + 1) * rows_per_band]).encode())
+                .hexdigest()
+                for b in range(bands)])
+        return pd.Series(out)
 
-        return _bands("text")
-    toks = _TOKS_SQL
-
-    def sh(var: str) -> str:
-        return (f"array_distinct(IF(size({toks}) >= 3, "
-                f"transform(sequence(1, size({toks}) - 2), "
-                f"{var} -> concat_ws(' ', slice({toks}, {var}, 3))), "
-                f"CAST(array() AS ARRAY<STRING>)))")
-
-    def mh(s: int) -> str:
-        return (f"array_min(transform({sh(f'i{s}')}, "
-                f"x{s} -> md5(concat('{s}|', x{s}))))")
-
-    bands_sql = ", ".join(
-        "md5(concat_ws('|', "
-        + ", ".join(mh(b * rows_per_band + r) for r in range(rows_per_band))
-        + "))"
-        for b in range(bands))
-    return F.expr(f"IF(size({sh('ig')}) > 0, array({bands_sql}), "
-                  f"CAST(array() AS ARRAY<STRING>))")
+    return _bands("text")
 
 
 def incremental_dedup_route(new_docs: DataFrame, old_hashes: DataFrame,
@@ -903,14 +855,14 @@ SPAN_NS = (3, 5, 8, 13)
 def ladder_tagged_grams(ns: tuple[int, ...]):
     """array<struct<span:int,gram:string>>: per rung n in ``ns``, the
     doc's distinct n-grams in first-occurrence order, rungs
-    concatenated in ``ns`` order — the Arrow-kernel twin of
-    :func:`ladder_tagged_grams_expr` (pinned element-identical by
-    tests/test_r15_batch8.py).  Docs shorter than a rung contribute no
-    grams for that rung; shorter than min(ns), an empty array (the old
-    pre-explode size filter, folded in).  Token semantics are EXACT
-    (:func:`py_tokens` == the twin's ``tokens_col``, empty tokens kept
-    — not just ASCII-equivalent); NULL
-    text takes the twin's ``size(NULL)``-guard branch to []."""
+    concatenated in ``ns`` order — pinned element-identical to its
+    expression twin (tests/dedup_twins.py) by tests/test_r15_batch8.py.
+    Docs shorter than a rung contribute no grams for that rung;
+    shorter than min(ns), an empty array (the old pre-explode size
+    filter, folded in).  Token semantics are EXACT (:func:`py_tokens`
+    == the twin's ``tokens_col``, empty tokens kept — not just
+    ASCII-equivalent); NULL text takes the twin's ``size(NULL)``-guard
+    branch to []."""
     lo = min(ns)
 
     @pandas_udf("array<struct<span:int,gram:string>>")
@@ -936,30 +888,6 @@ def ladder_tagged_grams(ns: tuple[int, ...]):
         return pd.Series(out)
 
     return _ladder("text")
-
-
-def ladder_tagged_grams_expr(ns: tuple[int, ...]):
-    """The original interpreted-expression form of
-    :func:`ladder_tagged_grams` — kept as the kernel's bit-equality
-    reference (and for JVM-only contexts).  NB: transform() lambdas
-    must stay single-parameter — a second parameter is interpreted as
-    the ELEMENT INDEX by Spark."""
-    toks = tokens_col()
-
-    def _tagged(n: int):
-        grams_n = F.array_distinct(F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
-        return F.when(
-            F.size(toks) >= n,
-            F.transform(grams_n,
-                        lambda g: F.struct(
-                            F.lit(n).alias("span"), g.alias("gram")))
-        ).otherwise(F.array().cast("array<struct<span:int,gram:string>>"))
-
-    ladder = F.flatten(F.array(*[_tagged(n) for n in ns]))
-    return F.when(F.size(toks) >= min(ns), ladder).otherwise(
-        F.array().cast("array<struct<span:int,gram:string>>"))
 
 
 def max_shared_span(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,

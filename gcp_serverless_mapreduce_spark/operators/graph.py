@@ -27,22 +27,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def bidirect(edges: DataFrame) -> DataFrame:
-    """Undirected graph as a directed edge list: each {a,b} both ways."""
-    return (edges.select("src", "dst")
-            .unionByName(edges.select(F.col("dst").alias("src"),
-                                      F.col("src").alias("dst")))
-            .distinct())
-
-
 def pagerank(edges: DataFrame, iters: int = 5,
              damping: float = 0.85) -> DataFrame:
     """-> (node, rank) after ``iters`` synchronous PageRank iterations.
 
     ``edges`` is a directed (src, dst) frame in which every node MUST
-    appear as a src at least once (true by construction for bidirected
-    graphs — use :func:`bidirect`), so there are no dangling nodes and the
-    update is exactly::
+    appear as a src at least once (true by construction when each edge
+    is listed in both directions), so there are no dangling nodes and
+    the update is exactly::
 
         rank'(v) = (1 - d)/N + d * sum_{u->v} rank(u) / outdeg(u)
 

@@ -68,17 +68,28 @@ def zorder_key_sql(y: str) -> str:
 
 
 def hilbert_key(x: Column, y: Column) -> Column:
-    """Arrow-kernel Hilbert index (r15) — the default entry point.
+    """Hilbert-curve index of two non-negative integer columns — the
+    strictly-better-locality sibling of :func:`zorder_key`: consecutive
+    Hilbert indices are always ADJACENT cells (the Z-curve jumps at
+    quadrant seams), so hilbert-sorted files have tighter per-file
+    min/max boxes and prune more (the layout behind Delta's
+    ``OPTIMIZE ... HILBERT`` ordering).
 
-    :func:`hilbert_key_expr` below is the original ``F.aggregate`` form;
-    Spark evaluates higher-order functions as CodegenFallback
+    Classic per-level fold (rx/ry quadrant bits, reflect+swap rotation,
+    Wikipedia xy2d with n-1 reflection), inputs masked to ``ZBITS``
+    bits like the z-key, run as a vectorized numpy int64 kernel: the
+    ``F.aggregate`` form of the same fold is a CodegenFallback
     (interpreted expression walks per row — measured 2.3 s single-task
-    over the sf0.1 orders scan), so the fold runs here as a vectorized
-    numpy int64 kernel instead.  The fold is PURE INTEGER arithmetic
+    over the sf0.1 orders scan).  The fold is PURE INTEGER arithmetic
     (shifts, masks, xor, two's-complement &) — numpy int64 and JVM long
-    agree exactly on every op, so the kernel is bit-identical to the
-    expression twin; pinned on adversarial inputs (negative, oversized,
-    NULL) by tests/test_r15_batch3.py."""
+    agree exactly on every op, so the kernel is bit-identical to that
+    expression, which tests/test_r15_batch3.py keeps as its reference
+    on adversarial inputs (negative, oversized, NULL).
+
+    The DuckDB twin (:func:`hilbert_ctes_sql`) unrolls the SAME fold as
+    one CTE per level: DuckDB 1.0.0's ``list_reduce`` returns wrong
+    intermediates for multi-field struct accumulators from the second
+    iteration on, so the lambda form cannot be the oracle."""
     from pyspark.sql.functions import pandas_udf
 
     mask = (1 << ZBITS) - 1
@@ -113,54 +124,6 @@ def hilbert_key(x: Column, y: Column) -> Column:
     return hkey(x.cast("long"), y.cast("long"))
 
 
-def hilbert_key_expr(x: Column, y: Column) -> Column:
-    """Hilbert-curve index of two non-negative integer columns — the
-    strictly-better-locality sibling of :func:`zorder_key`: consecutive
-    Hilbert indices are always ADJACENT cells (the Z-curve jumps at
-    quadrant seams), so hilbert-sorted files have tighter per-file
-    min/max boxes and prune more (the layout behind Delta's
-    ``OPTIMIZE ... HILBERT`` ordering).
-
-    Classic per-level fold (rx/ry quadrant bits, reflect+swap rotation,
-    Wikipedia xy2d with n-1 reflection): the level constants are plan
-    literals and the (d, x, y) state threads through ``F.aggregate``
-    over the ``ZBITS`` levels as a struct — a LINEAR-size codegen'd
-    integer expression (naive unrolling would double the tree per level
-    through the rotation's conditionals).  Inputs mask to ``ZBITS`` bits
-    like the z-key.
-
-    The DuckDB twin (:func:`hilbert_ctes_sql`) unrolls the SAME fold as
-    one CTE per level instead: DuckDB 1.0.0's ``list_reduce`` returns
-    wrong intermediates for multi-field struct accumulators from the
-    second iteration on (verified: the identical lambda applied to the
-    identical logical state gives different results chained vs
-    standalone), so the lambda form cannot be the oracle."""
-    mask = (1 << ZBITS) - 1
-    xm = x.cast("long").bitwiseAND(F.lit(mask))
-    ym = y.cast("long").bitwiseAND(F.lit(mask))
-    levels = F.array(*[F.lit(1 << i).cast("long")
-                       for i in range(ZBITS - 1, -1, -1)])
-    init = F.struct(F.lit(0).cast("long").alias("d"),
-                    xm.alias("x"), ym.alias("y"))
-
-    def step(acc: Column, s: Column) -> Column:
-        ax, ay, ad = acc["x"], acc["y"], acc["d"]
-        rx_pos = ax.bitwiseAND(s) > 0
-        ry_pos = ay.bitwiseAND(s) > 0
-        one = F.lit(1).cast("long")
-        zero = F.lit(0).cast("long")
-        rx = F.when(rx_pos, one).otherwise(zero)
-        ry = F.when(ry_pos, one).otherwise(zero)
-        d2 = ad + (s * s) * ((F.lit(3).cast("long") * rx).bitwiseXOR(ry))
-        nx = F.when(ry_pos, ax).otherwise(
-            F.when(rx_pos, F.lit(mask) - ay).otherwise(ay))
-        ny = F.when(ry_pos, ay).otherwise(
-            F.when(rx_pos, F.lit(mask) - ax).otherwise(ax))
-        return F.struct(d2.alias("d"), nx.alias("x"), ny.alias("y"))
-
-    return F.aggregate(levels, init, step).getField("d").cast("long")
-
-
 def hilbert_ctes_sql() -> tuple[str, str]:
     """DuckDB twin of :func:`hilbert_key` over x = ``o_custkey``,
     y = ``day_no`` of the CTE ``base``, as (cte_block, final_cte_name):
@@ -191,10 +154,10 @@ def hilbert_ctes_sql() -> tuple[str, str]:
 
 
 def compaction_bins(files: DataFrame, target: int) -> DataFrame:
-    """Next-fit bin assignment for small-file compaction — the ONE
-    arithmetic shared by the planning query (suite/layout_q.
-    file_compaction_plan) and the executing rewriter
-    (:func:`compact_partition`), so plan and execution cannot drift.
+    """Next-fit bin assignment for small-file compaction, the
+    arithmetic of the planning query (suite/layout_q.
+    file_compaction_plan); tests/test_compaction_exec.py executes the
+    plan with it and checks one output file per bin.
 
     Within each partition directory (``source``), sub-target entries
     ordered by (size desc, id) get ``bin_id = (exclusive-prefix-sum of
@@ -215,28 +178,3 @@ def compaction_bins(files: DataFrame, target: int) -> DataFrame:
             .withColumn("bin_id",
                         F.expr(f"_prefix div {int(target)}").cast("long"))
             .drop("_prefix"))
-
-
-def compact_partition(docs: DataFrame, part_value: str, target: int,
-                      out_dir: str) -> DataFrame:
-    """EXECUTE the compaction manifest for one partition — the
-    verification face of ``file_compaction_plan``: rewrite the
-    partition's sub-target entries into exactly
-    one output file per manifest bin.
-
-    ``repartition(bin_id)`` routes each bin's rows to one task;
-    ``partitionBy(bin_id)`` then makes every task write one file per
-    bin value it holds — together: exactly one data file per bin, the
-    compactor's whole point.  Entries >= target are untouched (they
-    are not part of the plan).  Parallelism at scale is one such call
-    per partition directory, which is how the single exchange of the
-    planning query parallelizes too.
-
-    -> the binned frame that was written (for the caller's own
-    conservation / fingerprint gates)."""
-    binned = compaction_bins(
-        docs.filter(F.col("source") == part_value),
-        target)
-    (binned.repartition(F.col("bin_id"))
-     .write.mode("overwrite").partitionBy("bin_id").parquet(out_dir))
-    return binned

@@ -1,7 +1,6 @@
 """Custom Python Data Sources (Spark 4 `pyspark.sql.datasource` API):
-a partitioned, filter-pushing batch reader, a streaming reader with
-offset management, and a two-phase-commit shard writer over the events
-fixture.
+a partitioned, filter-pushing batch reader and a streaming reader with
+offset management over the events fixture.
 
 This is the modern extension point for sources Spark has no built-in
 connector for (internal services, bespoke formats, feature stores).  The
@@ -233,113 +232,3 @@ class EventsStreamReader(DataSourceStreamReader):
 
 def register_stream(spark) -> None:
     spark.dataSource.register(EventsStreamDataSource)
-
-
-# ---------------------------------------------------------------------------
-# Custom Python Data Source WRITER: executor-parallel shard writes with
-# the two-phase commit protocol (write -> WriterCommitMessage -> driver
-# commit/abort) — the contract that makes a distributed sink atomic:
-# shards land under a staging name and only the driver's commit() makes
-# them visible via the manifest; abort() removes every staged shard.
-# Single-writer-per-directory is assumed (as with any manifest sink).
-
-import json as _json
-import os as _os
-import uuid as _uuid
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
-
-
-@dataclass
-class _ShardCommit(WriterCommitMessage):
-    filename: str
-    n_rows: int
-
-
-class JsonShardDataSource(DataSource):
-    """`df.write.format("json_shards").option("path", dir).save()`:
-    JSON-lines shards + an atomically-committed MANIFEST.json."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "json_shards"
-
-    def writer(self, schema, overwrite: bool) -> "JsonShardWriter":
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("json_shards: 'path' option is required")
-        return JsonShardWriter(path, [f.name for f in schema.fields],
-                               overwrite)
-
-
-class JsonShardWriter(DataSourceWriter):
-    def __init__(self, path: str, columns: list, overwrite: bool):
-        self.path = path
-        self.columns = columns
-        self.overwrite = overwrite
-
-    def write(self, iterator) -> _ShardCommit:
-        """Executor side: stream this partition's rows into one staged
-        shard (never buffered whole) and report it to the driver."""
-        _os.makedirs(self.path, exist_ok=True)
-        fname = f"_staged-{_uuid.uuid4().hex}.jsonl"
-        n = 0
-        with open(_os.path.join(self.path, fname), "w") as fh:
-            for row in iterator:
-                fh.write(_json.dumps(
-                    {c: row[i] for i, c in enumerate(self.columns)},
-                    default=str) + "\n")
-                n += 1
-        return _ShardCommit(filename=fname, n_rows=n)
-
-    def _sweep_staged(self, keep: set) -> None:
-        """Remove staged files not in ``keep`` — orphans from failed or
-        speculative task attempts that never reported a commit message."""
-        for name in _os.listdir(self.path):
-            if name.startswith("_staged-") and name not in keep:
-                try:
-                    _os.remove(_os.path.join(self.path, name))
-                except OSError:
-                    pass
-
-    def commit(self, messages) -> None:
-        """Driver side: rename every staged shard into place, sweep
-        orphaned staging files (failed/speculative attempts), honor
-        overwrite (drop prior committed shards), then write the manifest
-        LAST — readers treat the manifest as the commit mark, so a crash
-        anywhere before it leaves the previous committed state
-        readable."""
-        self._sweep_staged({m.filename for m in messages})
-        shards = []
-        for m in messages:
-            final = m.filename.replace("_staged-", "part-")
-            _os.rename(_os.path.join(self.path, m.filename),
-                       _os.path.join(self.path, final))
-            shards.append({"file": final, "n_rows": m.n_rows})
-        if self.overwrite:
-            new = {s["file"] for s in shards}
-            for name in _os.listdir(self.path):
-                if name.startswith("part-") and name not in new:
-                    _os.remove(_os.path.join(self.path, name))
-        else:
-            # APPEND: carry the previous manifest's shards forward — the
-            # new manifest must describe every committed shard, not just
-            # this write's, or append readers silently lose prior rows.
-            mpath = _os.path.join(self.path, "MANIFEST.json")
-            if _os.path.exists(mpath):
-                with open(mpath) as fh:
-                    prior = _json.load(fh)["shards"]
-                mine = {s["file"] for s in shards}
-                shards.extend(s for s in prior if s["file"] not in mine)
-        manifest = {"shards": sorted(shards, key=lambda s: s["file"]),
-                    "n_rows": sum(s["n_rows"] for s in shards)}
-        with open(_os.path.join(self.path, "MANIFEST.json"), "w") as fh:
-            _json.dump(manifest, fh, indent=1)
-
-    def abort(self, messages) -> None:
-        self._sweep_staged(set())  # messaged and orphaned alike
-
-
-def register_writer(spark) -> None:
-    spark.dataSource.register(JsonShardDataSource)

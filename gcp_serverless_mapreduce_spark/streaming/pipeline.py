@@ -428,41 +428,3 @@ def run_rate_replay(result: DataFrame, name: str, n_expected: int,
     return _run(writer, result.sparkSession, name,
                 lambda rec: rec["input_rows"] >= n_expected,
                 timeout_s=timeout_s)
-
-
-def write_events_batch(batch_df: DataFrame, batch_id: int, path: str) -> None:
-    """Idempotent micro-batch write: dynamic partition overwrite keyed by
-    (event_date, ingest_batch).  Replaying batch N — foreachBatch is
-    at-least-once when a crash lands between the sink write and the
-    checkpoint commit — rewrites exactly N's own partitions instead of
-    appending duplicates, which upgrades the sink to effectively-once.
-    ``event_date`` stays the leading partition column so readers still
-    prune by date."""
-    (batch_df.withColumn("event_date", F.to_date("ts"))
-     .withColumn("ingest_batch", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("event_date", "ingest_batch").parquet(path))
-
-
-def stream_to_partitioned_table(events: DataFrame, path: str,
-                                checkpoint: str) -> None:
-    """The streaming-lakehouse sink: ``foreachBatch`` writing each
-    micro-batch into a hive-partitioned parquet table (partitioned by
-    event date), effectively-once: the checkpoint skips committed batches
-    on restart (a re-run with no new input writes nothing), and a batch
-    REPLAY after a mid-commit crash overwrites its own partitions rather
-    than appending duplicates (see ``write_events_batch``).
-
-    At scale this is the standard pattern for continuous ingestion into
-    a warehouse layout: the stream stays incremental, the table stays
-    partition-pruned for readers, and failure recovery replays only
-    uncommitted batches (the checkpoint records which source files each
-    batch consumed)."""
-    q = (events.writeStream
-         .foreachBatch(lambda df, bid: write_events_batch(df, bid, path))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    q.stop()

@@ -53,60 +53,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
             update, OUTPUT_SCHEMA, STATE_SCHEMA, "update",
             GroupStateTimeout.NoTimeout)
     )
-
-
-def _make_running_totals_processor():
-    """Build the TWS processor class (module-level factory so the
-    processor LOGIC is unit-testable against a fake state handle —
-    tests/test_stateful_streaming.py — independent of the TWS worker
-    runtime).  ``pyspark.sql.streaming.stateful_processor`` imports
-    cleanly without protobuf; only the running worker needs it."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = (self._totals.get() if self._totals.exists()
-                        else (0, 0))
-            for pdf in rows:
-                n += len(pdf)
-                cents += int((pdf["value"] * 100).round()
-                             .astype("int64").sum())
-            self._totals.update((n, cents))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                                "total_value": [cents / 100.0]})
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotals
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same running per-user totals through ``transformWithStateInPandas``
-    — Spark 4's arbitrary-state processor API (SPARK-49564), which
-    supersedes ``applyInPandasWithState`` with named, schema'd state
-    variables, timers, and TTL.  Same integer-cents determinism contract
-    as :func:`running_user_totals`; state here is a named ValueState the
-    state store checkpoints per key.
-
-    ENVIRONMENT GATE: the TWS Python WORKER imports ``google.protobuf``
-    for its state-server protocol; where protobuf is absent/broken the
-    stream fails at runtime with a worker crash.  The processor logic is
-    therefore unit-tested directly against a fake state handle
-    (tests/test_stateful_streaming.py) and this operator is not
-    suite-registered — ``running_user_totals`` is the driver-gated
-    equivalent on the older API."""
-    RunningTotals = _make_running_totals_processor()
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None")
-    )

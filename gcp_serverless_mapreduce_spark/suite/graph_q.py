@@ -82,9 +82,9 @@ def pagerank_customer_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("src"),
                  F.concat(F.lit("S"), F.col("l_suppkey").cast("string"))
                  .alias("dst")))
-    # NOT graph.bidirect(): the C-/S- prefixes make the two directions
-    # disjoint, so the union of an already-distinct edge set needs no
-    # second distinct — skipping it saves a full shuffle of the
+    # Both directions of each edge.  The C-/S- prefixes make the two
+    # directions disjoint, so the union of an already-distinct edge set
+    # needs no second distinct — skipping it saves a full shuffle of the
     # bidirected frame.
     bi = e.unionByName(e.select(F.col("dst").alias("src"),
                                 F.col("src").alias("dst")))

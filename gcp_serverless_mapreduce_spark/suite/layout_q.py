@@ -337,10 +337,8 @@ def file_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone: big files pack first, so every bin except a partition's
     last lands within one file of the target."""
     docs = load_table(spark, sf_dir, "documents")
-    # Bin assignment shared with the executing rewriter
-    # (operators/layout.compact_partition) so plan and execution cannot
-    # drift; integer `div` on the long prefix sum matches the oracle's
-    # exact `//` at any cumulative byte count.
+    # Integer `div` on the long prefix sum (layout.compaction_bins)
+    # matches the oracle's exact `//` at any cumulative byte count.
     binned = layout.compaction_bins(
         docs.select("source", "doc_id", "n_chars"), COMPACT_TARGET)
     return (binned

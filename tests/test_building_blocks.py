@@ -10,7 +10,6 @@ not three layers up in an oracle hash mismatch.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 import pytest
@@ -69,12 +68,13 @@ def test_bpe_escape_roundtrip_mapping(spark):
 
 def test_shingle_array_arrow_matches_expression(spark):
     from gcp_serverless_mapreduce_spark.operators.dedup import shingle_array
+    from tests.dedup_twins import shingle_array_expr
 
     df = spark.createDataFrame(
         [("a b c d e",), ("x y",), ("",)], ["text"])
     got = df.select(
-        F.sort_array(shingle_array(3, arrow=True)).alias("a"),
-        F.sort_array(shingle_array(3, arrow=False)).alias("e"),
+        F.sort_array(shingle_array(3)).alias("a"),
+        F.sort_array(shingle_array_expr(3)).alias("e"),
     ).collect()
     for r in got:
         assert r["a"] == r["e"]
@@ -283,29 +283,6 @@ def test_pyds_stream_source_name():
         EventsStreamDataSource)
 
     assert EventsStreamDataSource.name() == "events_stream_pyds"
-
-
-def test_json_shard_writer_two_phase_commit(tmp_path):
-    from gcp_serverless_mapreduce_spark.sources.pyds import (
-        JsonShardDataSource, JsonShardWriter)
-
-    assert JsonShardDataSource.name() == "json_shards"
-    d = str(tmp_path / "shards")
-    w = JsonShardWriter(d, ["a", "b"], overwrite=True)
-    m1 = w.write(iter([(1, "x"), (2, "y")]))
-    m2 = w.write(iter([(3, "z")]))
-    # staged files exist, manifest does not: readers see nothing yet
-    assert all(f.startswith("_staged-") for f in os.listdir(d))
-    w.commit([m1, m2])
-    manifest = json.load(open(os.path.join(d, "MANIFEST.json")))
-    assert manifest["n_rows"] == 3
-    assert {s["file"] for s in manifest["shards"]} \
-        == {f for f in os.listdir(d) if f.startswith("part-")}
-    # append write merges the prior manifest (round-6 fix)
-    w2 = JsonShardWriter(d, ["a", "b"], overwrite=False)
-    w2.commit([w2.write(iter([(4, "q")]))])
-    manifest = json.load(open(os.path.join(d, "MANIFEST.json")))
-    assert manifest["n_rows"] == 4 and len(manifest["shards"]) == 3
 
 
 # --------------------------------------------------------------- tables

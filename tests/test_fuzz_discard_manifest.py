@@ -17,6 +17,7 @@ from __future__ import annotations
 import random
 
 from gcp_serverless_mapreduce_spark.operators import dedup
+from tests.dedup_twins import inline_band_hashes_expr
 
 RNG = random.Random(20260816)
 MIN_LEN = 8
@@ -130,10 +131,11 @@ def test_inline_band_hashes_fuzz_both_variants(spark):
     for r in dedup.banded_signatures(
             dedup.minhash_signatures(df, 8), 4, 2).collect():
         batch.setdefault(r["doc"], {})[r["band"]] = r["band_hash"]
-    for arrow in (True, False):
+    for arrow, band_hashes in ((True, dedup.inline_band_hashes),
+                               (False, inline_band_hashes_expr)):
         inline = {r["doc_id"]: list(r["b"]) for r in df.select(
             "doc_id",
-            dedup.inline_band_hashes(8, 4, 2, arrow=arrow).alias("b"))
+            band_hashes(8, 4, 2).alias("b"))
             .collect()}
         for d, _txt in rows:
             if d in batch:

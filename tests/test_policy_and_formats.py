@@ -27,58 +27,6 @@ def test_csv_and_json_source_roundtrip(spark, tmp_path):
     assert sorted(tuple(r) for r in json_back.collect()) == expect
 
 
-def test_partitioned_write_prunes_directories(spark, tmp_path):
-    """A filter on the partition column must prune at planning time:
-    inputFiles() of the filtered read touches only that year's directory,
-    and the scan's plan carries it as a PartitionFilter (not a data
-    filter)."""
-    from gcp_serverless_mapreduce_spark.sources import partitioned
-    from gcp_serverless_mapreduce_spark.tables import load_table
-
-    path = str(tmp_path / "orders_by_year")
-    orders = load_table(spark, SF_DIR, "orders").withColumn(
-        "order_year", F.year("o_orderdate"))
-    partitioned.write_partitioned(orders, path, "order_year")
-
-    pruned = (partitioned.read_partition_pruned(spark, path)
-              .filter(F.col("order_year") == 1997))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    # the year predicate must land in PartitionFilters (directory pruning
-    # at planning time), NOT in PushedFilters/data Filter
-    assert "PartitionFilters: [" in plan
-    part_filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "order_year" in part_filters and "1997" in part_filters
-
-    # pruned read equals the unpartitioned filter
-    expected = load_table(spark, SF_DIR, "orders").filter(
-        F.year("o_orderdate") == 1997).count()
-    assert pruned.count() == expected
-
-
-def test_dynamic_partition_overwrite_replaces_only_touched_year(spark, tmp_path):
-    """Dynamic overwrite with one year's data must leave other years
-    intact (per-partition idempotent re-runs)."""
-    from gcp_serverless_mapreduce_spark.sources import partitioned
-    from gcp_serverless_mapreduce_spark.tables import load_table
-
-    path = str(tmp_path / "orders_dyn")
-    orders = load_table(spark, SF_DIR, "orders").withColumn(
-        "order_year", F.year("o_orderdate"))
-    partitioned.write_partitioned(orders, path, "order_year")
-    before = spark.read.parquet(path).count()
-
-    # re-write ONLY 1997, halved
-    y97 = orders.filter(F.col("order_year") == 1997).limit(10)
-    partitioned.overwrite_partitions_dynamic(y97, path, "order_year")
-
-    after = spark.read.parquet(path)
-    n97 = after.filter(F.col("order_year") == 1997).count()
-    rest = after.filter(F.col("order_year") != 1997).count()
-    n97_orig = orders.filter(F.col("order_year") == 1997).count()
-    assert n97 == 10
-    assert rest == before - n97_orig  # untouched years survive
-
-
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     """ORC round-trip (columnar alternative to parquet), and the same
     predicate-pushdown contract: a filter on the ORC read must reach the
@@ -212,76 +160,6 @@ def test_parquet_native_mixed_filters_shared_load(spark):
     clicks = df.where("event_type = 'click'").select("event_id")
     other = df.select("event_id", "event_type")
     assert clicks.join(other, "event_id").count() == n_clicks
-
-
-def test_json_shard_writer_append_merges_manifest(spark, tmp_path):
-    """A second append must keep the first append's shards in the
-    manifest (regression: the manifest was rewritten with only the
-    current write's shards, silently dropping prior committed rows
-    from manifest readers)."""
-    import json, os
-    from gcp_serverless_mapreduce_spark.sources import pyds
-    pyds.register_writer(spark)
-    out = str(tmp_path / "append2")
-    spark.range(10).repartition(2).write.format("json_shards") \
-        .option("path", out).mode("append").save()
-    spark.range(100, 105).repartition(1).write.format("json_shards") \
-        .option("path", out).mode("append").save()
-    manifest = json.load(open(os.path.join(out, "MANIFEST.json")))
-    assert manifest["n_rows"] == 15
-    rows = [json.loads(l) for s in manifest["shards"]
-            for l in open(os.path.join(out, s["file"]))]
-    assert sorted(r["id"] for r in rows) == \
-        list(range(10)) + [100, 101, 102, 103, 104]
-    # every part file on disk is accounted for in the manifest
-    on_disk = {n for n in os.listdir(out) if n.startswith("part-")}
-    assert on_disk == {s["file"] for s in manifest["shards"]}
-
-
-def test_json_shard_writer_two_phase_commit(spark, tmp_path):
-    import json, os
-    from gcp_serverless_mapreduce_spark.sources import pyds
-    pyds.register_writer(spark)
-    out = str(tmp_path / "shards")
-    df = spark.range(100).selectExpr("id", "id * 2 AS double_id") \
-        .repartition(4)
-    df.write.format("json_shards").option("path", out).mode("append").save()
-    manifest = json.load(open(os.path.join(out, "MANIFEST.json")))
-    assert manifest["n_rows"] == 100
-    assert len(manifest["shards"]) == 4
-    # No staged leftovers; every listed shard exists with its row count.
-    names = set(os.listdir(out))
-    assert not any(n.startswith("_staged-") for n in names)
-    got = []
-    for s in manifest["shards"]:
-        assert s["file"] in names
-        rows = [json.loads(l) for l in open(os.path.join(out, s["file"]))]
-        assert len(rows) == s["n_rows"]
-        got.extend(rows)
-    assert sorted(r["id"] for r in got) == list(range(100))
-    assert all(r["double_id"] == 2 * r["id"] for r in got)
-
-
-def test_json_shard_writer_overwrite_replaces_prior(spark, tmp_path):
-    import json, os
-    from gcp_serverless_mapreduce_spark.sources import pyds
-    pyds.register_writer(spark)
-    out = str(tmp_path / "ow")
-    spark.range(10).repartition(2).write.format("json_shards") \
-        .option("path", out).mode("append").save()
-    # Orphan from a hypothetical failed attempt must be swept on commit.
-    open(os.path.join(out, "_staged-deadbeef.jsonl"), "w").write("{}\n")
-    spark.range(100, 105).repartition(1).write.format("json_shards") \
-        .option("path", out).mode("overwrite").save()
-    manifest = json.load(open(os.path.join(out, "MANIFEST.json")))
-    assert manifest["n_rows"] == 5
-    names = set(os.listdir(out))
-    assert not any(n.startswith("_staged-") for n in names)
-    # Only the new shards remain: no stale part files from the first write.
-    assert names == {s["file"] for s in manifest["shards"]} | {"MANIFEST.json"}
-    rows = [json.loads(l) for s in manifest["shards"]
-            for l in open(os.path.join(out, s["file"]))]
-    assert sorted(r["id"] for r in rows) == [100, 101, 102, 103, 104]
 
 
 def test_stream_reader_offset_restart_monotonic(spark):

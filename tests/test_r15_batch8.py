@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from gcp_serverless_mapreduce_spark.operators import dedup
 from gcp_serverless_mapreduce_spark.tables import load_table
+from tests.dedup_twins import ladder_tagged_grams_expr
 
 SF = "/root/testdata/sf0.001"
 
@@ -34,7 +35,7 @@ def test_ladder_kernel_matches_expression_twin(spark):
     both = docs.unionByName(extra).select(
         "doc_id",
         dedup.ladder_tagged_grams((8, 13)).alias("k"),
-        dedup.ladder_tagged_grams_expr((8, 13)).alias("x"))
+        ladder_tagged_grams_expr((8, 13)).alias("x"))
     rows = both.collect()
     assert rows
     for r in rows:

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from gcp_serverless_mapreduce_spark.operators import dedup
+from tests.dedup_twins import (TOKS_SQL, inline_band_hashes_expr,
+                               ladder_tagged_grams_expr, shingle_array_expr)
 
 # Exactly the classes of text where str.split() and the JVM expression
 # disagree: leading tab, trailing newline, CR/LF + trailing tab mix,
@@ -55,8 +57,8 @@ def test_shingle_kernel_matches_expr_twin_unicode(spark):
     df = spark.createDataFrame(UNICODE_ROWS, SCHEMA)
     both = df.select(
         "doc_id",
-        F.sort_array(dedup.shingle_array(3, arrow=True)).alias("k"),
-        F.sort_array(dedup.shingle_array(3, arrow=False)).alias("x"))
+        F.sort_array(dedup.shingle_array(3)).alias("k"),
+        F.sort_array(shingle_array_expr(3)).alias("x"))
     for r in both.collect():
         assert r["k"] == r["x"], r["doc_id"]
 
@@ -65,8 +67,8 @@ def test_inline_band_hashes_match_expr_twin_unicode(spark):
     df = spark.createDataFrame(UNICODE_ROWS, SCHEMA)
     both = df.select(
         "doc_id",
-        dedup.inline_band_hashes(arrow=True).alias("k"),
-        dedup.inline_band_hashes(arrow=False).alias("x"))
+        dedup.inline_band_hashes().alias("k"),
+        inline_band_hashes_expr().alias("x"))
     for r in both.collect():
         assert r["k"] == r["x"], r["doc_id"]
 
@@ -76,7 +78,7 @@ def test_ladder_kernel_matches_expr_twin_unicode(spark):
     both = df.select(
         "doc_id",
         dedup.ladder_tagged_grams((3, 5)).alias("k"),
-        dedup.ladder_tagged_grams_expr((3, 5)).alias("x"))
+        ladder_tagged_grams_expr((3, 5)).alias("x"))
     for r in both.collect():
         k = [(s["span"], s["gram"]) for s in r["k"]]
         x = [(s["span"], s["gram"]) for s in r["x"]]
@@ -119,9 +121,9 @@ def test_word_bigrams_udtf_matches_oracle_tokens(spark):
             F.explode(F.when(
                 F.size(toks) >= 2,
                 F.expr("transform(sequence(1, "
-                       f"size({dedup._TOKS_SQL}) - 1), "
+                       f"size({TOKS_SQL}) - 1), "
                        f"i -> concat_ws(' ', slice("
-                       f"{dedup._TOKS_SQL}, i, 2)))"))
+                       f"{TOKS_SQL}, i, 2)))"))
               .otherwise(F.array().cast("array<string>"))).alias("bigram"))
         .collect())
     assert got == want

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from gcp_serverless_mapreduce_spark.operators import dedup
 from gcp_serverless_mapreduce_spark.streaming import pipeline
 from gcp_serverless_mapreduce_spark.tables import load_table
+from tests.dedup_twins import inline_band_hashes_expr
 
 SF_DIR = "/root/testdata/sf0.001"
 INC_MOD, NUM_PERM, BANDS, RPB, MAX_BUCKET = 3, 8, 4, 2, 64
@@ -45,10 +46,11 @@ def test_inline_band_hashes_match_batch_banding(spark):
     for r in dedup.banded_signatures(
             dedup.minhash_signatures(docs, NUM_PERM), BANDS, RPB).collect():
         batch.setdefault(r["doc"], {})[r["band"]] = r["band_hash"]
-    for arrow in (True, False):
+    for arrow, band_hashes in ((True, dedup.inline_band_hashes),
+                               (False, inline_band_hashes_expr)):
         inline = {r["doc_id"]: list(r["b"]) for r in docs.select(
-            "doc_id", dedup.inline_band_hashes(
-                NUM_PERM, BANDS, RPB, arrow=arrow).alias("b")).collect()}
+            "doc_id", band_hashes(
+                NUM_PERM, BANDS, RPB).alias("b")).collect()}
         assert set(inline) >= set(batch)
         for doc_id, bands in inline.items():
             if doc_id in batch:

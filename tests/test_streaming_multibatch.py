@@ -141,46 +141,6 @@ def test_stream_dedup_across_batches(spark, split_events_dir):
     assert set(keys) == batch
 
 
-def test_foreach_batch_partitioned_sink_exactly_once(spark, split_events_dir, tmp_path):
-    """foreachBatch -> hive-partitioned parquet: all batches land, the
-    layout is date-partitioned, and a re-run from the same checkpoint
-    with no new input appends NOTHING (checkpoint = exactly-once)."""
-    import os
-    table = str(tmp_path / "events_table")
-    ckpt = str(tmp_path / "ckpt")
-    pipeline.stream_to_partitioned_table(
-        _stream(spark, split_events_dir), table, ckpt)
-
-    got = spark.read.parquet(table)
-    src = spark.read.parquet(split_events_dir)
-    assert got.count() == src.count()
-    assert any(d.startswith("event_date=") for d in os.listdir(table))
-    # distinct event ids survive intact (append, no partition clobbering)
-    assert got.select("event_id").distinct().count() == \
-        src.select("event_id").distinct().count()
-
-    # idempotent re-run: same checkpoint, no new files -> no new rows
-    pipeline.stream_to_partitioned_table(
-        _stream(spark, split_events_dir), table, ckpt)
-    assert spark.read.parquet(table).count() == src.count()
-
-
-def test_batch_replay_is_idempotent(spark, split_events_dir, tmp_path):
-    """Crash-replay: foreachBatch is at-least-once (a crash between the
-    sink write and the checkpoint commit re-runs the batch), so writing
-    the SAME batch twice must not duplicate rows — dynamic partition
-    overwrite keyed by (event_date, ingest_batch) rewrites in place."""
-    table = str(tmp_path / "replay_table")
-    batch = spark.read.parquet(split_events_dir)
-    pipeline.write_events_batch(batch, 7, table)
-    once = spark.read.parquet(table).count()
-    pipeline.write_events_batch(batch, 7, table)  # simulated replay
-    got = spark.read.parquet(table)
-    assert got.count() == once == batch.count()
-    assert got.select("event_id").distinct().count() == \
-        batch.select("event_id").distinct().count()
-
-
 def test_session_window_state_across_batches(spark, ordered_events_dir):
     """A session whose events span micro-batches must come out merged:
     session_window state (merging windows) survives batch boundaries.

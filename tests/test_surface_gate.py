@@ -1,58 +1,20 @@
-"""Exercise the expression-level helpers the suite doesn't reach
-directly, and enforce the surface-coverage gate (tools/coverage_gate.py)
-so unreferenced public API fails CI — the analog of the reference's
-scripts/coverage-report.sh per-package floor."""
+"""Enforce the surface-coverage gate (tools/coverage_gate.py) so
+unreferenced or test-only package code fails CI — the analog of the
+reference's scripts/coverage-report.sh per-package floor — and pin each
+of its rules on a synthetic package."""
 
 from __future__ import annotations
 
-import hashlib
 import importlib.util
 import os
 import re
 import subprocess
 import sys
 
-from pyspark.sql import functions as F
-
-from gcp_serverless_mapreduce_spark.functions.hashing import (
-    fnv32a, fnv32a_py, md5_long, minhash_expr,
-)
 from gcp_serverless_mapreduce_spark.tables import register_views
 
 SF_DIR = "/root/testdata/sf0.001"
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_fnv32a_column_matches_python_and_reference_golden(spark):
-    words = ["acer", "race", "care", "", "ç", "hello world"]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    got = {r["w"]: r["h"] for r in
-           df.select("w", fnv32a()(F.col("w")).alias("h")).collect()}
-    assert got == {w: fnv32a_py(w) for w in words}
-    # reference golden (reducephase/shuffle.go:84-91): "acer" -> shard 1
-    assert got["acer"] % 5 == 1
-
-
-def test_md5_long_deterministic_and_bounded(spark):
-    df = spark.createDataFrame([("abc",), ("xyz",)], "s string")
-    got = {r["s"]: r["h"] for r in
-           df.select("s", md5_long(F.col("s"), salt="p|").alias("h"))
-           .collect()}
-    for s, h in got.items():
-        want = int(hashlib.md5(f"p|{s}".encode()).hexdigest()[:15], 16)
-        assert h == want
-        assert 0 <= h < 2 ** 60
-
-
-def test_minhash_expr_matches_python_min(spark):
-    toks = ["the", "quick", "fox"]
-    df = spark.createDataFrame([(toks,)], "toks array<string>")
-    for seed in (0, 3):
-        got = df.select(minhash_expr(F.col("toks"), seed).alias("m")) \
-            .collect()[0]["m"]
-        want = min(hashlib.md5(f"{seed}|{t}".encode()).hexdigest()
-                   for t in toks)
-        assert got == want
 
 
 def test_register_views_enables_sql(spark):
@@ -61,19 +23,6 @@ def test_register_views_enables_sql(spark):
                   "JOIN nation ON r_regionkey = n_regionkey") \
         .collect()[0]["n"]
     assert n == 25
-
-
-def test_tws_operator_builds_plan(spark):
-    """running_user_totals_tws wiring: the transformWithStateInPandas
-    plan must BUILD and carry the declared output schema without the
-    TWS worker runtime (protobuf) — execution is cluster-only, logic is
-    covered in test_stateful_streaming.py."""
-    from gcp_serverless_mapreduce_spark.streaming import pipeline, stateful
-    out = stateful.running_user_totals_tws(
-        pipeline.stream_table(spark, SF_DIR, "events"))
-    assert [f.name for f in out.schema.fields] == \
-        ["user_id", "n_events", "total_value"]
-    assert out.isStreaming
 
 
 def test_surface_coverage_gate_passes():
@@ -146,6 +95,54 @@ def test_literal_rule_reports_same_literal_parameters(tmp_path):
                                       root=str(tmp_path))
     assert got == [os.path.join("pkg", "mod.py") + ":1 inner(col)",
                    os.path.join("pkg", "mod.py") + ":5 outer(col)"]
+
+
+def test_test_only_rule_reports_unreached_defs(tmp_path):
+    """``twin`` is reached by no package code, ``_helper`` only from
+    ``twin`` and from itself (fixpoint) and ``reexported`` only by
+    ``__init__``'s re-export: the gate reports all three, and not ``used``, which a
+    registered query in another package module calls, nor ``_fold``,
+    which ``used`` calls."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("from .mod import reexported\n")
+    (pkg / "mod.py").write_text(
+        "def _fold(x):\n"
+        "    return x\n"
+        "\n"
+        "\n"
+        "def used(x):\n"
+        "    return _fold(x)\n"
+        "\n"
+        "\n"
+        "def _helper(x):\n"
+        "    return _helper(x - 1) if x else 0\n"
+        "\n"
+        "\n"
+        "def twin(x):\n"
+        "    return _helper(x)\n"
+        "\n"
+        "\n"
+        "def reexported(x):\n"
+        "    return x\n")
+    (pkg / "queries.py").write_text(
+        "from .mod import used\n"
+        "from .registry import register\n"
+        "\n"
+        "\n"
+        "@register('q')\n"
+        "def q(spark):\n"
+        "    return used(spark)\n")
+    (pkg / "registry.py").write_text(
+        "QUERIES = {}\n"
+        "\n"
+        "\n"
+        "def register(name):\n"
+        "    return lambda fn: QUERIES.setdefault(name, fn)\n")
+    got = _gate().test_only_defs(str(pkg), [str(pkg)], root=str(tmp_path))
+    mod = os.path.join("pkg", "mod.py")
+    assert got == [f"{mod}:9 _helper", f"{mod}:13 twin",
+                   f"{mod}:17 reexported"]
 
 
 def _missing_citations(kind: str) -> set[str]:

@@ -30,10 +30,21 @@ through from the enclosing function takes the literals that function's
 own parameter receives, to a fixpoint.  Such a parameter is a constant
 in disguise: write the literal in the body.
 
+Rule 4: every top-level package def, public or private, must be
+referenced from outside its own body by code that runs: the package,
+``__spark_entry__.py`` or ``perfbench/`` (read, never changed).
+References from ``tests/`` and ``tools/`` do not count, nor does a
+``from .x import y`` re-export, nor a reference from another def that
+fails the rule: a def counts as used only when a registered query,
+module-level package code, the entry point or the benchmark reaches it,
+to a fixpoint.  Code that only tests reach is a reference twin (move it
+into its test) or a capability nothing runs (delete it).
+
 Usage: python tools/coverage_gate.py        (exit 1 on orphans, on
                                              never-chosen options, on
-                                             same-literal parameters or
-                                             on a missing CONSUMERS path)
+                                             same-literal parameters, on
+                                             test-only defs or on a
+                                             missing CONSUMERS path)
        python tools/coverage_gate.py -v     (per-module table)
 """
 
@@ -68,6 +79,10 @@ OPTION_OK: dict[str, str] = {}
 # Required parameters that may take one literal from every call (Rule 3):
 # "pkg/module.py function(parameter)" -> reason.
 LITERAL_OK: dict[str, str] = {}
+
+# Top-level defs that may be reached only from tests/ or tools/ (Rule 4):
+# "pkg/module.py name" -> reason.
+TEST_ONLY_OK: dict[str, str] = {}
 
 
 def _is_registered(node) -> bool:
@@ -119,36 +134,53 @@ def _py_files(path: str) -> list[str]:
                   for f in fs if f.endswith(".py"))
 
 
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _names_used(node: ast.AST) -> set[str]:
+    """Names ``node`` references: name loads, attribute accesses, and
+    string constants passed as call arguments."""
+    used: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Call):
+            # string constants count as symbol references ONLY when
+            # passed as call arguments (registry / format-string call
+            # sites such as .format("events_pyds") or
+            # call_function("shiftright", ...)); an incidental
+            # same-named string elsewhere (a dict key, a column alias)
+            # must not satisfy the gate
+            for a in list(n.args) + [k.value for k in n.keywords]:
+                if (isinstance(a, ast.Constant)
+                        and isinstance(a.value, str)
+                        and 0 < len(a.value) < 64
+                        and not any(c.isspace() for c in a.value)):
+                    used.add(a.value)
+        # count NAME USES and attribute accesses, not defs/imports:
+        # `from x import f` alone must not satisfy the gate
+        if isinstance(n, ast.Attribute):
+            used.add(n.attr)
+        elif isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            used.add(n.id)
+    return used
+
+
+def _refs_by_def(paths: list[str], root: str = ROOT):
+    """``(module, enclosing top-level def name or None, names used)``
+    for every top-level statement of every file under ``paths``."""
+    for full in (f for c in paths for f in _py_files(c)):
+        rel = os.path.relpath(full, root)
+        tree = ast.parse(open(full, encoding="utf-8").read())
+        for top in tree.body:
+            enc = top.name if isinstance(top, _DEFS) else None
+            yield rel, enc, _names_used(top)
+
+
 def referenced_names() -> dict[str, set[str]]:
     """name -> set of files (outside the defining one) referencing it."""
     refs: dict[str, set[str]] = defaultdict(set)
-    for full in (f for c in CONSUMERS for f in _py_files(c)):
-        rel = os.path.relpath(full, ROOT)
-        tree = ast.parse(open(full, encoding="utf-8").read())
-        call_arg_strings: set[str] = set()
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Call):
-                # string constants count as symbol references ONLY when
-                # passed as call arguments (registry / format-string
-                # call sites such as .format("events_pyds") or
-                # call_function("shiftright", ...)); an incidental
-                # same-named string elsewhere (a dict key, a column
-                # alias) must not satisfy the gate
-                for a in list(node.args) + [k.value for k in node.keywords]:
-                    if (isinstance(a, ast.Constant)
-                            and isinstance(a.value, str)
-                            and 0 < len(a.value) < 64
-                            and not any(c.isspace() for c in a.value)):
-                        call_arg_strings.add(a.value)
-            # count NAME USES and attribute accesses, not defs/imports:
-            # `from x import f` alone must not satisfy the gate
-            if isinstance(node, ast.Attribute):
-                refs[node.attr].add(rel)
-            elif isinstance(node, ast.Name) and isinstance(node.ctx,
-                                                           ast.Load):
-                refs[node.id].add(rel)
-        for s in call_arg_strings:
-            refs[s].add(rel)
+    for rel, _enc, used in _refs_by_def(CONSUMERS):
+        for name in used:
+            refs[name].add(rel)
     return refs
 
 
@@ -320,6 +352,37 @@ def same_literal_params(pkg: str, callers: list[str],
             and len(seen.get((mod, name, p), ())) == 1]
 
 
+def test_only_defs(pkg: str, consumers: list[str],
+                   root: str = ROOT) -> list[str]:
+    """``module.py:line name`` for every top-level def of ``pkg`` that
+    code in ``consumers`` never reaches (Rule 4).  Live code is every
+    consumer file outside ``pkg``, every package statement outside a
+    def, every registered query or ``PROTOCOL_OK`` name, and, to a
+    fixpoint, every def that live code names.  A def's
+    own body is live only once the def is, so recursion alone does not
+    keep it."""
+    defs = []                               # (module, node)
+    pkg_mods = set()
+    for full in _py_files(pkg):
+        mod = os.path.relpath(full, root)
+        pkg_mods.add(mod)
+        tree = ast.parse(open(full, encoding="utf-8").read())
+        defs += [(mod, n) for n in tree.body if isinstance(n, _DEFS)]
+    live = {(mod, n.name) for mod, n in defs
+            if _is_registered(n) or n.name in PROTOCOL_OK}
+    refs = list(_refs_by_def(consumers, root))
+    while True:
+        used = {name for mod, enc, names in refs
+                if enc is None or mod not in pkg_mods or (mod, enc) in live
+                for name in names}
+        new = {(mod, n.name) for mod, n in defs if n.name in used} - live
+        if not new:
+            break
+        live |= new
+    return [f"{mod}:{n.lineno} {n.name}" for mod, n in defs
+            if (mod, n.name) not in live]
+
+
 def main() -> int:
     verbose = "-v" in sys.argv
     missing = missing_consumers(CONSUMERS)
@@ -373,7 +436,15 @@ def main() -> int:
         print("SAME-LITERAL PARAMETERS (write the literal in the body):")
         for u in literal:
             print(f"  {u}")
-    return 1 if orphans or unchosen or literal else 0
+    test_only = [u for u in test_only_defs(
+        PKG, [PKG, os.path.join(ROOT, "__spark_entry__.py"), PERFBENCH])
+        if re.sub(r":\d+ ", " ", u) not in TEST_ONLY_OK]
+    print(f"top-level defs only tests or tools reach: {len(test_only)}")
+    if test_only:
+        print("TEST-ONLY DEFS (move each into its test or delete it):")
+        for u in test_only:
+            print(f"  {u}")
+    return 1 if orphans or unchosen or literal or test_only else 0
 
 
 if __name__ == "__main__":

@@ -7,12 +7,17 @@ What runs under the tracer: the entry() smoke plus a full
 build-and-collect of every registered query (the Spark half of the
 parity sweep — the DuckDB oracle half touches no package code, so it is
 skipped to keep the gate's wall time sane; value correctness is the
-parity gate's job, not this one's).  What the tracer CANNOT see:
-pandas-UDF / applyInPandas *bodies*, which execute in separate Python
-worker processes — their lines count against the denominator, so module
-floors below are calibrated to a measured run (UDF-heavy modules sit
-lower by construction), and the gate's job is catching DROPS (dead
-branches, unexercised new code), not asserting an absolute number.
+parity gate's job, not this one's).  Pandas-UDF, applyInPandas and UDTF
+bodies run in PySpark's Python worker processes: the session starts
+them through ``tools/line_coverage_worker.py`` (set as
+``spark.python.daemon.module``, and the home of the hook), which traces
+each worker the same way and leaves one line file per worker pid; the
+gate merges them and fails when there is none, so it cannot fall back
+to driver-only counts.
+Python data-source readers (sources/pyds.py) run in workers that Spark
+starts outside the daemon and stay untraced.  Floors are a measured run
+minus a margin: the gate's job is catching DROPS (dead branches,
+unexercised new code), not asserting an absolute number.
 
 Usage: python tools/line_coverage.py [sf_dir]    (exit 1 below floors)
        python tools/line_coverage.py -v [sf_dir] (per-file table only,
@@ -22,23 +27,23 @@ Usage: python tools/line_coverage.py [sf_dir]    (exit 1 below floors)
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 import threading
 import types
 
+from line_coverage_worker import PKG, tracer
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(ROOT, "tools")
 sys.path.insert(0, ROOT)
-PKG = os.path.join(ROOT, "gcp_serverless_mapreduce_spark") + os.sep
 
 # Per-module minimum line coverage (percent), calibrated to the traced
-# query sweep at sf0.001 minus a ~5-point noise margin.  A drop below
-# the floor means newly-added lines aren't exercised by any registered
-# query or a code path died — both gate failures.  Worker-side-heavy
-# modules (multimodal, pyds, stateful, hashing, the similarity numpy
-# kernels) have structurally lower floors: their kernel bodies run in
-# Python worker processes the driver-side tracer can't observe (those
-# kernels are pinned by value-level tests instead; the surface gate
-# guarantees every public symbol is referenced).
+# query sweep at sf0.001 (driver and Python workers) minus a ~5-point
+# noise margin.  A drop below the floor means newly-added lines aren't
+# exercised by any registered query or a code path died — both gate
+# failures.
 _P = "gcp_serverless_mapreduce_spark"
 FLOORS: dict[str, int] = {
     f"{_P}/__init__.py": 90,
@@ -47,28 +52,19 @@ FLOORS: dict[str, int] = {
     f"{_P}/tables.py": 75,
     f"{_P}/streaming/__init__.py": 90,
     f"{_P}/streaming/pipeline.py": 85,
-    f"{_P}/streaming/stateful.py": 30,     # state kernels run in workers
+    f"{_P}/streaming/stateful.py": 95,
     f"{_P}/operators/__init__.py": 90,
     f"{_P}/operators/anagram.py": 82,
     f"{_P}/operators/behavior.py": 95,
     f"{_P}/operators/curation.py": 95,
-    # dedup.py recalibrated round 12 (measured 79.6 at sf0.001): the new
-    # inline_band_hashes Arrow kernel and the discard-manifest
-    # drop_ranges kernel run worker-side (invisible to the driver
-    # tracer; both value-pinned by tests), and the arrow=False SQL
-    # branch is the JVM-only fallback queries don't take.
-    f"{_P}/operators/dedup.py": 75,
+    f"{_P}/operators/dedup.py": 90,
     f"{_P}/operators/graph.py": 89,
-    # layout.py recalibrated round 12 (measured 93.3): compact_partition
-    # is the EXECUTING face of the compaction plan — driven by
-    # tests/test_compaction_exec.py (writes files), not by a registered
-    # query the tracer sweeps.
-    f"{_P}/operators/layout.py": 89,
+    f"{_P}/operators/layout.py": 95,
     f"{_P}/operators/linkage.py": 95,
-    f"{_P}/operators/multimodal.py": 15,   # decode kernels run in workers
+    f"{_P}/operators/multimodal.py": 89,
     f"{_P}/operators/profiling.py": 93,
     f"{_P}/operators/retrieval.py": 95,
-    f"{_P}/operators/similarity.py": 75,   # numpy kernels run in workers
+    f"{_P}/operators/similarity.py": 92,
     f"{_P}/operators/sketches.py": 95,
     f"{_P}/operators/skew.py": 88,
     f"{_P}/operators/temporal.py": 91,
@@ -94,13 +90,13 @@ FLOORS: dict[str, int] = {
     f"{_P}/suite/tpch_extra_q.py": 95,
     f"{_P}/sources/__init__.py": 90,
     f"{_P}/sources/formats.py": 92,
-    f"{_P}/sources/partitioned.py": 0,     # exercised by pytest only
-    f"{_P}/sources/pyds.py": 28,           # reader/writer run in workers
+    # the data-source readers run in Python workers Spark starts outside
+    # the daemon, so the worker tracer does not see them
+    f"{_P}/sources/pyds.py": 61,
     f"{_P}/sources/text.py": 95,
     f"{_P}/functions/__init__.py": 90,
-    f"{_P}/functions/hashing.py": 45,      # FNV kernel runs in workers
     f"{_P}/functions/text.py": 95,
-    f"{_P}/functions/udtfs.py": 60,        # udtf eval runs in workers
+    f"{_P}/functions/udtfs.py": 88,
     f"{_P}/functions/vectors.py": 83,
 }
 
@@ -108,21 +104,26 @@ FLOORS: dict[str, int] = {
 _executed: dict[str, set[int]] = {}
 
 
-def _global_trace(frame, event, arg):
-    if event != "call":
-        return None
-    fn = frame.f_code.co_filename
-    if not fn.startswith(PKG):
-        return None
-    lines = _executed.setdefault(fn, set())
-    lines.add(frame.f_lineno)
+def _trace_workers(worker_dir: str) -> None:
+    """Make the session about to start run its Python workers under
+    tools/line_coverage_worker.py, writing line files to ``worker_dir``."""
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.python.daemon.module=line_coverage_worker "
+        "pyspark-shell")
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (TOOLS, os.environ.get("PYTHONPATH")) if p)
+    os.environ["LINE_COVERAGE_WORKER_DIR"] = worker_dir
 
-    def _local(frame, event, arg):
-        if event == "line":
-            lines.add(frame.f_lineno)
-        return _local
 
-    return _local
+def _merge_workers(worker_dir: str) -> int:
+    """Add the workers' line files to ``_executed``; -> files merged."""
+    names = [n for n in os.listdir(worker_dir) if n.endswith(".lines")]
+    for name in names:
+        with open(os.path.join(worker_dir, name), encoding="utf-8") as fh:
+            for row in fh:
+                fn, ln = row.rstrip("\n").split("\t")
+                _executed.setdefault(fn, set()).add(int(ln))
+    return len(names)
 
 
 def executable_lines(path: str) -> set[int]:
@@ -158,8 +159,11 @@ def run_traced(sf_dir: str) -> None:
     corpus-to-formatted-sink roundtrip (the reference's S1-S6 text
     source/sink surface, which no parquet-table query touches)."""
     failures = []
-    sys.settrace(_global_trace)
-    threading.settrace(_global_trace)
+    worker_dir = tempfile.mkdtemp(prefix="line_cov_workers_")
+    _trace_workers(worker_dir)
+    trace = tracer(_executed)
+    sys.settrace(trace)
+    threading.settrace(trace)
     try:
         import __spark_entry__ as e
         from gcp_serverless_mapreduce_spark.operators.anagram import (
@@ -176,9 +180,6 @@ def run_traced(sf_dir: str) -> None:
             except Exception as ex:       # noqa: BLE001 — report, then gate
                 failures.append(f"{name}: {ex}")
         # mini text-source roundtrip
-        import shutil
-        import tempfile
-
         scratch = tempfile.mkdtemp(prefix="line_cov_gutenberg_")
         try:
             _write_books(os.path.join(scratch, "in"))
@@ -230,6 +231,14 @@ def run_traced(sf_dir: str) -> None:
     finally:
         sys.settrace(None)
         threading.settrace(None)
+    merged = _merge_workers(worker_dir)
+    shutil.rmtree(worker_dir, ignore_errors=True)
+    if not merged:
+        print("line_coverage: no Python worker line file was written — "
+              "the worker tracer did not run, so worker-side lines would "
+              "count as missed")
+        sys.exit(1)
+    print(f"line_coverage: merged {merged} Python worker line files")
     if failures:
         print("line_coverage: queries FAILED during the traced run — "
               "coverage numbers would be from a broken run:")
