@@ -14,9 +14,16 @@ untrimmed), but every such residue is then dropped by the letters-only
 check, so matching only tokens whose edge-trimmed core is ``\\p{L}+`` is
 observationally equivalent — pinned by the goldens ported from
 map_test.go:135-181 in tests/test_text_functions.py.
+
+Beside the flagship's split sits the whitespace split the other text
+queries share (:func:`tokens`, :func:`nonempty_tokens`), with its DuckDB
+texts and its Python twin :func:`py_tokens`, so the engines cannot drift
+apart.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -48,6 +55,14 @@ STOPWORDS: tuple[str, ...] = (
     "won't", "would", "would've", "wouldn't", "yet", "you", "you'd",
     "you'll", "you're", "you've", "your",
 )
+
+
+def sql_quote(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("'", "''") + "'"
+
+
+STOPWORDS_SQL = ", ".join(sql_quote(w) for w in STOPWORDS)
 
 # Gutenberg markers, the reference's regex strings (split.go:92, :101,
 # :107) with `.` written `[^\n]`.  RE2's `.` matches any character but
@@ -106,3 +121,37 @@ def words(text: Column) -> Column:
 def anagram_signature(word: Column) -> Column:
     """P9: sort the word's characters — 'race' -> 'acer' (map.go:68-76)."""
     return F.concat_ws("", F.sort_array(F.split(word, "")))
+
+
+def tokens(text: Column) -> Column:
+    """Lowered whitespace tokens as array<string>, empty tokens kept:
+    ``split(trim(lower(text)), '\\s+')`` (P2+P3 generalized)."""
+    return F.split(F.trim(F.lower(text)), r"\s+")
+
+
+def nonempty_tokens(text: Column) -> Column:
+    """:func:`tokens` without its empty tokens."""
+    return F.filter(tokens(text), lambda w: w != "")
+
+
+# The DuckDB twins of tokens(text) and nonempty_tokens(text).
+TOKENS_SQL = "string_split_regex(trim(lower(text)), '\\s+')"
+NONEMPTY_TOKENS_SQL = f"list_filter({TOKENS_SQL}, x -> x <> '')"
+
+# Java's '\s' is the ASCII whitespace class [ \t\n\x0b\f\r] — NOT
+# Python str.split()'s Unicode whitespace set (U+00A0, U+2028, ...).
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def py_tokens(text: str | None) -> list[str]:
+    """Exact Python twin of :func:`tokens`, on any text: lower-case
+    first, trim strips spaces only (the Spark and DuckDB ``trim``
+    default), split on Java's ``\\s``, and keep empty tokens, so leading
+    or trailing non-space whitespace yields the same empty first or last
+    token the JVM expression emits, and Unicode whitespace does not
+    split.  RE2 (DuckDB) leaves vertical tab U+000B out of ``\\s``, so
+    text containing it is outside the Spark/DuckDB parity contract.
+    Callers of the :func:`nonempty_tokens` contract filter the result.
+    NULL text is the caller's branch: the expression twins route NULL
+    through ``size(NULL) = -1`` guards to an empty array."""
+    return _JAVA_WS.split((text or "").lower().strip(" "))

@@ -17,16 +17,16 @@ from pyspark.sql.functions import udtf
 class WordBigrams:
     """text -> one row per consecutive word pair (order-preserving,
     NON-distinct — the multiset, unlike the dedup shingle set).
-    Tokenization is the oracle's exact ``split(trim(lower(text)),
-    '\\s+')`` semantics (operators.dedup.py_tokens: empty tokens kept,
-    ASCII whitespace class — not Python str.split's Unicode set)."""
+    Tokens are the :func:`~.text.tokens` contract (:func:`~.text.py_tokens`:
+    empty tokens kept, Java's ASCII whitespace class — not Python
+    str.split's Unicode set)."""
 
     def eval(self, text: str):  # noqa: D102
         if text is None:
             return
         # absolute import: the class is cloudpickled to UDTF workers,
         # where relative-import context is not guaranteed
-        from gcp_serverless_mapreduce_spark.operators.dedup import py_tokens
+        from gcp_serverless_mapreduce_spark.functions.text import py_tokens
         toks = py_tokens(text)
         for i in range(len(toks) - 1):
             yield i, f"{toks[i]} {toks[i + 1]}"

@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import bigram_structs, tokens
+from ..functions.text import nonempty_tokens
+from .textstats import bigram_structs
 
 # Deliberately simple, engine-portable patterns (identical semantics in
 # Java regex and DuckDB's RE2): a production deployment would swap in a
@@ -81,7 +82,8 @@ def doc_chunks(docs: DataFrame, chunk_words: int = 10) -> DataFrame:
     # filter BEFORE the sequence: Spark's sequence(0, -1) counts DOWN
     # (yields [0, -1]) instead of returning empty, so an empty document
     # would fabricate chunks; DuckDB's generate_series(0, -1) is empty.
-    toked = (docs.select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
+    toked = (docs.select(F.col("doc_id"),
+                         nonempty_tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") > 0))
     n_chunks = F.ceil(F.size("toks") / F.lit(chunk_words)).cast("int")
     return (
@@ -164,7 +166,8 @@ def word_ngrams(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
     from ..tables import spread_small_scan
 
     toked = (spread_small_scan(docs)
-             .select(F.col(id_col), tokens(F.col("text")).alias("toks"))
+             .select(F.col(id_col),
+                     nonempty_tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") >= n))
     grams = F.array_distinct(F.transform(
         F.sequence(F.lit(1), F.size("toks") - (n - 1)),
@@ -228,7 +231,8 @@ def _positioned_ngrams(docs: DataFrame, n: int) -> DataFrame:
     from ..tables import spread_small_scan
 
     toked = (spread_small_scan(docs)
-             .select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
+             .select(F.col("doc_id"),
+                     nonempty_tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") >= n))
     return toked.select(
         "doc_id",
@@ -391,7 +395,7 @@ def inline_bloom_spans(bitmap: list[int], n: int = 3) -> Column:
         return F.when(F.size(toks) >= n, merged).otherwise(empty)
 
     return F.element_at(
-        F.transform(F.array(tokens(F.col("text"))), body), 1)
+        F.transform(F.array(nonempty_tokens(F.col("text"))), body), 1)
 
 
 def bpe_aligned_span_manifest(docs: DataFrame, n: int = 3,
@@ -426,7 +430,8 @@ def bpe_aligned_span_manifest(docs: DataFrame, n: int = 3,
     contam = docs.join(spans.select("doc_id").distinct(), "doc_id",
                        "left_semi")
     w = contam.select(
-        "doc_id", F.posexplode(tokens(F.col("text"))).alias("wi", "word"))
+        "doc_id",
+        F.posexplode(nonempty_tokens(F.col("text"))).alias("wi", "word"))
     p = bpe_pieces(F.col("word"))
     n_pieces = (F.length(p)
                 - F.length(F.replace(p, F.lit("<"), F.lit("")))
@@ -480,7 +485,8 @@ def cap_per_source(docs: DataFrame, cap: int) -> DataFrame:
     return (
         docs.withColumn(
             "_quality",
-            F.size(F.array_distinct(tokens(F.col("text")))).cast("long"))
+            F.size(F.array_distinct(nonempty_tokens(F.col("text"))))
+            .cast("long"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= cap)
         .select("source", "doc_id", "rank",
@@ -527,7 +533,7 @@ def pack_sequences(docs: DataFrame, budget: int) -> DataFrame:
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     toked = docs.select(
         "source", "doc_id",
-        F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"))
+        F.size(nonempty_tokens(F.col("text"))).cast("long").alias("n_tokens"))
     packed = (toked
               .withColumn("_end", F.sum("n_tokens").over(w))
               # DIV: exact integer division (the `/` operator would round
@@ -589,7 +595,8 @@ def overlapping_chunks(docs: DataFrame, chunk_words: int,
     (an overlap factor of chunk/stride would multiply shuffle bytes).
     Map-only: explode of per-row offsets, no shuffle at all.
     """
-    toked = (docs.select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
+    toked = (docs.select(F.col("doc_id"),
+                         nonempty_tokens(F.col("text")).alias("toks"))
              .filter(F.size("toks") > 0))
     return (
         toked.select(F.col("doc_id"), "toks",
@@ -719,7 +726,7 @@ def dsir_importance(docs: DataFrame, target_lang: str = "en") -> DataFrame:
     toks = docs.select(
         F.col("doc_id").alias("doc"), F.col("lang"),
         (F.col("lang") == target_lang).alias("is_t"),
-        F.explode(tokens(F.col("text"))).alias("tok"))
+        F.explode(nonempty_tokens(F.col("text"))).alias("tok"))
     db = (toks
           .select("doc", "lang", "is_t", dsir_bucket(F.col("tok")).alias("b"))
           .groupBy("doc", "lang", "is_t", "b")
@@ -754,7 +761,7 @@ def quality_logit(docs: DataFrame, stopwords: tuple[str, ...]) -> DataFrame:
     so the whole scorer is a map-only projection inside whole-stage
     codegen: zero shuffles at any scale.
     """
-    toks = tokens(F.col("text"))
+    toks = nonempty_tokens(F.col("text"))
     n = F.size(toks).cast("long")
     nd = F.size(F.array_distinct(toks)).cast("long")
     nstop = F.size(F.filter(toks, lambda t: t.isin(*stopwords))).cast("long")
@@ -992,7 +999,7 @@ def gopher_rule_flags() -> list[tuple[str, Column]]:
     whole battery runs map-only inside codegen.  NULL-valued rules (e.g.
     mean word length of an empty doc) count as failures via coalesce."""
     text = F.col("text")
-    toks = tokens(text)
+    toks = nonempty_tokens(text)
     # nullif denominators: Spark division-by-zero yields NULL but DuckDB
     # does IEEE inf/NaN (and DuckDB orders NaN above every threshold) —
     # NULL on both engines falls to the coalesce(…, False) fail path.
@@ -1077,7 +1084,7 @@ def hashed_ngram_scores(docs: DataFrame) -> DataFrame:
     map-only projection; no explode, no shuffle, nothing but the scan.
     The weight sum accumulates exact BIGINT numerators (order-free), so
     only the final sigmoid touches floating point."""
-    toks = tokens(F.col("text"))
+    toks = nonempty_tokens(F.col("text"))
     bi = F.transform(bigram_structs(toks),
                      lambda s: F.concat_ws(" ", s["w1"], s["w2"]))
     grams = F.concat(toks, bi)

@@ -28,47 +28,15 @@ Scale design:
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.text import TOKENS_SQL, nonempty_tokens, py_tokens, tokens
+
 HEX = "0123456789abcdef"
-
-
-def tokens_col():
-    """Lowered whitespace tokens as array<string> (P2+P3 generalized)."""
-    return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-
-
-# Java's '\s' is the ASCII whitespace class [ \t\n\x0b\f\r] — NOT
-# Python str.split()'s Unicode whitespace set (U+00A0, U+2028, ...).
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
-def py_tokens(text: str | None) -> list[str]:
-    """EXACT Python twin of :func:`tokens_col` =
-    ``split(trim(lower(text)), '\\s+')`` — the tokenization the oracle
-    SQL declares (DuckDB ``string_split_regex(trim(lower(text)),
-    '\\s+')``).  This twin follows Java's ``\\s``.  RE2 (DuckDB) leaves
-    vertical tab U+000B out of ``\\s``, so text containing it is outside
-    the Spark/DuckDB parity contract.
-
-    Semantics reproduced exactly, not just on ASCII: lowercase first;
-    trim strips SPACES only (Spark/DuckDB ``trim`` default); the split
-    KEEPS empty tokens, so leading/trailing non-space whitespace yields
-    the same empty first/last token the JVM expression emits, and
-    Unicode whitespace does NOT split.  The
-    previous ``str.strip().lower().split()`` silently diverged on
-    leading tabs, trailing newlines and NBSP — fine on the fixtures'
-    ASCII, wrong at 100 TB of real text.  Callers that need the
-    empty-filtered variant (textstats.tokens) filter the result.
-    NULL text is the CALLER's branch: the expression twins all route
-    NULL through ``size(NULL) = -1`` guards to an empty array."""
-    return _JAVA_WS.split((text or "").lower().strip(" "))
 
 
 def shingle_array(k: int = 3):
@@ -85,9 +53,10 @@ def shingle_array(k: int = 3):
     *interpreted*, never whole-stage-codegen'd, while the Python loop
     runs once per Arrow batch.
 
-    Token semantics are EXACT (:func:`py_tokens` == ``tokens_col``,
+    Token semantics are EXACT (:func:`py_tokens` == ``tokens``,
     empty tokens kept), not merely ASCII-equivalent; NULL text takes the
     expression twin's ``size(NULL)``-guard branch to an empty array.
+    ``SHINGLE_CTE`` is the DuckDB twin.
     """
     @pandas_udf("array<string>")
     def _shingles(texts: pd.Series) -> pd.Series:
@@ -102,6 +71,20 @@ def shingle_array(k: int = 3):
         return pd.Series(out)
 
     return _shingles("text")
+
+
+# DuckDB twin of the explode(shingle_array(3)) rows (doc, shingle);
+# [i:i+2] is DuckDB's 1-based inclusive slice = 3 elements.
+SHINGLE_CTE = f"""
+WITH toks AS (
+    SELECT doc_id AS doc, {TOKENS_SQL} AS t
+    FROM documents),
+sh AS (
+    SELECT DISTINCT doc,
+           unnest(list_transform(generate_series(1, len(t) - 2),
+                                 i -> array_to_string(t[i:i+2], ' '))) AS shingle
+    FROM toks)
+"""
 
 
 def word_shingles(docs: DataFrame, k: int = 3,
@@ -498,8 +481,7 @@ def simhash_bits(docs: DataFrame, n_bits: int) -> DataFrame:
     """
     if not 1 <= n_bits <= 60:
         raise ValueError(f"n_bits must be in [1, 60], got {n_bits}")
-    uniq = F.array_distinct(
-        F.filter(tokens_col(), lambda t: t != ""))
+    uniq = F.array_distinct(nonempty_tokens(F.col("text")))
     # Spread before the tokenize+md5 explode (integer bit sums are
     # partitioning-independent) — see word_shingles.
     from ..tables import spread_small_scan
@@ -860,7 +842,7 @@ def ladder_tagged_grams(ns: tuple[int, ...]):
     Docs shorter than a rung contribute no grams for that rung;
     shorter than min(ns), an empty array (the old pre-explode size
     filter, folded in).  Token semantics are EXACT (:func:`py_tokens`
-    == the twin's ``tokens_col``, empty tokens kept — not just
+    == the twin's ``tokens``, empty tokens kept — not just
     ASCII-equivalent); NULL text takes the twin's ``size(NULL)``-guard
     branch to []."""
     lo = min(ns)
@@ -969,7 +951,7 @@ def max_shared_span_exact(docs: DataFrame, ns: tuple[int, ...] = SPAN_NS,
     from ..tables import spread_small_scan
     toked = (spread_small_scan(docs)
              .select(F.col("doc_id").alias("doc"),
-                     tokens_col().alias("toks")))
+                     tokens(F.col("text")).alias("toks")))
 
     @pandas_udf("long")
     def exact_span(ta: pd.Series, tb: pd.Series,
@@ -1150,7 +1132,7 @@ def substring_discard_manifest(docs: DataFrame, min_len: int = 8,
     from ..tables import spread_small_scan
     toked = (spread_small_scan(docs)
              .select(F.col("doc_id").alias("doc"),
-                     tokens_col().alias("toks")))
+                     tokens(F.col("text")).alias("toks")))
 
     @pandas_udf("array<struct<s:long,e:long>>")
     def drop_ranges(ta: pd.Series, tb: pd.Series) -> pd.Series:

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import tokens
+from ..functions.text import nonempty_tokens
 
 # Sorted-neighborhood geometry.
 SN_WINDOW = 5          # compare each doc to its 5 successors
@@ -58,7 +58,7 @@ FS_NEIGHBORS = 10      # balance-sorted neighborhood width within a block
 
 def _tokset(text: Column) -> Column:
     """Sorted distinct token set of a document."""
-    return F.array_sort(F.array_distinct(tokens(text)))
+    return F.array_sort(F.array_distinct(nonempty_tokens(text)))
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -99,7 +99,7 @@ def sorted_neighborhood_pairs(docs: DataFrame, window: int = SN_WINDOW,
     keyed = spread_small_scan(docs).select(
         F.col("doc_id").alias("id"),
         _tokset(F.col("text")).alias("ts"),
-        F.concat_ws(" ", F.slice(tokens(F.col("text")),
+        F.concat_ws(" ", F.slice(nonempty_tokens(F.col("text")),
                                  1 + token_offset, 3))
          .alias("sortkey"),
     ).withColumn("blk", F.split(F.col("sortkey"), " ").getItem(0))

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import tokens_col
+from ..functions.text import tokens
 
 K1 = 1.2
 B = 0.75
@@ -42,7 +42,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     # otherwise serialize it on one core); see tables.spread_small_scan.
     toks = (spread_small_scan(docs)
             .select(F.col("doc_id").alias("doc"),
-                    tokens_col().alias("t")))
+                    tokens(F.col("text")).alias("t")))
     lens = toks.select("doc", F.size("t").alias("dl"))
     # one broadcast-scalar frame: corpus size and average doc length
     stats = lens.agg(F.count("*").alias("n_docs"),

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import nonempty_tokens
+
 # Marker-word profiles for the n-gram/stopword language heuristic.  Tiny on
 # purpose: the operator's shape (per-lang hit counts -> argmax) is what
 # scales; real deployments swap in full frequency profiles.
@@ -35,11 +37,6 @@ FP_SEED = 7
 FP_MULT = 31
 
 
-def tokens(text: Column) -> Column:
-    """Lowered whitespace tokens, no empties (P2+P3 generalized)."""
-    return F.filter(F.split(F.trim(F.lower(text)), r"\s+"), lambda w: w != "")
-
-
 def lang_hits(toks: Column, lang: str) -> Column:
     """How many tokens are marker words of ``lang`` (multiset count)."""
     markers = LANG_MARKERS[lang]
@@ -50,7 +47,7 @@ def language_scores(docs: DataFrame) -> DataFrame:
     """-> (doc_id, cand_lang, n_hits) — one row per (doc, candidate
     language).  Single scan: the per-lang counts are computed in one
     projection and exploded, not one pass per language."""
-    toks = tokens(F.col("text"))
+    toks = nonempty_tokens(F.col("text"))
     cands = F.array(*[
         F.struct(F.lit(lang).alias("cand_lang"),
                  lang_hits(toks, lang).cast("long").alias("n_hits"))
@@ -96,7 +93,8 @@ def build_vocab(docs: DataFrame, size: int) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    counts = (docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+    counts = (docs.select(F.explode(nonempty_tokens(F.col("text")))
+                          .alias("word"))
               .groupBy("word").agg(F.count("*").alias("freq")))
     top = counts.orderBy(F.col("freq").desc(), F.col("word")).limit(size)
     w = Window.orderBy(F.col("freq").desc(), F.col("word"))
@@ -120,7 +118,7 @@ def cooccurrence_pmi(docs: DataFrame, max_gap: int = 2,
 
     -> (word_a, word_b, n_pair, pmi) for pairs with c_ab >= min_count.
     """
-    toks = docs.select(tokens(F.col("text")).alias("t"))
+    toks = docs.select(nonempty_tokens(F.col("text")).alias("t"))
     pair_arrays = [
         F.arrays_zip(F.slice("t", 1, F.greatest(F.size("t") - g, F.lit(0))),
                      F.slice("t", 1 + g,
@@ -131,7 +129,7 @@ def cooccurrence_pmi(docs: DataFrame, max_gap: int = 2,
              .select(F.col("p.0").alias("word_a"),
                      F.col("p.1").alias("word_b")))
     pc = pairs.groupBy("word_a", "word_b").agg(F.count("*").alias("n_pair"))
-    wc = (docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+    wc = (docs.select(F.explode(nonempty_tokens(F.col("text"))).alias("word"))
           .groupBy("word").agg(F.count("*").alias("n_word")))
     totals = (pc.agg(F.sum("n_pair").alias("t_pairs"))
               .crossJoin(wc.agg(F.sum("n_word").alias("t_words"))))
@@ -159,7 +157,7 @@ def token_entropy(docs: DataFrame) -> DataFrame:
     coalesces them into one effective exchange chain.
     """
     toks = docs.select(F.col("doc_id").alias("doc"),
-                       F.explode(tokens(F.col("text"))).alias("tok"))
+                       F.explode(nonempty_tokens(F.col("text"))).alias("tok"))
     tc = toks.groupBy("doc", "tok").agg(F.count("*").alias("c"))
     p = F.col("c").cast("double") / F.col("n")
     return (tc.withColumn("n", F.sum("c").over(Window.partitionBy("doc")))
@@ -183,7 +181,7 @@ def source_token_kl(docs: DataFrame) -> DataFrame:
     broadcast as scalars.
     """
     toks = docs.select(F.col("source"),
-                       F.explode(tokens(F.col("text"))).alias("tok"))
+                       F.explode(nonempty_tokens(F.col("text"))).alias("tok"))
     sc = toks.groupBy("source", "tok").agg(F.count("*").alias("cs"))
     cc = toks.groupBy("tok").agg(F.count("*").alias("cc"))
     stot = sc.groupBy("source").agg(F.sum("cs").alias("ns"))
@@ -229,10 +227,12 @@ def bpe_escape(text: Column) -> Column:
     return F.replace(s, F.lit(">"), F.lit("\\g"))
 
 
-def bpe_pieces(text: Column) -> Column:
+def bpe_pieces(text: Column, merges=BPE_MERGES) -> Column:
     """Apply the BPE merge table to a document and return its piece
     stream as a delimited string ``<p1><p2>...`` (spaces separate words
     and are never wrapped, so merges cannot cross word boundaries).
+    ``merges=()`` gives the wrapped unit stream that
+    :func:`learn_bpe_merges` starts from.
 
     Formulation: escape delimiter chars (see ``bpe_escape``), wrap every
     unit (escape pair or single non-space char) as ``<u>``, then apply
@@ -247,8 +247,18 @@ def bpe_pieces(text: Column) -> Column:
     """
     s = F.regexp_replace(bpe_escape(F.lower(F.trim(text))),
                          _BPE_UNIT_RE, "<$1>")
-    for a, b in BPE_MERGES:
+    for a, b in merges:
         s = F.replace(s, F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
+    return s
+
+
+def bpe_pieces_sql(col: str, merges=BPE_MERGES) -> str:
+    """DuckDB twin of :func:`bpe_pieces` over the column ``col``."""
+    s = (f"regexp_replace(replace(replace(replace(lower(trim({col})), "
+         f"'\\', '\\\\'), '<', '\\l'), '>', '\\g'), "
+         f"'(\\\\[\\\\lg]|\\S)', '<\\1>', 'g')")
+    for a, b in merges:
+        s = f"replace({s}, '<{a}><{b}>', '<{a}{b}>')"
     return s
 
 
@@ -321,8 +331,7 @@ def learn_bpe_merges(docs: DataFrame, rounds: int = BPE_LEARN_ROUNDS):
     from ..tables import spread_small_scan
 
     cur = spread_small_scan(docs.select(F.col("text"))).select(
-        F.regexp_replace(bpe_escape(F.lower(F.trim(F.col("text")))),
-                         _BPE_UNIT_RE, "<$1>").alias("s"))
+        bpe_pieces(F.col("text"), merges=()).alias("s"))
     cur = cur.localCheckpoint()
     merges = []
     for _ in range(rounds):
@@ -377,7 +386,7 @@ def zipf_fit_by_source(docs: DataFrame, topn: int = 100) -> DataFrame:
     data-sized stage is the (source, word) count — map-side combined —
     and the window runs on the counted frame, never on raw tokens."""
     toks = docs.select(F.col("source"),
-                       F.explode(tokens(F.col("text"))).alias("tok"))
+                       F.explode(nonempty_tokens(F.col("text"))).alias("tok"))
     wc = toks.groupBy("source", "tok").agg(F.count("*").alias("freq"))
     w = Window.partitionBy("source").orderBy(F.col("freq").desc(),
                                              F.col("tok").asc())
@@ -433,7 +442,7 @@ def heldout_bigram_xent(docs: DataFrame, train_mod: int = 2) -> DataFrame:
     reuse); scoring joins key on the gram, V broadcasts as a scalar.
     """
     toked = docs.select(F.col("doc_id"),
-                        tokens(F.col("text")).alias("toks"))
+                        nonempty_tokens(F.col("text")).alias("toks"))
     train = toked.filter(F.col("doc_id") % train_mod == 0)
     score = toked.filter(F.col("doc_id") % train_mod != 0)
     tb = train.select(F.explode(bigram_structs(F.col("toks"))).alias("b"))

@@ -21,7 +21,10 @@ Conventions that keep the two engines hash-identical:
 - money aggregates computed in DECIMAL (exact, order-independent) and cast
   to DOUBLE at the end — never raw double summation, whose value depends on
   partition order;
-- temporal outputs formatted to strings (engine-native rendering differs).
+- temporal outputs formatted to strings (engine-native rendering differs);
+- the whitespace token split, the stop list and the left-to-right double
+  fold come from ``functions/`` (``functions.text``, ``functions.vectors``)
+  in both their Spark and their DuckDB forms, never a copy.
 """
 
 from __future__ import annotations

@@ -6,16 +6,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import _GO_SPACE, STOPWORDS
+from ..functions.text import _GO_SPACE, STOPWORDS_SQL
 from ..operators import anagram
 from ..registry import register
 from ..tables import load_table
-
-def _sql_quote(s: str) -> str:
-    return "'" + s.replace("'", "''") + "'"
-
-
-_STOPWORDS_SQL = ", ".join(_sql_quote(w) for w in STOPWORDS)
 
 # Shared CTE prefix: tokenize -> per-doc distinct (P2-P4) -> normalize
 # (P5-P7) -> anagram signature (P9), one step per stage: the per-stage
@@ -34,7 +28,7 @@ cleaned AS (
 kept AS (
     SELECT word FROM cleaned
     WHERE regexp_matches(word, '^\\p{{L}}+$')
-      AND word NOT IN ({_STOPWORDS_SQL})
+      AND word NOT IN ({STOPWORDS_SQL})
 ),
 sigs AS (
     SELECT array_to_string(list_sort(string_split(word, '')), '') AS sorted_word, word

@@ -12,10 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import (NONEMPTY_TOKENS_SQL, STOPWORDS, STOPWORDS_SQL,
+                              nonempty_tokens, sql_quote)
 from ..operators import curation
+from ..operators.textstats import bpe_pieces_sql
 from ..registry import register
 from ..tables import load_table
-from .textstats_q import _TOKS
 
 CHUNK_WORDS = 10
 NGRAM_N = 3
@@ -77,7 +79,7 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("chunk_dedup_docs", f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 ch AS (
     SELECT doc_id, j.j AS chunk_idx,
            array_to_string(list_slice(toks, j.j * {CHUNK_WORDS} + 1,
@@ -114,7 +116,7 @@ def chunk_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("ngram_contamination", f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 g AS (
     SELECT DISTINCT doc_id,
            array_to_string(list_slice(toks, i.i, i.i + {NGRAM_N} - 1),
@@ -143,7 +145,7 @@ def ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared exact-manifest CTE chain (through merged `spans`) — the oracle
 # of contamination_span_manifest, reused by the BPE-aligned face.
 _SPAN_CTES = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 g AS (
     SELECT doc_id, i.i - 1 AS s, i.i - 1 + {NGRAM_N} AS e,
            array_to_string(list_slice(toks, i.i, i.i + {NGRAM_N - 1}),
@@ -197,9 +199,6 @@ def contamination_span_manifest(spark: SparkSession,
     return curation.contamination_span_manifest(docs, NGRAM_N, EVAL_MOD)
 
 
-from .textstats_q import _bpe_sql as _BPE_SQL  # noqa: E402
-
-
 @register("bpe_aligned_contamination_spans", _SPAN_CTES + f""",
 w AS (
     SELECT t.doc_id, i.i - 1 AS wi, toks[i.i] AS word
@@ -208,7 +207,7 @@ w AS (
 pc AS (
     SELECT doc_id, wi,
            CAST(len(p) - len(replace(p, '<', '')) AS BIGINT) AS np
-    FROM (SELECT doc_id, wi, {_BPE_SQL('word')} AS p FROM w)),
+    FROM (SELECT doc_id, wi, {bpe_pieces_sql('word')} AS p FROM w)),
 off AS (
     SELECT doc_id, wi,
            SUM(np) OVER (PARTITION BY doc_id ORDER BY wi) - np AS p_start,
@@ -243,7 +242,7 @@ DOMAIN_CAP = 10
 
 
 @register("domain_capped_corpus", f"""
-WITH t AS (SELECT doc_id, source, {{_TOKS}} AS toks FROM documents),
+WITH t AS (SELECT doc_id, source, {{NONEMPTY_TOKENS_SQL}} AS toks FROM documents),
 q AS (SELECT source, doc_id,
              CAST(len(list_distinct(toks)) AS BIGINT) AS n_uniq_tokens
       FROM t)
@@ -254,7 +253,7 @@ SELECT source, doc_id,
        n_uniq_tokens
 FROM q
 QUALIFY rank <= {DOMAIN_CAP}
-""".format(_TOKS=_TOKS))
+""".format(NONEMPTY_TOKENS_SQL=NONEMPTY_TOKENS_SQL))
 def domain_capped_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain over-representation cap (Gopher/RefinedWeb-style corpus
     mixing): keep at most {DOMAIN_CAP} docs per source, ranked by
@@ -290,7 +289,7 @@ SAMPLE_SCALE = 2
 
 
 @register("sequence_packing_plan", """
-WITH t AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, source, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 n AS (SELECT source, doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM t),
 p AS (SELECT source, doc_id, n_tokens,
              SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
@@ -302,7 +301,7 @@ SELECT source, CAST((cum - n_tokens) // {PACK_BUDGET} AS BIGINT) AS pack_id,
        round(SUM(n_tokens) / {PACK_BUDGET}.0, 6) AS fill_ratio,
        SUM(n_tokens) > {PACK_BUDGET} AS overflowed
 FROM p GROUP BY source, pack_id
-""".format(_TOKS=_TOKS, PACK_BUDGET=PACK_BUDGET))
+""".format(NONEMPTY_TOKENS_SQL=NONEMPTY_TOKENS_SQL, PACK_BUDGET=PACK_BUDGET))
 def sequence_packing_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pretraining sequence packing ({PACK_BUDGET}-token budget):
     concat-offset bucketing of each source's doc stream into packs, with
@@ -380,8 +379,6 @@ def quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_chars").alias("kept_chars")))
 
 
-from ..functions.text import STOPWORDS as _STOPWORDS
-from .textstats_q import _STOP_SQL as _STOPS
 from ..operators.curation import (DSIR_BUCKETS, QL_BIAS, QL_W_DIGITRATIO,
                                   QL_W_DISTINCT, QL_W_LOGLEN, QL_W_MEANLEN,
                                   QL_W_STOPRATIO)
@@ -391,7 +388,7 @@ DSIR_TARGET_LANG = "en"
 
 @register("dsir_importance_weights", f"""
 WITH t AS (SELECT doc_id, lang, lang = '{DSIR_TARGET_LANG}' AS is_t,
-                  unnest({_TOKS}) AS tok
+                  unnest({NONEMPTY_TOKENS_SQL}) AS tok
            FROM documents),
 db AS (SELECT doc_id, lang, is_t,
               CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT)
@@ -429,11 +426,11 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("quality_logit_scores", f"""
-WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, text, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 f AS (SELECT doc_id,
              CAST(len(toks) AS BIGINT) AS n,
              CAST(len(list_distinct(toks)) AS BIGINT) AS nd,
-             CAST(len(list_filter(toks, x -> x IN ({_STOPS})))
+             CAST(len(list_filter(toks, x -> x IN ({STOPWORDS_SQL})))
                   AS BIGINT) AS nstop,
              CAST(list_sum(list_transform(toks, x -> len(x)))
                   AS BIGINT) AS tok_chars,
@@ -478,7 +475,7 @@ def quality_logit_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     into keep/drop.  Map-only projection, zero shuffles at any scale.
     See operators/curation.py:quality_logit."""
     docs = load_table(spark, sf_dir, "documents")
-    return curation.quality_logit(docs, _STOPWORDS)
+    return curation.quality_logit(docs, STOPWORDS)
 
 
 from ..operators.curation import SHUFFLE_SHARDS
@@ -537,8 +534,6 @@ def lang_mixture_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- composed corpus-prep pipeline v2 -------------------------------------
 
-from .textstats_q import _bpe_sql as _BPE_SQL_FN
-
 # The quality-logit keep predicate, identical to quality_logit_scores.
 _QL_Z = f"""(CAST({QL_BIAS!r} AS DOUBLE)
     + CAST({QL_W_LOGLEN!r} AS DOUBLE)
@@ -547,7 +542,7 @@ _QL_Z = f"""(CAST({QL_BIAS!r} AS DOUBLE)
       * (CAST(list_sum(list_transform(toks, x -> len(x))) AS DOUBLE)
          / len(toks))
     + CAST({QL_W_STOPRATIO!r} AS DOUBLE)
-      * (CAST(len(list_filter(toks, x -> x IN ({_STOPS}))) AS DOUBLE)
+      * (CAST(len(list_filter(toks, x -> x IN ({STOPWORDS_SQL}))) AS DOUBLE)
          / len(toks))
     + CAST({QL_W_DIGITRATIO!r} AS DOUBLE)
       * (CAST(len(text) - len(regexp_replace(text, '[0-9]', '', 'g'))
@@ -557,7 +552,7 @@ _QL_Z = f"""(CAST({QL_BIAS!r} AS DOUBLE)
 
 
 @register("corpus_prep_pipeline_v2", f"""
-WITH t AS (SELECT doc_id, lang, n_chars, text, {_TOKS} AS toks
+WITH t AS (SELECT doc_id, lang, n_chars, text, {NONEMPTY_TOKENS_SQL} AS toks
            FROM documents),
 ql AS (
     SELECT * FROM t
@@ -575,8 +570,8 @@ sp AS (
                 WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'f3'
                     THEN 'val'
                 ELSE 'test' END AS split,
-           len({_BPE_SQL_FN('text')})
-               - len(replace({_BPE_SQL_FN('text')}, '<', '')) AS n_pieces
+           len({bpe_pieces_sql('text')})
+               - len(replace({bpe_pieces_sql('text')}, '<', '')) AS n_pieces
     FROM kept)
 SELECT split, lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -594,7 +589,6 @@ def corpus_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB.  Every stage is individually oracle-gated elsewhere
     (quality_logit_scores, exact_dedup_groups, dataset_split_counts,
     bpe_piece_stats); this query gates their composition."""
-    from ..functions.text import STOPWORDS
     from ..operators import textstats
     docs = load_table(spark, sf_dir, "documents")
     ql = curation.quality_logit(docs, STOPWORDS)
@@ -617,7 +611,7 @@ def corpus_prep_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corpus governance: cross-source n-gram overlap matrix.
 
 @register("source_overlap_jaccard", f"""
-WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT source, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 g AS (
     SELECT DISTINCT source,
            array_to_string(list_slice(toks, i.i, i.i + {NGRAM_N} - 1),
@@ -728,7 +722,7 @@ WHERE rk = 1"""
 @register("source_boilerplate_prefix",
           "\nUNION ALL\n".join(
               _prefix_branch_sql(k).format(toks="{t}") for k in PREFIX_KS
-          ).replace("{t}", _TOKS))
+          ).replace("{t}", NONEMPTY_TOKENS_SQL))
 def source_boilerplate_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boilerplate-prefix profile: for each source and each prefix
     length k in the ladder, the MODAL k-token document prefix, how many
@@ -744,9 +738,8 @@ def source_boilerplate_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix — then a per-source window over the distinct-prefix counts.
     Deterministic modal tie-break (max count, then lexicographic
     prefix) keeps both engines on the same winner."""
-    from ..operators.textstats import tokens
     docs = load_table(spark, sf_dir, "documents")
-    toked = docs.select("source", tokens(F.col("text")).alias("toks"))
+    toked = docs.select("source", nonempty_tokens(F.col("text")).alias("toks"))
     out = None
     for k in PREFIX_KS:
         grouped = (toked.where(F.size("toks") >= k)
@@ -868,7 +861,7 @@ def neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _GR = curation  # thresholds referenced below
-_GR_STOPS = ", ".join(f"'{w}'" for w in curation.GOPHER_STOPS)
+_GR_STOPS = ", ".join(sql_quote(w) for w in curation.GOPHER_STOPS)
 
 _GR_FLAGS_SQL = f"""
     SELECT source,
@@ -893,7 +886,7 @@ _GR_FLAGS_SQL = f"""
 
 @register("gopher_rule_filter", f"""
 WITH t AS (
-    SELECT source, text, {_TOKS} AS toks FROM documents),
+    SELECT source, text, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 f AS (
     SELECT source,
       nullif(CAST(len(toks) AS DOUBLE), 0) AS nw,
@@ -955,7 +948,7 @@ _HF_HALF = (curation.HASH_FEAT_MOD - 1) // 2
 
 
 @register("hashed_ngram_quality_scores", f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 g AS (
     SELECT doc_id,
            list_concat(

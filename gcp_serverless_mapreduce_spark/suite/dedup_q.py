@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import NONEMPTY_TOKENS_SQL, TOKENS_SQL, nonempty_tokens
+from ..functions.vectors import NORM_SQL, dot_sql
 from ..operators import dedup
 from ..registry import register
 from ..tables import load_table
@@ -32,22 +34,9 @@ COSINE_THRESHOLD = 0.40  # fixture embeddings are random; max within-label pair 
 
 # ---- shared SQL fragments -------------------------------------------------
 
-# (doc, shingle) distinct 3-word shingles; [i:i+2] is DuckDB's 1-based
-# inclusive slice = 3 elements = Spark's slice(t, i, 3).
-_SH_CTE = """
-WITH toks AS (
-    SELECT doc_id AS doc, string_split_regex(trim(lower(text)), '\\s+') AS t
-    FROM documents),
-sh AS (
-    SELECT DISTINCT doc,
-           unnest(list_transform(generate_series(1, len(t) - 2),
-                                 i -> array_to_string(t[i:i+2], ' '))) AS shingle
-    FROM toks)
-"""
-
 _MH_COLS = ", ".join(
     f"min(md5('{s}|' || shingle)) AS mh_{s}" for s in range(NUM_PERM))
-_SIG_CTE = _SH_CTE + f""",
+_SIG_CTE = dedup.SHINGLE_CTE + f""",
 sig AS (SELECT doc, {_MH_COLS} FROM sh GROUP BY doc)
 """
 
@@ -109,7 +98,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      max_bucket=MAX_BUCKET)
 
 
-@register("ngram_jaccard_dups", _SH_CTE + f""",
+@register("ngram_jaccard_dups", dedup.SHINGLE_CTE + f""",
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY doc),
 shc AS (
     SELECT doc, shingle FROM sh
@@ -131,7 +120,7 @@ def ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.jaccard_pairs(docs, JACCARD_THRESHOLD, df_max=JACCARD_DF_MAX)
 
 
-@register("jaccard_prefix_dups", _SH_CTE + f""",
+@register("jaccard_prefix_dups", dedup.SHINGLE_CTE + f""",
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY doc),
 inter AS (
     SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
@@ -156,7 +145,7 @@ def jaccard_prefix_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.jaccard_pairs_prefix(docs, JACCARD_THRESHOLD)
 
 
-@register("shingle_novelty_scores", _SH_CTE + """,
+@register("shingle_novelty_scores", dedup.SHINGLE_CTE + """,
 first AS (SELECT shingle, MIN(doc) AS first_doc FROM sh GROUP BY shingle)
 SELECT sh.doc AS doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_shingles,
@@ -430,7 +419,7 @@ _SIMHASH_VALUE = " + ".join(
 @register("simhash_fingerprints", f"""
 WITH toks AS (
     SELECT DISTINCT doc_id AS doc,
-           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
+           unnest({TOKENS_SQL}) AS tok
     FROM documents),
 m AS (SELECT doc, md5(tok) AS m FROM toks WHERE tok <> ''),
 sums AS (SELECT doc, {_SIMHASH_SUMS} FROM m GROUP BY doc)
@@ -466,7 +455,7 @@ _NEAR_BANDED = " UNION ALL ".join(
 @register("simhash_near_dups", f"""
 WITH toks AS (
     SELECT DISTINCT doc_id AS doc,
-           unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
+           unnest({TOKENS_SQL}) AS tok
     FROM documents),
 m AS (SELECT doc, md5(tok) AS m FROM toks WHERE tok <> ''),
 sums AS (SELECT doc, {_NEAR_SUMS} FROM m GROUP BY doc),
@@ -504,22 +493,15 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Normalize BEFORE the pair join (similarity.unit_vectors): the join then
 # evaluates one fold (the dot product) per pair instead of three.  Both
 # engines fold left-to-right seeded 0.0, so sim agrees bit-for-bit.
-_FOLD0 = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {terms}), "
-          "(acc, x) -> acc + x)")
-_NORM_SQL = "sqrt(" + _FOLD0.format(terms="list_transform(v, x -> x * x)") + ")"
-_DOT_UNIT = _FOLD0.format(
-    terms="list_transform(generate_series(1, 64), i -> a.u[i] * b.u[i])")
-
-
 @register("embedding_near_dup_pairs", f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-n AS (SELECT vec_id, label, v, {_NORM_SQL} AS nrm FROM e),
+n AS (SELECT vec_id, label, v, {NORM_SQL} AS nrm FROM e),
 u AS (SELECT vec_id, label, list_transform(v, x -> x / nrm) AS u
       FROM n WHERE nrm <> 0)
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round({_DOT_UNIT}, 4) AS sim
+       round({dot_sql('a.u', 'b.u', 64)}, 4) AS sim
 FROM u a JOIN u b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {_DOT_UNIT} >= {COSINE_THRESHOLD}
+WHERE {dot_sql('a.u', 'b.u', 64)} >= {COSINE_THRESHOLD}
 """)
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup, blocked by label (the blocking key stands
@@ -541,8 +523,7 @@ SYMSPELL_MAX_BUCKET = 64
 @register("symspell_handle_match", f"""
 WITH t AS (
     SELECT doc_id,
-           list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                       x -> x <> '') AS toks
+           {NONEMPTY_TOKENS_SQL} AS toks
     FROM documents),
 h AS (SELECT doc_id,
              toks[1] || '_' || CAST(doc_id % 200 AS VARCHAR) AS handle
@@ -586,11 +567,9 @@ def symspell_handle_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on single-deletion variants (O(total variants) shuffle,
     hot variants capped at {SYMSPELL_MAX_BUCKET}), NEVER a quadratic
     levenshtein cross join."""
-    from ..operators.textstats import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     did = F.col("doc_id")
-    handle = F.concat(F.element_at(tokens(F.col("text")), 1),
+    handle = F.concat(F.element_at(nonempty_tokens(F.col("text")), 1),
                       F.lit("_"), (did % 200).cast("string"))
     base = docs.select(did, handle.alias("handle"))
     pos = F.lit(2) + did % (F.length("handle") - 2)
@@ -664,7 +643,7 @@ def dedup_resolution_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 CONTAINMENT_THRESHOLD = 0.9
 
 
-@register("containment_dups", _SH_CTE + f""",
+@register("containment_dups", dedup.SHINGLE_CTE + f""",
 sizes AS (SELECT doc, COUNT(*) AS n FROM sh GROUP BY doc),
 inter AS (
     SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS n_common
@@ -750,7 +729,7 @@ SPAN_LIST = ", ".join(str(n) for n in REPORT_SPANS)
 
 @register("max_shared_span_pairs", f"""
 WITH toks AS (
-    SELECT doc_id AS doc, string_split_regex(trim(lower(text)), '\\s+') AS t
+    SELECT doc_id AS doc, {TOKENS_SQL} AS t
     FROM documents),
 g AS (
     SELECT DISTINCT doc, n.n AS span,
@@ -806,14 +785,12 @@ def max_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("dup_cluster_representatives", "WITH RECURSIVE "
-          + _PAIRS_CTE.lstrip().removeprefix("WITH ") + _CC_CTE + """,
+          + _PAIRS_CTE.lstrip().removeprefix("WITH ") + _CC_CTE + f""",
 clusters AS (SELECT doc AS doc_id, MIN(r) AS cluster_id
              FROM reach GROUP BY doc),
 uq AS (
     SELECT doc_id,
-           len(list_distinct(list_filter(
-               string_split_regex(trim(lower(text)), '\\s+'),
-               x -> x <> ''))) AS n_uniq_tokens
+           len(list_distinct({NONEMPTY_TOKENS_SQL})) AS n_uniq_tokens
     FROM documents),
 mem AS (
     SELECT c.cluster_id, c.doc_id, uq.n_uniq_tokens,
@@ -839,8 +816,6 @@ def dup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the CC itself."""
     from pyspark.sql import Window
 
-    from ..operators import textstats
-
     docs = load_table(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, NUM_PERM)
     pairs = dedup.lsh_candidate_pairs(sig, BANDS, ROWS_PER_BAND,
@@ -848,7 +823,7 @@ def dup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters = dedup.dup_clusters(pairs)
     uq = docs.select(
         "doc_id",
-        F.size(F.array_distinct(textstats.tokens(F.col("text"))))
+        F.size(F.array_distinct(nonempty_tokens(F.col("text"))))
         .cast("long").alias("n_uniq_tokens"))
     mem = clusters.join(uq, "doc_id")
     by_cluster = Window.partitionBy("cluster_id")
@@ -1019,7 +994,7 @@ _DROP_SPAN_LIST = "8, 13"
 
 @register("exact_substring_discard_manifest", f"""
 WITH toks AS (
-    SELECT doc_id AS doc, string_split_regex(trim(lower(text)), '\\s+') AS t
+    SELECT doc_id AS doc, {TOKENS_SQL} AS t
     FROM documents),
 g AS (
     SELECT DISTINCT doc, n.n AS span,

@@ -10,10 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators import layout, textstats
+from ..functions.text import NONEMPTY_TOKENS_SQL, nonempty_tokens
+from ..operators import layout
 from ..registry import register
 from ..tables import load_table
-from .textstats_q import _TOKS
 
 # Day number relative to the fixture's order-date epoch; fits 12 bits
 # (the dates span ~2400 days), custkey fits 11 — both inside the 16-bit
@@ -76,7 +76,7 @@ BATCH_DOCS = 32     # documents per training batch within a bucket
 
 @register("length_bucketed_batches", f"""
 WITH base AS (
-    SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_toks
+    SELECT doc_id, CAST(len({NONEMPTY_TOKENS_SQL}) AS BIGINT) AS n_toks
     FROM documents),
 b AS (
     SELECT doc_id, n_toks,
@@ -122,7 +122,7 @@ def length_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
-        F.size(textstats.tokens(F.col("text"))).cast("long")
+        F.size(nonempty_tokens(F.col("text"))).cast("long")
         .alias("n_toks"))
     b = base.withColumn(
         "bucket", F.ntile(LEN_BUCKETS).over(

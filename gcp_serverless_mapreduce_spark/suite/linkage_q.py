@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.text import NONEMPTY_TOKENS_SQL
 from ..operators import linkage
 from ..operators.linkage import (FS_BAL_TOL, FS_MATCH_MIN, FS_NEIGHBORS,
                                  FS_W_BAL_AGREE, FS_W_BAL_DISAGREE,
@@ -19,14 +20,13 @@ from ..operators.linkage import (FS_BAL_TOL, FS_MATCH_MIN, FS_NEIGHBORS,
                                  SN_WINDOW)
 from ..registry import register
 from ..tables import load_table
-from .textstats_q import _TOKS
 
 
 @register("sorted_neighborhood_dups", f"""
 WITH t AS (
     SELECT doc_id AS id,
-           list_sort(list_distinct({_TOKS})) AS ts,
-           array_to_string(list_slice({_TOKS}, 1, 3), ' ') AS sortkey
+           list_sort(list_distinct({NONEMPTY_TOKENS_SQL})) AS ts,
+           array_to_string(list_slice({NONEMPTY_TOKENS_SQL}, 1, 3), ' ') AS sortkey
     FROM documents),
 b AS (
     SELECT id, ts, sortkey, string_split(sortkey, ' ')[1] AS blk FROM t),
@@ -72,8 +72,8 @@ def _snm_pass_sql(p: int) -> str:
     return f"""
 t{p} AS (
     SELECT doc_id AS id,
-           list_sort(list_distinct({_TOKS})) AS ts,
-           array_to_string(list_slice({_TOKS}, {1 + p}, {3 + p}), ' ')
+           list_sort(list_distinct({NONEMPTY_TOKENS_SQL})) AS ts,
+           array_to_string(list_slice({NONEMPTY_TOKENS_SQL}, {1 + p}, {3 + p}), ' ')
              AS sortkey
     FROM documents),
 b{p} AS (

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dedup, multimodal
+from ..functions.text import TOKENS_SQL, tokens
+from ..operators import multimodal
 from ..registry import register
 from ..tables import load_table
 
@@ -486,7 +487,7 @@ PAIR_AR_NUM, PAIR_AR_DEN = 2, 1       # aspect: max(w,h) <= 2*min(w,h)
 @register("crossmodal_pair_curation", f"""
 WITH cap AS (
     SELECT doc_id, source,
-           string_split_regex(trim(lower(text)), '\\s+') AS toks
+           {TOKENS_SQL} AS toks
     FROM documents),
 g AS (
     SELECT source,
@@ -539,7 +540,7 @@ def crossmodal_pair_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     decoded = multimodal.decode_image_stats(
         multimodal.image_corpus(docs)).select("media_id", "px_w", "px_h")
-    toks = dedup.tokens_col()
+    toks = tokens(F.col("text"))
     cap = docs.select(
         F.col("doc_id"), "source",
         F.size(toks).alias("n_toks"),

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import NONEMPTY_TOKENS_SQL, TOKENS_SQL
+from ..functions.vectors import NORM_SQL, dot_sql
 from ..operators import curation, retrieval
 from ..registry import register
 from ..tables import load_table
@@ -21,7 +23,7 @@ _QL = ", ".join(f"'{t}'" for t in QUERY_TERMS)
 _BM25_SQL = f"""
 WITH toks AS (
     SELECT doc_id AS doc,
-           string_split_regex(trim(lower(text)), '\\s+') AS t
+           {TOKENS_SQL} AS t
     FROM documents),
 lens AS (SELECT doc, len(t) AS dl FROM toks),
 stats AS (SELECT COUNT(*) AS n_docs,
@@ -65,8 +67,7 @@ def bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("doc_overlapping_chunks", f"""
 WITH toks AS (
     SELECT doc_id,
-           list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                       x -> x <> '') AS t
+           {NONEMPTY_TOKENS_SQL} AS t
     FROM documents),
 starts AS (
     SELECT doc_id, t,
@@ -116,13 +117,6 @@ TOP_N_PER_RANKER = 100
 HYBRID_TOP = 50
 PROBE_VEC_ID = 0
 
-# fold-exact dot product (same contract as similarity_q: left-to-right,
-# seeded 0.0 double)
-_FOLD0 = ("list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {terms}), "
-          "(acc, x) -> acc + x)")
-_VNORM = "sqrt(" + _FOLD0.format(terms="list_transform(v, x -> x * x)") + ")"
-_PDOT = _FOLD0.format(
-    terms="list_transform(generate_series(1, 64), i -> u[i] * p.pu[i])")
 
 _HYBRID_SQL = f"""
 WITH bm AS ({_BM25_SQL}),
@@ -131,12 +125,12 @@ lex AS (
     FROM bm
     QUALIFY rank <= {TOP_N_PER_RANKER}),
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-n AS (SELECT vec_id, v, {_VNORM} AS nrm FROM e),
+n AS (SELECT vec_id, v, {NORM_SQL} AS nrm FROM e),
 uv AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
        FROM n WHERE nrm <> 0),
 p AS (SELECT u AS pu FROM uv WHERE vec_id = {PROBE_VEC_ID}),
 sims AS (
-    SELECT vec_id AS doc_id, round({_PDOT}, 4) AS sim
+    SELECT vec_id AS doc_id, round({dot_sql('u', 'p.pu', 64)}, 4) AS sim
     FROM uv CROSS JOIN p
     WHERE vec_id <> {PROBE_VEC_ID}),
 vec AS (

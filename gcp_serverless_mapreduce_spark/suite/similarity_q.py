@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import NORM_SQL, dot_sql, fold_sum_sql
 from ..operators import similarity
 from ..registry import register
 from ..tables import load_table, old_batch_row_count, table_row_count
@@ -27,25 +28,13 @@ MAX_BUCKET = 256
 PLANES = similarity.srp_planes(NUM_PLANES, DIM)
 
 
-def _fold_sum(terms: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), {terms}), "
-            f"(acc, x) -> acc + x)")
-
-
-_NORM = "sqrt(" + _fold_sum("list_transform(v, x -> x * x)") + ")"
-
 # (vec_id, v, u): raw + unit vectors, zero vectors dropped — shared prefix.
 _UNIT_CTE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-n AS (SELECT vec_id, v, {_NORM} AS nrm FROM e),
+n AS (SELECT vec_id, v, {NORM_SQL} AS nrm FROM e),
 u AS (SELECT vec_id, v, list_transform(v, x -> x / nrm) AS u
       FROM n WHERE nrm <> 0)
 """
-
-
-def _dot(a: str, b: str) -> str:
-    return _fold_sum(
-        f"list_transform(generate_series(1, {DIM}), i -> {a}[i] * {b}[i])")
 
 
 def _plane_literal(plane: list[int]) -> str:
@@ -55,10 +44,11 @@ def _plane_literal(plane: list[int]) -> str:
 # bucket from the RAW vector v: sign(v·h) is scale-invariant and skips
 # the norm fold (mirrors similarity.srp_signature exactly)
 _BUCKET = "||".join(
-    f"(CASE WHEN {_dot('v', _plane_literal(p))} >= 0 THEN '1' ELSE '0' END)"
+    f"(CASE WHEN {dot_sql('v', _plane_literal(p), DIM)} >= 0 "
+    "THEN '1' ELSE '0' END)"
     for p in PLANES)
 
-_PAIR_DOT = _dot("a.u", "b.u")
+_PAIR_DOT = dot_sql("a.u", "b.u", DIM)
 
 
 @register("cosine_topk_bruteforce", _UNIT_CTE + f"""
@@ -125,7 +115,8 @@ SEM_THRESHOLD = 0.25   # fixture embeddings are random; within-cell pairs
                        # above this are the conditioned-on-bucket tail
 SEM_PLANES = similarity.srp_planes(SEM_PLANES_N, DIM)
 _SEM_CELL = "||".join(
-    f"(CASE WHEN {_dot('v', _plane_literal(p))} >= 0 THEN '1' ELSE '0' END)"
+    f"(CASE WHEN {dot_sql('v', _plane_literal(p), DIM)} >= 0 "
+    "THEN '1' ELSE '0' END)"
     for p in SEM_PLANES)
 
 
@@ -200,7 +191,7 @@ def _cent_literal(c: list[float]) -> str:
 # numpy kernels in operators/similarity._ivf_search.
 _SCORE_CASE = "CASE c.cell " + " ".join(
     f"WHEN {i} THEN CAST({similarity._sq_fold(cent)!r} AS DOUBLE)"
-    f" - 2.0 * {_dot('v', _cent_literal(cent))}"
+    f" - 2.0 * {dot_sql('v', _cent_literal(cent), DIM)}"
     for i, cent in enumerate(CENTROIDS)) + " END"
 
 
@@ -276,7 +267,7 @@ def _lloyd_cte(target: int = _TRAIN_TARGET, train_where: str = "") -> str:
              f",\nc0(cell, cent, sq) AS (VALUES {c0_rows})"]
     for r in range(1, LLOYD_ROUNDS + 1):
         p = r - 1
-        dotvc = _dot("u0.v", "c.cent")
+        dotvc = dot_sql("u0.v", "c.cent", DIM)
         parts.append(f""",
 a{r} AS (
     SELECT u0.vec_id, u0.v, c.cell
@@ -296,16 +287,15 @@ m{r} AS (
     FROM s{r} GROUP BY cell),
 c{r} AS (
     SELECT c.cell, COALESCE(m.cent, c.cent) AS cent,
-           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-               list_transform(COALESCE(m.cent, c.cent), x -> x * x)),
-               (acc, x) -> acc + x) AS sq
+           {fold_sum_sql(
+               "list_transform(COALESCE(m.cent, c.cent), x -> x * x)")} AS sq
     FROM c{p} c LEFT JOIN m{r} m USING (cell))""")
     return "".join(parts)
 
 
 @register("ivf_ann_topk", _UNIT_CTE + _lloyd_cte() + f""",
 sc AS (SELECT u0.vec_id, u0.u, c.cell,
-              c.sq - 2.0 * {_dot("u0.v", "c.cent")} AS score
+              c.sq - 2.0 * {dot_sql("u0.v", "c.cent", DIM)} AS score
        FROM u u0 CROSS JOIN c{LLOYD_ROUNDS} c),
 pr AS (SELECT vec_id, u, cell,
               row_number() OVER (PARTITION BY vec_id
@@ -350,7 +340,7 @@ _SMALL_TRAIN_TARGET = 128
 @register("ivf_capped_train_topk",
           _UNIT_CTE + _lloyd_cte(_SMALL_TRAIN_TARGET) + f""",
 sc AS (SELECT u0.vec_id, u0.u, c.cell,
-              c.sq - 2.0 * {_dot("u0.v", "c.cent")} AS score
+              c.sq - 2.0 * {dot_sql("u0.v", "c.cent", DIM)} AS score
        FROM u u0 CROSS JOIN c{LLOYD_ROUNDS} c),
 pr AS (SELECT vec_id, u, cell,
               row_number() OVER (PARTITION BY vec_id
@@ -393,7 +383,7 @@ _INC_WHERE = f"vec_id % {_INC_MOD} <> 0"
           _UNIT_CTE
           + _lloyd_cte(_SMALL_TRAIN_TARGET, train_where=_INC_WHERE) + f""",
 sc AS (SELECT u0.vec_id, u0.u, c.cell,
-              c.sq - 2.0 * {_dot("u0.v", "c.cent")} AS score
+              c.sq - 2.0 * {dot_sql("u0.v", "c.cent", DIM)} AS score
        FROM u u0 CROSS JOIN c{LLOYD_ROUNDS} c),
 pr AS (SELECT vec_id, u, cell,
               row_number() OVER (PARTITION BY vec_id
@@ -437,7 +427,7 @@ def ivf_incremental_ingest_topk(spark: SparkSession,
           _UNIT_CTE
           + _lloyd_cte(_SMALL_TRAIN_TARGET, train_where=_INC_WHERE) + f""",
 sc AS (SELECT u0.vec_id, c.cell,
-              c.sq - 2.0 * {_dot("u0.v", "c.cent")} AS score
+              c.sq - 2.0 * {dot_sql("u0.v", "c.cent", DIM)} AS score
        FROM u u0 CROSS JOIN c{LLOYD_ROUNDS} c
        WHERE u0.vec_id % {_INC_MOD} = 0),
 home AS (SELECT vec_id, cell FROM sc
@@ -515,7 +505,7 @@ _PQ_CB_ROWS = ",\n ".join(
 # both the encode argmin and the summed ADC ranking are unchanged; the
 # dot folds left-to-right over the subspace dims = Spark's per-dim
 # accumulation in similarity._pq_scores_np.
-_PQ_SCORE = "cb.sq - 2.0 * " + _fold_sum(
+_PQ_SCORE = "cb.sq - 2.0 * " + fold_sum_sql(
     f"list_transform(generate_series(1, {SUB_DIM}), "
     f"i -> u.u[cb.m * {SUB_DIM} + i] * cb.cent[i])")
 
@@ -550,9 +540,7 @@ def pq_code_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 qt AS (SELECT u.vec_id AS query_id, cb.m, cb.c, {_PQ_SCORE} AS val
        FROM u CROSS JOIN cb WHERE u.vec_id < {NUM_QUERIES}),
 ad AS (SELECT qt.query_id, co.vec_id AS neighbor_id,
-              list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                       list(qt.val ORDER BY qt.m)),
-                          (acc, x) -> acc + x) AS adist
+              {fold_sum_sql("list(qt.val ORDER BY qt.m)")} AS adist
        FROM co JOIN qt ON qt.m = co.m AND qt.c = co.code
        WHERE co.vec_id <> qt.query_id
        GROUP BY qt.query_id, co.vec_id)
@@ -599,7 +587,7 @@ def _pq_train_cte() -> str:
              f",\npb0(m, c, sq, cent) AS (VALUES {rows})"]
     for r in range(1, PQ_LLOYD_ROUNDS + 1):
         p = r - 1
-        score = "cb.sq - 2.0 * " + _fold_sum(
+        score = "cb.sq - 2.0 * " + fold_sum_sql(
             f"list_transform(generate_series(1, {SUB_DIM}), "
             f"i -> t.u[cb.m * {SUB_DIM} + i] * cb.cent[i])")
         newc = "COALESCE(mm.cent, cb.cent)"
@@ -624,12 +612,12 @@ pm{r} AS (
     FROM ps{r} GROUP BY m, c),
 pb{r} AS (
     SELECT cb.m, cb.c, {newc} AS cent,
-           {_fold_sum(f"list_transform({newc}, x -> x * x)")} AS sq
+           {fold_sum_sql(f"list_transform({newc}, x -> x * x)")} AS sq
     FROM pb{p} cb LEFT JOIN pm{r} mm USING (m, c))""")
     return "".join(parts)
 
 
-_PQT_SCORE = "cb.sq - 2.0 * " + _fold_sum(
+_PQT_SCORE = "cb.sq - 2.0 * " + fold_sum_sql(
     f"list_transform(generate_series(1, {SUB_DIM}), "
     f"i -> u.u[cb.m * {SUB_DIM} + i] * cb.cent[i])")
 
@@ -646,9 +634,7 @@ pqt AS (SELECT u.vec_id AS query_id, cb.m, cb.c, {_PQT_SCORE} AS val
         FROM u CROSS JOIN pb{PQ_LLOYD_ROUNDS} cb
         WHERE u.vec_id < {NUM_QUERIES}),
 pad AS (SELECT pqt.query_id, pco.vec_id AS neighbor_id,
-               list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                        list(pqt.val ORDER BY pqt.m)),
-                           (acc, x) -> acc + x) AS adist
+               {fold_sum_sql("list(pqt.val ORDER BY pqt.m)")} AS adist
         FROM pco JOIN pqt ON pqt.m = pco.m AND pqt.c = pco.code
         WHERE pco.vec_id <> pqt.query_id
         GROUP BY pqt.query_id, pco.vec_id)
@@ -751,7 +737,7 @@ c AS (
     FROM x GROUP BY label, pos),
 v AS (SELECT label, list(c ORDER BY pos) AS cv FROM c GROUP BY label)
 SELECT CAST(a.label AS BIGINT) AS label_a, CAST(b.label AS BIGINT) AS label_b,
-       round(sqrt({_fold_sum(
+       round(sqrt({fold_sum_sql(
            f"list_transform(generate_series(1, {DIM}), "
            "i -> (a.cv[i] - b.cv[i]) * (a.cv[i] - b.cv[i]))")}), 6) AS l2_dist
 FROM v a JOIN v b ON a.label < b.label
@@ -972,14 +958,14 @@ def knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MRL_DIM = 16
 
-_MRL_PAIR_DOT = _fold_sum(
+_MRL_PAIR_DOT = fold_sum_sql(
     f"list_transform(generate_series(1, {MRL_DIM}), "
     "i -> a.u[i] * b.u[i])")
 
 
 @register("matryoshka_recall_eval", _UNIT_CTE + f""",
 te AS (SELECT vec_id, list_slice(v, 1, {MRL_DIM}) AS v FROM e),
-tn AS (SELECT vec_id, v, {_NORM} AS nrm FROM te),
+tn AS (SELECT vec_id, v, {NORM_SQL} AS nrm FROM te),
 tu AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
        FROM tn WHERE nrm <> 0),
 exact AS (
@@ -1037,9 +1023,7 @@ cand AS (
     WHERE p.vec_id < {NUM_QUERIES}),
 ad AS (
     SELECT cd.query_id, cd.neighbor_id,
-           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                                    list(qt.val ORDER BY qt.m)),
-                       (acc, x) -> acc + x) AS adist
+           {fold_sum_sql("list(qt.val ORDER BY qt.m)")} AS adist
     FROM cand cd JOIN co ON co.vec_id = cd.neighbor_id
                  JOIN qt ON qt.query_id = cd.query_id
                         AND qt.m = co.m AND qt.c = co.code
@@ -1134,14 +1118,14 @@ def _mmr_sql() -> str:
     head = _UNIT_CTE + f""",
 qy AS (SELECT vec_id AS query_id, u AS qu FROM u WHERE vec_id < {MMR_NQ}),
 rel AS (SELECT query_id, b.vec_id AS cand_id, b.u AS cu,
-               {_dot('qy.qu', 'b.u')} AS rel
+               {dot_sql('qy.qu', 'b.u', DIM)} AS rel
         FROM qy JOIN u b ON b.vec_id <> qy.query_id),
 s AS (SELECT query_id, cand_id, cu, rel FROM rel
       QUALIFY row_number() OVER (PARTITION BY query_id
                                  ORDER BY rel DESC, cand_id)
               <= {MMR_SHORTLIST}),
 p AS (SELECT x.query_id, x.cand_id AS ca, y.cand_id AS cb,
-             {_dot('x.cu', 'y.cu')} AS psim
+             {dot_sql('x.cu', 'y.cu', DIM)} AS psim
       FROM s x JOIN s y ON x.query_id = y.query_id
                        AND x.cand_id <> y.cand_id),
 sel1 AS (SELECT query_id, cand_id AS sel_id, {_MMR_LAM_SQL} * rel AS score
@@ -1203,7 +1187,7 @@ def _kcenter_sql() -> str:
 pool AS (SELECT vec_id AS pid, md5(CAST(vec_id AS VARCHAR)) AS ph, u
          FROM u
          QUALIFY row_number() OVER (ORDER BY ph, vec_id) <= {KC_POOL}),
-p AS (SELECT x.pid AS ca, y.pid AS cb, {_dot('x.u', 'y.u')} AS psim
+p AS (SELECT x.pid AS ca, y.pid AS cb, {dot_sql('x.u', 'y.u', DIM)} AS psim
       FROM pool x JOIN pool y ON x.pid <> y.pid),
 sel1 AS (SELECT pid AS sel_id, CAST(NULL AS DOUBLE) AS nearest_sim
          FROM pool

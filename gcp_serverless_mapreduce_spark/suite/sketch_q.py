@@ -11,13 +11,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import NONEMPTY_TOKENS_SQL, nonempty_tokens
 from ..operators import sketches
 from ..operators.sketches import (CMS_DEPTH, CMS_WIDTH, HLL_M, HLL_MAX_RHO,
                                   HLL_NUMER, HLL_REST_MOD, KMV_HEX_DIGITS,
                                   KMV_K, KMV_NUMER)
 from ..registry import register
 from ..tables import load_table
-from .textstats_q import _TOKS
 
 # Heavy-hitter threshold: phi = 1% of total token mass.
 CMS_PHI_PCT = 1
@@ -34,7 +34,7 @@ def _cell_sql(key_expr: str) -> str:
 
 
 @register("cms_heavy_hitter_words", f"""
-WITH t AS (SELECT unnest({_TOKS}) AS w FROM documents),
+WITH t AS (SELECT unnest({NONEMPTY_TOKENS_SQL}) AS w FROM documents),
 n AS (SELECT CAST(count(*) AS BIGINT) AS total FROM t),
 cells AS (
     SELECT rr.r, {_cell_sql('t.w')} AS cell
@@ -65,8 +65,7 @@ def cms_heavy_hitter_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMS point estimates are one-sided (est >= exact), which the oracle
     reproduces exactly, collisions included."""
     docs = load_table(spark, sf_dir, "documents")
-    from ..operators.textstats import tokens
-    toks = docs.select(F.explode(tokens(F.col("text"))).alias("key"))
+    toks = docs.select(F.explode(nonempty_tokens(F.col("text"))).alias("key"))
     sketch = sketches.cms_build(toks)
     cand = toks.groupBy("key").agg(
         F.count(F.lit(1)).alias("exact_cnt"))
@@ -133,7 +132,7 @@ def _bloom_pos_sql(gram_expr: str, seed_expr: str) -> str:
 
 
 @register("bloom_decontamination", f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 g AS (
     SELECT DISTINCT doc_id,
            array_to_string(list_slice(toks, i.i, i.i + {NGRAM_N} - 1),
@@ -214,7 +213,7 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (stream_contamination_spans) emit identical merged ranges, so one SQL
 # twin gates both.
 _BLOOM_SPAN_ORACLE = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS (SELECT doc_id, {NONEMPTY_TOKENS_SQL} AS toks FROM documents),
 g AS (
     SELECT doc_id, i.i - 1 AS s, i.i - 1 + {NGRAM_N} AS e,
            array_to_string(list_slice(toks, i.i, i.i + {NGRAM_N - 1}),

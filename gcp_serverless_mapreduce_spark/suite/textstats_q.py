@@ -11,26 +11,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import STOPWORDS
+from ..functions.text import (NONEMPTY_TOKENS_SQL, STOPWORDS, STOPWORDS_SQL,
+                              TOKENS_SQL, nonempty_tokens, py_tokens,
+                              sql_quote)
 from ..operators import dedup, textstats
 from ..registry import register
 from ..tables import load_table
-from .anagram_q import _sql_quote
-from .dedup_q import _SH_CTE
-
-_STOP_SQL = ", ".join(_sql_quote(w) for w in STOPWORDS)
-
-_TOKS = ("list_filter(string_split_regex(trim(lower(text)), '\\s+'), "
-         "x -> x <> '')")
 
 _T_CTE = f"""
 WITH t AS (
-    SELECT doc_id, lang, source, text, {_TOKS} AS toks FROM documents)
+    SELECT doc_id, lang, source, text, {NONEMPTY_TOKENS_SQL} AS toks FROM documents)
 """
 
 
 def _in_list(words: tuple[str, ...]) -> str:
-    return ", ".join(_sql_quote(w) for w in words)
+    return ", ".join(sql_quote(w) for w in words)
 
 
 _HITS_UNION = " UNION ALL ".join(
@@ -98,7 +93,7 @@ SELECT doc_id,
              / NULLIF(len(toks), 0), 6) AS avg_token_len,
        round(CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
              / NULLIF(len(text), 0), 6) AS alpha_ratio,
-       round(CAST(len(list_filter(toks, x -> x IN ({_STOP_SQL}))) AS DOUBLE)
+       round(CAST(len(list_filter(toks, x -> x IN ({STOPWORDS_SQL}))) AS DOUBLE)
              / NULLIF(len(toks), 0), 6) AS stopword_ratio,
        len(toks) BETWEEN 5 AND 1000 AS len_ok
 FROM t
@@ -108,7 +103,7 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, mean token length, alpha ratio, stop-word ratio, length gate.
     One scan, one projection — no shuffle at all."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = textstats.tokens(F.col("text"))
+    toks = nonempty_tokens(F.col("text"))
     d = docs.withColumn("toks", toks)
     n = F.size("toks")
     nchars = F.length("text")
@@ -144,7 +139,7 @@ def token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token accounting per source: whitespace tokens vs BPE-ish
     pre-tokens.  Map-side partial agg -> tiny shuffle on source."""
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.withColumn("toks", textstats.tokens(F.col("text")))
+    d = docs.withColumn("toks", nonempty_tokens(F.col("text")))
     ws = F.sum(F.size("toks").cast("long"))
     return d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -164,7 +159,7 @@ _FOLD = (f"CASE WHEN strlen({{s}}) = 0 THEN CAST({textstats.FP_SEED} AS BIGINT) 
          f"(a, c) -> (a * {textstats.FP_MULT} + c) % {textstats.FP_MOD}) END")
 
 
-@register("doc_fingerprints", _SH_CTE + f""",
+@register("doc_fingerprints", dedup.SHINGLE_CTE + f""",
 fp AS (SELECT doc_id, {_FOLD.format(s='text')} AS content_fp FROM documents),
 shf AS (SELECT doc, MIN({_FOLD.format(s='shingle')}) AS winnow_min
         FROM sh GROUP BY doc)
@@ -204,7 +199,7 @@ def docs_per_word_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(textstats.tokens(F.col("text"))))
+        F.explode(F.array_distinct(nonempty_tokens(F.col("text"))))
         .alias("word"))
     return salted_distinct_count(pairs, key="word", value="doc_id",
                                  out_col="n_docs")
@@ -281,9 +276,9 @@ def language_id_chargram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("word_bigram_freq_udtf", """
+@register("word_bigram_freq_udtf", f"""
 WITH toks AS (
-    SELECT string_split_regex(trim(lower(text)), '\\s+') AS t FROM documents),
+    SELECT {TOKENS_SQL} AS t FROM documents),
 bg AS (
     SELECT unnest(list_transform(generate_series(1, len(t) - 1),
                   i -> t[i] || ' ' || t[i + 1])) AS bigram
@@ -334,7 +329,7 @@ def word_commonness_by_source_salted(spark: SparkSession, sf_dir: str) -> DataFr
     from ..operators.skew import salted_equijoin
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (docs.withColumn("toks", textstats.tokens(F.col("text")))
+    pairs = (docs.withColumn("toks", nonempty_tokens(F.col("text")))
              .select("source", "doc_id", F.explode("toks").alias("word")))
     # vocabulary-sized; materialized once so the join doesn't recompute
     # the corpus explode on its build side
@@ -418,7 +413,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders by the raw double score with term as the tie-break; both
     engines compute ln() of identical IEEE inputs."""
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.withColumn("toks", textstats.tokens(F.col("text")))
+    d = docs.withColumn("toks", nonempty_tokens(F.col("text")))
     n_total = docs.agg(F.count("*").alias("n"))
     tdc = (d.select("source", "doc_id", F.explode("toks").alias("term"))
            .groupBy("term", "doc_id", "source")
@@ -442,11 +437,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _repetition_stats_kernel():
     """Arrow kernel emitting the EXACT integer repetition stats per doc:
     (n_tokens, n_distinct, top_bg = most-frequent-bigram count, n_bg).
-    Tokenization is EXACT vs textstats.tokens (dedup.py_tokens with
+    Tokenization is EXACT vs nonempty_tokens (py_tokens with
     empties filtered — the Java/RE2 ASCII whitespace class, space-only
     trim, JVM-identical on non-ASCII text too);
     pinned vs the old HOF pipeline in tests/test_r15_batch2.py and on
-    non-ASCII rows in tests/test_r16_unicode_tokens.py."""
+    non-ASCII rows in tests/test_tokens.py."""
     from collections import Counter
 
     from pyspark.sql.functions import pandas_udf
@@ -455,7 +450,7 @@ def _repetition_stats_kernel():
     def rep_stats(texts: pd.Series) -> pd.DataFrame:
         rows = []
         for t in texts:
-            toks = [w for w in dedup.py_tokens(t) if w]
+            toks = [w for w in py_tokens(t) if w]
             n = len(toks)
             if n >= 2:
                 bigrams = [toks[i] + " " + toks[i + 1]
@@ -506,7 +501,7 @@ def repetition_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer stats (token/distinct/bigram counts); every double
     # (fractions, round, keep) is still computed by the same JVM
     # expressions as before from those integers, so results are
-    # bit-identical.  Tokenization matches textstats.tokens on the ASCII
+    # bit-identical.  Tokenization matches nonempty_tokens on the ASCII
     # fixtures exactly as operators/dedup.shingle_array does.
     from ..tables import spread_small_scan
 
@@ -556,7 +551,7 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform keys — no skew); the final rollup is a partial+final agg on a
     tiny key space.  Nothing in the chain materializes the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = textstats.tokens(F.col("text"))
+    toks = nonempty_tokens(F.col("text"))
     d = docs.withColumn("toks", toks)
     n = F.size("toks")
     alpha_ratio = (
@@ -618,7 +613,7 @@ def bigram_coherence_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     d = (spread_small_scan(docs)
-         .withColumn("toks", textstats.tokens(F.col("text")))
+         .withColumn("toks", nonempty_tokens(F.col("text")))
          .filter(F.size("toks") >= 2))
     bg = d.select(
         "doc_id",
@@ -788,7 +783,7 @@ def doc_token_ids_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     vocab = textstats.build_vocab(docs, VOCAB_SIZE).select("word", "vocab_id")
     toks = (docs.select("doc_id",
-                        F.posexplode(textstats.tokens(F.col("text")))
+                        F.posexplode(nonempty_tokens(F.col("text")))
                         .alias("i", "word")))
     ids = (toks.join(F.broadcast(vocab), "word", "left")
            .select("doc_id", "i",
@@ -802,25 +797,8 @@ def doc_token_ids_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                      lambda s: s["id"].cast("string")))).alias("ids_md5")))
 
 
-def _bpe_esc_sql(col: str) -> str:
-    """DuckDB twin of textstats.bpe_escape: \\ -> \\\\, < -> \\l, > -> \\g."""
-    return (f"replace(replace(replace(lower(trim({col})), "
-            f"'\\', '\\\\'), '<', '\\l'), '>', '\\g')")
-
-
-def _bpe_sql(col: str) -> str:
-    """DuckDB twin of textstats.bpe_pieces: escape delimiters, wrap
-    units (escape pair or single non-space char), replace in rank order
-    (literal, left-to-right, non-overlapping in both engines)."""
-    s = (f"regexp_replace({_bpe_esc_sql(col)}, "
-         f"'(\\\\[\\\\lg]|\\S)', '<\\1>', 'g')")
-    for a, b in textstats.BPE_MERGES:
-        s = f"replace({s}, '<{a}><{b}>', '<{a}{b}>')"
-    return s
-
-
 @register("bpe_piece_stats", f"""
-WITH s AS (SELECT doc_id, {_bpe_sql('text')} AS pieces,
+WITH s AS (SELECT doc_id, {textstats.bpe_pieces_sql('text')} AS pieces,
                   regexp_replace(lower(trim(text)), '\\s', '', 'g') AS raw
            FROM documents)
 SELECT doc_id,
@@ -850,8 +828,9 @@ def _bpe_learn_sql(rounds: int, min_pair: int, batch: int) -> str:
     higher symbol; the same per-pair rule the Spark side applies) steers
     round k's replace chain through ``batch`` fixed slots; global
     ranks are re-numbered over (round, batch position)."""
-    parts = [f"WITH s0 AS (SELECT regexp_replace({_bpe_esc_sql('text')}, "
-             "'(\\\\[\\\\lg]|\\S)', '<\\1>', 'g') AS s FROM documents)"]
+    parts = ["WITH s0 AS (SELECT "
+             f"{textstats.bpe_pieces_sql('text', merges=())} AS s "
+             "FROM documents)"]
     for k in range(1, rounds + 1):
         prev = f"s{k - 1}"
         parts.append(f""",
@@ -928,10 +907,8 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("bpe_fertility_by_lang", f"""
 WITH s AS (SELECT lang,
-                  {_bpe_sql('text')} AS pieces,
-                  len(list_filter(string_split_regex(trim(lower(text)),
-                                                     '\\s+'),
-                                  x -> x <> '')) AS n_toks,
+                  {textstats.bpe_pieces_sql('text')} AS pieces,
+                  len({NONEMPTY_TOKENS_SQL}) AS n_toks,
                   len(regexp_replace(lower(trim(text)), '\\s', '', 'g'))
                       AS n_sym_chars
            FROM documents),
@@ -960,7 +937,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = textstats.bpe_piece_stats(docs)
     toks = docs.select(
         "doc_id", "lang",
-        F.size(textstats.tokens(F.col("text"))).cast("long").alias("n_toks"))
+        F.size(nonempty_tokens(F.col("text"))).cast("long").alias("n_toks"))
     def safe(c):
         return F.nullif(c.cast("double"), F.lit(0.0))
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from gcp_serverless_mapreduce_spark.operators.dedup import tokens_col
+from gcp_serverless_mapreduce_spark.functions.text import tokens
 
 TOKS_SQL = "split(trim(lower(text)), '\\\\s+')"
 
@@ -22,7 +22,7 @@ def shingle_array_expr(k: int):
     sequence(1, n) DESCENDS when n < 1, so short docs need the explicit
     empty array (DuckDB's generate_series is empty there)."""
     shingles = F.when(
-        F.size(tokens_col()) >= k,
+        F.size(tokens(F.col("text"))) >= k,
         F.expr(
             f"transform(sequence(1, size({TOKS_SQL}) - {k - 1}), "
             f"i -> concat_ws(' ', slice({TOKS_SQL}, i, {k})))"
@@ -66,7 +66,7 @@ def ladder_tagged_grams_expr(ns: tuple[int, ...]):
     """Expression twin of ``dedup.ladder_tagged_grams(ns)``.  NB:
     transform() lambdas must stay single-parameter — a second parameter
     is interpreted as the ELEMENT INDEX by Spark."""
-    toks = tokens_col()
+    toks = tokens(F.col("text"))
 
     def _tagged(n: int):
         grams_n = F.array_distinct(F.transform(

@@ -44,13 +44,13 @@ def test_word_bigrams_udtf_eval():
 
 
 def test_lang_hits_counts_multiset(spark):
-    from gcp_serverless_mapreduce_spark.operators.textstats import (
-        lang_hits, tokens)
+    from gcp_serverless_mapreduce_spark.functions.text import nonempty_tokens
+    from gcp_serverless_mapreduce_spark.operators.textstats import lang_hits
 
     df = spark.createDataFrame([("the cat and the hat is here",)], ["text"])
     row = df.select(
-        lang_hits(tokens(F.col("text")), "en").alias("en"),
-        lang_hits(tokens(F.col("text")), "de").alias("de")).first()
+        lang_hits(nonempty_tokens(F.col("text")), "en").alias("en"),
+        lang_hits(nonempty_tokens(F.col("text")), "de").alias("de")).first()
     assert row["en"] == 4  # the, and, the, is — multiset, not distinct
     assert row["de"] == 0
 

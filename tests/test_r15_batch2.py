@@ -51,10 +51,10 @@ ADVERSARIAL_DOCS = [
 
 def _old_repetition_stats(spark, rows):
     """The pre-r15 interpreted-HOF pipeline, verbatim, as the reference."""
-    from gcp_serverless_mapreduce_spark.operators import textstats
+    from gcp_serverless_mapreduce_spark.functions.text import nonempty_tokens
 
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    d = (docs.withColumn("toks", textstats.tokens(F.col("text")))
+    d = (docs.withColumn("toks", nonempty_tokens(F.col("text")))
          .filter(F.size("toks") >= 2))
     n = F.size("toks")
     toks = F.col("toks")
@@ -105,10 +105,10 @@ def test_bigram_prefix_counts_identity(spark):
     rows = [Row(doc_id=1, text="a b a b c"),
             Row(doc_id=2, text="b c b a"),
             Row(doc_id=3, text="a a a a")]
-    from gcp_serverless_mapreduce_spark.operators import textstats
+    from gcp_serverless_mapreduce_spark.functions.text import nonempty_tokens
 
     docs = spark.createDataFrame(rows)
-    d = (docs.withColumn("toks", textstats.tokens(F.col("text")))
+    d = (docs.withColumn("toks", nonempty_tokens(F.col("text")))
          .filter(F.size("toks") >= 2))
     bg = d.select(
         "doc_id",

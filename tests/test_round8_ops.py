@@ -11,6 +11,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from gcp_serverless_mapreduce_spark.functions.text import nonempty_tokens
 from gcp_serverless_mapreduce_spark.operators import (
     curation, graph, similarity, temporal, textstats,
 )
@@ -484,7 +485,7 @@ def test_scd2_fuzz_vs_python(spark):
 
 def test_bigram_structs_edges(spark):
     df = spark.createDataFrame([("a b c",), ("a",), ("",)], "text string")
-    toks = textstats.tokens(F.col("text"))
+    toks = nonempty_tokens(F.col("text"))
     out = [r[0] for r in
            df.select(textstats.bigram_structs(toks)).collect()]
     assert [len(x) for x in out] == [2, 0, 0]

@@ -5,6 +5,7 @@ of its rules on a synthetic package."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import os
 import re
@@ -178,3 +179,50 @@ def test_cited_tests_exist():
     point at a test file that was renamed or never written."""
     missing = _missing_citations("tests")
     assert not missing, sorted(missing)
+
+
+# The cross-engine text and vector contracts, each as it is spelled in
+# package source: the DuckDB and Spark forms of the whitespace token split
+# and the seeded double fold.
+CONTRACT_HOMES = {
+    r"string_split_regex\(trim\(lower\(text\)\),\s*'\\\\s\+'\)":
+        os.path.join("functions", "text.py"),
+    r"F\.split\([^\n]*r\"\\s\+\"\)": os.path.join("functions", "text.py"),
+    r"list_reduce\(list_prepend\(CAST\(0\.0 AS DOUBLE\)":
+        os.path.join("functions", "vectors.py"),
+}
+# Private twins that suite modules used to take from one another.
+SIBLING_PRIVATES = {"_TOKS", "_STOP_SQL", "_sql_quote", "_SH_CTE", "_bpe_sql"}
+
+
+def _package_sources() -> dict[str, str]:
+    pkg = os.path.join(ROOT, "gcp_serverless_mapreduce_spark")
+    out = {}
+    for dp, _, fns in os.walk(pkg):
+        for f in fns:
+            if f.endswith(".py"):
+                path = os.path.join(dp, f)
+                with open(path, encoding="utf-8") as fh:
+                    out[os.path.relpath(path, pkg)] = fh.read()
+    return out
+
+
+def test_text_and_vector_contracts_have_one_home():
+    """The token split (DuckDB and Spark forms) and the seeded double fold
+    are each written exactly once, in ``functions/``, and no suite module
+    imports a private twin from a sibling."""
+    sources = _package_sources()
+    for pattern, home in CONTRACT_HOMES.items():
+        sites = [(path, len(re.findall(pattern, text)))
+                 for path, text in sorted(sources.items())
+                 if re.search(pattern, text)]
+        assert sites == [(home, 1)], (pattern, sites)
+    shared = []
+    for path, text in sorted(sources.items()):
+        if os.path.dirname(path) != "suite":
+            continue
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.ImportFrom) and node.level == 1:
+                shared += [f"{path}: {node.module}.{a.name}"
+                           for a in node.names if a.name in SIBLING_PRIVATES]
+    assert not shared, shared

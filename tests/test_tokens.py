@@ -1,18 +1,18 @@
-"""r16: Python kernel tokenization is JVM-EXACT, not just ASCII-equivalent.
+"""Python kernel tokenization is JVM-EXACT, not just ASCII-equivalent.
 
-Round 15 left the Arrow kernels tokenizing with Python ``str.split()``,
-which differs from the declared ``split(trim(lower(text)), '\\s+')``
-semantics on leading/trailing non-space whitespace (JVM keeps the empty
-token), Unicode whitespace (Python splits NBSP/U+2028, Java/RE2 ``\\s``
-does not) and potentially non-ASCII case folds.
-``operators.dedup.py_tokens`` now reproduces the JVM
-semantics exactly; these pins hold every kernel/expression-twin pair to
-equality ON the divergent inputs the r15 pins omitted.
+Python ``str.split()`` differs from the declared
+``split(trim(lower(text)), '\\s+')`` semantics (``functions.text.tokens``)
+on leading/trailing non-space whitespace (JVM keeps the empty token),
+Unicode whitespace (Python splits NBSP/U+2028, Java/RE2 ``\\s`` does not)
+and potentially non-ASCII case folds.  ``functions.text.py_tokens``
+reproduces the JVM semantics exactly; these pins hold every
+kernel/expression-twin pair to equality ON those divergent inputs.
 """
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from gcp_serverless_mapreduce_spark.functions.text import py_tokens, tokens
 from gcp_serverless_mapreduce_spark.operators import dedup
 from tests.dedup_twins import (TOKS_SQL, inline_band_hashes_expr,
                                ladder_tagged_grams_expr, shingle_array_expr)
@@ -45,12 +45,12 @@ def test_py_tokens_matches_tokens_col(spark):
     df = spark.createDataFrame(UNICODE_ROWS, SCHEMA)
     got = {r["doc_id"]: r["t"]
            for r in df.select("doc_id",
-                              dedup.tokens_col().alias("t")).collect()}
+                              tokens(F.col("text")).alias("t")).collect()}
     for doc_id, text in UNICODE_ROWS:
         if text is None:
             assert got[doc_id] is None
         else:
-            assert got[doc_id] == dedup.py_tokens(text), (doc_id, text)
+            assert got[doc_id] == py_tokens(text), (doc_id, text)
 
 
 def test_shingle_kernel_matches_expr_twin_unicode(spark):
@@ -115,7 +115,7 @@ def test_word_bigrams_udtf_matches_oracle_tokens(spark):
         (r["bigram"],) for r in spark.sql(
             "SELECT b.bigram FROM unicode_docs_udtf, "
             "LATERAL word_bigrams(text) AS b").collect())
-    toks = dedup.tokens_col()
+    toks = tokens(F.col("text"))
     want = sorted(
         (r["bigram"],) for r in df.select(
             F.explode(F.when(

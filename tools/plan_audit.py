@@ -10,11 +10,20 @@ PLANS.md is regenerated — so plan regressions can't land silently.
 ``--dump DIR`` writes every registered query's optimized logical plan to
 ``DIR/<query>.txt`` with expression ids (``#123``) renumbered in order of
 first appearance, so equal plans print equal text whatever ids the session
-handed out.  (Spark's canonical form is no help here: it orders the sides
-of a comparison by hash code, which changes from run to run.)
+handed out, and lambda variables (PySpark names each ``x_<n>`` from one
+counter for the whole session) renumbered the same way, so a plan does not
+change with the number of lambdas built before it.  (Spark's canonical form
+is no help here: it orders the sides of a comparison by hash code, which
+changes from run to run.)  Beside the plans it writes each query's
+``oracle_sql()`` text to ``DIR/<query>.sql`` and the session's shuffle
+partition count and default parallelism to ``DIR/session.json``.
 ``--diff REF_DIR`` builds the same dumps for the current tree and lists
-the queries whose plan differs from (or is missing in) ``REF_DIR``, with
-a unified diff of each.  Queries in ``UNSTABLE_PLANS`` are left out.  A
+the queries whose plan or oracle text (whitespace collapsed, see
+:func:`oracle_texts`) differs from (or is missing in) ``REF_DIR``, with a
+unified diff of each.  It stops with exit code 2 before comparing when the
+session values differ from the recorded ones, since the partition count is
+printed in every ``RepartitionByExpression``.  Queries in
+``UNSTABLE_PLANS`` are left out.  A
 plan prints a Python UDF by name only and shortens long literals, so two
 queries with equal dumps can still differ in the constants they carry
 (the IVF queries' centroids live in their UDF closures), and a string
@@ -30,6 +39,7 @@ Usage: python tools/plan_audit.py [sf_dir]               (write PLANS.md)
 from __future__ import annotations
 
 import difflib
+import json
 import os
 import re
 import sys
@@ -73,56 +83,110 @@ UNSTABLE_PLANS = {
 }
 
 
-def optimized_plans(sf_dir: str) -> dict[str, str]:
-    """query name -> optimized logical plan with ids renumbered."""
-    import __spark_entry__ as e
-    from gcp_serverless_mapreduce_spark.session import get_spark
+def renumber(plan: str) -> str:
+    """``plan`` with lambda variables (``lambda x_17``) and expression ids
+    (``#123``) each renumbered in order of first appearance."""
+    names: dict[str, int] = {}
+    plan = re.sub(
+        r"\blambda (\w+?)_(\d+)\b",
+        lambda m: f"lambda {m.group(1)}_"
+                  f"{names.setdefault(m.group(0), len(names))}",
+        plan)
+    ids: dict[str, int] = {}
+    return re.sub(r"#(\d+)",
+                  lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan)
 
-    spark = get_spark("plan-audit")
+
+def session_values(spark) -> dict[str, str]:
+    """The session settings that a plan's text carries."""
+    return {"spark.sql.shuffle.partitions":
+                spark.conf.get("spark.sql.shuffle.partitions"),
+            "defaultParallelism":
+                str(spark.sparkContext.defaultParallelism)}
+
+
+def optimized_plans(spark, sf_dir: str) -> dict[str, str]:
+    """query name -> optimized logical plan, renumbered."""
+    import __spark_entry__ as e
+
     plans = {}
     for name, fn in e.queries().items():
         if name in UNSTABLE_PLANS:
             continue
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
-            ids: dict[str, int] = {}
-            plans[name] = re.sub(
-                r"#(\d+)",
-                lambda m: f"#{ids.setdefault(m.group(1), len(ids))}",
-                plan.toString())
+            plans[name] = renumber(
+                fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+                .toString())
         except Exception as ex:
             plans[name] = f"ERROR: {type(ex).__name__}"
     return plans
 
 
-def dump(plans: dict[str, str], out_dir: str) -> None:
+def oracle_texts() -> dict[str, str]:
+    """query name -> oracle SQL text with each whitespace run collapsed to
+    one space, and dropped after ``(`` and before ``)``, so a line break
+    inside a call does not count as a change."""
+    import __spark_entry__ as e
+
+    return {n: re.sub(r"\( | \)", lambda m: m.group().strip(),
+                      " ".join(t.split()))
+            for n, t in e.oracle_sql().items()}
+
+
+def dump(spark, sf_dir: str, out_dir: str) -> int:
+    plans = optimized_plans(spark, sf_dir)
     os.makedirs(out_dir, exist_ok=True)
-    for name, text in plans.items():
-        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
-            fh.write(text)
-    print(f"wrote {len(plans)} plans to {out_dir}")
+    for ext, texts in (("txt", plans), ("sql", oracle_texts())):
+        for name, text in texts.items():
+            with open(os.path.join(out_dir, f"{name}.{ext}"), "w") as fh:
+                fh.write(text)
+    with open(os.path.join(out_dir, "session.json"), "w") as fh:
+        json.dump(session_values(spark), fh, indent=1)
+    print(f"wrote {len(plans)} plans and oracle texts to {out_dir}")
+    return 0
 
 
-def diff(plans: dict[str, str], ref_dir: str) -> int:
-    """Print each query whose plan differs from ``ref_dir``; 1 if any."""
-    ref = {f[:-4]: open(os.path.join(ref_dir, f)).read()
-           for f in os.listdir(ref_dir) if f.endswith(".txt")}
-    changed = sorted(n for n in plans.keys() & ref.keys()
-                     if plans[n] != ref[n])
+def _read(ref_dir: str, ext: str) -> dict[str, str]:
+    return {f[:-len(ext) - 1]: open(os.path.join(ref_dir, f)).read()
+            for f in os.listdir(ref_dir) if f.endswith("." + ext)}
+
+
+def compare(now: dict[str, str], ref: dict[str, str], what: str,
+            ref_dir: str) -> int:
+    """Print each name whose text differs from ``ref``; the count."""
+    changed = sorted(n for n in now.keys() & ref.keys() if now[n] != ref[n])
     for name in changed:
         print(f"== {name}")
         for ln in difflib.unified_diff(ref[name].splitlines(),
-                                       plans[name].splitlines(),
+                                       now[name].splitlines(),
                                        "ref", "now", n=0, lineterm=""):
             print(ln)
-    for name in sorted(ref.keys() - plans.keys()):
+    for name in sorted(ref.keys() - now.keys()):
         print(f"== {name}: only in {ref_dir}")
-    for name in sorted(plans.keys() - ref.keys()):
+    for name in sorted(now.keys() - ref.keys()):
         print(f"== {name}: new query")
-    n_diff = len(changed) + len(ref.keys() ^ plans.keys())
-    print(f"plan diff: {n_diff} of {len(plans.keys() | ref.keys())} "
-          f"queries differ ({len(UNSTABLE_PLANS)} unstable excluded)")
-    return 1 if n_diff else 0
+    n_diff = len(changed) + len(ref.keys() ^ now.keys())
+    print(f"{what} diff: {n_diff} of {len(now.keys() | ref.keys())} "
+          "queries differ")
+    return n_diff
+
+
+def diff(spark, sf_dir: str, ref_dir: str) -> int:
+    """Compare plans and oracle texts with ``ref_dir``; 1 if any differ,
+    2 if the session values differ from the recorded ones."""
+    with open(os.path.join(ref_dir, "session.json")) as fh:
+        want = json.load(fh)
+    have = session_values(spark)
+    if have != want:
+        print(f"session values differ from {ref_dir}: recorded {want}, "
+              f"now {have}; dump and diff under the same SPARK_GRAFT_CPUS")
+        return 2
+    n_sql = compare(oracle_texts(), _read(ref_dir, "sql"), "oracle text",
+                    ref_dir)
+    n_plan = compare(optimized_plans(spark, sf_dir), _read(ref_dir, "txt"),
+                     "plan", ref_dir)
+    print(f"({len(UNSTABLE_PLANS)} unstable plans excluded)")
+    return 1 if n_sql or n_plan else 0
 
 
 def render(rows, sf_dir: str) -> str:
@@ -149,7 +213,8 @@ def main() -> int:
             target = args[i + 1]
             rest = args[:i] + args[i + 2:]
             sf_dir = rest[0] if rest else "/root/testdata/sf0.01"
-            return act(optimized_plans(sf_dir), target) or 0
+            from gcp_serverless_mapreduce_spark.session import get_spark
+            return act(get_spark("plan-audit"), sf_dir, target)
     check = "--check" in args
     args = [a for a in args if a != "--check"]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
